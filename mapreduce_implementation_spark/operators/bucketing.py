@@ -21,6 +21,8 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sql import sql_ident
+
 __all__ = ["write_bucketed", "bucketed"]
 
 
@@ -28,6 +30,8 @@ def _drop_stale(spark: SparkSession, table: str) -> None:
     # A killed session leaves the managed location on disk while the
     # (in-memory) catalog forgets the table; saveAsTable then fails with
     # LOCATION_ALREADY_EXISTS. Drop both the entry and any orphan dir.
+    # The name is spliced into SQL and a path, so `../x` must never pass.
+    sql_ident(table)
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
     path = urlparse(warehouse).path or warehouse

@@ -24,29 +24,12 @@ Scale design (100 TB corpus):
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textfn import tokens_array
+from ..sql import sql_ident
 from .caching import tracked_persist
-
-# Identifiers interpolated into F.expr/selectExpr SQL strings (the r14
-# plan-build optimization) must be plain names: a column named with
-# backticks or SQL syntax would otherwise splice into the parsed tree
-# (r14 ADVICE).  Rejecting loudly beats quoting quietly — the engine's
-# own frames never carry such names, so a hit is a caller bug.
-_SAFE_SQL_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-
-
-def _sql_ident(name: str) -> str:
-    if not _SAFE_SQL_IDENT.match(name):
-        raise ValueError(
-            f"column name {name!r} is not a plain identifier; the "
-            "minhash/simhash/LSH operators interpolate it into a parsed "
-            "SQL expression")
-    return name
 
 __all__ = [
     "exact_dedup_representatives", "char_shingles", "word_ngrams",
@@ -160,7 +143,7 @@ def minhash_signatures(shingled: DataFrame, id_col: str,
     carries the identical longs through one narrow slot.  Values are
     byte-identical either way (``sig[i] == mh{i}``).
     """
-    _sql_ident(id_col)
+    sql_ident(id_col)
     pre = shingled.withColumn("_h", F.xxhash64(F.col("shingle")))
     # The 64 min-aggregates are emitted as ONE parsed SQL expression
     # (array of aggregates): composing them as nested Column objects
@@ -204,7 +187,7 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str,
     # array column instead of 64 unpacked mh columns — same longs,
     # 64x narrower input schema for this stage's generated code.
     if sig_col is not None:
-        _sql_ident(sig_col)
+        sql_ident(sig_col)
     ref = (lambda i: f"{sig_col}[{i}]") if sig_col else (lambda i: f"mh{i}")
     band_structs = F.expr("array(" + ", ".join(
         "named_struct('band', {b}, 'bh', xxhash64({cols}, {b}))".format(
@@ -275,7 +258,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFr
     sign of sum(+1/-1) across token hashes."""
     from ..sources.tables import spread_small_input
 
-    _sql_ident(id_col)
+    sql_ident(id_col)
     df = spread_small_input(df)  # 64 bit-sums/token: unlock every core
     toks = (
         df.select(id_col, F.explode(tokens_array(F.col(text_col))).alias("tok"))

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sql import sql_ident
+
 __all__ = ["to_binary_payload", "binary_metadata", "decode_image_features",
            "sample_chunks", "decode_png", "encode_png_gray",
            "decode_png_gray_rows", "image_dhash", "dhash_near_dup_pairs",
@@ -394,6 +396,7 @@ def sample_chunks(df: DataFrame, id_col: str, payload_col: str = "payload",
     """Frame/segment sampling plumbing: every ``stride`` bytes emit a
     ``chunk_bytes`` slice with its offset — the shape of video frame
     sampling or audio segmentation, as pure column ops (no Python)."""
+    sql_ident(payload_col)
     offsets = F.sequence(F.lit(1), F.octet_length(payload_col), F.lit(stride))
     return (
         df.select(id_col, payload_col, F.explode(offsets).alias("offset"))
@@ -423,7 +426,7 @@ def batch_inference_scores(df, id_col: str, text_col: str,
     import pandas as pd
     from pyspark.sql import functions as F  # noqa: F401
 
-    schema = f"{id_col} long, score double, scored_by string"
+    schema = f"{sql_ident(id_col)} long, score double, scored_by string"
 
     def _score(batches):
         # model load would happen HERE, once per task/iterator

@@ -6,7 +6,8 @@ semantics are SQL-expressible, a DuckDB oracle SQL string over the same
 parquet fixture tables.  ``__spark_entry__.py`` re-exports this registry
 to the driver, and tests/test_oracle_queries.py cross-checks every pair
 the same way the driver does (row count + schema + order-insensitive
-values).
+values).  Iteration order is registration order: the import order in
+``_ensure_loaded``, then declaration order within each module.
 
 Conventions (driver contract):
 * every computed column is aliased identically in Spark and SQL;
@@ -71,105 +72,6 @@ def oracle_sql() -> dict[str, str]:
 
 _LOADED = False
 
-# Driver-sample rotation: the driver records exactly 50 queries per
-# round in registry iteration order.  Registrations stay FROZEN; only
-# this sample-order tuple moves each round.
-#
-# Steady-state cadence (VERDICT r08 item 7, r9 on): each round the
-# window takes the 50 queries whose latest driver row is OLDEST,
-# breaking ties alphabetically (new registrations have no row and sort
-# first).  With ~239 registered queries and 50 slots per round, every
-# query gets a fresh driver row at least once every ~5 rounds, so
-# freshness debt can never re-accumulate.
-#
-# Change-awareness (r9 ADVICE): a query whose OUTPUT-DETERMINING
-# registration changed — its impl, its oracle, or a behavior change in
-# an operator it calls — is treated as round-0 stale until a driver
-# row lands at-or-after the round of the change, recorded in
-# _CHANGED_IN_ROUND below.  Entries expire automatically once the
-# driver row arrives (latest[q] >= flagged round); prune expired
-# entries opportunistically at each rotation.  Mechanical refactors
-# verified behavior-identical by the suite do NOT flag (e.g. the r10
-# _by_key_cast helper extraction leaves scd2_point_in_time_join's plan
-# byte-identical — its keys are same-typed, so by_cast=None before and
-# after).
-#
-# Recompute per round as
-#   latest[q] = max round over CORRECTNESS_r0*.json containing q;
-#   eff[q]    = 0 if latest[q] < _CHANGED_IN_ROUND.get(q, 0) else latest[q];
-#   window    = sorted(queries, key=(eff[q], q))[:50].
-# Machine-checked: tests/test_properties.py::
-# test_sample_window_is_the_stalest_fifty recomputes the window from
-# the checked-in CORRECTNESS files and fails once a new round's file
-# lands — fixing it IS the rotation step.
-#
-# r15 window: CORRECTNESS_r14 landed 50/50 green (all full hash
-# matches), expiring the three r14 change flags.  Per VERDICT r14
-# item 3, the queries the r14 optimizer changed (plan/behavior over a
-# pre-change driver row) are flagged 15 below, entering as round-0 so
-# driver hash rows land on exactly the changed set.  ("stats_cohens_
-# kappa" from the VERDICT list is not a registered query — it was a
-# phantom name in a textstats docstring, now removed; the
-# quality_score_parts hoist's only consumer is text_quality_score,
-# whose plan was verified unchanged in r14.)  Recomputed window:
-# 10 round-0 change flags + the 8 remaining r09-row queries + the
-# first 32 r10-row queries alphabetically.
-_CHANGED_IN_ROUND: dict[str, int] = {
-    # r14 optimizer changes without an r14 driver row (VERDICT r14
-    # item 3): array-form MinHash/SimHash signatures + expr-string
-    # plan build; PPJoin length/positional filters; union
-    # elimination; persist + LEFT SEMI restructure; spread/hoist
-    # touches on the text trio.
-    "dedup_minhash_lsh": 15,
-    "dedup_simhash": 15,
-    "dedup_ngram_jaccard": 15,
-    "dedup_ngram_jaccard_prefix": 15,
-    "split_leakage_audit": 15,
-    "dedup_substring_spans": 15,
-    "text_perplexity_buckets": 15,
-    "text_keyphrase_rake": 15,
-    "text_bigram_logprob": 15,
-    # r15 optimizer change: spread_small_input added at the
-    # span_chunks entry (the missed compute-bound map phase) — a
-    # Repartition node over its r14 driver row's plan.
-    "dedup_span_rebuild": 15,
-}
-
-_SAMPLE_FIRST = (
-    # --- round-0: registration changed since its last driver row
-    # (_CHANGED_IN_ROUND = 15 above) ---
-    "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    "dedup_ngram_jaccard_prefix", "dedup_simhash",
-    "dedup_span_rebuild", "dedup_substring_spans",
-    "split_leakage_audit",
-    "text_bigram_logprob", "text_keyphrase_rake",
-    "text_perplexity_buckets",
-    # --- stale, latest driver row r09 (the remainder after the r14
-    # window consumed the alphabetical prefix) ---
-    "subq_tpch_q2_shape", "text_chunk_overlap",
-    "text_collocations_llr", "text_fingerprint", "text_lang_id",
-    "text_tfidf_top3", "timeseries_ewma_daily",
-    "variant_json_surface",
-    # --- stale, latest driver row r10 (alphabetical prefix; each
-    # round-0 slot above displaces one from this tail) ---
-    "agg_conditional_filter", "agg_geometric_harmonic_means",
-    "agg_gini_spend", "agg_minmax_multi_key",
-    "agg_ols_normal_equations", "agg_percentiles",
-    "asof_join_latest_order", "curation_domain_cap",
-    "embedding_outlier_zscore", "graph_pagerank_trade",
-    "graph_sssp_weighted", "join_bloom_prefilter",
-    "multimodal_video_framesample", "pandas_udaf_rms_spend",
-    "pandas_udf_charge", "pipeline_budget_resample",
-    "pipeline_fingerprint_dedup", "rfm_segments",
-    "sample_weighted_systematic", "scd2_intervals",
-    "scd2_point_in_time_join", "sessions_interval_overlap",
-    "similarity_ann_ivf", "similarity_ann_lsh",
-    "sort_nulls_ordering", "subq_custdist",
-    "subq_exists_late_ship", "subq_in_large_orders",
-    "subq_scalar_anti_q22", "text_bm25_top10",
-    "text_contamination_4gram", "text_dedup_exact_normalized",
-)
-
 
 def _ensure_loaded() -> None:
     """Import every module that registers queries (idempotent)."""
@@ -181,8 +83,4 @@ def _ensure_loaded() -> None:
         analytics, core, curation, dedup, functions_surface, joins,
         profiling, relational, similarity, streaming_batch,
     )
-    ordered = {n: _REGISTRY[n] for n in _SAMPLE_FIRST if n in _REGISTRY}
-    ordered.update((n, s) for n, s in _REGISTRY.items() if n not in ordered)
-    _REGISTRY.clear()
-    _REGISTRY.update(ordered)
     _LOADED = True

@@ -139,53 +139,6 @@ def test_registry_counts_match_coverage_doc():
     assert (int(m[1]), int(m[2]), int(m[3])) == live, (m.groups(), live)
 
 
-# --- driver-sample rotation policy guard (VERDICT r08 item 7) ---
-
-def test_sample_window_is_the_stalest_fifty():
-    """``_SAMPLE_FIRST`` must equal the steady-state rotation policy
-    documented above it in registry.py: the 50 queries whose latest
-    checked-in driver row (CORRECTNESS_r*.json) is OLDEST, ties broken
-    alphabetically; a query with no row yet sorts first (round 0), and
-    so does one whose registration changed since its last driver row
-    (``_CHANGED_IN_ROUND``, r9 ADVICE — a regression in changed code
-    must not ride driver-unchecked for up to 5 rounds on a fresh-but-
-    pre-change row).
-
-    This test is MEANT to fail at the start of each round once the
-    driver commits the new CORRECTNESS file — fixing it (recomputing
-    the window) is exactly the per-round rotation step, so freshness
-    debt can never silently re-accumulate."""
-    import glob
-    import json
-    import pathlib
-    import re
-
-    from mapreduce_implementation_spark.registry import (
-        _CHANGED_IN_ROUND, _SAMPLE_FIRST, all_specs,
-    )
-
-    root = pathlib.Path(__file__).resolve().parent.parent
-    latest: dict[str, int] = {}
-    for f in glob.glob(str(root / "CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", pathlib.Path(f).name).group(1))
-        for q in json.load(open(f)):
-            latest[q] = max(latest.get(q, 0), rnd)
-    names = sorted(all_specs())
-    assert set(_CHANGED_IN_ROUND) <= set(names), (
-        "stale _CHANGED_IN_ROUND entry for an unregistered query")
-
-    def eff(q: str) -> int:
-        lat = latest.get(q, 0)
-        return 0 if lat < _CHANGED_IN_ROUND.get(q, 0) else lat
-
-    want = sorted(names, key=lambda q: (eff(q), q))[:50]
-    assert sorted(_SAMPLE_FIRST) == sorted(want), (
-        "rotate _SAMPLE_FIRST to the 50 stalest queries "
-        "(see the policy comment in registry.py); "
-        f"missing={sorted(set(want) - set(_SAMPLE_FIRST))[:10]} "
-        f"extra={sorted(set(_SAMPLE_FIRST) - set(want))[:10]}")
-
-
 # --- oracle output-type lint (VERDICT r05 item 1) ---
 
 def test_oracle_output_types_no_wide_integers():

@@ -288,6 +288,84 @@ def test_expr_interpolated_identifiers_rejected(spark):
         lsh_candidate_pairs(df, "id", sig_col="sig`[0]")
 
 
+
+@pytest.mark.parametrize("bad", ["my id", "id`", "id\n"])
+@pytest.mark.parametrize("site", ["sample_chunks.payload_col",
+                                  "batch_inference_scores.id_col"])
+def test_multimodal_spliced_names_rejected(spark, site, bad):
+    """sample_chunks splices ``payload_col`` into an ``F.expr`` and
+    batch_inference_scores splices ``id_col`` into its pandas_udf schema
+    string; a name that is not a plain identifier must raise, not parse."""
+    from mapreduce_implementation_spark.operators.multimodal import (
+        batch_inference_scores, sample_chunks)
+
+    df = spark.range(1).selectExpr(f"id AS `{bad.replace('`', '``')}`",
+                                   "'abc' AS text", "X'00' AS payload")
+    with pytest.raises(ValueError, match="plain identifier"):
+        if site.startswith("sample_chunks"):
+            sample_chunks(df, "id", payload_col=bad)
+        else:
+            batch_inference_scores(df, bad, "text")
+
+
+def test_bucketed_table_name_cannot_escape_warehouse(tmp_path):
+    """_drop_stale splices the table name into DROP TABLE and into the
+    orphan-directory path it removes, so ``../x`` must be rejected before
+    either runs: the sibling directory survives and no SQL is issued.  A
+    plain name still clears its own orphan directory."""
+    from mapreduce_implementation_spark.operators.bucketing import _drop_stale
+
+    class _Spark:  # just the surface _drop_stale touches
+        def __init__(self, warehouse):
+            self.conf = {"spark.sql.warehouse.dir": warehouse}
+            self.statements = []
+
+        def sql(self, statement):
+            self.statements.append(statement)
+
+    warehouse, sibling = tmp_path / "warehouse", tmp_path / "victim"
+    (warehouse / "orders_b").mkdir(parents=True)
+    sibling.mkdir()
+    (sibling / "keep.txt").write_text("data")
+    spark = _Spark(str(warehouse))
+
+    with pytest.raises(ValueError, match="plain identifier"):
+        _drop_stale(spark, "../victim")
+    assert (sibling / "keep.txt").read_text() == "data"
+    assert spark.statements == []
+
+    _drop_stale(spark, "Orders_B")
+    assert spark.statements == ["DROP TABLE IF EXISTS Orders_B"]
+    assert not (warehouse / "orders_b").exists()
+    assert sibling.exists()
+
+
+@pytest.mark.parametrize("ram_gib, cores, want", [
+    (16, 4, (4, "8192m")),      # half the box
+    (15.5, 4, (4, "7936m")),
+    (1, 1, (1, "1024m")),       # never below Spark's 1 GiB default
+    (512, 64, (64, "31744m")),  # capped where compressed oops end
+    (8, 0, (1, "4096m")),       # at least one thread
+])
+def test_default_session_sizing(ram_gib, cores, want):
+    from mapreduce_implementation_spark.session import default_sizing
+
+    assert default_sizing(int(ram_gib * (1 << 30)), cores) == want
+
+
+def test_session_sizing_overrides(monkeypatch):
+    from mapreduce_implementation_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    cpus, heap = session._box_sizing()
+    assert 1 <= cpus <= (os.cpu_count() or 1)
+    assert 1024 <= int(heap.rstrip("m")) <= 31744
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert session._box_sizing() == (3, "2g")
+
 def test_spread_small_input_guard(spark):
     """spread_small_input (r14 opt) must round-robin a sub-parallelism
     input up to the session's core count — and PASS THROUGH untouched
