@@ -9,7 +9,7 @@ physical strategy; the master/worker/UDP machinery (O14–O16) is Spark's
 driver/executor model and is deliberately absent.
 
 Layout:
-    session     — SparkSession builder tuned for local[32] dev and cluster scale
+    session     — SparkSession builder sized from the machine it runs on
     sources     — table loaders (parquet fixtures, text dirs) and sinks
     operators   — text (word count), sort, relational, joins, windows,
                   dedup, similarity, multimodal

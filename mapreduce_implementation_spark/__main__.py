@@ -43,7 +43,7 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     if args.nworkers > 0:
-        os.environ.setdefault("SPARK_GRAFT_CPUS", str(args.nworkers))
+        os.environ["SPARK_GRAFT_CPUS"] = str(args.nworkers)
 
     from pyspark.sql import functions as F
 

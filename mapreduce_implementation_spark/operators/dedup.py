@@ -43,6 +43,10 @@ __all__ = [
     "span_chunks", "span_dedup_rebuild",
 ]
 
+# tfidf_cosine_pairs switches from the naive shared-term join to prefix
+# filtering once the corpus has more distinct terms than this.
+_PREFIX_VOCAB_THRESHOLD = 4096
+
 
 def exact_dedup_representatives(df: DataFrame, key_cols: list[str],
                                 id_col: str) -> DataFrame:
@@ -67,11 +71,6 @@ def char_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 9,
     exchange).  Jaccard/size consumers need set semantics — keep the
     default there.
     """
-    from ..sources.tables import spread_small_input
-
-    # the shingle explode + downstream hashing is the family's dominant
-    # per-row cost; a sub-split input caps it at ONE core (r14 opt)
-    df = spread_small_input(df)
     norm = F.lower(F.regexp_replace(F.col(text_col), "[^A-Za-z ]", ""))
     out = (
         df.select(F.col(id_col), norm.alias("_t"))
@@ -256,10 +255,7 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFrame:
     """(id, simhash) — 64-bit SimHash over the token stream: per bit, the
     sign of sum(+1/-1) across token hashes."""
-    from ..sources.tables import spread_small_input
-
     sql_ident(id_col)
-    df = spread_small_input(df)  # 64 bit-sums/token: unlock every core
     toks = (
         df.select(id_col, F.explode(tokens_array(F.col(text_col))).alias("tok"))
         .filter(F.col("tok") != "")
@@ -316,10 +312,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     """(a, b, jaccard) — EXACT n-gram Jaccard similarity join: pairs from
     shared n-grams (inverted-index join), |A∩B| by count, |A∪B| by
     inclusion-exclusion.  SQL-expressible -> full DuckDB oracle."""
-    from ..sources.tables import spread_small_input
-
-    grams = tracked_persist(word_ngrams(spread_small_input(df), id_col,
-                                        text_col, n=n)
+    grams = tracked_persist(word_ngrams(df, id_col, text_col, n=n)
                             .select(id_col, "ngram").distinct())
     sizes = grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a = grams.select(F.col(id_col).alias("a"), "ngram")
@@ -359,10 +352,7 @@ def ngram_containment_pairs(df: DataFrame, id_col: str, text_col: str,
     stop-gram frequency cap applies unchanged; the exact form here IS
     the verify step of that path.
     """
-    from ..sources.tables import spread_small_input
-
-    grams = tracked_persist(word_ngrams(spread_small_input(df), id_col,
-                                        text_col, n=n)
+    grams = tracked_persist(word_ngrams(df, id_col, text_col, n=n)
                             .select(id_col, "ngram").distinct())
     sizes = grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a = grams.select(F.col(id_col).alias("a"), "ngram")
@@ -502,9 +492,7 @@ def ngram_jaccard_pairs_prefix(df: DataFrame, id_col: str, text_col: str,
     array copy per doc per side) for the exact ``array_intersect``
     verification — the standard records-pair verify step.
     """
-    from ..sources.tables import spread_small_input
-
-    grams = (word_ngrams(spread_small_input(df), id_col, text_col, n=n)
+    grams = (word_ngrams(df, id_col, text_col, n=n)
              .select(id_col, "ngram").distinct())
     dfreq = grams.groupBy("ngram").agg(F.count(F.lit(1)).alias("_df"))
     # MEASURED AND REJECTED (r15, VERDICT r14 item 5): mapping grams to
@@ -590,9 +578,7 @@ def ngram_jaccard_pairs_prefix(df: DataFrame, id_col: str, text_col: str,
 
 
 def tfidf_cosine_pairs(df: DataFrame, id_col: str, text_col: str,
-                       min_cosine: float = 0.9,
-                       prefix_filter: bool | None = None,
-                       prefix_vocab_threshold: int = 4096) -> DataFrame:
+                       min_cosine: float = 0.9) -> DataFrame:
     """(a, b, cos) — EXACT sparse TF-IDF cosine similarity join (the IR
     twin of the dense embedding ops): weight each (doc, term) by
     tf * ln(N/df), find candidate pairs on shared terms (inverted
@@ -624,9 +610,9 @@ def tfidf_cosine_pairs(df: DataFrame, id_col: str, text_col: str,
       almost nothing, and the candidate+verify detour measured 3x
       slower than the straight join (35 s vs 12 s at sf0.1).
 
-    ``prefix_filter=None`` probes the distinct-term count (a tiny
+    The operator probes the distinct-term count (a LIMIT-capped
     aggregate over the cached weight frame) and picks prefix filtering
-    once the vocabulary exceeds ``prefix_vocab_threshold`` — below
+    once the vocabulary exceeds ``_PREFIX_VOCAB_THRESHOLD`` — below
     that, every term is effectively common and the naive join's single
     shuffle wins.
     """
@@ -652,11 +638,8 @@ def tfidf_cosine_pairs(df: DataFrame, id_col: str, text_col: str,
     # cost -- runs once per consumer (the minhash-signature class).
     w = tracked_persist(w)
     nrm = w.groupBy(id_col).agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nn"))
-    if prefix_filter is None:
-        prefix_filter = (
-            w.select("tok").distinct().limit(prefix_vocab_threshold + 1).count()
-            > prefix_vocab_threshold)
-    if prefix_filter:
+    vocab = w.select("tok").distinct().limit(_PREFIX_VOCAB_THRESHOLD + 1)
+    if vocab.count() > _PREFIX_VOCAB_THRESHOLD:
         t_prune = max(min_cosine - 1e-9, 0.0)
         win = (Window.partitionBy(id_col).orderBy(F.asc("w"), F.asc("tok"))
                .rowsBetween(Window.unboundedPreceding, 0))
@@ -789,20 +772,7 @@ def span_chunks(df: DataFrame, id_col: str, text_col: str,
                 span_tokens: int = 10) -> DataFrame:
     """(id, chunk_idx, chunk_text) — the span-generation stage of
     :func:`span_dedup_rebuild`, exposed so the plan test pins the
-    SHIPPED code path (in-row array slicing — no Window, and no
-    Exchange beyond the input spread's round-robin).
-
-    r15: `spread_small_input` at the entry, closing the one
-    compute-bound map phase the r14 spread sweep missed (tokenize +
-    n/w slice windows + concat_ws per row).  Measured: wash at sf0.1
-    (1.43 vs 1.59 s min-warm — inside noise either way), full
-    span_dedup_rebuild at sf1 on a one-file 10x corpus 23.1 -> 20.7 s
-    (~10%, consistent across reps); bounded by the chunk-text window
-    shuffle downstream, which the spread does not touch.  Pass-through
-    on multi-split inputs like every spread site."""
-    from ..sources.tables import spread_small_input
-
-    df = spread_small_input(df)
+    SHIPPED code path (in-row array slicing — no Window, no Exchange)."""
     w = int(span_tokens)
     arr = F.filter(tokens_array(F.col(text_col)), lambda t: t != "")
     n = F.size(arr)
@@ -927,10 +897,8 @@ def duplicate_substring_spans(df: DataFrame, id_col: str, text_col: str,
     """
     from pyspark.sql import Window
 
-    from ..sources.tables import spread_small_input
-
     norm = F.lower(F.regexp_replace(F.col(text_col), "[^A-Za-z ]", ""))
-    base = (spread_small_input(df).select(F.col(id_col), norm.alias("_t"))
+    base = (df.select(F.col(id_col), norm.alias("_t"))
             .where(F.length("_t") >= width))
     wins = (
         base.select(

@@ -36,6 +36,13 @@ __all__ = ["connected_components", "pagerank", "label_propagation",
 # silently returning a half-contracted clustering would be wrong.
 _MAX_ROUNDS = 25
 
+# Every physical-mode choice below is made from the input, never by the
+# caller.  An edge list of at most this many rows (integral keys) runs
+# as one vectorized Arrow task (see _dense_probe); a graph of at most
+# _BROADCAST_NODE_LIMIT nodes broadcasts its O(nodes) score vector.
+_DENSE_EDGE_LIMIT = 2_000_000
+_BROADCAST_NODE_LIMIT = 1_000_000
+
 
 def _canon(edges: DataFrame) -> DataFrame:
     """Distinct edges oriented large→small, self-loops dropped."""
@@ -132,19 +139,17 @@ def _cc_dense_membership(e: DataFrame) -> DataFrame:
             .applyInPandas(solve, "node bigint, cluster_id bigint"))
 
 
-def connected_components(pairs: DataFrame, a_col: str, b_col: str,
-                         dense_path: bool | None = None,
-                         dense_edge_limit: int = 2_000_000) -> DataFrame:
+def connected_components(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
     """Cluster assignment for every node appearing in ``pairs``.
 
     Returns ``(node, cluster_id)`` with ``cluster_id`` = the minimum node id
     of the component (deterministic canonical representative).  Runs
     large-star/small-star rounds until the edge list is a fixed point (a
-    star forest rooted at each component's minimum).  ``dense_path``
-    (r7): canonical edge lists fitting one Arrow batch resolve in one
-    vectorized task — :func:`_cc_dense_membership`; the convergence-
-    looped star contraction (with its per-round signature collects)
-    remains the past-the-limit mode.
+    star forest rooted at each component's minimum).  Canonical edge
+    lists that pass :func:`_dense_probe` resolve in one vectorized task
+    — :func:`_cc_dense_membership`; the convergence-looped star
+    contraction (with its per-round signature collects) remains the
+    past-the-limit mode.
     """
     # persist the 2-column pair projection FIRST: the `nodes` union and
     # the canonical edge build are separate consumers, and without this
@@ -162,9 +167,7 @@ def connected_components(pairs: DataFrame, a_col: str, b_col: str,
     # runs once, not once for the limit-capped count and again for
     # whichever mode runs
     edges = _canon(pv).localCheckpoint(eager=True)
-    if dense_path is None:
-        dense_path = _dense_probe(edges, ("u", "v"), dense_edge_limit)
-    if dense_path:
+    if _dense_probe(edges, ("u", "v")):
         # cast the int64 Arrow output back to the input key type so the
         # output schema is identical to the declarative mode's (ADVICE
         # r7: the physical mode must never leak into the schema)
@@ -200,7 +203,7 @@ def connected_components(pairs: DataFrame, a_col: str, b_col: str,
 _INTEGRAL = ("tinyint", "smallint", "int", "bigint")
 
 
-def _dense_probe(e: DataFrame, key_cols: tuple[str, str], limit: int,
+def _dense_probe(e: DataFrame, key_cols: tuple[str, str],
                  weight_col: str | None = None) -> bool:
     """The ONE auto-gate for every dense Arrow fast path in this module
     (pagerank/hits/label_propagation/bfs/sssp/kcore share it so a
@@ -208,14 +211,23 @@ def _dense_probe(e: DataFrame, key_cols: tuple[str, str], limit: int,
     must be integral (the int64 relabeling contract), ``weight_col`` —
     when given — must be integral too (sssp's exact min-plus truncates
     fractional weights, so float-weight callers stay declarative), and
-    the edge list must fit one Arrow batch (LIMIT-capped count — never
-    scans more than limit+1 rows of the persisted frame)."""
+    the edge list must fit one Arrow batch (a ``_DENSE_EDGE_LIMIT``-capped
+    count — never scans more than limit+1 rows of the persisted frame)."""
     dtypes = {f.name: f.dataType.simpleString() for f in e.schema.fields}
     if any(dtypes[c] not in _INTEGRAL for c in key_cols):
         return False
     if weight_col is not None and dtypes[weight_col] not in _INTEGRAL:
         return False
-    return e.limit(limit + 1).count() <= limit
+    return e.limit(_DENSE_EDGE_LIMIT + 1).count() <= _DENSE_EDGE_LIMIT
+
+
+def _broadcast_hint(n1: DataFrame):
+    """F.broadcast for a node set of at most ``_BROADCAST_NODE_LIMIT``
+    rows (LIMIT-capped count), identity past it: pagerank's and hits'
+    score vector then joins by key as a shuffled hash join."""
+    small = (n1.limit(_BROADCAST_NODE_LIMIT + 1).count()
+             <= _BROADCAST_NODE_LIMIT)
+    return F.broadcast if small else (lambda df: df)
 
 
 def _relabel(vs, arr):
@@ -319,11 +331,8 @@ def _pagerank_dense(e: DataFrame, n1: DataFrame, cnt: DataFrame,
 
 
 def pagerank(edges: DataFrame, nodes: DataFrame, iters: int = 5,
-             damping: float = 0.85, broadcast_ranks: bool | None = None,
-             broadcast_node_limit: int = 1_000_000,
-             reset: DataFrame | None = None,
-             dense_path: bool | None = None,
-             dense_edge_limit: int = 2_000_000) -> DataFrame:
+             damping: float = 0.85,
+             reset: DataFrame | None = None) -> DataFrame:
     """Weighted PageRank over an edge list ``(src, dst, w)``.
 
     ``reset`` (optional) personalizes the walk: a ``(v, s)`` frame whose
@@ -341,26 +350,24 @@ def pagerank(edges: DataFrame, nodes: DataFrame, iters: int = 5,
     count enters the plan as a broadcast 1-row aggregate, never a Python
     scalar.
 
-    Rank-vector strategy (the 100 TB honesty knob): the vector is
-    O(nodes).  For dimension-sized graphs (the 25-node trade graph) it
-    broadcasts — zero shuffle per iteration.  At web-scale node counts a
-    broadcast exceeds executor memory, so past ``broadcast_node_limit``
-    nodes the vector joins by ``src`` as a plain shuffled hash join
-    instead (same result, one extra exchange per iteration — the
-    Pregel-style layout).  ``broadcast_ranks=None`` probes with a
-    LIMIT-capped count (never scans more than limit+1 node rows);
-    True/False forces a mode.  Both modes are oracle-identical —
+    Rank-vector strategy: the vector is O(nodes).  For dimension-sized
+    graphs (the 25-node trade graph) it broadcasts — zero shuffle per
+    iteration.  At web-scale node counts a broadcast exceeds executor
+    memory, so past ``_BROADCAST_NODE_LIMIT`` nodes (a LIMIT-capped
+    count, :func:`_broadcast_hint`) the vector joins by ``src`` as a
+    plain shuffled hash join instead (same result, one extra exchange
+    per iteration — the Pregel-style layout).  Both modes are
+    oracle-identical —
     tests/test_graph_text.py::test_pagerank_shuffle_mode_matches_broadcast.
 
-    ``dense_path`` (the hits() precedent, r7): when the AGGREGATED edge
-    list fits one Arrow batch (≤ ``dense_edge_limit`` rows, integral
-    keys), the whole iteration runs instead as ONE vectorized
-    ``applyInPandas`` task — see :func:`_pagerank_dense`.  ``None``
-    probes with a LIMIT-capped count.  Personalized walks qualify too
-    (r8): the reset distribution is O(nodes) state, but only the
-    edge-touched slice of it matters inside the batch, and that slice
-    rides in as two per-edge columns; isolated nodes keep their
-    closed-form (1-d)*s_v at the densify.  All three physical modes
+    Dense fast path (the hits() precedent, r7): when the AGGREGATED edge
+    list passes :func:`_dense_probe` (≤ ``_DENSE_EDGE_LIMIT`` rows,
+    integral keys), the whole iteration runs instead as ONE vectorized
+    ``applyInPandas`` task — see :func:`_pagerank_dense`.  Personalized
+    walks qualify too (r8): the reset distribution is O(nodes) state,
+    but only the edge-touched slice of it matters inside the batch, and
+    that slice rides in as two per-edge columns; isolated nodes keep
+    their closed-form (1-d)*s_v at the densify.  All three physical modes
     agree to 1e-9 (test_pagerank_shuffle_mode_matches_broadcast;
     reset parity in test_personalized_pagerank_dense_matches).
 
@@ -394,15 +401,10 @@ def pagerank(edges: DataFrame, nodes: DataFrame, iters: int = 5,
     # Personalized walks qualify too (r8): the O(nodes) reset state
     # rides into the Arrow batch as two per-edge columns, so the probe
     # is the same edge-list-fits-one-batch test either way.
-    if dense_path is None:
-        dense_path = _dense_probe(e, ("src", "dst"), dense_edge_limit)
-    if dense_path:
+    if _dense_probe(e, ("src", "dst")):
         return _pagerank_dense(e, n1, cnt, iters, damping, rs=rs)
     outw = tracked_persist(e.groupBy("src").agg(F.sum("w").alias("_ow")))
-    if broadcast_ranks is None:
-        broadcast_ranks = (
-            n1.limit(broadcast_node_limit + 1).count() <= broadcast_node_limit)
-    hint = F.broadcast if broadcast_ranks else (lambda df: df)
+    hint = _broadcast_hint(n1)
     if reset is None:
         ranks = n1.crossJoin(F.broadcast(cnt)).select(
             "v", (F.lit(1.0) / F.col("_n")).alias("r"))
@@ -482,9 +484,7 @@ def _kcore_dense(e: DataFrame, k: int, rounds: int) -> DataFrame:
 
 
 def kcore(edges: DataFrame, a_col: str, b_col: str, k: int,
-          rounds: int,
-          dense_path: bool | None = None,
-          dense_edge_limit: int = 2_000_000) -> DataFrame:
+          rounds: int) -> DataFrame:
     """k-core decomposition by synchronous iterative peeling: repeatedly
     drop every node of degree < ``k`` (with the cascade — removing a
     node lowers its neighbors' degrees, which may push THEM under k)
@@ -505,17 +505,15 @@ def kcore(edges: DataFrame, a_col: str, b_col: str, k: int,
     sides agree even mid-cascade); production at unknown diameter swaps
     the fixed count for connected_components' signature-convergence
     loop.  Lineage truncates per round (see pagerank; last round stays
-    lazy).  ``dense_path`` (r7): canonical edge lists fitting one Arrow
-    batch peel in one vectorized task — :func:`_kcore_dense`.
+    lazy).  Canonical edge lists that pass :func:`_dense_probe` peel in
+    one vectorized task — :func:`_kcore_dense`.
     """
     e = tracked_persist(
         edges.select(F.least(F.col(a_col), F.col(b_col)).alias("u"),
                      F.greatest(F.col(a_col), F.col(b_col)).alias("v"))
         .filter(F.col("u") < F.col("v"))
         .distinct())
-    if dense_path is None:
-        dense_path = _dense_probe(e, ("u", "v"), dense_edge_limit)
-    if dense_path:
+    if _dense_probe(e, ("u", "v")):
         # int64 Arrow output cast back to the input key type: both
         # physical modes must return identical schemas (ADVICE r7)
         kt = e.schema["u"].dataType
@@ -622,9 +620,7 @@ def _label_propagation_dense(e: DataFrame, n1: DataFrame,
 
 
 def label_propagation(edges: DataFrame, nodes: DataFrame,
-                      iters: int = 5,
-                      dense_path: bool | None = None,
-                      dense_edge_limit: int = 2_000_000) -> DataFrame:
+                      iters: int = 5) -> DataFrame:
     """Synchronous weighted label propagation (community detection,
     Raghavan et al. 2007) — deterministic variant: every node
     simultaneously adopts the label with the highest incident edge
@@ -642,12 +638,12 @@ def label_propagation(edges: DataFrame, nodes: DataFrame,
     fixed iteration count exactly reproducible (and therefore
     oracle-able), unlike the asynchronous/random-order formulation.
 
-    ``dense_path`` (the hits()/pagerank() precedent, r7): when the
-    aggregated edge list fits one Arrow batch (≤ ``dense_edge_limit``
-    rows, integral keys, AND an integral caller weight column — the
-    tie-break contract, see the probe comment below), all rounds run
-    as ONE vectorized ``applyInPandas`` task — see
-    :func:`_label_propagation_dense`; past the limit (or with float
+    Dense fast path (the hits()/pagerank() precedent, r7): when the
+    aggregated edge list passes :func:`_dense_probe` (≤
+    ``_DENSE_EDGE_LIMIT`` rows, integral keys) AND the caller's weight
+    column is integral (the tie-break contract, see the probe comment
+    below), all rounds run as ONE vectorized ``applyInPandas`` task —
+    see :func:`_label_propagation_dense`; past the limit (or with float
     weights) the declarative chain below runs unchanged.  Both modes
     parity-tested (test_label_propagation_modes_match).  Like the other
     graph operators, edge endpoints are expected to be a subset of
@@ -672,14 +668,9 @@ def label_propagation(edges: DataFrame, nodes: DataFrame,
     # sorted accumulation and Spark's partition-order aggregation
     # (ADVICE r7).  Integer weights make every sum exact in both
     # engines, so ties break identically; float-weight callers stay on
-    # one deterministic mode (declarative) unless they accept the
-    # contract with an explicit dense_path=True.
-    if dense_path is None:
-        w_integral = (edges.schema["w"].dataType.simpleString()
-                      in _INTEGRAL)
-        dense_path = w_integral and _dense_probe(
-            e, ("src", "dst"), dense_edge_limit)
-    if dense_path:
+    # one deterministic mode (declarative).
+    w_integral = edges.schema["w"].dataType.simpleString() in _INTEGRAL
+    if w_integral and _dense_probe(e, ("src", "dst")):
         return _label_propagation_dense(e, n1, iters)
     labels = n1.select("v", F.col("v").alias("label"))
     w_pick = Window.partitionBy("dst").orderBy(F.desc("_s"), F.asc("label"))
@@ -751,9 +742,7 @@ def _bellman_ford_dense(e: DataFrame, n1: DataFrame, source, rounds: int,
 
 
 def bfs_distances(edges: DataFrame, nodes: DataFrame, source,
-                  max_hops: int = 5,
-                  dense_path: bool | None = None,
-                  dense_edge_limit: int = 2_000_000) -> DataFrame:
+                  max_hops: int = 5) -> DataFrame:
     """Single-source shortest HOP distances (multi-round distributed
     BFS / the unit-weight Bellman-Ford relaxation): ``(v, dist)`` with
     NULL dist for nodes unreachable within ``max_hops``.
@@ -767,8 +756,8 @@ def bfs_distances(edges: DataFrame, nodes: DataFrame, source,
     ``localCheckpoint`` lineage truncation per round (the CC idiom) —
     deterministic, so still oracle-able.  At true web diameter, swap
     the fixed count for the convergence test ``connected_components``
-    uses.  ``dense_path`` (r7): edge lists fitting one Arrow batch run
-    all rounds in one vectorized task — :func:`_bellman_ford_dense`.
+    uses.  Edge lists that pass :func:`_dense_probe` run all rounds in
+    one vectorized task — :func:`_bellman_ford_dense`.
     """
     # infinity sentinel derived from max_hops (a reachable distance is
     # <= max_hops, so max_hops + 1 can never collide with a real value);
@@ -780,9 +769,7 @@ def bfs_distances(edges: DataFrame, nodes: DataFrame, source,
     n1 = nodes.select(F.col("v")).distinct()
     # dimension-sized dense fast path (see _bellman_ford_dense): exact
     # int64 min-plus in one Arrow task when the edge list fits a batch
-    if dense_path is None:
-        dense_path = _dense_probe(e, ("src", "dst"), dense_edge_limit)
-    if dense_path:
+    if _dense_probe(e, ("src", "dst")):
         return _bellman_ford_dense(e, n1, source, max_hops,
                                    weighted=False, out_type="int")
     dist = n1.select(
@@ -812,9 +799,7 @@ def bfs_distances(edges: DataFrame, nodes: DataFrame, source,
 
 
 def sssp_weighted(edges: DataFrame, nodes: DataFrame, source,
-                  rounds: int, max_edge_w: int,
-                  dense_path: bool | None = None,
-                  dense_edge_limit: int = 2_000_000) -> DataFrame:
+                  rounds: int, max_edge_w: int) -> DataFrame:
     """Single-source shortest WEIGHTED path distances (Bellman-Ford):
     ``(v, dist)`` with NULL dist for nodes not reached within
     ``rounds`` relaxation rounds.  Generalizes :func:`bfs_distances`
@@ -834,9 +819,9 @@ def sssp_weighted(edges: DataFrame, nodes: DataFrame, source,
     declaratively, a fixed round count with ``localCheckpoint``
     lineage truncation per round (deterministic, so still oracle-able).
     At true web scale swap the fixed count for the convergence test
-    ``connected_components`` uses.  ``dense_path`` (r7): edge lists
-    fitting one Arrow batch run all rounds in one vectorized task —
-    :func:`_bellman_ford_dense`.
+    ``connected_components`` uses.  Edge lists that pass
+    :func:`_dense_probe` with an integral weight column run all rounds
+    in one vectorized task — :func:`_bellman_ford_dense`.
     """
     if max_edge_w < 1:
         raise ValueError("max_edge_w must be >= 1")
@@ -851,15 +836,7 @@ def sssp_weighted(edges: DataFrame, nodes: DataFrame, source,
     # the probe also requires an INTEGRAL weight column — the contract
     # says integer weights, and gating (rather than truncating) keeps
     # float-weight callers on the declarative chain with unchanged math
-    if dense_path is None:
-        dense_path = _dense_probe(e, ("src", "dst"), dense_edge_limit,
-                                  weight_col="w")
-    if dense_path:
-        if e.schema["w"].dataType.simpleString() not in _INTEGRAL:
-            raise ValueError(
-                "dense_path requires integer edge weights (the exact "
-                "min-plus contract); scale float costs to integers or "
-                "pass dense_path=False")
+    if _dense_probe(e, ("src", "dst"), weight_col="w"):
         return _bellman_ford_dense(e, n1, source, rounds,
                                    weighted=True, out_type="long")
     dist = n1.select(
@@ -925,11 +902,7 @@ def _hits_dense(e: DataFrame, n1: DataFrame, iters: int) -> DataFrame:
 
 
 def hits(edges: DataFrame, nodes: DataFrame, iters: int = 2,
-         broadcast_vecs: bool | None = None,
-         broadcast_node_limit: int = 1_000_000,
-         norm_every: int = 2,
-         dense_path: bool | None = None,
-         dense_edge_limit: int = 2_000_000) -> DataFrame:
+         norm_every: int = 2) -> DataFrame:
     """Weighted HITS (Kleinberg, "Authoritative sources in a hyperlinked
     environment", JACM 1999): alternating hub/authority power iteration,
     L2-normalized.  Same execution shape as pagerank(): the edge list is
@@ -938,8 +911,8 @@ def hits(edges: DataFrame, nodes: DataFrame, iters: int = 2,
     sum keyed on the opposite endpoint; the L2 normalizer enters the
     plan as a broadcast 1-row aggregate, never a Python scalar.  The
     score vector broadcasts for dimension-sized graphs and falls back to
-    a shuffled hash join past ``broadcast_node_limit`` nodes —
-    pagerank's 100 TB honesty knob.
+    a shuffled hash join past ``_BROADCAST_NODE_LIMIT`` nodes — the
+    same :func:`_broadcast_hint` gate pagerank uses.
 
     Returns (v, hub, authority) after ``iters`` full authority-then-hub
     rounds from the all-ones hub start (deterministic, RNG-free, so an
@@ -972,20 +945,19 @@ def hits(edges: DataFrame, nodes: DataFrame, iters: int = 2,
     all-zero scores rather than NULLs — mirroring power_iteration_top's
     nrm == 0 branch.
 
-    **Dense fast path** (``dense_path``, the second honesty knob, the
-    embedding_pca_power / IVF-centroid precedent): the iteration state
-    is O(active nodes + edges) — after the data-sized edge aggregation,
-    a graph whose AGGREGATED edge list fits one Arrow batch
-    (≤ ``dense_edge_limit`` rows) iterates fastest as ONE vectorized
+    **Dense fast path** (the embedding_pca_power / IVF-centroid
+    precedent): the iteration state is O(active nodes + edges) — after
+    the data-sized edge aggregation, a graph whose AGGREGATED edge list
+    passes :func:`_dense_probe` (≤ ``_DENSE_EDGE_LIMIT`` rows, integral
+    keys) iterates fastest as ONE vectorized
     numpy task (``applyInPandas`` over a single group: per-half-step
     ``bincount`` matvecs, O(edges) time, O(nodes) memory, rows sorted by
     (src, dst) first so float accumulation order is deterministic).
     Nothing touches the driver; the 25-node trade graph drops from ~8
-    tiny exchange-separated stages to one.  ``None`` probes with a
-    LIMIT-capped count; past the limit the declarative chain above runs
-    unchanged (web-scale edge lists never collapse into one task).
-    Both modes are oracle-identical —
-    tests/test_graph_text.py::test_hits_dense_path_matches_declarative.
+    tiny exchange-separated stages to one.  Past the limit the
+    declarative chain above runs unchanged (web-scale edge lists never
+    collapse into one task).  Both modes are oracle-identical —
+    tests/test_graph_text.py::test_hits_matches_numpy_iteration.
     """
     # iters=0 would diverge between modes (raw all-ones vs normalized
     # 1/sqrt(n)) — reject at the contract, same as pagerank
@@ -998,14 +970,9 @@ def hits(edges: DataFrame, nodes: DataFrame, iters: int = 2,
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull()
                & F.col("w").isNotNull()))
     n1 = nodes.select("v").distinct()
-    if dense_path is None:
-        dense_path = _dense_probe(e, ("src", "dst"), dense_edge_limit)
-    if dense_path:
+    if _dense_probe(e, ("src", "dst")):
         return _hits_dense(e, n1, iters)
-    if broadcast_vecs is None:
-        broadcast_vecs = (
-            n1.limit(broadcast_node_limit + 1).count() <= broadcast_node_limit)
-    hint = F.broadcast if broadcast_vecs else (lambda df: df)
+    hint = _broadcast_hint(n1)
 
     def propagate(vec: DataFrame, in_key: str, out_key: str) -> DataFrame:
         """One unnormalized half-step: mass flows along edges from

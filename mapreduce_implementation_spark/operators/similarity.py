@@ -88,16 +88,6 @@ def hyperplane_bucket_keys(df: DataFrame, vec_col: str, dim: int,
     the 64-hyperplane embedding-dedup query.  Per-row work is identical
     and embarrassingly parallel, so this scales as a pure map stage.
     """
-    # NO spread_small_input here (r15, reverting the r14 touch): the
-    # A/B the r14 driver data demanded (VERDICT r14 item 2) measured
-    # the spread LOSING on this operator at both core counts —
-    # interleaved min-of-warm-3 at sf0.1: 32c 3.75-4.29 s WITH vs
-    # 2.76-2.93 s WITHOUT; 8c 2.35-2.52 WITH vs 2.15-2.36 WITHOUT
-    # (driver r14 rows agreed: 2.5 s r13 -> 3.47/4.53 s r14).  The
-    # matmul is one numpy call per Arrow batch, so a round-robin
-    # exchange + per-task Arrow re-serialization costs more than the
-    # added parallelism returns; a production-scale input arrives with
-    # many splits and parallelizes without help.
     planes = np.vstack([_hyperplanes(dim, bits, seed + t)
                         for t in range(tables)])  # (tables*bits, dim)
     weights = (np.int64(1) << np.arange(bits, dtype=np.int64))

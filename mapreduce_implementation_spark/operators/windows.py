@@ -44,6 +44,12 @@ __all__ = ["ranked", "with_lag", "running_agg", "top_k_per_group",
 # untouched instead of being silently replaced and dropped.
 
 
+def _shuffle_partitions(df: DataFrame) -> int:
+    """The session's effective ``spark.sql.shuffle.partitions``: the
+    count its shuffles use, Spark's default of 200 when nothing set it."""
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+
 def _spec(partition_by: list[str], order_by: list[Column]) -> WindowSpec:
     return Window.partitionBy(*partition_by).orderBy(*order_by)
 
@@ -230,9 +236,7 @@ def shared_boundaries(df: DataFrame, key_sets: list, n_buckets: int | None = Non
     exact for any boundary set.  Pass each returned element as the
     matching operator's ``bounds=``.
     """
-    spark = df.sparkSession
-    parts = n_buckets or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parts = n_buckets or _shuffle_partitions(df)
     keyed = [_norm_keys(ks) for ks in key_sets]
     all_names: list[str] = []
     for keys in keyed:
@@ -347,8 +351,7 @@ def global_ntile(df: DataFrame, order_by, n_tiles: int,
     boundary make ranks nondeterministic.  The persist is purely a perf
     optimization — the bucket id is recompute-stable by construction.
     """
-    spark = df.sparkSession
-    parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parts = partitions or _shuffle_partitions(df)
     keys = _norm_keys(order_by)
     # persist the BASE frame: the boundary-sample collect materializes
     # it, so the upstream lineage (often the expensive part) runs once
@@ -403,8 +406,7 @@ def global_running_sum(df: DataFrame, value_col: str,
     ``order_by``: sort-key list (module docstring), total order
     required.  The persist is a perf optimization only.
     """
-    spark = df.sparkSession
-    parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parts = partitions or _shuffle_partitions(df)
     keys = _norm_keys(order_by)
     # persist the BASE frame (see global_ntile): the sample collect
     # materializes the upstream lineage once; _bkt recomputes per
@@ -454,8 +456,7 @@ def grouped_running_sum(df: DataFrame, value_col: str, group_cols: list[str],
     sees the same assignment under any recomputation (module
     docstring); the persist is perf-only.
     """
-    spark = df.sparkSession
-    parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parts = partitions or _shuffle_partitions(df)
     keys = _norm_keys([*group_cols, *order_by])
     okeys = _norm_keys(order_by)
     # persist the BASE frame (see global_ntile)
@@ -509,8 +510,7 @@ def grouped_ntile(df: DataFrame, group_cols: list[str], order_by,
     ``order_by`` must total-order rows WITHIN each group (include a
     unique tiebreaker).
     """
-    spark = df.sparkSession
-    parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parts = partitions or _shuffle_partitions(df)
     keys = _norm_keys([*group_cols, *order_by])
     okeys = _norm_keys(order_by)
     base = tracked_persist(df)
@@ -570,8 +570,7 @@ def exact_quantiles(df: DataFrame, value_col: str, probs: list[float],
     last ulp given equal inputs.  NULLs are excluded (percentile_cont
     semantics).  Returns one row with one column per prob.
     """
-    spark = df.sparkSession
-    parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parts = partitions or _shuffle_partitions(df)
     names = out_names or [f"q{str(p).replace('.', '_')}" for p in probs]
     keys = _norm_keys([value_col])
     base = tracked_persist(
@@ -641,8 +640,7 @@ def grouped_exact_quantiles(df: DataFrame, value_col: str,
     SQL GROUP BY over the null-filtered input).  Offsets return via a
     keyed join, not broadcast — group cardinality may itself be huge.
     """
-    spark = df.sparkSession
-    parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parts = partitions or _shuffle_partitions(df)
     names = out_names or [f"q{str(p).replace('.', '_')}" for p in probs]
     keys = _norm_keys([*group_cols, value_col])
     okeys = _norm_keys([value_col])
@@ -716,8 +714,7 @@ def global_order_stats(df: DataFrame, order_by,
     ``order_by``: sort-key list (module docstring).  Unlike the other
     two-phase operators no tiebreaker is needed — ties are the point.
     """
-    spark = df.sparkSession
-    parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parts = partitions or _shuffle_partitions(df)
     keys = _norm_keys(order_by)
     names = [k[0] for k in keys]
     tp = _fresh_name("_os_", df,

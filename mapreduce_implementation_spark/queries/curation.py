@@ -1242,12 +1242,8 @@ _BOOT_W_CASE = ("CASE " + " ".join(
         "replicas estimate.",
 )
 def q_stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import spread_small_input
-
     docs = load_table(spark, sf_dir, "documents")
-    # the x200 md5 ladder is the dominant per-row cost and runs in the
-    # map stage; a one-split input caps it at a single core (r14 opt)
-    rep = spread_small_input(docs).select(
+    rep = docs.select(
         "source", "doc_id", "n_chars",
         F.explode(F.sequence(F.lit(0), F.lit(_BOOT_REPLICAS - 1))).alias("r"))
     b = F.conv(

@@ -799,8 +799,6 @@ def q_retrieval_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("embedding").alias("qe"),
                  F.col("label").alias("ql"),
                  l2_norm(F.col("embedding")).alias("_nq")))
-    from ..sources.tables import spread_small_input
-
     # Norms are computed ONCE per side BEFORE the |corpus| x |probes|
     # cross join (r14 opt: the inline cosine() evaluated THREE sequential
     # array folds per scored pair — dot + both norms; the probe norm was
@@ -809,10 +807,7 @@ def q_retrieval_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the division keeps the exact l2_norm(qe) * l2_norm(embedding)
     # operand order, so every cosine is bit-equal to the 3-fold form and
     # the oracle hash is unchanged — only the per-pair work drops 3x.
-    # The corpus side is spread (r14 opt): the |corpus| x |probes| dot
-    # folds run in the map stage of the broadcast join, which a
-    # one-split embeddings file would serialize onto a single core.
-    b = spread_small_input(emb).select(
+    b = emb.select(
         "vec_id", "label", "embedding",
         l2_norm(F.col("embedding")).alias("_nb"))
     scored = (

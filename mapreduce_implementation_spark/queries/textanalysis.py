@@ -553,12 +553,9 @@ def _bigram_logprob_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc corpus-trained bigram-LM mean log-prob (shared by
     text_bigram_logprob and text_perplexity_buckets)."""
     from ..operators.dedup import word_ngrams
-    from ..sources.tables import spread_small_input
 
     docs = load_table(spark, sf_dir, "documents")
-    # bigram generation + the per-bigram joins dominate; spread the
-    # one-split input so the map stage uses every core (r14 opt)
-    bg = word_ngrams(spread_small_input(docs), "doc_id", "text", n=2).select(
+    bg = word_ngrams(docs, "doc_id", "text", n=2).select(
         "doc_id",
         F.split("ngram", " ").getItem(0).alias("w1"),
         F.split("ngram", " ").getItem(1).alias("w2"),
@@ -1309,10 +1306,8 @@ def q_text_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.caching import tracked_persist
     from ..operators.textstats import EN_STOPWORDS
 
-    from ..sources.tables import spread_small_input
-
     docs = load_table(spark, sf_dir, "documents")
-    toks = spread_small_input(docs).select(
+    toks = docs.select(
         "doc_id", F.posexplode(tokens_array(F.col("text"))).alias("pos", "tok"))
     d = (F.col("tok").isin(*EN_STOPWORDS) | (F.col("tok") == "")).cast("int")
     w = (Window.partitionBy("doc_id").orderBy("pos")
@@ -2082,11 +2077,8 @@ def bpe_train_merges_batched(docs: DataFrame, text_col: str,
 
     from ..functions.textfn import tokens_array
 
-    from ..sources.tables import spread_small_input
-
     spark = docs.sparkSession
-    w = (spread_small_input(docs)
-         .select(F.explode(tokens_array(F.col(text_col))).alias("w"))
+    w = (docs.select(F.explode(tokens_array(F.col(text_col))).alias("w"))
          .filter(F.length("w") >= 2)
          .groupBy("w").agg(F.count(F.lit(1)).alias("cnt")))
     sym_schema = "syms array<string>, cnt bigint"

@@ -58,47 +58,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def spread_small_input(df: DataFrame) -> DataFrame:
-    """Round-robin-repartition a SUB-PARALLELISM input up to the
-    session's core count — the guide-§2.5 "input skew" fix for
-    compute-bound map phases over small files (r14 opt).
-
-    One file under ``maxPartitionBytes`` is ONE scan split, so every
-    map stage below the first exchange — shingling + 64-seed hashing,
-    200x md5 fan-outs, broadcast-join cosine scoring, vectorized
-    matmuls — runs on a single core no matter how many the session
-    has.  Scale-adaptive by construction: the guard compares the
-    frame's actual partition count against ``defaultParallelism``, so
-    a production table (thousands of splits) passes through untouched
-    and never pays the exchange, while a sub-parallelism input pays
-    one trivially small round-robin shuffle (deterministic under task
-    retry via Spark's sort-before-repartition) to unlock every core.
-
-    Applied ONLY at the entry of operators whose per-row map work
-    dominates (the measured single-core walls), NOT in
-    :func:`load_table`: a blanket spread taxes every cheap scan+agg
-    query with an exchange it cannot amortize (measured +0.2-0.4 s on
-    sub-second relational queries) and inserts a Repartition node into
-    plans whose zero/one-shuffle shape is a pinned scale property.
-    Row values are unchanged; every oracle hash is order-insensitive.
-
-    CONTRACT (r14 ADVICE): pass SCAN-LEVEL frames only — a base table
-    read plus row-local projections/filters, nothing downstream of a
-    shuffle.  The guard reads ``df.rdd.getNumPartitions()``, and under
-    AQE accessing ``.rdd`` finalizes the physical plan and EAGERLY
-    RUNS any upstream shuffle stages as real jobs that the returned
-    DataFrame then re-executes.  Every current call site is scan-level
-    (char shingles, word n-grams, substring windows, the bootstrap
-    ladder, BPE/tokenize entries), where ``.rdd`` is a metadata-only
-    probe of the scan's split count.
-    """
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    return df
-
-
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Read all fixture tables; keys match DuckDB oracle view names."""
     return {name: load_table(spark, sf_dir, name) for name in TABLES}

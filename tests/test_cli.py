@@ -49,3 +49,24 @@ def test_cli_sort_golden():
     with open(os.path.join(REFERENCE, "sort_outputdir", "output.txt")) as f:
         golden = f.read()
     assert got == golden
+
+
+@pytest.mark.slow
+def test_cli_nworkers_overrides_env(tmp_path):
+    """An explicit --nworkers wins over an exported SPARK_GRAFT_CPUS."""
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.txt").write_text("the cat the dog\n")
+    script = (
+        "import sys\n"
+        "from pyspark.sql import SparkSession\n"
+        "from mapreduce_implementation_spark.__main__ import main\n"
+        "main(sys.argv[1:])\n"
+        "print(SparkSession.getActiveSession().sparkContext.master)\n")
+    cmd = [sys.executable, "-c", script, "--input", str(src),
+           "--output", str(tmp_path / "out"), "--nworkers", "1"]
+    env = dict(os.environ, SPARK_GRAFT_CPUS="8")
+    r = subprocess.run(cmd, cwd=REPO, env=env, capture_output=True, text=True,
+                       timeout=480)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert r.stdout.strip().splitlines()[-1] == "local[1, 4]"

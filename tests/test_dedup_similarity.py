@@ -12,7 +12,7 @@ from mapreduce_implementation_spark.operators.dedup import (
 from mapreduce_implementation_spark.operators.similarity import ann_topk_lsh, cosine_topk
 from mapreduce_implementation_spark.registry import all_specs
 from mapreduce_implementation_spark.sources.tables import load_table
-from tests.conftest import SF_DIR_01
+from tests.conftest import SF_DIR_01, graph_path
 
 
 def test_minhash_lsh_recalls_true_near_dups(spark):
@@ -321,16 +321,16 @@ def test_connected_components_vs_union_find(spark):
 
     df = spark.createDataFrame(edges, "a: long, b: long")
     for dense in (True, False):
-        got = {r["node"]: r["cluster_id"]
-               for r in connected_components(df, "a", "b",
-                                             dense_path=dense).collect()}
+        with graph_path(dense):
+            got = {r["node"]: r["cluster_id"]
+                   for r in connected_components(df, "a", "b").collect()}
         assert got == expect, dense
     # self-loop-only node: appears in `nodes`, never in canonical edges
     df2 = spark.createDataFrame(edges + [(77, 77)], "a: long, b: long")
     for dense in (True, False):
-        got = {r["node"]: r["cluster_id"]
-               for r in connected_components(df2, "a", "b",
-                                             dense_path=dense).collect()}
+        with graph_path(dense):
+            got = {r["node"]: r["cluster_id"]
+                   for r in connected_components(df2, "a", "b").collect()}
         assert got == {**expect, 77: 77}, dense
 
 
@@ -759,9 +759,12 @@ def test_tfidf_cosine_prefix_filter_lossless(spark):
     identical pair set and scores as a pure-Python model, on a corpus
     with rare discriminative terms (where the prefix filter actually
     prunes) and shared stop-ish words, including near-identical pairs
-    straddling the 0.9 threshold."""
+    straddling the 0.9 threshold.  The vocabulary threshold is patched
+    to 0 (prefix filtering) and far above the corpus (naive join)."""
     import math
+    from unittest import mock
 
+    from mapreduce_implementation_spark.operators import dedup
     from mapreduce_implementation_spark.operators.dedup import (
         tfidf_cosine_pairs,
     )
@@ -803,12 +806,13 @@ def test_tfidf_cosine_prefix_filter_lossless(spark):
                     want.add((i, j, round(dot / (nn[i] * nn[j]), 6)))
 
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for mode in (True, False):
+    for mode, threshold in (("prefix", 0), ("naive", 10**9)):
         try:
-            got = {(r["a"], r["b"], r["cos"])
-                   for r in tfidf_cosine_pairs(df, "doc_id", "text",
-                                               min_cosine=0.9,
-                                               prefix_filter=mode).collect()}
+            with mock.patch.object(dedup, "_PREFIX_VOCAB_THRESHOLD",
+                                   threshold):
+                got = {(r["a"], r["b"], r["cos"])
+                       for r in tfidf_cosine_pairs(
+                           df, "doc_id", "text", min_cosine=0.9).collect()}
         finally:
             release_persisted()
         assert {(a, b) for a, b, _ in got} == {(a, b) for a, b, _ in want}, mode

@@ -4,10 +4,14 @@ path, so a planner/operator bug can't cancel itself out)."""
 
 from __future__ import annotations
 
+from unittest import mock
+
 from pyspark.sql import functions as F
 
+from mapreduce_implementation_spark.operators import graph
 from mapreduce_implementation_spark.operators.graph import pagerank
 from mapreduce_implementation_spark.operators.textstats import bm25_topk
+from tests.conftest import graph_path
 
 
 def _py_pagerank(edges, nodes, iters=5, d=0.85):
@@ -40,20 +44,21 @@ def test_pagerank_shuffle_mode_matches_broadcast(spark):
     """All three physical modes — broadcast-vector, the web-scale
     shuffled-join fallback, and the dimension-sized dense Arrow task —
     must produce identical ranks: same math, different physical plans.
-    Forcing broadcast_node_limit=0 exercises the auto-probe path too."""
+    A node limit of 0 sends the rank vector through the shuffled join."""
     edges = [(1, 2, 3.0), (2, 1, 1.0), (2, 3, 1.0), (3, 1, 2.0), (1, 3, 1.0)]
     nodes = [1, 2, 3]
     e = spark.createDataFrame(edges, "src int, dst int, w double")
     nd = spark.createDataFrame([(v,) for v in nodes], "v int")
     want = _py_pagerank(edges, nodes, iters=5)
-    for kwargs in ({"broadcast_ranks": False, "dense_path": False},
-                   # auto-probe picks shuffle once dense is off
-                   {"broadcast_node_limit": 0, "dense_path": False},
-                   {"dense_path": True}):
-        got = {r.v: r.r for r in pagerank(e, nd, iters=5, **kwargs).collect()}
+    for dense, node_limit in ((False, graph._BROADCAST_NODE_LIMIT),
+                              (False, 0),
+                              (True, graph._BROADCAST_NODE_LIMIT)):
+        with graph_path(dense), mock.patch.object(
+                graph, "_BROADCAST_NODE_LIMIT", node_limit):
+            got = {r.v: r.r for r in pagerank(e, nd, iters=5).collect()}
         assert set(got) == set(want)
         for v in nodes:
-            assert abs(got[v] - want[v]) < 1e-9, (kwargs, v, got[v], want[v])
+            assert abs(got[v] - want[v]) < 1e-9, (dense, node_limit, v)
 
 
 def test_pagerank_mass_conserved_no_dangling(spark):
@@ -277,10 +282,10 @@ def test_sssp_weighted_prefers_cheap_multihop_path(spark):
         "src long, dst long, w long")
     nodes = spark.createDataFrame([(0,), (1,), (2,), (3,), (9,)], "v long")
     for dense in (True, False):
-        d = {r["v"]: r["dist"]
-             for r in sssp_weighted(edges, nodes, source=0, rounds=4,
-                                    max_edge_w=10,
-                                    dense_path=dense).collect()}
+        with graph_path(dense):
+            d = {r["v"]: r["dist"]
+                 for r in sssp_weighted(edges, nodes, source=0, rounds=4,
+                                        max_edge_w=10).collect()}
         assert d == {0: 0, 1: 2, 2: 1, 3: 4, 9: None}, dense
 
     import pytest
@@ -322,9 +327,9 @@ def test_hits_matches_numpy_iteration(spark):
 
     for dense in (True, False):
         try:
-            got = {r["v"]: (r["hub"], r["authority"])
-                   for r in hits(df, nodes, iters=2,
-                                 dense_path=dense).collect()}
+            with graph_path(dense):
+                got = {r["v"]: (r["hub"], r["authority"])
+                       for r in hits(df, nodes, iters=2).collect()}
         finally:
             release_persisted()
         for v in range(nv):
@@ -397,12 +402,13 @@ def test_graph_dense_paths_match_declarative_random(spark):
             ppr = {}
             ht = {}
             for dense in (True, False):
-                pr[dense] = {r.v: r.r for r in pagerank(
-                    e, nd, iters=4, dense_path=dense).collect()}
-                ppr[dense] = {r.v: r.r for r in pagerank(
-                    e, nd, iters=4, reset=rst, dense_path=dense).collect()}
-                ht[dense] = {r.v: (r.hub, r.authority) for r in hits(
-                    e, nd, iters=2, dense_path=dense).collect()}
+                with graph_path(dense):
+                    pr[dense] = {r.v: r.r for r in pagerank(
+                        e, nd, iters=4).collect()}
+                    ppr[dense] = {r.v: r.r for r in pagerank(
+                        e, nd, iters=4, reset=rst).collect()}
+                    ht[dense] = {r.v: (r.hub, r.authority) for r in hits(
+                        e, nd, iters=2).collect()}
         finally:
             release_persisted()
         assert set(pr[True]) == set(pr[False]) == set(nodes), trial
@@ -440,7 +446,8 @@ def test_label_propagation_modes_match(spark):
     """Dense Arrow task vs declarative window chain vs the pure-Python
     model on seeded random weighted digraphs: identical labels, every
     node, every trial (integer weights make sums exact in any
-    accumulation order, so argmax ties are engine-independent)."""
+    accumulation order, so argmax ties are engine-independent; they are
+    also what lets the dense path run at all)."""
     import random
 
     from mapreduce_implementation_spark.operators.graph import (
@@ -456,16 +463,17 @@ def test_label_propagation_modes_match(spark):
         nodes = list(range(n + 2))
         edges = sorted({(rng.randrange(n), rng.randrange(n))
                         for _ in range(rng.randrange(4, 16))})
-        edges = [(s, t, float(rng.randrange(1, 5))) for s, t in edges]
+        edges = [(s, t, rng.randrange(1, 5)) for s, t in edges]
         if not edges:
             continue
-        e = spark.createDataFrame(edges, "src int, dst int, w double")
+        e = spark.createDataFrame(edges, "src int, dst int, w bigint")
         nd = spark.createDataFrame([(v,) for v in nodes], "v int")
         want = _py_lpa(edges, nodes, iters=4)
         try:
             for dense in (True, False):
-                got = {r.v: r.label for r in label_propagation(
-                    e, nd, iters=4, dense_path=dense).collect()}
+                with graph_path(dense):
+                    got = {r.v: r.label for r in label_propagation(
+                        e, nd, iters=4).collect()}
                 assert got == want, (trial, dense, got, want)
         finally:
             release_persisted()
@@ -477,9 +485,7 @@ def test_graph_operators_ignore_null_weight_edges(spark):
     NULLs inside F.sum/F.min, and the operators now drop such rows
     before the mode split so the dense numpy path never sees NaN.
     Also: float edge weights keep sssp_weighted on the declarative
-    chain (auto probe) and raise on an explicit dense_path=True."""
-    import pytest
-
+    chain."""
     from mapreduce_implementation_spark.operators.graph import (
         hits, sssp_weighted,
     )
@@ -497,26 +503,24 @@ def test_graph_operators_ignore_null_weight_edges(spark):
     want = _py_pagerank(clean, nodes, iters=4)
     try:
         for dense in (True, False):
-            got = {r.v: r.r for r in pagerank(
-                e, nd, iters=4, dense_path=dense).collect()}
+            with graph_path(dense):
+                got = {r.v: r.r for r in pagerank(
+                    e, nd, iters=4).collect()}
+                hv = {r.v: (r.hub, r.authority) for r in hits(
+                    e, nd, iters=2).collect()}
+                hc = {r.v: (r.hub, r.authority) for r in hits(
+                    ec, nd, iters=2).collect()}
             for v in nodes:
                 assert abs(got[v] - want[v]) < 1e-9, (dense, v)
-            hv = {r.v: (r.hub, r.authority) for r in hits(
-                e, nd, iters=2, dense_path=dense).collect()}
-            hc = {r.v: (r.hub, r.authority) for r in hits(
-                ec, nd, iters=2, dense_path=dense).collect()}
             assert hv == hc, dense
 
         ew = spark.createDataFrame([(1, 2, 1.5), (2, 3, 1.0)],
                                    "src int, dst int, w double")
-        # auto probe: float weights -> declarative (must not truncate)
+        # float weights -> declarative (must not truncate)
         d = {r["v"]: r["dist"]
              for r in sssp_weighted(ew, nd, source=1, rounds=3,
                                     max_edge_w=2).collect()}
         assert d[2] == 1.5 or d[2] == 1  # long cast floors the output
-        with pytest.raises(ValueError):
-            sssp_weighted(ew, nd, source=1, rounds=3, max_edge_w=2,
-                          dense_path=True)
     finally:
         release_persisted()
 
@@ -601,8 +605,9 @@ def test_personalized_pagerank_dense_matches(spark):
     try:
         got = {}
         for dense in (True, False):
-            got[dense] = {r["v"]: r["r"] for r in pagerank(
-                e, nd, iters=4, reset=rst, dense_path=dense).collect()}
+            with graph_path(dense):
+                got[dense] = {r["v"]: r["r"] for r in pagerank(
+                    e, nd, iters=4, reset=rst).collect()}
             assert set(got[dense]) == set(nodes), dense
             for v in nodes:
                 assert abs(got[dense][v] - want[v]) < 1e-9, (dense, v)
@@ -633,8 +638,9 @@ def test_pagerank_zero_out_weight_source_modes_match(spark):
     want = _py_ppr(nonzero, nodes, {v: 0.25 for v in nodes}, iters=4)
     try:
         for dense in (True, False):
-            got = {r["v"]: r["r"] for r in pagerank(
-                e, nd, iters=4, dense_path=dense).collect()}
+            with graph_path(dense):
+                got = {r["v"]: r["r"] for r in pagerank(
+                    e, nd, iters=4).collect()}
             for v in nodes:
                 assert got[v] == got[v], (dense, v)  # no NaN
                 assert abs(got[v] - want[v]) < 1e-9, (dense, v)
@@ -666,13 +672,14 @@ def test_dense_paths_preserve_input_key_dtypes(spark):
     try:
         out = {}
         for dense in (True, False):
-            cc = connected_components(pairs, "a", "b", dense_path=dense)
+            with graph_path(dense):
+                cc = connected_components(pairs, "a", "b")
+                kc = kcore(ek, "a", "b", k=2, rounds=3)
+                lp = label_propagation(el, nd, iters=3)
             assert dict(cc.dtypes) == {"node": "int",
                                        "cluster_id": "int"}, dense
-            kc = kcore(ek, "a", "b", k=2, rounds=3, dense_path=dense)
             assert dict(kc.dtypes) == {"node": "int",
                                        "core_deg": "bigint"}, dense
-            lp = label_propagation(el, nd, iters=3, dense_path=dense)
             assert dict(lp.dtypes) == {"v": "int", "label": "int"}, dense
             out[dense] = (
                 {r["node"]: r["cluster_id"] for r in cc.collect()},
@@ -1128,9 +1135,9 @@ def test_connected_components_matches_union_find(spark):
         df = spark.createDataFrame(edges, "a long, b long")
         for dense in (True, False):
             try:
-                got = {r["node"]: r["cluster_id"] for r in
-                       connected_components(df, "a", "b",
-                                            dense_path=dense).collect()}
+                with graph_path(dense):
+                    got = {r["node"]: r["cluster_id"] for r in
+                           connected_components(df, "a", "b").collect()}
             finally:
                 release_persisted()
             assert got == want, (trial, dense,
@@ -1170,9 +1177,9 @@ def test_kcore_matches_python_peeling(spark):
         df = spark.createDataFrame(edges, "a long, b long")
         for dense in (True, False):
             try:
-                got = {r["node"]: r["core_deg"] for r in
-                       kcore(df, "a", "b", k=k, rounds=30,
-                             dense_path=dense).collect()}
+                with graph_path(dense):
+                    got = {r["node"]: r["core_deg"] for r in
+                           kcore(df, "a", "b", k=k, rounds=30).collect()}
             finally:
                 release_persisted()
             assert got == want, (trial, dense, k, got, want)
@@ -1253,11 +1260,11 @@ def test_bfs_and_sssp_match_python_shortest_paths(spark):
         nodes = spark.createDataFrame([(x,) for x in all_nodes], "v long")
         for dense in (True, False):
             try:
-                got_b = {r["v"]: r["dist"] for r in bfs_distances(
-                    e, nodes, 0, max_hops=6, dense_path=dense).collect()}
-                got_s = {r["v"]: r["dist"] for r in sssp_weighted(
-                    e, nodes, 0, rounds=n, max_edge_w=9,
-                    dense_path=dense).collect()}
+                with graph_path(dense):
+                    got_b = {r["v"]: r["dist"] for r in bfs_distances(
+                        e, nodes, 0, max_hops=6).collect()}
+                    got_s = {r["v"]: r["dist"] for r in sssp_weighted(
+                        e, nodes, 0, rounds=n, max_edge_w=9).collect()}
             finally:
                 release_persisted()
             want_b = {x: hops.get(x) for x in all_nodes}

@@ -504,15 +504,18 @@ def test_kcore_matches_python_peeling(spark, eraw, k, rounds):
         release_persisted,
     )
     from mapreduce_implementation_spark.operators.graph import kcore
+    from tests.conftest import graph_path
 
     edges = spark.createDataFrame(eraw, "a long, b long")
     try:
-        got = {(r["node"], r["core_deg"])
-               for r in kcore(edges, "a", "b", k=k, rounds=rounds,
-                              dense_path=True).collect()}
-        got_decl = {(r["node"], r["core_deg"])
-                    for r in kcore(edges, "a", "b", k=k, rounds=rounds,
-                                   dense_path=False).collect()}
+        with graph_path(dense=True):
+            got = {(r["node"], r["core_deg"])
+                   for r in kcore(edges, "a", "b", k=k,
+                                  rounds=rounds).collect()}
+        with graph_path(dense=False):
+            got_decl = {(r["node"], r["core_deg"])
+                        for r in kcore(edges, "a", "b", k=k,
+                                       rounds=rounds).collect()}
     finally:
         release_persisted()
     assert got == got_decl

@@ -246,6 +246,24 @@ def test_two_phase_windows_recompute_stable(spark):
         release_persisted()
 
 
+def test_window_buckets_follow_session_partitions(spark):
+    """With ``spark.sql.shuffle.partitions`` unset, the two-phase window
+    operators bucket into the count the session's shuffles use (Spark's
+    default 200), not a fallback of their own."""
+    from mapreduce_implementation_spark.operators.windows import (
+        shared_boundaries,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.unset(key)
+        [bounds] = shared_boundaries(spark.range(10000), [["id"]])
+    finally:
+        spark.conf.set(key, prev)
+    assert len(bounds) == 199
+
+
 def test_tracked_persist_release(spark):
     """Operators cache multiply-consumed intermediates via tracked_persist;
     release_persisted() must unpersist every one of them (the per-batch
@@ -366,22 +384,40 @@ def test_session_sizing_overrides(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
     assert session._box_sizing() == (3, "2g")
 
-def test_spread_small_input_guard(spark):
-    """spread_small_input (r14 opt) must round-robin a sub-parallelism
-    input up to the session's core count — and PASS THROUGH untouched
-    (the very same DataFrame object, no Repartition node) once the
-    input already has >= defaultParallelism partitions, so a
-    production-scale multi-split table never pays the exchange."""
-    from mapreduce_implementation_spark.sources.tables import (
-        spread_small_input,
+
+def test_text_operators_start_no_job_while_building(spark):
+    """Building a text/dedup operator over a frame past a shuffle (here a
+    sort-merge join) must start no Spark job: under AQE any ``.rdd``
+    access or count at build time runs the upstream shuffle eagerly.
+    Each operator gets a fresh frame because a Dataset caches its
+    ``.rdd``."""
+    from mapreduce_implementation_spark.operators import dedup
+    from mapreduce_implementation_spark.operators.caching import (
+        release_persisted,
     )
 
-    par = spark.sparkContext.defaultParallelism
-    small = spark.range(0, 1000).coalesce(1)
-    assert small.rdd.getNumPartitions() == 1
-    out = spread_small_input(small)
-    assert out.rdd.getNumPartitions() == par
-    assert sorted(r.id for r in out.collect()) == list(range(1000))
-
-    big = spark.range(0, 1000).repartition(par)
-    assert spread_small_input(big) is big
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    docs = spark.createDataFrame(
+        [(i, f"{text} {i}") for i in range(40)], "doc_id long, text string")
+    meta = spark.createDataFrame([(i, i % 3) for i in range(40)],
+                                 "doc_id long, src int")
+    ops = {
+        "char_shingles": dedup.char_shingles,
+        "simhash": dedup.simhash,
+        "minhash_dedup_pairs": dedup.minhash_dedup_pairs,
+        "ngram_jaccard_pairs": dedup.ngram_jaccard_pairs,
+        "ngram_containment_pairs": dedup.ngram_containment_pairs,
+        "ngram_jaccard_pairs_prefix": dedup.ngram_jaccard_pairs_prefix,
+        "span_chunks": dedup.span_chunks,
+        "duplicate_substring_spans": dedup.duplicate_substring_spans,
+    }
+    tracker = spark.sparkContext.statusTracker()
+    try:
+        for name, op in ops.items():
+            joined = docs.join(meta.hint("merge"), "doc_id")
+            before = set(tracker.getJobIdsForGroup(None))
+            op(joined, "doc_id", "text")
+            started = set(tracker.getJobIdsForGroup(None)) - before
+            assert not started, (name, sorted(started))
+    finally:
+        release_persisted()
