@@ -43,6 +43,10 @@ _MAX_ROUNDS = 25
 _DENSE_EDGE_LIMIT = 2_000_000
 _BROADCAST_NODE_LIMIT = 1_000_000
 
+# hits' declarative chain renormalizes and truncates lineage every this
+# many full rounds (the magnitude bound is in its docstring).
+_HITS_NORM_EVERY = 2
+
 
 def _canon(edges: DataFrame) -> DataFrame:
     """Distinct edges oriented large→small, self-loops dropped."""
@@ -901,8 +905,7 @@ def _hits_dense(e: DataFrame, n1: DataFrame, iters: int) -> DataFrame:
                     F.coalesce("authority", F.lit(0.0)).alias("authority")))
 
 
-def hits(edges: DataFrame, nodes: DataFrame, iters: int = 2,
-         norm_every: int = 2) -> DataFrame:
+def hits(edges: DataFrame, nodes: DataFrame, iters: int = 2) -> DataFrame:
     """Weighted HITS (Kleinberg, "Authoritative sources in a hyperlinked
     environment", JACM 1999): alternating hub/authority power iteration,
     L2-normalized.  Same execution shape as pagerank(): the edge list is
@@ -934,13 +937,12 @@ def hits(edges: DataFrame, nodes: DataFrame, iters: int = 2,
       3.4 s to ~1 s on the 25-node trade graph: the old shape spent 4
       jobs + 8 broadcast exchanges normalizing 25-row frames.
 
-    ``norm_every`` bounds the unnormalized stretch: every that many full
-    rounds, both vectors renormalize and localCheckpoint (truncating
-    lineage to O(iters/norm_every) — the sssp/pagerank idiom).
-    Magnitude grows at most ×(max L1 row weight)² per round, so the
-    default 2 keeps values under ~W⁴·√n — overflow-safe for row weights
-    to 1e70; raise it for cheap graphs, lower toward 1 if edge weights
-    are astronomically large.  A zero L2 norm (edge-free graph, or a
+    ``_HITS_NORM_EVERY`` (2) bounds the unnormalized stretch: every
+    that many full rounds, both vectors renormalize and localCheckpoint
+    (truncating lineage to O(iters/2) — the sssp/pagerank idiom).
+    Magnitude grows at most ×(max L1 row weight)² per round, so values
+    stay under ~W⁴·√n — overflow-safe for row weights to 1e70.  A zero
+    L2 norm (edge-free graph, or a
     half-step where all mass dies) divides by 1 instead, yielding
     all-zero scores rather than NULLs — mirroring power_iteration_top's
     nrm == 0 branch.
@@ -994,13 +996,13 @@ def hits(edges: DataFrame, nodes: DataFrame, iters: int = 2,
     for _i in range(iters):
         a = propagate(h, "src", "dst")
         h = propagate(a, "dst", "src")
-        # renormalize + truncate lineage every norm_every rounds; only
+        # renormalize + truncate lineage every _HITS_NORM_EVERY rounds; only
         # ``h`` needs it — the next round's first propagate reads h, and
         # this round's ``a`` was already consumed (its magnitude bound
         # follows from h's); the FINAL round's vectors stay lazy
         # (normalized below) so the returned plan shows the iteration
         # shape
-        if _i < iters - 1 and (_i + 1) % norm_every == 0:
+        if _i < iters - 1 and (_i + 1) % _HITS_NORM_EVERY == 0:
             h = normalize(h).localCheckpoint(eager=True)
 
     def dense(vec: DataFrame, name: str) -> DataFrame:

@@ -8,11 +8,11 @@ Strategy notes for 100 TB:
   can upgrade a shuffle join to broadcast at runtime.
 * fact-fact joins shuffle on the join key; AQE skew-join splits hot
   partitions (enabled in session.py).
-* ``asof_join`` is a cogrouped merge-asof: both sides shuffle ONCE on the
-  key, then each key-group is matched in sorted order via Arrow-batched
-  pandas — no time-range blowup, no driver collect.  This is the (b)
-  tier of the custom-operator policy (SURVEY.md §4): built-ins cannot
-  express "latest row at or before t" without an O(matches) intermediate.
+* ``asof_join`` unions both sides and takes ``last(ignorenulls)`` over
+  a window keyed by the by-key and ordered by time: one shuffle, one
+  in-partition sort, no time-range blowup, no driver collect and no
+  Python.  An inequality join would build an O(matches) intermediate
+  to express "latest row at or before t".
 * ``range_join_bucketed`` turns an inequality time-window join into an
   equi-join on (key, time_bucket) + residual filter — the standard trick
   to avoid BroadcastNestedLoopJoin on big-big range predicates.
@@ -20,9 +20,9 @@ Strategy notes for 100 TB:
 
 from __future__ import annotations
 
+from datetime import timedelta
 from typing import Literal
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -50,13 +50,12 @@ def anti_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
 def _fresh_name(base: str, *dfs: DataFrame, extra: tuple = ()) -> str:
     """A temp-column name (or prefix) no caller column starts with —
     prefix-safe so derived names like ``f"{p}{c}"`` can't clobber either
-    (r9 review: fixed '_by'/'_bkt'/'_matched' names shadowed caller
-    data; the windowed twin's '_rv_*' family needs the prefix form).
+    (fixed names such as '_by'/'_bkt' shadowed caller data).
     ``extra`` folds caller-chosen OUTPUT names into the taken set: an
     operator that later does ``withColumn(out, ...)`` must not derive a
     temp name the out-column collides with, or the trailing drop()
-    deletes the caller's output (r10 ADVICE: an out like '_gt_bkt'
-    collided with global_ntile's internal bucket column)."""
+    deletes the caller's output (an out like '_gn_bkt' would collide
+    with grouped_ntile's internal bucket column)."""
     cols = {c for df in dfs for c in df.columns} | set(extra)
     name = base
     while any(c.startswith(name) for c in cols):
@@ -65,16 +64,16 @@ def _fresh_name(base: str, *dfs: DataFrame, extra: tuple = ()) -> str:
 
 
 def _by_key_cast(lt, rt) -> str | None:
-    """The common Spark type BOTH as-of operators normalize mixed-dtype
+    """The common Spark type :func:`asof_join` normalizes mixed-dtype
     by-keys to (None = already identical).  Decided ONCE from the Spark
-    schema so the bucket hash / window partition and the match key read
-    the same canonical representation.  Targets: both-integral ->
+    schema so the window partition and the match key read the same
+    canonical representation.  Targets: both-integral ->
     bigint (exact); int/float mixes -> double (SQL's own bigint=double
     cast; >2^53 aliasing is SQL's, not ours); both-decimal -> the
     widened common decimal, REFUSED when the widened precision would
-    exceed decimal's 38-digit capacity (r9 ADVICE: a capped min(p,38)
-    cast overflows 37-digit keys to NULL under non-ANSI, and NULL
-    by-keys then falsely match inside pandas merge_asof); decimal mixed
+    exceed decimal's 38-digit capacity (a capped min(p,38) cast
+    overflows 37-digit keys to NULL under non-ANSI, silently turning
+    matches into non-matches); decimal mixed
     with non-decimal -> loud error (SQL compares decimal=bigint AS
     DECIMAL — a double cast would silently alias); date/timestamp
     mixes -> timestamp (SQL's midnight cast); anything else -> Spark's
@@ -117,257 +116,70 @@ def asof_join(
     left_by: str,
     right_by: str,
     right_values: list[str],
-    direction: Literal["backward", "forward"] = "backward",
-    tolerance: str | None = None,
+    tolerance: timedelta | int | float | None = None,
     how: Literal["inner", "left"] = "inner",
-    num_buckets: int = 64,
 ) -> DataFrame:
-    """For each left row, the single right row with the greatest
-    ``right_on`` <= ``left_on`` (backward) within the same ``by`` key.
+    """Backward as-of join: for each left row, the single right row with
+    the greatest ``right_on`` <= ``left_on`` within the same ``by`` key.
 
-    Cogroup both sides on a HASHED BY-KEY BUCKET (one shuffle each),
-    then ``pd.merge_asof(left_by=, right_by=)`` per bucket — the
-    sorted-merge still matches strictly within the by-key, but the
-    Python invocation count is ``num_buckets`` instead of one per
-    distinct key: cogrouping directly on the by-key paid one pandas
-    call per user (~0.5 ms each — measured ~20-30 s for ~40k users at
-    sf0.1, pure per-call overhead), while the bucketed form does the
-    same work in 64 vectorized calls (~3 s).  Differently-typed
-    left/right by-key columns are normalized IN SPARK to one cast
-    column per side, and the bucket hash, cogroup key and merge_asof
-    by-key all read that same column — one canonical representation
-    end-to-end (see the inline comment for the target-type table and
-    the three r9 review rounds that converged here).  Default inner
-    semantics: left rows with no match are dropped (mirrors DuckDB
-    ASOF JOIN, the oracle); ``how="left"`` keeps them with NULL right
-    values (ASOF LEFT JOIN).  NULL by-keys match nothing, enforced
-    EXPLICITLY Spark-side (r8 ADVICE: pandas factorizes NaN by-keys as
-    equal to each other): null-by right rows are dropped, and null-by
-    left rows never enter the cogroup at all — dropped for ``inner``,
-    routed AROUND the pandas stage and unioned back with NULL payload
-    for ``left``.  Keeping them out of the batches matters beyond
-    semantics: Arrow hands an integral column WITH NULLS to pandas as
-    float64, which would alias integral keys above 2^53 in the same
-    batch (r9 review finding, reproduced at num_buckets=1).
+    Pure DataFrame ops: union both sides with a sort tag, then
+    ``last(value, ignorenulls=True)`` over a window partitioned by the
+    by-key and ordered by (time, tag), so each left row sees the latest
+    right row at-or-before it.  One hash shuffle + one in-partition
+    sort, all JVM/codegen — no Python evaluation.  Right rows tag 0 and
+    left rows tag 1, so a right row AT the left timestamp matches
+    (backward-inclusive).
 
-    ``tolerance`` (a pandas Timedelta string, e.g. ``"30D"``) bounds how
-    stale a match may be: a right row farther than the tolerance from
-    the left timestamp is no match at all — the financial-data as-of
-    idiom (a quote older than the staleness budget must not price a
-    trade).  Requires datetime/numeric ``on`` keys, like merge_asof.
+    ``how="inner"`` (the default, DuckDB ``ASOF JOIN``) keeps only left
+    rows with a match; ``how="left"`` (``ASOF LEFT JOIN``) keeps every
+    left row, with NULL right values where nothing matches.
 
-    NULL ``on``-keys follow the same SQL rule as NULL by-keys (r10
-    review): a NULL timestamp satisfies no inequality, so null-on
-    right rows are dropped and null-on left rows are routed with the
-    null-by left rows (NULL payload for ``left``, dropped for
-    ``inner``).  Before r10 they CRASHED the cogroup — merge_asof
-    rejects null merge keys.
+    ``tolerance`` bounds how stale a match may be: a right row farther
+    than the tolerance from the left ``on`` value is no match at all —
+    the financial-data as-of idiom (a quote older than the staleness
+    budget must not price a trade).  It is a ``datetime.timedelta`` for
+    timestamp ``on`` keys or a number for numeric ones, compared against
+    ``left_on - right_on``; ``right_values`` must then include
+    ``right_on``.
 
-    Tie rule (r10 review): right rows TIED on ``right_on`` within a
-    by-key resolve deterministically by the remaining ``right_values``
-    tuple — backward takes the greatest, forward the smallest (the row
-    adjacent to the left timestamp in the (on, values) ordering),
-    NULLS FIRST, matching asof_join_windowed's window order.  Without
-    the tie sort the winner was whichever row arrived LAST in the
-    Arrow batch — partition-order-dependent, nondeterministic run to
-    run on a cluster (reproduced: same query flipped payloads under
-    sortWithinPartitions).  Payload types pandas cannot compare
-    vectorized (arrays) fall back to a tuple-key sort.
-    """
-    left_cols = left.columns
-    # Mixed by-key types are normalized IN SPARK — one cast column on
-    # each side, decided ONCE from the Spark schema types (shared
-    # helper _by_key_cast; target-type table documented there) — and
-    # the bucket hash, the cogroup key and the merge_asof by-key all
-    # read that same column.  Doing it Spark-side (third r9 review
-    # round) means there is exactly ONE canonical representation: no
-    # pandas-vs-Spark string-repr disagreement (bool 'true' vs 'True',
-    # 1e20 vs '1.0E20'), no object-dtype batches skipping an astype,
-    # and no pandas ns-range overflow (Spark timestamps arrive as
-    # datetime64[us]).
-    by_cast = _by_key_cast(left.schema[left_by].dataType,
-                           right.schema[right_by].dataType)
-    # temp-column names that cannot shadow caller data (r9 review:
-    # '_by'/'_bkt'/'_matched' all had the clobber risk)
-    by_tmp = _fresh_name("_by", left, right)
-    bkt_tmp = _fresh_name("_bkt", left, right)
-    match_tmp = _fresh_name("_matched", left, right)
-    lby, rby = left_by, right_by
-    if by_cast is not None:
-        left = left.withColumn(by_tmp, F.col(left_by).cast(by_cast))
-        right = right.withColumn(by_tmp, F.col(right_by).cast(by_cast))
-        lby = rby = by_tmp
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in left.schema.fields
-         if f.name in left_cols]
-        + [f"{f.name} {f.dataType.simpleString()}" for f in right.schema.fields
-           if f.name in right_values]
-    )
-    tol = pd.Timedelta(tolerance) if tolerance is not None else None
-    lsel = left_cols + ([by_tmp] if by_cast is not None else [])
-    rcols = [rby, right_on] + [c for c in right_values
-                               if c not in (right_on, rby)]
-    # deterministic tie order: stable-sort the right side by the FULL
-    # (on, values) tuple so merge_asof's pick among equal timestamps is
-    # a property of the DATA, not of Arrow batch arrival order
-    rsort = [right_on] + [c for c in right_values if c != right_on]
+    Tie rule: right rows tied on ``right_on`` within a by-key resolve
+    deterministically by the ``right_values`` tuple — the greatest
+    wins, NULLS FIRST, with NaN in top-level float/double fields ranked
+    as NULL (``nanvl`` on the order key only; the returned payload
+    keeps the NaN).  NaN inside nested arrays is not normalized.
 
-    def _tuple_key(s: pd.Series) -> pd.Series:
-        # arrays arrive as np.ndarray (unsortable vectorized); tuples
-        # compare elementwise like Spark's array ordering
-        import numpy as np
-        return s.map(lambda v: tuple(v.tolist())
-                     if isinstance(v, np.ndarray) else v)
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = lpdf[lsel]
-        if len(lpdf) == 0:
-            return pd.DataFrame(columns=left_cols + right_values)
-        if len(rpdf) == 0:
-            if how == "left":
-                out = lpdf.copy()
-                for c in right_values:
-                    out[c] = None
-                return out[left_cols + right_values]
-            return pd.DataFrame(columns=left_cols + right_values).iloc[:0]
-        # merge_asof with by-keys wants both frames sorted by the ON
-        # key only (per-key matching happens inside the merge); the
-        # by-key dtypes agree by construction (same Spark type, or the
-        # shared Spark-side cast column), so no pandas-side casts
-        lpdf = lpdf.sort_values(left_on, kind="mergesort")
-        rpdf = rpdf[rcols]
-        try:
-            rpdf = rpdf.sort_values(rsort, kind="mergesort",
-                                    na_position="first")
-        except (TypeError, ValueError):
-            rpdf = rpdf.sort_values(rsort, kind="mergesort",
-                                    na_position="first", key=_tuple_key)
-        # match indicator: dropping on a payload column would wrongly
-        # discard matched rows whose payload is legitimately NULL.
-        rpdf = rpdf.assign(**{match_tmp: 1})
-        merged = pd.merge_asof(
-            lpdf, rpdf, left_on=left_on, right_on=right_on,
-            left_by=lby, right_by=rby,
-            direction=direction, suffixes=("", "_r"),
-            tolerance=tol,
-        )
-        if how == "inner":
-            merged = merged[merged[match_tmp].notna()]
-        return merged[left_cols + right_values]
-
-    # NULL by-keys match nothing (SQL equality semantics) and must
-    # never reach a pandas batch (Arrow float64s a null-carrying
-    # integral column, aliasing >2^53 keys in the SAME batch before
-    # any dtype fix could run): drop null-by right rows, and route
-    # null-by left rows around the cogroup — dropped for inner,
-    # unioned back with NULL payload for left.  NULL ON-keys get the
-    # same routing (r10 review: a NULL timestamp satisfies no
-    # inequality — and merge_asof CRASHES on null merge keys, so
-    # before this they were a live error, not just a semantic gap).
-    # Filters read the ORIGINAL key columns: the normalized cast never
-    # nulls a non-null key (widening casts only), so the two agree.
-    l_null = F.col(left_by).isNull() | F.col(left_on).isNull()
-    right = right.filter(F.col(right_by).isNotNull()
-                         & F.col(right_on).isNotNull())
-    null_left = left.filter(l_null) if how == "left" else None
-    left = left.filter(~l_null)
-
-    # Bucket on the SAME normalized column the merge keys on — one
-    # canonical representation end-to-end, so keys that compare equal
-    # always co-bucket and keys that don't never falsely meet.
-    bkt = lambda c: F.pmod(F.xxhash64(F.col(c).cast("string")),  # noqa: E731
-                           F.lit(num_buckets))
-    lb = left.withColumn(bkt_tmp, bkt(lby))
-    rb = right.withColumn(bkt_tmp, bkt(rby))
-    out = lb.groupBy(bkt_tmp).cogroup(rb.groupBy(bkt_tmp)).applyInPandas(
-        merge, schema=out_schema
-    )
-    if null_left is not None:
-        pad = null_left.select(
-            *left_cols,
-            *[F.lit(None).cast(right.schema[c].dataType).alias(c)
-              for c in right_values])
-        out = out.unionByName(pad)
-    return out
-
-
-def asof_join_windowed(
-    left: DataFrame,
-    right: DataFrame,
-    left_on: str,
-    right_on: str,
-    left_by: str,
-    right_by: str,
-    right_values: list[str],
-    tolerance_expr: str | None = None,
-) -> DataFrame:
-    """Backward as-of join as PURE DataFrame ops — the declarative
-    scale path beside :func:`asof_join`'s pandas cogroup: union both
-    sides with a sort tag, then ``last(value, ignorenulls=True)`` over
-    a window partitioned by the by-key and ordered by (time, tag), so
-    each left row sees the latest right row at-or-before it.  One hash
-    shuffle + one in-partition sort, all JVM/codegen — no Python calls
-    at all (the cogroup route pays ``num_buckets`` Arrow-batched pandas
-    invocations; before r8's bucketing it paid one PER KEY — ~39 s for
-    ~40k users at sf0.1 where this runs in ~2 s and the bucketed
-    cogroup in ~3 s).
-
-    LEFT semantics: every left row survives; no match (or a match
-    older than ``tolerance_expr``, an INTERVAL SQL string like
-    ``"INTERVAL 30 DAYS"``) yields NULL right values.  Right rows tag
-    0 and left rows tag 1, so a right row AT the left timestamp
-    matches (backward-inclusive).  Ties among right rows on the
-    timestamp resolve deterministically by the ``right_values`` tuple
-    (greatest wins, NULLS FIRST — the same rule the cogroup route
-    sorts by).
+    NULL rule: NULL by-keys AND NULL on-keys match nothing (SQL
+    equality and inequality semantics).  Null-keyed right rows are
+    filtered out before the union.  Null-keyed left rows never enter
+    the shuffle: ``how="inner"`` drops them, ``how="left"`` unions them
+    back after the window with NULL payload — a second scan of the left
+    input, no extra exchange or Window.  Routing them through the
+    window would put every one of them in the single partition of the
+    NULL key, a skewed sort that turns a mostly-NULL corpus into one
+    hot task.
 
     The matched payload travels as ONE STRUCT column, not one window
-    expression per value column (r10 review, reproduced): per-column
-    ``last(_rv_c, ignorenulls=True)`` conflates the left rows'
-    placeholder NULLs with a right row's GENUINE NULL payload field,
-    so a latest-match row carrying a NULL field silently resurrected
-    the PREVIOUS match's value for that column — a Frankenstein row
-    mixing two right rows.  A struct from a right row is never NULL
-    even when every field is, so ``last(struct, ignorenulls=True)``
-    skips exactly the placeholders and preserves row unity.
+    expression per value column: per-column ``last(c, ignorenulls=True)``
+    would conflate the left rows' placeholder NULLs with a right row's
+    genuine NULL field and resurrect the previous match's value for
+    that column.  A struct from a right row is never NULL even when
+    every field is, so ``last(struct, ignorenulls=True)`` skips exactly
+    the placeholders and keeps each matched row whole.
 
-    Same key contract as :func:`asof_join` (the two operators
-    implement ONE contract; a differential property test pins them
-    equal): NULL by-keys AND NULL on-keys match nothing — null-keyed
-    RIGHT rows are filtered out before the union, and null-keyed LEFT
-    rows are filtered out too and unioned back AFTER the window with
-    NULL payload (the cogroup route's filter-and-pad idiom, adopted
-    here in r11 per the r10 verdict: before, null-keyed left rows
-    rode THROUGH the window — semantically correct, since a null
-    by-key partitions away from every right row, but every such row
-    landed in ONE window partition, a skewed no-op sort that turns a
-    90%-NULL-by corpus into a single hot task at scale).  The pad leg
-    is a second scan of the left input plus a Union — no extra
-    exchange, no extra Window, so the plan pin stays one exchange +
-    one Window.  Mixed-dtype by-keys are normalized to the shared
-    :func:`_by_key_cast` target so both operators co-partition keys
-    identically; temp names are uniquified against caller columns.
-
-    NaN tie order (r10 ADVICE): the tie-break ORDER key maps NaN in
-    top-level float/double payload fields to NULL (``nanvl``) before
-    the struct comparison, because the cogroup route's pandas sort
-    treats NaN as NA (``na_position='first'`` — smallest) while
-    Spark's raw struct ordering sorts NaN GREATER than any value —
-    without the normalization the two routes pick different rows among
-    timestamp ties.  The matched PAYLOAD still carries the original
-    NaN.  Residual, documented out of the tie contract: a NULL-payload
-    row and a NaN-payload row tied on everything else are
-    indistinguishable to pandas (Arrow conflates NULL/NaN in float
-    columns), so their relative order is unspecified on both routes;
-    NaN inside NESTED arrays is likewise not normalized.
+    Mixed-dtype by-keys are normalized to the :func:`_by_key_cast`
+    target so keys that compare equal share a window partition; temp
+    names are uniquified against caller columns.
     """
     from pyspark.sql import types as T
     from pyspark.sql.window import Window
 
-    rv = [c for c in right_values]
-    if tolerance_expr is not None and right_on not in rv:
+    if how not in ("inner", "left"):
         raise ValueError(
-            "tolerance_expr needs the matched timestamp: include "
+            f"asof_join: how must be 'inner' or 'left', not {how!r}")
+    rv = list(right_values)
+    if tolerance is not None and right_on not in rv:
+        raise ValueError(
+            "tolerance needs the matched timestamp: include "
             f"{right_on!r} in right_values")
     by_cast = _by_key_cast(left.schema[left_by].dataType,
                            right.schema[right_by].dataType)
@@ -381,10 +193,6 @@ def asof_join_windowed(
     rv_t = T.StructType([right.schema[c] for c in rv])
     right = right.filter(F.col(right_by).isNotNull()
                          & F.col(right_on).isNotNull())
-    # null-keyed LEFT rows skip the shuffle+window entirely (they can
-    # never match) and are padded back with NULL payload post-window —
-    # same idiom as the cogroup route; avoids the one-hot-partition
-    # skew when a large left fraction carries NULL keys.
     l_null = F.col(left_by).isNull() | F.col(left_on).isNull()
     null_left = left.filter(l_null)
     left = left.filter(~l_null)
@@ -402,15 +210,10 @@ def asof_join_windowed(
         F.struct(*[F.col(c).alias(c) for c in rv]).alias(rv_c),
     )
     # Tie-break ORDER key: the payload struct with NaN in top-level
-    # float/double fields mapped to NULL (nanvl), so Spark's struct
-    # comparison ranks NaN smallest — matching the cogroup route's
-    # pandas sort (na_position='first' treats NaN as NA).  Raw Spark
-    # ordering would rank NaN GREATEST and the two routes would pick
-    # different rows among timestamp ties (r10 ADVICE).  The payload
-    # column itself is untouched.  (For LEFT rows the key becomes a
-    # struct of NULLs instead of a NULL struct — irrelevant: the side
-    # tag already separates sides, and tied left rows are order-
-    # insensitive, each being its own output row.)
+    # float/double fields mapped to NULL, so NaN ranks smallest (the
+    # tie rule above); Spark's raw struct ordering would rank it
+    # greatest.  For LEFT rows the key is a struct of NULLs instead of
+    # a NULL struct — irrelevant: the side tag already separates sides.
     flt = (T.FloatType, T.DoubleType)
     rv_ord = F.struct(*[
         (F.nanvl(F.col(rv_c).getField(f.name),
@@ -424,16 +227,19 @@ def asof_join_windowed(
     matched = l_tag.unionByName(r_tag, allowMissingColumns=False).select(
         "*", F.last(rv_c, ignorenulls=True).over(w).alias(m_c),
     ).where(F.col(side_c) == 1)
-    keep = F.lit(True)
-    if tolerance_expr is not None:
-        keep = (F.col(m_c).getField(right_on).isNotNull()
-                & (F.col(t_c) - F.col(m_c).getField(right_on)
-                   <= F.expr(tolerance_expr)))
-    out_cols = [F.col(c) for c in left.columns] + [
-        F.when(keep, F.col(m_c).getField(c)).alias(c) for c in rv]
-    out = matched.select(*out_cols)
+    keep = F.col(m_c).isNotNull()
+    if tolerance is not None:
+        keep = keep & (F.col(t_c) - F.col(m_c).getField(right_on)
+                       <= F.lit(tolerance))
+    left_cols = [F.col(c) for c in left.columns]
+    if how == "inner":
+        return matched.where(keep).select(
+            *left_cols, *[F.col(m_c).getField(c).alias(c) for c in rv])
+    out = matched.select(
+        *left_cols, *[F.when(keep, F.col(m_c).getField(c)).alias(c)
+                      for c in rv])
     pad = null_left.select(
-        *[F.col(c) for c in left.columns],
+        *left_cols,
         *[F.lit(None).cast(right.schema[c].dataType).alias(c) for c in rv])
     return out.unionByName(pad)
 

@@ -22,15 +22,16 @@ from pyspark.sql import functions as F
 __all__ = ["distributed_sort"]
 
 
-def distributed_sort(df: DataFrame, col: str, ascending: bool = True,
+def distributed_sort(df: DataFrame, col: str,
                      num_partitions: int | None = None) -> DataFrame:
-    """Globally sort ``df`` by ``col``, duplicates preserved (O6+O9+O11).
+    """Globally sort ``df`` ascending by ``col``, duplicates preserved
+    (O6+O9+O11).
 
     Explicit two-step form so the partition count is controllable
     (the reference's R reducers); with ``num_partitions=None`` Spark
     uses spark.sql.shuffle.partitions and AQE may coalesce.
     """
-    key = F.col(col).asc() if ascending else F.col(col).desc()
+    key = F.col(col).asc()
     if num_partitions is not None:
         return df.repartitionByRange(num_partitions, key).sortWithinPartitions(key)
     return df.repartitionByRange(key).sortWithinPartitions(key)

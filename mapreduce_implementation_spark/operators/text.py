@@ -42,15 +42,13 @@ def tokenize(df: DataFrame, col: str = "value", keep: list[str] | None = None) -
     return df.select(*cols).filter(F.col("word") != "")
 
 
-def word_count(df: DataFrame, col: str = "value", ordered: bool = True) -> DataFrame:
+def word_count(df: DataFrame, col: str = "value") -> DataFrame:
     """Count words in a text column; order (count desc, word desc) like the
     reference merge step (mapreduce.c:393-394).  Columns: word, cnt.
     """
-    counts = (
+    return (
         tokenize(df, col)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
+        .orderBy(F.desc("cnt"), F.desc("word"))
     )
-    if ordered:
-        counts = counts.orderBy(F.desc("cnt"), F.desc("word"))
-    return counts

@@ -7,9 +7,9 @@ partition-order-dependent and cannot hash-match any oracle.  At 100 TB a
 window spec costs one shuffle on its partition keys; specs sharing keys
 reuse the exchange.
 
-Two-phase global operators (:func:`global_running_sum`,
-:func:`global_ntile`, :func:`grouped_running_sum`) derive their range
-bucket id as a PURE FUNCTION OF THE ROW VALUES — a broadcast list of
+Two-phase operators (:func:`grouped_running_sum`, :func:`grouped_ntile`,
+:func:`grouped_exact_quantiles`, :func:`global_order_stats`) derive their
+range bucket id as a PURE FUNCTION OF THE ROW VALUES — a broadcast list of
 boundary key tuples compared against each row with an ordinary
 expression — never from ``spark_partition_id()`` over a
 ``repartitionByRange``.  RangePartitioner boundaries come from a
@@ -21,6 +21,10 @@ its bucket offsets.  A value-derived bucket id is identical under ANY
 recomputation, configuration, or cache state, so the persist below is a
 pure perf optimization (one materialization feeds both plan branches),
 not a correctness requirement.
+
+The ``grouped_*`` operators take their group columns as a list; an
+empty list is the global form (``ORDER BY`` with no ``PARTITION BY``).
+The bucket count is the session's ``spark.sql.shuffle.partitions``.
 """
 
 from __future__ import annotations
@@ -33,8 +37,7 @@ from .joins import _fresh_name
 
 __all__ = ["ranked", "with_lag", "running_agg", "top_k_per_group",
            "top_k_per_group_salted",
-           "global_ntile", "global_running_sum", "grouped_running_sum",
-           "grouped_ntile", "exact_quantiles", "grouped_exact_quantiles",
+           "grouped_running_sum", "grouped_ntile", "grouped_exact_quantiles",
            "global_order_stats", "shared_boundaries"]
 
 # Temp-name discipline (r10 sweep of the fixed-name clobber class): each
@@ -122,7 +125,7 @@ def top_k_per_group_salted(df: DataFrame, partition_by: list[str],
 
 
 # --------------------------------------------------------------------------
-# Deterministic range buckets for the two-phase global operators.
+# Deterministic range buckets for the two-phase operators.
 #
 # A sort key is given as a column NAME plus direction and null placement:
 #   "price"                       -> ascending, Spark default NULLS FIRST
@@ -182,6 +185,9 @@ def _sample_rows(df: DataFrame, names: list[str], S: int) -> list:
     )
 
 
+_SAMPLE_PER_BUCKET = 24  # sampled rows per bucket boundary
+
+
 def _derive_bounds(vals: list[tuple], keys: list[tuple[str, bool, bool]],
                    n_buckets: int) -> list[tuple]:
     """Boundary tuples from sampled key tuples: sort driver-side in the
@@ -206,7 +212,7 @@ def _derive_bounds(vals: list[tuple], keys: list[tuple[str, bool, bool]],
 
 
 def _boundaries(df: DataFrame, keys: list[tuple[str, bool, bool]],
-                n_buckets: int, sample_per_bucket: int = 24) -> list[tuple]:
+                n_buckets: int) -> list[tuple]:
     """B-1 boundary key tuples — a deterministic function of the DATA.
 
     :func:`_sample_rows` + :func:`_derive_bounds`.  Boundary placement
@@ -214,14 +220,13 @@ def _boundaries(df: DataFrame, keys: list[tuple[str, bool, bool]],
     any boundary set, so an imperfect sample can never change results.
     """
     names = [k[0] for k in keys]
-    S = max(n_buckets * sample_per_bucket, 96)
+    S = max(n_buckets * _SAMPLE_PER_BUCKET, 96)
     rows = _sample_rows(df, names, S)
     return _derive_bounds([tuple(r[n] for n in names) for r in rows],
                           keys, n_buckets)
 
 
-def shared_boundaries(df: DataFrame, key_sets: list, n_buckets: int | None = None,
-                      sample_per_bucket: int = 24) -> list[list[tuple]]:
+def shared_boundaries(df: DataFrame, key_sets: list) -> list[list[tuple]]:
     """Boundary lists for SEVERAL two-phase window calls over the same
     frame from ONE sample pass — the chained-pipeline optimization
     (e.g. RFM's three ntiles over one per-user aggregate: one
@@ -234,16 +239,16 @@ def shared_boundaries(df: DataFrame, key_sets: list, n_buckets: int | None = Non
     under recomputation/retry/AQE); sharing one sample across key sets
     changes only bucket BALANCE, never results — the two-phase math is
     exact for any boundary set.  Pass each returned element as the
-    matching operator's ``bounds=``.
+    matching :func:`grouped_ntile` call's ``bounds=``.
     """
-    parts = n_buckets or _shuffle_partitions(df)
+    parts = _shuffle_partitions(df)
     keyed = [_norm_keys(ks) for ks in key_sets]
     all_names: list[str] = []
     for keys in keyed:
         for name, _, _ in keys:
             if name not in all_names:
                 all_names.append(name)
-    S = max(parts * sample_per_bucket, 96)
+    S = max(parts * _SAMPLE_PER_BUCKET, 96)
     rows = _sample_rows(df, all_names, S)
     out = []
     for keys in keyed:
@@ -330,116 +335,12 @@ def _bucket_expr(df: DataFrame, keys: list[tuple[str, bool, bool]],
     return F.expr(" + ".join(terms))
 
 
-def global_ntile(df: DataFrame, order_by, n_tiles: int,
-                 out: str = "tile", partitions: int | None = None,
-                 bounds: list[tuple] | None = None) -> DataFrame:
-    """Exact SQL ``ntile(k) OVER (ORDER BY ...)`` WITHOUT the
-    single-partition global window (the classic distributed two-phase
-    global ranking).
-
-    Phase 1: assign each row a range-bucket id from broadcast boundary
-    values (:func:`_boundaries` / :func:`_bucket_expr`) — buckets hold
-    disjoint, ordered key ranges, so global rank = rank within bucket +
-    rows in all earlier buckets.  Phase 2: per-bucket ``row_number``
-    (parallel across buckets, one hash exchange on ``_bkt``) plus a tiny
-    per-bucket count frame whose cumulative offsets broadcast back.
-    ntile semantics: with N rows the first (N mod k) tiles take
-    ceil(N/k) rows, the rest floor(N/k).
-
-    ``order_by`` is a list of sort keys (see module docstring) and must
-    be a total order (include a unique tiebreaker) or ties straddling a
-    boundary make ranks nondeterministic.  The persist is purely a perf
-    optimization — the bucket id is recompute-stable by construction.
-    """
-    parts = partitions or _shuffle_partitions(df)
-    keys = _norm_keys(order_by)
-    # persist the BASE frame: the boundary-sample collect materializes
-    # it, so the upstream lineage (often the expensive part) runs once
-    # and both consumer branches read the cache.  The _bkt expression is
-    # recomputed per branch — cheap, and recompute-stable by design.
-    base = tracked_persist(df)
-    if bounds is None:
-        bounds = _boundaries(base, keys, parts)
-    p = _fresh_name("_gt_", df, extra=(out,))
-    bkt, lrn, off, nn, cnt = (f"{p}bkt", f"{p}lrn", f"{p}off", f"{p}n",
-                              f"{p}cnt")
-    bucketed = base.withColumn(bkt, _bucket_expr(base, keys, bounds))
-    local = ranked(bucketed, [bkt], _sort_cols(keys),
-                   kind="row_number", out=lrn)
-    counts = bucketed.groupBy(bkt).agg(F.count(F.lit(1)).alias(cnt))
-    w_off = Window.orderBy(bkt).rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy(bkt).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-    offsets = counts.select(
-        bkt,
-        F.coalesce(F.sum(cnt).over(w_off), F.lit(0)).alias(off),
-        F.sum(cnt).over(w_all).alias(nn),
-    )
-    r = F.col(lrn) + F.col(off)
-    k = F.lit(n_tiles).cast("long")
-    q = F.floor(F.col(nn) / k)
-    rem = F.col(nn) % k
-    cut = rem * (q + 1)
-    tile = F.when(r <= cut, F.floor((r - 1) / (q + 1)) + 1).otherwise(
-        rem + F.floor((r - cut - 1) / F.greatest(q, F.lit(1))) + 1)
-    return (
-        local.join(F.broadcast(offsets), bkt)
-        .withColumn(out, tile.cast("int"))
-        .drop(bkt, lrn, off, nn)
-    )
-
-
-def global_running_sum(df: DataFrame, value_col: str,
-                       order_by, out: str = "cum",
-                       partitions: int | None = None,
-                       bounds: list[tuple] | None = None) -> DataFrame:
-    """Exact ``sum(v) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)``
-    WITHOUT a single-partition window — the prefix-sum sibling of
-    :func:`global_ntile`, same two-phase shape.
-
-    Phase 1: value-derived range-bucket id (broadcast boundaries —
-    deterministic under any recomputation; see module docstring).
-    Phase 2: per-bucket cumulative sum in parallel, plus a B-row
-    per-bucket-total frame whose exclusive prefix offsets broadcast
-    back; global cumsum = local cumsum + offset of earlier buckets.
-
-    ``order_by``: sort-key list (module docstring), total order
-    required.  The persist is a perf optimization only.
-    """
-    parts = partitions or _shuffle_partitions(df)
-    keys = _norm_keys(order_by)
-    # persist the BASE frame (see global_ntile): the sample collect
-    # materializes the upstream lineage once; _bkt recomputes per
-    # branch, cheap and recompute-stable.
-    base = tracked_persist(df)
-    if bounds is None:
-        bounds = _boundaries(base, keys, parts)
-    p = _fresh_name("_gs_", df, extra=(out,))
-    bkt, lcum, tot, off = f"{p}bkt", f"{p}lcum", f"{p}tot", f"{p}off"
-    bucketed = base.withColumn(bkt, _bucket_expr(base, keys, bounds))
-    local = bucketed.withColumn(
-        lcum,
-        F.sum(value_col).over(
-            Window.partitionBy(bkt).orderBy(*_sort_cols(keys))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    totals = bucketed.groupBy(bkt).agg(F.sum(value_col).alias(tot))
-    w_off = Window.orderBy(bkt).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        bkt, F.coalesce(F.sum(tot).over(w_off), F.lit(0)).alias(off))
-    return (
-        local.join(F.broadcast(offsets), bkt)
-        .withColumn(out, F.col(lcum) + F.col(off))
-        .drop(bkt, lcum, off)
-    )
-
-
 def grouped_running_sum(df: DataFrame, value_col: str, group_cols: list[str],
-                        order_by, out: str = "cum",
-                        partitions: int | None = None,
-                        bounds: list[tuple] | None = None) -> DataFrame:
-    """Exact ``sum(v) OVER (PARTITION BY g ORDER BY ...)`` that stays
-    distributed even when single groups dwarf a partition — the grouped
-    sibling of :func:`global_running_sum`.
+                        order_by, out: str = "cum") -> DataFrame:
+    """Exact ``sum(v) OVER (PARTITION BY g ORDER BY ... ROWS UNBOUNDED
+    PRECEDING)`` that stays distributed even when single groups dwarf a
+    partition; ``group_cols=[]`` is the global running sum, which never
+    funnels through a single-partition window either.
 
     A plain keyed window puts each ENTIRE group in one task: fine for
     many small groups, fatal when one group holds billions of rows (the
@@ -455,14 +356,18 @@ def grouped_running_sum(df: DataFrame, value_col: str, group_cols: list[str],
     stats allow).  Bucket ids are value-derived, so every plan branch
     sees the same assignment under any recomputation (module
     docstring); the persist is perf-only.
+
+    ``order_by``: sort-key list (see the sort-key notes above), a total
+    order within each group.
     """
-    parts = partitions or _shuffle_partitions(df)
     keys = _norm_keys([*group_cols, *order_by])
     okeys = _norm_keys(order_by)
-    # persist the BASE frame (see global_ntile)
+    # persist the BASE frame: the boundary-sample collect materializes
+    # it, so the upstream lineage (often the expensive part) runs once
+    # and both consumer branches read the cache.  The bucket expression
+    # is recomputed per branch — cheap, and recompute-stable by design.
     base = tracked_persist(df)
-    if bounds is None:
-        bounds = _boundaries(base, keys, parts)
+    bounds = _boundaries(base, keys, _shuffle_partitions(df))
     p = _fresh_name("_gr_", df, extra=(out,))
     bkt, lcum, tot, off = f"{p}bkt", f"{p}lcum", f"{p}tot", f"{p}off"
     bucketed = base.withColumn(bkt, _bucket_expr(base, keys, bounds))
@@ -487,11 +392,11 @@ def grouped_running_sum(df: DataFrame, value_col: str, group_cols: list[str],
 
 def grouped_ntile(df: DataFrame, group_cols: list[str], order_by,
                   n_tiles: int, out: str = "tile",
-                  partitions: int | None = None,
                   bounds: list[tuple] | None = None) -> DataFrame:
     """Exact ``ntile(k) OVER (PARTITION BY g ORDER BY ...)`` that stays
     distributed even when single groups dwarf a partition — the ntile
-    sibling of :func:`grouped_running_sum`.
+    sibling of :func:`grouped_running_sum`; ``group_cols=[]`` is the
+    global ``ntile(k) OVER (ORDER BY ...)``.
 
     A plain keyed window puts each ENTIRE group in one task — fatal when
     one group is terabytes (per-source quality deciles where a source is
@@ -508,14 +413,16 @@ def grouped_ntile(df: DataFrame, group_cols: list[str], order_by,
     recomputation — so the persist is perf-only (module docstring).
 
     ``order_by`` must total-order rows WITHIN each group (include a
-    unique tiebreaker).
+    unique tiebreaker) or ties straddling a boundary make ranks
+    nondeterministic.  ``bounds`` takes a :func:`shared_boundaries`
+    element for the same ``group_cols + order_by`` keys; by default the
+    operator samples its own.
     """
-    parts = partitions or _shuffle_partitions(df)
     keys = _norm_keys([*group_cols, *order_by])
     okeys = _norm_keys(order_by)
     base = tracked_persist(df)
     if bounds is None:
-        bounds = _boundaries(base, keys, parts)
+        bounds = _boundaries(base, keys, _shuffle_partitions(df))
     p = _fresh_name("_gn_", df, extra=(out,))
     bkt, lrn, off, nn, cnt = (f"{p}bkt", f"{p}lrn", f"{p}off", f"{p}n",
                               f"{p}cnt")
@@ -548,79 +455,13 @@ def grouped_ntile(df: DataFrame, group_cols: list[str], order_by,
     )
 
 
-def exact_quantiles(df: DataFrame, value_col: str, probs: list[float],
-                    out_names: list[str] | None = None,
-                    partitions: int | None = None,
-                    bounds: list[tuple] | None = None) -> DataFrame:
-    """EXACT linear-interpolated quantiles (SQL ``percentile_cont`` /
-    DuckDB ``quantile_cont`` semantics) as a 1-row frame — WITHOUT the
-    builtin ``percentile()`` aggregate, whose buffer accumulates every
-    distinct value into a single in-memory map (the final reduce task
-    receives the whole column's value histogram: a silent OOM at 100 TB
-    on high-cardinality columns).
-
-    Two-phase, same machinery as :func:`global_ntile`: value-derived
-    range buckets from broadcast boundaries, per-bucket ``row_number``
-    in parallel, global rank = local rank + exclusive bucket-count
-    prefix.  Each requested quantile's fractional position ``(n-1) * p``
-    picks the two neighboring order statistics with conditional sums
-    (partial-aggregable — the final reduce sees a handful of doubles),
-    interpolated as ``v_lo + (v_hi - v_lo) * frac`` — the same
-    float-op order DuckDB uses, so the twin arithmetic agrees to the
-    last ulp given equal inputs.  NULLs are excluded (percentile_cont
-    semantics).  Returns one row with one column per prob.
-    """
-    parts = partitions or _shuffle_partitions(df)
-    names = out_names or [f"q{str(p).replace('.', '_')}" for p in probs]
-    keys = _norm_keys([value_col])
-    base = tracked_persist(
-        df.select(value_col).filter(F.col(value_col).isNotNull()))
-    if bounds is None:
-        bounds = _boundaries(base, keys, parts)
-    # fresh against the OUTPUT names too: out_names are caller-chosen
-    tp = _fresh_name("_q_", base, extra=tuple(names))
-    bkt, rn, off, nn, cnt = (f"{tp}bkt", f"{tp}rn", f"{tp}off", f"{tp}n",
-                             f"{tp}cnt")
-    bucketed = base.withColumn(bkt, _bucket_expr(base, keys, bounds))
-    local = ranked(bucketed, [bkt], _sort_cols(keys),
-                   kind="row_number", out=rn)
-    counts = bucketed.groupBy(bkt).agg(F.count(F.lit(1)).alias(cnt))
-    w_off = Window.orderBy(bkt).rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy(bkt).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-    offsets = counts.select(
-        bkt,
-        F.coalesce(F.sum(cnt).over(w_off), F.lit(0)).alias(off),
-        F.sum(cnt).over(w_all).alias(nn),
-    )
-    r = (F.col(rn) + F.col(off))
-    v = F.col(value_col).cast("double")
-    aggs = [F.max(nn).alias(nn)]
-    for i, p in enumerate(probs):
-        pos = (F.col(nn) - 1) * F.lit(float(p))
-        lo = F.floor(pos) + 1  # 1-based rank of the lower neighbor
-        aggs.append(F.sum(F.when(r == lo, v).otherwise(0.0)).alias(f"{tp}lo{i}"))
-        aggs.append(F.sum(F.when(r == lo + 1, v).otherwise(0.0)).alias(f"{tp}hi{i}"))
-    one = local.join(F.broadcast(offsets), bkt).agg(*aggs)
-    outs = []
-    for i, (p, name) in enumerate(zip(probs, names)):
-        pos = (F.col(nn) - 1) * F.lit(float(p))
-        frac = pos - F.floor(pos)
-        outs.append((F.col(f"{tp}lo{i}")
-                     + (F.col(f"{tp}hi{i}") - F.col(f"{tp}lo{i}")) * frac)
-                    .alias(name))
-    return one.select(*outs)
-
-
 def grouped_exact_quantiles(df: DataFrame, value_col: str,
                             group_cols: list[str], probs: list[float],
-                            out_names: list[str] | None = None,
-                            partitions: int | None = None,
-                            bounds: list[tuple] | None = None) -> DataFrame:
+                            out_names: list[str] | None = None) -> DataFrame:
     """EXACT per-group interpolated quantiles (``percentile_cont(p)
     WITHIN GROUP`` / ``... OVER (PARTITION BY g)`` semantics, one row
-    per group) WITHOUT the builtin ``percentile()`` aggregate — the
-    grouped sibling of :func:`exact_quantiles`.
+    per group) WITHOUT the builtin ``percentile()`` aggregate;
+    ``group_cols=[]`` gives the whole column's quantiles as one row.
 
     The builtin's buffer holds every distinct value OF THE GROUP in one
     task: fine for many small groups, a silent OOM when one group is
@@ -640,15 +481,13 @@ def grouped_exact_quantiles(df: DataFrame, value_col: str,
     SQL GROUP BY over the null-filtered input).  Offsets return via a
     keyed join, not broadcast — group cardinality may itself be huge.
     """
-    parts = partitions or _shuffle_partitions(df)
     names = out_names or [f"q{str(p).replace('.', '_')}" for p in probs]
     keys = _norm_keys([*group_cols, value_col])
     okeys = _norm_keys([value_col])
     base = tracked_persist(
         df.select(*group_cols, value_col)
         .filter(F.col(value_col).isNotNull()))
-    if bounds is None:
-        bounds = _boundaries(base, keys, parts)
+    bounds = _boundaries(base, keys, _shuffle_partitions(df))
     tp = _fresh_name("_gq_", base, extra=tuple(names))
     bkt, rn, off, nn, cnt = (f"{tp}bkt", f"{tp}rn", f"{tp}off", f"{tp}n",
                              f"{tp}cnt")
@@ -690,8 +529,6 @@ def grouped_exact_quantiles(df: DataFrame, value_col: str,
 
 
 def global_order_stats(df: DataFrame, order_by,
-                       partitions: int | None = None,
-                       bounds: list[tuple] | None = None,
                        rank_col: str = "rnk", dense_col: str = "drnk",
                        pct_col: str = "pct_rank",
                        cume_col: str = "cume_dist") -> DataFrame:
@@ -714,7 +551,6 @@ def global_order_stats(df: DataFrame, order_by,
     ``order_by``: sort-key list (module docstring).  Unlike the other
     two-phase operators no tiebreaker is needed — ties are the point.
     """
-    parts = partitions or _shuffle_partitions(df)
     keys = _norm_keys(order_by)
     names = [k[0] for k in keys]
     tp = _fresh_name("_os_", df,
@@ -724,8 +560,7 @@ def global_order_stats(df: DataFrame, order_by,
                           f"{tp}n")
     keyed = tracked_persist(
         df.groupBy(*names).agg(F.count(F.lit(1)).alias(cnt)))
-    if bounds is None:
-        bounds = _boundaries(keyed, keys, parts)
+    bounds = _boundaries(keyed, keys, _shuffle_partitions(df))
     bucketed = keyed.withColumn(bkt, _bucket_expr(keyed, keys, bounds))
     w_loc = (Window.partitionBy(bkt).orderBy(*_sort_cols(keys))
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))

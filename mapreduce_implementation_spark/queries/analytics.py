@@ -442,7 +442,8 @@ def q_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="RFM customer segmentation (recency/frequency/monetary "
         "quartiles, the CRM-analytics staple): one per-user aggregate, "
         "then THREE exact global ntiles — each via the distributed "
-        "two-phase operator (operators/windows.global_ntile), never a "
+        "two-phase operator (operators/windows.grouped_ntile with no "
+        "group columns), never a "
         "single-partition window, so the scoring holds at 10^9 users.  "
         "Recency orders on the second-formatted last-event string "
         "(identical truncation both engines, user_id tiebreaker makes "
@@ -451,7 +452,7 @@ def q_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.caching import tracked_persist
-    from ..operators.windows import global_ntile, shared_boundaries
+    from ..operators.windows import grouped_ntile, shared_boundaries
 
     e = load_table(spark, sf_dir, "events")
     # persisted: the per-user aggregate is the only full event-log scan;
@@ -468,10 +469,10 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     rb, fb, mb = shared_boundaries(
         base, [["last_ts", "user_id"], ["freq", "user_id"],
                ["monetary", "user_id"]])
-    r = global_ntile(base, ["last_ts", "user_id"], 4, out="r_q",
-                     bounds=rb).select("user_id", "freq", "monetary", "r_q")
-    f = global_ntile(r, ["freq", "user_id"], 4, out="f_q", bounds=fb)
-    m = global_ntile(f, ["monetary", "user_id"], 4, out="m_q", bounds=mb)
+    r = grouped_ntile(base, [], ["last_ts", "user_id"], 4, out="r_q",
+                      bounds=rb).select("user_id", "freq", "monetary", "r_q")
+    f = grouped_ntile(r, [], ["freq", "user_id"], 4, out="f_q", bounds=fb)
+    m = grouped_ntile(f, [], ["monetary", "user_id"], 4, out="m_q", bounds=mb)
     return m.select(
         "user_id",
         F.col("r_q").cast("int").alias("r_q"),

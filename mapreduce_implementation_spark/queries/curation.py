@@ -40,7 +40,8 @@ from ..sources.tables import load_table
         "quality-scoring pipeline needs): 10%-two-sided TRIMMED mean "
         "(drop the tails) and WINSORIZED mean (clamp to the decile "
         "bounds) of l_extendedprice.  The exact interpolated decile "
-        "bounds come from operators/windows.exact_quantiles — the "
+        "bounds come from operators/windows.grouped_exact_quantiles "
+        "with no group columns — the "
         "two-phase distributed order-statistic operator — NOT the "
         "builtin percentile() aggregate, whose buffer ships every "
         "distinct value to one reduce task (the agg_percentiles_exact "
@@ -50,11 +51,11 @@ from ..sources.tables import load_table
         "1-row bounds frame broadcasts onto the second scan.",
 )
 def q_agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.windows import exact_quantiles
+    from ..operators.windows import grouped_exact_quantiles
 
     li = load_table(spark, sf_dir, "lineitem").select("l_extendedprice")
-    p = exact_quantiles(li, "l_extendedprice", [0.1, 0.9],
-                        out_names=["_p10", "_p90"])
+    p = grouped_exact_quantiles(li, "l_extendedprice", [], [0.1, 0.9],
+                                out_names=["_p10", "_p90"])
     x = F.col("l_extendedprice")
     inside = (x >= F.col("_p10")) & (x <= F.col("_p90"))
     return (
@@ -443,18 +444,19 @@ def q_corpus_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(integer div on both engines; no float-ranked knife edge) and "
         "full determinism.  This is the weighted corpus-sampling "
         "primitive (sample big-docs-proportionally for a token budget). "
-        " The running sum is operators/windows.global_running_sum — the "
+        " The running sum is operators/windows.grouped_running_sum "
+        "with no group columns — the "
         "two-phase value-bucketed prefix sum — so no single-partition "
         "global window exists anywhere in the plan; the oracle uses the "
         "plain SQL window.  The step scalar joins as a broadcast 1-row "
         "frame.",
 )
 def q_sample_weighted_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.windows import global_running_sum
+    from ..operators.windows import grouped_running_sum
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars")
-    cum = global_running_sum(docs, "n_chars", ["doc_id"], out="w_cum")
+    cum = grouped_running_sum(docs, "n_chars", [], ["doc_id"], out="w_cum")
     step = docs.agg(
         F.expr("CAST(sum(n_chars) AS BIGINT) DIV 50").alias("_step"))
     return (

@@ -3,11 +3,13 @@ multi-way, as-of, and bucketed range join."""
 
 from __future__ import annotations
 
+from datetime import timedelta
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.joins import (
-    anti_join, asof_join, asof_join_windowed, join_tables,
+    anti_join, asof_join, join_tables,
     range_join_bucketed, semi_join,
 )
 from ..registry import register
@@ -178,8 +180,9 @@ def q_join_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON e.user_id = o.o_custkey AND o.o_orderdate <= e.ts
     """,
     doc="As-of join: latest order at-or-before each event, per user. "
-        "Cogrouped pd.merge_asof (one shuffle per side, sorted merge per key); "
-        "output limited to the asof timestamp, which is unique per event even "
+        "operators/joins.asof_join: union of both sides + last(ignorenulls) "
+        "over a window keyed by user and ordered by time (one shuffle, all "
+        "JVM); output limited to the asof timestamp, which is unique per event even "
         "when several orders tie on it.",
 )
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -213,11 +216,10 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "idiom: a quote older than the staleness budget must not price "
         "a trade): latest order at-or-before each event per user, but "
         "only within 30 days — older matches become NULL, and every "
-        "event survives (LEFT semantics).  Implemented as the "
-        "DECLARATIVE as-of (operators/joins.asof_join_windowed: union "
+        "event survives (LEFT semantics, how='left').  Same operator "
+        "as asof_join_latest_order (operators/joins.asof_join: union "
         "+ last(ignorenulls) over a keyed window — one shuffle, all "
-        "JVM; the pandas-cogroup asof_join also supports tolerance= "
-        "but pays one Python call per user).  The oracle emulates "
+        "JVM), with a typed timedelta tolerance.  The oracle emulates "
         "tolerance by NULLing the unconditional ASOF LEFT match beyond "
         "the budget, which is equivalent because any other candidate "
         "is older still.",
@@ -226,10 +228,10 @@ def q_asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", F.col("o_orderdate").cast("timestamp").alias("o_ts"))
-    matched = asof_join_windowed(
+    matched = asof_join(
         e, o, left_on="ts", right_on="o_ts",
         left_by="user_id", right_by="o_custkey",
-        right_values=["o_ts"], tolerance_expr="INTERVAL 30 DAYS",
+        right_values=["o_ts"], tolerance=timedelta(days=30), how="left",
     )
     return matched.select(
         "event_id",

@@ -479,14 +479,14 @@ def q_sort_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     # form (range partition + parallel local cumsum + broadcast
     # offsets); a bare Window.orderBy would funnel every row through a
     # single partition, the last-reducer anti-pattern this repo forbids.
-    from ..operators.windows import global_running_sum
+    from ..operators.windows import grouped_running_sum
 
     o = load_table(spark, sf_dir, "orders")
     pn = F.nullif(F.col("o_orderpriority"), F.lit("1-URGENT"))
     base = o.select("o_orderkey", pn.alias("prio_or_null"),
                     F.lit(1).cast("long").alias("_one"))
-    ranked = global_running_sum(
-        base, "_one",
+    ranked = grouped_running_sum(
+        base, "_one", [],
         [("prio_or_null", "asc", "first"), "o_orderkey"],
         out="rn")
     return ranked.select("o_orderkey", "prio_or_null",
@@ -752,7 +752,8 @@ def q_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "order-statistic no built-in aggregate computes: the first row "
         "whose cumulative weight crosses half the total.  The global "
         "cumulative weight comes from the distributed two-phase prefix "
-        "sum (operators/windows.global_running_sum — range partition + "
+        "sum (operators/windows.grouped_running_sum with no group "
+        "columns — range partition + "
         "parallel local cumsum + broadcast offsets), NEVER a "
         "single-partition window over the fact table; the crossing row "
         "is a TakeOrdered(1).  Total weight enters the plan as a "
@@ -762,14 +763,15 @@ def q_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "half-total comparison engine-identical.",
 )
 def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.windows import global_running_sum
+    from ..operators.windows import grouped_running_sum
 
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").alias("price"),
         "l_quantity", "l_orderkey", "l_linenumber")
-    cum = global_running_sum(
+    cum = grouped_running_sum(
         li,
         "l_quantity",
+        [],
         ["price", "l_orderkey", "l_linenumber"],
         out="cumw",
     )

@@ -680,16 +680,17 @@ def q_text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "decile granularity): per-doc bigram-LM mean log-prob, then an "
         "EXACT global ntile(10) via the distributed two-phase ranking "
         "(range partition + per-partition row_number + broadcast offsets "
-        "— operators/windows.global_ntile), never a single-partition "
+        "— operators/windows.grouped_ntile with no group columns), "
+        "never a single-partition "
         "window.  Sort key is (rounded logprob, doc_id) so tie order is "
         "engine-independent.",
 )
 def q_text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.windows import global_ntile
+    from ..operators.windows import grouped_ntile
 
     lp = _bigram_logprob_df(spark, sf_dir).select("doc_id", "avg_logprob")
-    return global_ntile(lp, ["avg_logprob", "doc_id"],
-                        n_tiles=10, out="ppl_bucket")
+    return grouped_ntile(lp, [], ["avg_logprob", "doc_id"],
+                         n_tiles=10, out="ppl_bucket")
 
 
 @register(
@@ -907,7 +908,8 @@ def q_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         "data pipeline): docs in stable doc_id order are packed into "
         "2048-token sequences by their starting offset in the global "
         "token stream — offset = exclusive prefix sum of token counts, "
-        "computed by the distributed two-phase global_running_sum "
+        "computed by the distributed two-phase grouped_running_sum "
+        "with no group columns "
         "(range partition + parallel local cumsum + broadcast offsets), "
         "NEVER a single-partition window.  Output is per-sequence "
         "occupancy; the fill ratio tells you the padding waste the "
@@ -915,12 +917,12 @@ def q_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.textfn import tokens_array
-    from ..operators.windows import global_running_sum
+    from ..operators.windows import grouped_running_sum
 
     docs = load_table(spark, sf_dir, "documents")
     ntok = F.size(F.filter(tokens_array(F.col("text")), lambda t: t != ""))
     tok = docs.select("doc_id", ntok.cast("long").alias("n_tok"))
-    cum = global_running_sum(tok, "n_tok", ["doc_id"], out="cum")
+    cum = grouped_running_sum(tok, "n_tok", [], ["doc_id"], out="cum")
     # integer `div`, not double division + cast: exact past 2^53 tokens,
     # and the same floor-division semantics as the oracle's `//`.
     binned = cum.withColumn("seq_id", F.expr("(cum - n_tok) div 2048"))
@@ -1034,7 +1036,7 @@ def q_text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.textfn import tokens_array
-    from ..operators.windows import global_running_sum
+    from ..operators.windows import grouped_running_sum
 
     docs = load_table(spark, sf_dir, "documents")
     wc = (
@@ -1044,8 +1046,8 @@ def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("_one", F.lit(1))
     )
-    ranked = global_running_sum(
-        wc, "_one", [("cnt", "desc"), "tok"], out="rnk")
+    ranked = grouped_running_sum(
+        wc, "_one", [], [("cnt", "desc"), "tok"], out="rnk")
     return ranked.agg(
         F.round(-F.expr("regr_slope(ln(cnt), ln(rnk))"), 4).alias("zipf_alpha"),
         F.round(F.expr("regr_r2(ln(cnt), ln(rnk))"), 4).alias("fit_r2"),
@@ -1725,9 +1727,9 @@ def _bpe_encode(col, merges=None):
 
 def _bpe_apply_merge(syms: list, a: str, b: str) -> list:
     """One left-to-right non-overlapping application of merge (a, b)
-    to a symbol sequence — the single-round primitive shared by the
-    full encoder below and the batched TRAINER's incremental re-encode
-    (bpe_train_merges_batched), so the two can never drift."""
+    to a symbol sequence — the single-round primitive of the full
+    encoder below; the trainer's fused batch scan (bpe_train_merges)
+    reduces to it for one merge."""
     i, out = 0, []
     n = len(syms)
     ab = a + b
@@ -1904,102 +1906,18 @@ def q_text_token_budget_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("source"))
 
 
-def bpe_train_merges(docs: DataFrame, text_col: str,
-                     n_merges: int) -> DataFrame:
-    """Full BPE vocabulary TRAINING (Sennrich et al. 2016) as ONE
-    declarative Spark plan — ``n_merges`` rounds of: count adjacent
-    symbol pairs across the corpus, merge the most frequent pair
-    everywhere, repeat.  Returns (merge_rank, lhs, rhs, n_pairs), the
-    learned merge table with each round's winning pair count.
+def bpe_train_merges(docs: DataFrame, text_col: str, n_merges: int,
+                     batch_merges: int = 1,
+                     strict: bool = True) -> DataFrame:
+    """Full BPE vocabulary TRAINING (Sennrich et al. 2016): per round,
+    count adjacent symbol pairs cnt-weighted across the vocabulary,
+    merge the (count desc, lhs, rhs) argmax pair everywhere, repeat.
+    Returns (merge_rank, lhs, rhs, n_pairs), the learned merge table
+    with each round's winning pair count.
 
-    The trainer is inherently sequential (round i's re-encode depends
-    on round i-1's argmax), but that does NOT require driver collects:
-    each round's argmax is a 1-row frame (count desc, lhs, rhs total
-    order -> limit 1) that the next round's re-encode consumes via
-    ``crossJoin(broadcast(...))``, with the merged pair spliced into
-    the space-wrapped ``replace`` as COLUMN expressions — the whole
-    K-round training is one lazy plan, zero ``collect()``.  Each
-    argmax frame is persisted (1 row each) so round i doesn't re-run
-    rounds 1..i-1's aggregations; the corpus is collapsed ONCE to the
-    persisted (distinct word, occurrence count) vocabulary and every
-    round re-encodes |vocab| rows with i chained replaces, weighting
-    pair counts by cnt (the wrap-form representation whose
-    full-BPE-application equivalence is fuzz-pinned on _bpe_encode).
-
-    Scale: ONE corpus-wide shuffle total (the word-count collapse);
-    per round, one map pass over the vocabulary + one pair-count
-    aggregate whose exchange carries <= |symbol vocab|^2 partial sums
-    — training cost is vocabulary-sized after the first pass, exactly
-    the classic Sennrich trainer shape (the occurrence-level first cut
-    cost 425 s at sf0.1 in the DuckDB twin; this form ~2 s).  Plan
-    depth grows one replace per round, so the declarative form holds
-    to ~250 rounds (the _bpe_encode ceiling) before the encode step
-    must move to bpe_encode_batched-style execution.
-    """
-    from ..functions.textfn import tokens_array
-    from ..operators.caching import tracked_persist
-
-    # The classic Sennrich trainer optimization: collapse the corpus to
-    # (distinct word, occurrence count) ONCE — pair counts are then
-    # cnt-weighted sums over the VOCABULARY, and every training round
-    # re-encodes |vocab| rows instead of |corpus| word occurrences.
-    # One corpus-wide shuffle total; rounds are vocabulary-sized.  (The
-    # first cut re-encoded every occurrence per round: the DuckDB twin
-    # took 425 s at sf0.1; this form runs the same induction in ~2 s.)
-    w = tracked_persist(
-        docs.select(F.explode(tokens_array(F.col(text_col))).alias("w"))
-        .filter(F.length("w") >= 2)
-        .groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
-        .select(F.regexp_replace("w", "(.)", " $1 ").alias("e"), "cnt"))
-    tops, cur = [], w
-    for i in range(1, n_merges + 1):
-        syms = F.regexp_extract_all(F.col("e"), F.lit("[^ ]+"), F.lit(0))
-        idx = F.when(F.size(syms) >= 2,
-                     F.sequence(F.lit(1), F.size(syms) - 1)
-                     ).otherwise(F.array().cast("array<int>"))
-        pair = F.explode(F.transform(idx, lambda j: F.struct(
-            F.element_at(syms, j).alias("a"),
-            F.element_at(syms, (j + F.lit(1)).cast("int")).alias("b"))))
-        top = tracked_persist(
-            cur.select(pair.alias("p"), "cnt")
-            .groupBy(F.col("p.a").alias(f"_a{i}"),
-                     F.col("p.b").alias(f"_b{i}"))
-            .agg(F.sum("cnt").alias(f"_n{i}"))
-            .orderBy(F.desc(f"_n{i}"), F.asc(f"_a{i}"), F.asc(f"_b{i}"))
-            .limit(1))
-        tops.append(top)
-        a, b = F.col(f"_a{i}"), F.col(f"_b{i}")
-        cur = (cur.crossJoin(F.broadcast(top.select(f"_a{i}", f"_b{i}")))
-               .select(F.replace(
-                   F.col("e"),
-                   F.concat(F.lit(" "), a, F.lit("  "), b, F.lit(" ")),
-                   F.concat(F.lit(" "), a, b, F.lit(" "))).alias("e"),
-                   "cnt"))
-    out = None
-    for i, top in enumerate(tops, 1):
-        sel = top.select(F.lit(i).cast("int").alias("merge_rank"),
-                         F.col(f"_a{i}").alias("lhs"),
-                         F.col(f"_b{i}").alias("rhs"),
-                         F.col(f"_n{i}").alias("n_pairs"))
-        out = sel if out is None else out.unionByName(sel)
-    return out.orderBy("merge_rank")
-
-
-def bpe_train_merges_batched(docs: DataFrame, text_col: str,
-                             n_merges: int,
-                             batch_merges: int = 1,
-                             strict: bool = True) -> DataFrame:
-    """Vocabulary-scale BPE TRAINING — the batched escape hatch for
-    ``bpe_train_merges``'s measured ~250-round plan-depth ceiling
-    (SCALE.md r12: the declarative trainer chains one ``replace`` per
-    round, StackOverflow at ~300), the same relationship
-    ``bpe_encode_batched`` has to ``_bpe_encode``.  Identical
-    induction, identical output (parity-pinned on the fixture rounds
-    in tests/test_graph_text.py): per round, count adjacent symbol
-    pairs cnt-weighted across the vocabulary, merge the (count desc,
-    lhs, rhs) argmax pair everywhere, repeat.
-
-    Execution shape — O(1) plan depth per round at ANY round count:
+    Execution shape — O(1) plan depth per round at ANY round count
+    (real vocabularies have 1k–50k merges; a plan that grows one
+    expression per round stops planning at a few hundred):
 
     * the corpus collapses ONCE to the (distinct word, count)
       vocabulary (the classic Sennrich trainer move; the only
@@ -2020,7 +1938,7 @@ def bpe_train_merges_batched(docs: DataFrame, text_col: str,
       round both applies the merge and materializes the truncation
       point; lineage truncates to the checkpointed partitions, so
       round 1,000's plan is exactly as deep as round 1's — no
-      chained-replace tower, no re-execution of earlier rounds.
+      re-execution of earlier rounds.
 
     Fault story at cluster scale: ``localCheckpoint`` trades
     recompute-on-executor-loss for speed; the merge prefix collected
@@ -2030,9 +1948,9 @@ def bpe_train_merges_batched(docs: DataFrame, text_col: str,
     long-lived cluster job prefer ``spark.sparkContext.setCheckpointDir``
     + ``.checkpoint()`` for the same shape with durable storage.
 
-    Returns the same (merge_rank, lhs, rhs, n_pairs) frame as the
-    declarative trainer; stops early (fewer rows) if the vocabulary
-    runs out of pairs before ``n_merges`` rounds.
+    Building the result runs the training: one job per round, each
+    collecting at most a few candidate rows.  Stops early (fewer rows)
+    if the vocabulary runs out of pairs before ``n_merges`` rounds.
 
     ``batch_merges=m`` (r13 VERDICT item 4 — the multi-merge lever for
     real vocab sizes, where 50k one-merge rounds ≈ 14 h of driver-loop
@@ -2040,7 +1958,7 @@ def bpe_train_merges_batched(docs: DataFrame, text_col: str,
     maximal pairwise SYMBOL-DISJOINT **prefix** of the (count desc,
     lhs, rhs)-sorted candidates (selection stops at the FIRST
     candidate overlapping an already-selected pair), all applied in
-    ONE mapInPandas pass.  Why this equals the sequential trainer:
+    ONE mapInPandas pass.  Why this equals one merge per round (m=1):
     disjoint merges commute, and a pair's corpus count is INVARIANT
     under a symbol-disjoint merge, so after applying the first j-1
     batch members (i) every original pair ranked above batch member j
@@ -2063,11 +1981,11 @@ def bpe_train_merges_batched(docs: DataFrame, text_col: str,
     truncating the batch, and the tie-guard is off — batches run at
     full m, so a 50k-merge vocabulary trains in ~n_merges/m rounds
     (SCALE.md r14 has the measured ladder).  The merge TABLE may then
-    differ from the sequential trainer's near batch boundaries (order
+    differ from the m=1 table near batch boundaries (order
     of equal-frequency chains, e.g. co+lu vs lu+m while building
     'column'); each batch is still pairwise symbol-disjoint, every
     recorded n_pairs is still the exact corpus count at batch time,
-    and the learned pair SET stays in the sequential table's
+    and the learned pair SET stays in the m=1 table's
     frequency band — the trade every fastBPE/YouTokenToMe-style
     frequency-batched tokenizer build makes.
     """
@@ -2203,14 +2121,14 @@ _BPE_TRAIN_ROUNDS = 6
 def _bpe_train_oracle(k: int) -> str:
     """DuckDB twin of bpe_train_merges: the sequential argmax unrolls
     as k CTE stages whose replace() patterns take the previous stage's
-    winning pair via SCALAR SUBQUERIES — the same data-dependent
-    splice the Spark side does with broadcast 1-row frames.
+    winning pair via SCALAR SUBQUERIES — an independent, purely
+    declarative statement of the same induction the Spark trainer runs
+    round by round.
 
     Every CTE is ``AS MATERIALIZED``: DuckDB inlines plain CTEs, so
     each of e{i}'s four m{i} scalar-subquery references would re-run
     the ENTIRE upstream chain — measured 4^k blowup, 425 s at sf0.1
-    vs 0.2 s materialized.  (The Spark side gets the same effect from
-    the persisted 1-row argmax frames.)"""
+    vs 0.2 s materialized."""
     sql = """
 WITH w AS MATERIALIZED (
   SELECT w, count(*) AS cnt FROM (
@@ -2251,53 +2169,20 @@ e{i} AS MATERIALIZED (
         "runs the actual sequential induction): per round, count "
         "adjacent symbol pairs corpus-wide, merge the argmax pair "
         "everywhere, repeat with the grown symbol vocabulary.  The "
-        "sequential dependency is expressed DECLARATIVELY: each "
-        "round's argmax is a 1-row broadcast frame spliced into the "
-        "next round's space-wrapped replace as column expressions "
-        "(Spark) / scalar subqueries (DuckDB) — one lazy plan, zero "
-        "collects, both engines running the identical induction.  The "
         "corpus collapses ONCE to (distinct word, count) — the classic "
-        "trainer optimization — so rounds are vocabulary-sized: one "
-        "map pass + one cnt-weighted pair aggregate (exchange <= "
-        "|symbol vocab|^2 partial sums) each.  Output is the learned "
-        "merge table with winning-pair counts — the artifact a "
-        "tokenizer build actually ships.",
+        "trainer optimization — so rounds are vocabulary-sized: "
+        "mapInPandas partial pair counts, a cnt-weighted pair "
+        "aggregate, a few-row argmax collect, and a lazily "
+        "localCheckpointed re-encode (O(1) plan depth per round).  The "
+        "6 merges train through strict multi-merge batches "
+        "(batch_merges=6): fewer scans than 6 one-merge rounds, the "
+        "same merge table (proof in bpe_train_merges).  "
+        "The DuckDB oracle unrolls the same induction declaratively "
+        "as scalar-subquery CTE stages.  Output is the learned merge "
+        "table with winning-pair counts — the artifact a tokenizer "
+        "build actually ships.",
 )
 def q_text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return bpe_train_merges(docs, "text", _BPE_TRAIN_ROUNDS)
-
-
-@register(
-    "text_bpe_train_merges_batched",
-    oracle=_bpe_train_oracle(_BPE_TRAIN_ROUNDS),
-    doc="The SAME 6-round BPE training induction as "
-        "text_bpe_train_merges, executed on the vocabulary-scale path "
-        "(bpe_train_merges_batched: O(1) plan depth per round — "
-        "mapInPandas partial pair counts, 1-row argmax collect, lazy "
-        "localCheckpoint re-encode; the r12 VERDICT item-3 escape "
-        "hatch from the declarative trainer's ~250-round "
-        "chained-replace ceiling, measured to 1,000 genuine rounds at "
-        "~1 s/round flat in SCALE.md r13).  Registered against the "
-        "IDENTICAL DuckDB oracle as the declarative twin, so the "
-        "driver hash-gates both execution strategies against the same "
-        "ground truth: a drift between the two trainers (or between "
-        "either and the oracle) flips a hash.  The per-round 1-row "
-        "collect is bounded model state (the merge table IS the "
-        "artifact), the graph-loop convention — corpus data never "
-        "reaches the driver.",
-)
-def q_text_bpe_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    # r14 opt: train the 6 merges through the strict multi-merge batch
-    # (batch_merges=6) instead of 6 one-merge rounds.  strict=True is
-    # PROVABLY sequential-equal (disjoint-prefix selection + created-
-    # pair tie-guard; proof in the operator docstring, parity pinned by
-    # test_bpe_train_multi_merge_parity on both the fixture and the
-    # tie-dense adversarial corpus), so the merge table — and the
-    # driver hash against the sequential DuckDB oracle — is unchanged;
-    # only the round count (and with it the per-round job latency)
-    # drops: 6 scans -> as few as 2-3 depending on tie-guard
-    # truncation.
-    return bpe_train_merges_batched(docs, "text", _BPE_TRAIN_ROUNDS,
-                                    batch_merges=_BPE_TRAIN_ROUNDS)
+    return bpe_train_merges(docs, "text", _BPE_TRAIN_ROUNDS,
+                            batch_merges=_BPE_TRAIN_ROUNDS)

@@ -127,9 +127,10 @@ def q_window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "#shuffle-partitions-row offsets frame.",
 )
 def q_window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.windows import global_ntile
+    from ..operators.windows import grouped_ntile
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tiled = global_ntile(o, [("o_totalprice", "desc"), "o_orderkey"], 10, out="decile")
+    tiled = grouped_ntile(o, [], [("o_totalprice", "desc"), "o_orderkey"], 10,
+                          out="decile")
     return tiled.select("o_orderkey", "decile")
 
 

@@ -117,12 +117,21 @@ def read_int_lines(spark: SparkSession, path: str) -> DataFrame:
     The reference tokenizes each line on spaces and ``stoi``-parses each
     token; we mirror that (a line may hold several ints) and use LongType
     for headroom over the reference's 32-bit assumption.  Column ``n: long``.
+
+    A token that is not a base-10 64-bit integer (surrounding whitespace
+    such as a CR is trimmed) fails the job with an error naming it,
+    whatever ``spark.sql.ansi.enabled`` says: ``try_cast`` behaves the
+    same in both modes, where a plain cast would raise under ANSI and
+    silently drop the token without it.
     """
     lines = spark.read.text(path)
     tok = F.explode(F.split(F.col("value"), " ")).alias("tok")
+    n = F.col("tok").try_cast("long")
+    bad = F.raise_error(F.concat(
+        F.lit("read_int_lines: not a base-10 64-bit integer: '"),
+        F.col("tok"), F.lit("'")))
     return (
         lines.select(tok)
         .filter(F.col("tok") != "")
-        .select(F.col("tok").cast("long").alias("n"))
-        .filter(F.col("n").isNotNull())
+        .select(F.when(n.isNull(), bad).otherwise(n).alias("n"))
     )

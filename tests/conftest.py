@@ -34,6 +34,22 @@ def graph_path(dense: bool):
         yield
 
 
+@contextlib.contextmanager
+def shuffle_partitions(spark, n: int):
+    """Run the enclosed calls with ``spark.sql.shuffle.partitions`` set
+    to ``n``, restoring the previous value after.  The two-phase window
+    operators size their range buckets from this setting, so tests vary
+    the bucket count here.  A plain context manager rather than a
+    fixture, so Hypothesis tests can use it."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="tests", shuffle_partitions=8)

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from mapreduce_implementation_spark.operators.relational import merge_upsert
 from mapreduce_implementation_spark.plans.inspect import plan_string
 from mapreduce_implementation_spark.registry import all_specs
-from tests.conftest import SF_DIR_001, SF_DIR_01, graph_path
+from tests.conftest import SF_DIR_001, SF_DIR_01, graph_path, shuffle_partitions
 
 SPECS = all_specs()
 
@@ -329,16 +329,16 @@ def test_grouped_running_sum_matches_keyed_window(spark):
           .select((F.col("id") % 2).cast("string").alias("g"),
                   F.col("id").alias("k"),
                   (F.col("id") % 7 + 1).alias("v")))
-    got = grouped_running_sum(df, "v", ["g"], ["k"],
-                              out="cum", partitions=8)
     w = Window.partitionBy("g").orderBy("k").rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
     want = df.withColumn("cum", F.sum("v").over(w))
     try:
-        assert got.count() == 10000
-        diff = (got.select("g", "k", "cum")
-                .exceptAll(want.select("g", "k", "cum")))
-        assert diff.count() == 0
+        with shuffle_partitions(spark, 8):
+            got = grouped_running_sum(df, "v", ["g"], ["k"], out="cum")
+            assert got.count() == 10000
+            diff = (got.select("g", "k", "cum")
+                    .exceptAll(want.select("g", "k", "cum")))
+            assert diff.count() == 0
         # and the distributed form really buckets: base rows shuffle on
         # the value-derived (_bkt, g) key, never through a per-group-only
         # hash exchange into one task, and no evaluation-dependent

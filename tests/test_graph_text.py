@@ -917,46 +917,17 @@ def test_bpe_batched_at_vocab_scale_matches_reference(spark):
         assert got[i] == ref, (w, got[i][:8], ref[:8])
 
 
-def test_bpe_train_batched_parity_with_declarative(spark):
-    """bpe_train_merges_batched (O(1)-plan-depth localCheckpoint loop)
-    must produce the IDENTICAL merge table — ranks, pairs, and counts —
-    as the declarative one-plan trainer on the fixture rounds over the
-    real documents table (r12 VERDICT item 3: the training loop gets
-    the same batched escape hatch the encoder has)."""
-    from tests.conftest import SF_DIR_001
-
-    from mapreduce_implementation_spark.queries.textanalysis import (
-        _BPE_TRAIN_ROUNDS, bpe_train_merges, bpe_train_merges_batched,
-    )
-    from mapreduce_implementation_spark.operators.caching import (
-        release_persisted,
-    )
-    from mapreduce_implementation_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR_001, "documents")
-    try:
-        want = [tuple(r) for r in bpe_train_merges(
-            docs, "text", _BPE_TRAIN_ROUNDS).collect()]
-        got = [tuple(r) for r in bpe_train_merges_batched(
-            docs, "text", _BPE_TRAIN_ROUNDS).collect()]
-    finally:
-        release_persisted()
-    assert len(want) == _BPE_TRAIN_ROUNDS
-    assert got == want
-
-
 def test_bpe_train_batched_matches_reference_past_ceiling(spark):
-    """The batched trainer vs an INDEPENDENT pure-Python Sennrich
-    trainer (dict-of-word-counts formulation, shared nothing with the
-    Spark path) for 40 rounds — past nothing physical, but enough
-    rounds that a tie-break or apply-order slip compounds visibly;
-    the 1k-round regime (where the declarative form cannot even be
-    planned) is measured in SCALE.md r13 with this same operator."""
+    """The trainer vs an INDEPENDENT pure-Python Sennrich trainer
+    (dict-of-word-counts formulation, shared nothing with the Spark
+    path) for 40 rounds — enough rounds that a tie-break or
+    apply-order slip compounds visibly; the 1k-round regime is
+    measured in SCALE.md r13 with this same operator."""
     import random
     from collections import Counter
 
     from mapreduce_implementation_spark.queries.textanalysis import (
-        bpe_train_merges_batched,
+        bpe_train_merges,
     )
 
     def ref_train(word_counts, k):
@@ -999,7 +970,7 @@ def test_bpe_train_batched_matches_reference_past_ceiling(spark):
     df = spark.createDataFrame([(w,) for w in words], "text string")
     want = ref_train(counts, 40)
     got = [tuple(r) for r in
-           bpe_train_merges_batched(df, "text", 40).collect()]
+           bpe_train_merges(df, "text", 40).collect()]
     assert got == want, (got[:3], want[:3])
 
 
@@ -1008,7 +979,7 @@ def test_bpe_train_multi_merge_parity(spark):
     selects the maximal symbol-disjoint PREFIX of the sorted pair
     candidates, tie-guarded against created-pair count collisions
     (the two refinements that make the batch provably equal to the
-    sequential trainer — see the operator docstring).  Pin m∈{4,16}
+    one-merge rounds — see the operator docstring).  Pin m∈{4,16}
     == m=1 — ranks, pairs, AND counts — on BOTH a uniform-random
     corpus (tie-dense: greedy-skip batching diverged at rank 3 here)
     and the real fixture documents (where plain prefix truncation
@@ -1017,7 +988,7 @@ def test_bpe_train_multi_merge_parity(spark):
     import random
 
     from mapreduce_implementation_spark.queries.textanalysis import (
-        bpe_train_merges_batched,
+        bpe_train_merges,
     )
     from mapreduce_implementation_spark.sources.tables import load_table
     from tests.conftest import SF_DIR_001
@@ -1032,11 +1003,11 @@ def test_bpe_train_multi_merge_parity(spark):
     ]
     for corpus in corpora:
         want = [tuple(r) for r in
-                bpe_train_merges_batched(corpus, "text", 40).collect()]
+                bpe_train_merges(corpus, "text", 40).collect()]
         for m in (4, 16):
             got = [tuple(r) for r in
-                   bpe_train_merges_batched(corpus, "text", 40,
-                                            batch_merges=m).collect()]
+                   bpe_train_merges(corpus, "text", 40,
+                                    batch_merges=m).collect()]
             first_diff = next((i for i, (g, w_) in
                                enumerate(zip(got, want)) if g != w_), None)
             assert got == want, (m, first_diff,
@@ -1059,17 +1030,17 @@ def test_bpe_train_fast_mode_quality(spark):
     from pyspark.sql import functions as SF
 
     from mapreduce_implementation_spark.queries.textanalysis import (
-        bpe_encode_batched, bpe_train_merges_batched,
+        bpe_encode_batched, bpe_train_merges,
     )
     from mapreduce_implementation_spark.sources.tables import load_table
     from tests.conftest import SF_DIR_001
 
     docs = load_table(spark, SF_DIR_001, "documents").select("text")
     seq = [tuple(r) for r in
-           bpe_train_merges_batched(docs, "text", 40).collect()]
+           bpe_train_merges(docs, "text", 40).collect()]
     fast = [tuple(r) for r in
-            bpe_train_merges_batched(docs, "text", 40, batch_merges=16,
-                                     strict=False).collect()]
+            bpe_train_merges(docs, "text", 40, batch_merges=16,
+                             strict=False).collect()]
     assert len(fast) == len(seq) == 40
     assert all(n > 0 for _, _, _, n in fast)
 

@@ -107,7 +107,8 @@ def test_tpch_q11_scalar_is_broadcast_on_persisted_frame(spark):
 
 
 def test_global_window_value_derived_buckets(spark):
-    """global_running_sum / global_ntile determinism: the bucket id is a
+    """Two-phase window determinism (grouped_running_sum / grouped_ntile
+    with no group columns): the bucket id is a
     pure function of row VALUES (broadcast boundary comparisons), so no
     spark_partition_id and no repartitionByRange may appear anywhere in
     the lineage — under cache eviction, task retry, or AQE re-plan a
@@ -543,7 +544,7 @@ def test_quality_deciles_uses_value_buckets_no_per_source_window(spark):
 
 
 def test_trimmed_mean_avoids_percentile_buffer(spark):
-    """The decile bounds come from the two-phase exact_quantiles
+    """The decile bounds come from the two-phase grouped_exact_quantiles
     operator — the plan must contain NO percentile() aggregate (whose
     buffer ships every distinct value to one reduce task) and still
     broadcast the 1-row bounds frame onto the scan."""
@@ -640,15 +641,28 @@ def test_bloom_frontier_rolling_history_never_shuffles(spark):
         release_persisted()
 
 
+_PYTHON_NODE = re.compile(r"Python|InPandas|InArrow")
+
+
+def test_asof_latest_order_single_window_no_python(spark):
+    """asof_join_latest_order (inner as-of) plans one keyed Window and
+    no Python-evaluating node: the as-of join is the union +
+    keyed-window last, all JVM-side, and the inner form has no pad
+    Union leg."""
+    df = SPECS["asof_join_latest_order"].fn(spark, SF_DIR_01)
+    plan = plan_string(df, "simple")
+    assert not _PYTHON_NODE.search(plan), plan
+    assert plan.count("Window") == 1, plan
+    assert plan.count("Union") == 1, plan
+
+
 def test_asof_tolerance_windowed_single_shuffle_no_python(spark):
-    """The declarative as-of (union + keyed-window last) must stay
-    entirely JVM-side — one hash exchange on the by-key, one Window,
-    no Python evaluation, no nested-loop join (the pandas-cogroup
-    route pays one Python call per user; this plan is why the
-    registered query doesn't use it)."""
+    """The left as-of with a tolerance (union + keyed-window last) must
+    stay entirely JVM-side — one hash exchange on the by-key, one
+    Window, no Python evaluation, no nested-loop join."""
     df = SPECS["asof_join_tolerance"].fn(spark, SF_DIR_01)
     plan = plan_string(df, "simple")
-    assert "Python" not in plan, plan
+    assert not _PYTHON_NODE.search(plan), plan
     assert plan.count("Window") == 1, plan
     assert plan.count("Exchange") <= 1 + plan.count("AQEShuffleRead"), plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -790,35 +804,4 @@ def test_bloom_frontier_probe_rides_the_scan(spark):
         from mapreduce_implementation_spark.operators.caching import (
             release_persisted,
         )
-        release_persisted()
-
-
-def test_bpe_train_plan_declarative_no_python(spark):
-    """text_bpe_train_merges' training loop must be ONE declarative
-    plan: no Python evaluation, every per-round argmax a
-    TakeOrderedAndProject (1-row), the re-encode splice pure
-    expressions over broadcast crosses — and the whole thing built
-    without triggering a single job (zero collects is a BUILD property:
-    constructing the DataFrame runs nothing)."""
-    from mapreduce_implementation_spark.operators.caching import (
-        release_persisted,
-    )
-
-    tracker = spark.sparkContext.statusTracker()
-    jobs_before = len(tracker.getJobIdsForGroup(None) or [])
-    df = SPECS["text_bpe_train_merges"].fn(spark, SF_DIR_01)
-    try:
-        jobs_after = len(tracker.getJobIdsForGroup(None) or [])
-        # parquet file-listing may cost one job on first read of the
-        # fixture dir in this session; a per-round collect would cost
-        # >= 6 (one per argmax round)
-        assert jobs_after - jobs_before <= 1, (
-            "plan build ran jobs (per-round collect?)",
-            jobs_after - jobs_before)
-        plan = plan_string(df, "simple")
-        assert "Python" not in plan, plan
-        assert "TakeOrderedAndProject" in plan, plan
-        assert "replace" in plan, plan
-        assert "SortMergeJoin" not in plan, plan
-    finally:
         release_persisted()

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_implementation_spark.operators.sort import distributed_sort
 from mapreduce_implementation_spark.operators.text import tokenize
+from tests.conftest import shuffle_partitions
 
 
 def reference_tokenize(line: str) -> list[str]:
@@ -88,31 +89,32 @@ _grow_null = st.tuples(
                 unique_by=lambda t: t[1]),
        st.booleans())
 def test_global_running_sum_matches_window_model_desc_nulls(spark, rows, asc):
-    """global_running_sum == sum() OVER (ORDER BY k ASC NULLS FIRST / k
-    DESC NULLS LAST, tb) on frames with NULL keys, in BOTH directions,
-    across a bucket count that forces many range buckets — pinning the
-    boundary searchsorted expression's direction and null-placement
-    semantics (null boundary tuples included)."""
+    """grouped_running_sum with no group columns == sum() OVER (ORDER BY
+    k ASC NULLS FIRST / k DESC NULLS LAST, tb) on frames with NULL keys,
+    in BOTH directions, across a bucket count that forces many range
+    buckets — pinning the boundary searchsorted expression's direction
+    and null-placement semantics (null boundary tuples included)."""
     from pyspark.sql.window import Window
 
     from mapreduce_implementation_spark.operators.caching import (
         release_persisted,
     )
     from mapreduce_implementation_spark.operators.windows import (
-        global_running_sum,
+        grouped_running_sum,
     )
 
     df = spark.createDataFrame(rows, "k long, tb long, v long")
     key = ("k", "asc") if asc else ("k", "desc")
-    got = global_running_sum(df, "v", [key, "tb"], out="cum", partitions=7)
     order = ([F.col("k").asc_nulls_first(), F.col("tb").asc()] if asc
              else [F.col("k").desc_nulls_last(), F.col("tb").asc()])
     w = Window.orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
     want = df.withColumn("cum", F.sum("v").over(w))
     try:
-        assert {(r["k"], r["tb"], r["cum"]) for r in got.collect()} \
-            == {(r["k"], r["tb"], r["cum"]) for r in want.collect()}
+        with shuffle_partitions(spark, 7):
+            got = grouped_running_sum(df, "v", [], [key, "tb"], out="cum")
+            assert {(r["k"], r["tb"], r["cum"]) for r in got.collect()} \
+                == {(r["k"], r["tb"], r["cum"]) for r in want.collect()}
     finally:
         release_persisted()
 
@@ -247,14 +249,14 @@ def test_grouped_running_sum_matches_window_model(spark, rows):
     )
 
     df = spark.createDataFrame(rows, "g long, k long, v long")
-    got = grouped_running_sum(df, "v", ["g"], ["k"],
-                              out="cum", partitions=5)
     w = Window.partitionBy("g").orderBy("k").rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
     want = df.withColumn("cum", F.sum("v").over(w))
     try:
-        assert {(r["g"], r["k"], r["cum"]) for r in got.collect()} \
-            == {(r["g"], r["k"], r["cum"]) for r in want.collect()}
+        with shuffle_partitions(spark, 5):
+            got = grouped_running_sum(df, "v", ["g"], ["k"], out="cum")
+            assert {(r["g"], r["k"], r["cum"]) for r in got.collect()} \
+                == {(r["g"], r["k"], r["cum"]) for r in want.collect()}
     finally:
         release_persisted()
 
@@ -277,13 +279,14 @@ def test_grouped_ntile_matches_keyed_window_model(spark, rows, k):
     from mapreduce_implementation_spark.operators.windows import grouped_ntile
 
     df = spark.createDataFrame(rows, "g long, key long, tb long")
-    got = grouped_ntile(df, ["g"], ["key", "tb"], n_tiles=k, out="tile",
-                        partitions=7)
     w = Window.partitionBy("g").orderBy(F.col("key").asc(), F.col("tb").asc())
     want = df.withColumn("tile", F.ntile(k).over(w))
     try:
-        assert {(r["g"], r["tb"], r["tile"]) for r in got.collect()} \
-            == {(r["g"], r["tb"], r["tile"]) for r in want.collect()}
+        with shuffle_partitions(spark, 7):
+            got = grouped_ntile(df, ["g"], ["key", "tb"], n_tiles=k,
+                                out="tile")
+            assert {(r["g"], r["tb"], r["tile"]) for r in got.collect()} \
+                == {(r["g"], r["tb"], r["tile"]) for r in want.collect()}
     finally:
         release_persisted()
 
@@ -301,16 +304,17 @@ def test_global_ntile_decimal_sort_key(spark):
     from mapreduce_implementation_spark.operators.caching import (
         release_persisted,
     )
-    from mapreduce_implementation_spark.operators.windows import global_ntile
+    from mapreduce_implementation_spark.operators.windows import grouped_ntile
 
     rows = [(i, Decimal(f"{(i * 37) % 500}.{i % 100:02d}")) for i in range(300)]
     df = spark.createDataFrame(rows, "id long, amt decimal(10,2)")
-    got = global_ntile(df, ["amt", "id"], n_tiles=4, out="tile", partitions=7)
     w = Window.orderBy(F.col("amt").asc_nulls_first(), F.col("id").asc())
     want = df.withColumn("tile", F.ntile(4).over(w))
     try:
-        assert {(r["id"], r["tile"]) for r in got.collect()} \
-            == {(r["id"], r["tile"]) for r in want.collect()}
+        with shuffle_partitions(spark, 7):
+            got = grouped_ntile(df, [], ["amt", "id"], n_tiles=4, out="tile")
+            assert {(r["id"], r["tile"]) for r in got.collect()} \
+                == {(r["id"], r["tile"]) for r in want.collect()}
     finally:
         release_persisted()
 
@@ -321,20 +325,22 @@ def test_global_ntile_decimal_sort_key(spark):
                 min_size=1, max_size=80),
        st.sampled_from([0.0, 0.1, 0.5, 0.9, 1.0]))
 def test_exact_quantiles_matches_percentile_builtin(spark, vals, p):
-    """exact_quantiles (two-phase distributed order statistics) ==
-    the builtin percentile() aggregate (percentile_cont semantics) on
-    arbitrary float data including duplicates and the p=0/p=1 edges."""
+    """grouped_exact_quantiles with no group columns (two-phase
+    distributed order statistics) == the builtin percentile() aggregate
+    (percentile_cont semantics) on arbitrary float data including
+    duplicates and the p=0/p=1 edges."""
     from mapreduce_implementation_spark.operators.caching import (
         release_persisted,
     )
     from mapreduce_implementation_spark.operators.windows import (
-        exact_quantiles,
+        grouped_exact_quantiles,
     )
 
     df = spark.createDataFrame([(float(v),) for v in vals], "v double")
     try:
-        got = exact_quantiles(df, "v", [p], out_names=["q"],
-                              partitions=5).collect()[0]["q"]
+        with shuffle_partitions(spark, 5):
+            got = grouped_exact_quantiles(
+                df, "v", [], [p], out_names=["q"]).collect()[0]["q"]
         want = df.agg(F.expr(f"percentile(v, {p})").alias("q")
                       ).collect()[0]["q"]
         assert got is not None and abs(got - want) < 1e-9, (got, want)
@@ -362,8 +368,9 @@ def test_grouped_exact_quantiles_matches_builtin(spark, rows, p):
     df = spark.createDataFrame([(f"g{g}", float(v)) for g, v in rows],
                                "g string, v double")
     try:
-        got = {r["g"]: r["q"] for r in grouped_exact_quantiles(
-            df, "v", ["g"], [p], out_names=["q"], partitions=5).collect()}
+        with shuffle_partitions(spark, 5):
+            got = {r["g"]: r["q"] for r in grouped_exact_quantiles(
+                df, "v", ["g"], [p], out_names=["q"]).collect()}
         want = {r["g"]: r["q"] for r in df.groupBy("g").agg(
             F.expr(f"percentile(v, {p})").alias("q")).collect()}
         assert set(got) == set(want)
@@ -542,6 +549,8 @@ def test_asof_join_tolerance_and_left_semantics(spark):
     the stale value); how='left' keeps every left row including users
     with no orders at all; an in-budget match still picks the LATEST
     at-or-before."""
+    from datetime import timedelta
+
     from mapreduce_implementation_spark.operators.joins import asof_join
 
     left = spark.createDataFrame(
@@ -556,17 +565,16 @@ def test_asof_join_tolerance_and_left_semantics(spark):
     ).withColumn("ots", F.to_timestamp("ots"))
     out = asof_join(left, right, left_on="ts", right_on="ots",
                     left_by="user", right_by="user",
-                    right_values=["ots"], tolerance="30D", how="left")
+                    right_values=["ots"], tolerance=timedelta(days=30),
+                    how="left")
     got = {r["id"]: (str(r["ots"]) if r["ots"] is not None else None)
            for r in out.collect()}
     assert got == {1: "2024-03-08 00:00:00", 2: None, 3: None}
 
 
 def test_asof_join_mixed_dtype_by_keys(spark):
-    """int vs bigint by-keys must work end-to-end (r8 ADVICE: the hash
-    bucketing co-located them but pd.merge_asof rejects mismatched
-    by-key dtypes) — the common-dtype promotion inside the cogroup
-    makes the documented claim true."""
+    """int vs bigint by-keys must work end-to-end: both sides cast to
+    the common by-key type, so equal keys share a window partition."""
     from mapreduce_implementation_spark.operators.joins import asof_join
 
     left = spark.createDataFrame(
@@ -582,26 +590,19 @@ def test_asof_join_mixed_dtype_by_keys(spark):
 
 
 def test_asof_join_dtype_normalization_edges(spark):
-    """The r9-review failure modes of by-key dtype handling:
-    (a) string-vs-bigint by-keys actually match via the documented
-    string fallback (np.promote_types(object, int64) never raises, so
-    the first draft's except-TypeError fallback was unreachable and
-    such joins silently emptied); (b) integral by-keys stay EXACT
-    above 2^53 even when a NULL by-key row would share the SAME pandas
-    batch (num_buckets=1 forces co-batching — Arrow float64s a
-    null-carrying integral column, so exactness requires the null rows
-    to be routed AROUND the cogroup, not cast after the fact);
-    (c) caller columns literally named '_by'/'_bkt'/'_matched' survive
-    untouched; (d) date-vs-timestamp by-keys match per SQL's
-    date->timestamp-midnight cast; (e) a decimal by-key mixed with a
-    non-decimal type refuses loudly instead of aliasing through
-    float64; (f) int-vs-double by-keys match per SQL's double cast
-    (requires the bucket hash and the merge to share the normalized
-    key); (g) decimal-vs-decimal with different precision/scale
-    matches exactly via the widened common decimal; (h) values whose
-    canonical forms differ (bool true vs string 'True') mismatch
-    DETERMINISTICALLY at every bucket count — the third review round's
-    bucket-vs-batch repr-disagreement class."""
+    """By-key dtype handling, mostly on the default inner join (the
+    left-join twin is test_asof_windowed_dtype_normalization_edges):
+    (a) string-vs-bigint by-keys match via the documented string
+    fallback; (b) integral by-keys stay EXACT above 2^53 with a NULL
+    by-key row present; (c) caller columns literally named
+    '_by'/'_bkt' survive untouched; (d) date-vs-timestamp by-keys
+    match per SQL's date->timestamp-midnight cast; (e) a decimal by-key
+    mixed with a non-decimal type refuses loudly instead of aliasing
+    through float64; (f) int-vs-double by-keys match per SQL's double
+    cast (the window partitions on the normalized key); (g)
+    decimal-vs-decimal with different precision/scale matches exactly
+    via the widened common decimal; (h) values whose canonical forms
+    differ (bool true vs string 'True') never match."""
     import pytest as _pytest
 
     from mapreduce_implementation_spark.operators.joins import asof_join
@@ -616,8 +617,7 @@ def test_asof_join_dtype_normalization_edges(spark):
                               right_values=["ots"]).collect()}
     assert got == {1: 90}
 
-    # (b) 2^53 + 1 must not alias onto 2^53 even when the NULL row
-    # would land in the same (only) batch
+    # (b) 2^53 + 1 must not alias onto 2^53, NULL-by row present
     big, nxt = 2**53, 2**53 + 1
     left = spark.createDataFrame(
         [(1, big, 100), (2, nxt, 100), (3, None, 100)],
@@ -626,7 +626,7 @@ def test_asof_join_dtype_normalization_edges(spark):
         [(big, 90), (nxt, 77)], "user long, ots long")
     out = asof_join(left, right, left_on="ts", right_on="ots",
                     left_by="user", right_by="user",
-                    right_values=["ots"], how="left", num_buckets=1)
+                    right_values=["ots"], how="left")
     got = {r["id"]: r["ots"] for r in out.collect()}
     assert got == {1: 90, 2: 77, 3: None}
 
@@ -663,8 +663,8 @@ def test_asof_join_dtype_normalization_edges(spark):
                   left_by="user", right_by="user", right_values=["ots"])
 
     # (f) int-vs-double by-keys match per SQL's double cast — requires
-    # the bucket hash to normalize types BEFORE stringifying (raw forms
-    # '10' vs '10.0' would land in different buckets)
+    # the window to partition on the normalized key (raw 10 vs 10.0
+    # would land in different partitions)
     left = spark.createDataFrame(
         [(1, 10, 100)], "id long, user long, ts long")
     right = spark.createDataFrame([(10.0, 90)], "user double, ots long")
@@ -687,24 +687,21 @@ def test_asof_join_dtype_normalization_edges(spark):
                               right_values=["ots"]).collect()}
     assert got == {1: 90}
 
-    # (h) canonical-form mismatches are deterministic across bucket
-    # counts: bool true vs the string 'True' never match (Spark's
-    # cast-to-string form is 'true'), at num_buckets=1 AND the default
+    # (h) bool true vs the string 'True' never match (Spark's
+    # cast-to-string form is 'true')
     left = spark.createDataFrame([(1, True, 100)],
                                  "id long, user boolean, ts long")
     right = spark.createDataFrame([("True", 90)], "user string, ots long")
-    for nb in (1, 64):
-        assert asof_join(left, right, left_on="ts", right_on="ots",
-                         left_by="user", right_by="user",
-                         right_values=["ots"],
-                         num_buckets=nb).count() == 0
+    assert asof_join(left, right, left_on="ts", right_on="ots",
+                     left_by="user", right_by="user",
+                     right_values=["ots"]).count() == 0
 
 
 def test_asof_join_null_by_keys_match_nothing(spark):
-    """NULL by-keys follow SQL equality semantics (r8 ADVICE: pandas
-    factorizes NaN keys as equal, so null-left would wrongly match
-    null-right): inner drops null-by left rows; left keeps them with a
-    NULL payload; null-by right rows never match anyone."""
+    """NULL by-keys follow SQL equality semantics (a null-left key must
+    not match a null-right key): inner drops null-by left rows; left
+    keeps them with a NULL payload; null-by right rows never match
+    anyone."""
     from mapreduce_implementation_spark.operators.joins import asof_join
 
     left = spark.createDataFrame(
@@ -751,11 +748,8 @@ def test_salted_topk_matches_plain_window_topk(spark, rows, k, buckets):
 
 
 def test_asof_windowed_dtype_normalization_edges(spark):
-    """The r9 cogroup hardening, ported to asof_join_windowed (r10
-    VERDICT item 2) — same (a)-(h) family as
-    test_asof_join_dtype_normalization_edges where each class applies
-    to the declarative route (no pandas, so the Arrow float64 trap
-    becomes a plain exactness pin):
+    """The (a)-(h) by-key family of
+    test_asof_join_dtype_normalization_edges on the LEFT join:
     (a) string-vs-bigint by-keys match via the string fallback;
     (b) integral by-keys stay exact above 2^53 with a NULL-by row in
     the same frame; (c) caller columns literally named
@@ -765,22 +759,19 @@ def test_asof_windowed_dtype_normalization_edges(spark):
     by-keys match per SQL's double cast; (g) differently-shaped
     decimals match exactly via the widened common decimal — and a
     widening that would EXCEED 38 digits refuses loudly instead of
-    overflowing keys to NULL (r9 ADVICE, pinned on BOTH operators);
-    (h) bool-vs-string by-keys never match, and NULL by-keys follow
+    overflowing keys to NULL; (h) bool-vs-string by-keys never match, and NULL by-keys follow
     SQL equality semantics (left rows keep NULL payload, null-by right
     rows match nobody)."""
     import pytest as _pytest
 
-    from mapreduce_implementation_spark.operators.joins import (
-        asof_join, asof_join_windowed,
-    )
+    from mapreduce_implementation_spark.operators.joins import asof_join
 
-    def run(left, right, **kw):
+    def run(left, right):
         return {r["id"]: r["ots"]
-                for r in asof_join_windowed(
+                for r in asof_join(
                     left, right, left_on="ts", right_on="ots",
                     left_by="user", right_by="user",
-                    right_values=["ots"], **kw).collect()}
+                    right_values=["ots"], how="left").collect()}
 
     # (a) string left key vs bigint right key
     left = spark.createDataFrame(
@@ -805,9 +796,9 @@ def test_asof_windowed_dtype_normalization_edges(spark):
         "id long, user int, _by string, _t long, _side long, "
         "_rv_ots string, ts long")
     right = spark.createDataFrame([(10, 90)], "user long, ots long")
-    row = asof_join_windowed(left, right, left_on="ts", right_on="ots",
-                             left_by="user", right_by="user",
-                             right_values=["ots"]).collect()[0]
+    row = asof_join(left, right, left_on="ts", right_on="ots",
+                    left_by="user", right_by="user",
+                    right_values=["ots"], how="left").collect()[0]
     assert (row["_by"], row["_t"], row["_side"], row["_rv_ots"],
             row["ots"]) == ("keepme", 3, 4, "keep2", 90)
 
@@ -826,9 +817,9 @@ def test_asof_windowed_dtype_normalization_edges(spark):
     ).select("id", F.col("user").cast("decimal(20,0)").alias("user"), "ts")
     right = spark.createDataFrame([(10, 90)], "user long, ots long")
     with _pytest.raises(ValueError, match="DecimalType"):
-        asof_join_windowed(left, right, left_on="ts", right_on="ots",
-                           left_by="user", right_by="user",
-                           right_values=["ots"])
+        asof_join(left, right, left_on="ts", right_on="ots",
+                  left_by="user", right_by="user", right_values=["ots"],
+                  how="left")
 
     # (f) int-vs-double by-keys match per SQL's double cast
     left = spark.createDataFrame(
@@ -837,8 +828,8 @@ def test_asof_windowed_dtype_normalization_edges(spark):
     assert run(left, right) == {1: 90}
 
     # (g) decimal-vs-decimal widening is exact; >38-digit widening
-    # refuses loudly on BOTH operators (r9 ADVICE: min(p,38) capped the
-    # cast and overflowed 37-digit keys to NULL -> false NaN matches)
+    # refuses loudly (min(p,38) would cap the cast and overflow
+    # 37-digit keys to NULL)
     left = spark.createDataFrame(
         [(1, 10, 100)], "id long, user long, ts long"
     ).select("id", F.col("user").cast("decimal(20,0)").alias("user"), "ts")
@@ -852,20 +843,17 @@ def test_asof_windowed_dtype_normalization_edges(spark):
     wide_r = spark.createDataFrame(
         [(10, 90)], "user long, ots long"
     ).select(F.col("user").cast("decimal(10,2)").alias("user"), "ots")
-    for op in (asof_join, asof_join_windowed):
-        with _pytest.raises(ValueError, match="38"):
-            op(wide_l, wide_r, left_on="ts", right_on="ots",
-               left_by="user", right_by="user", right_values=["ots"])
+    with _pytest.raises(ValueError, match="38"):
+        asof_join(wide_l, wide_r, left_on="ts", right_on="ots",
+                  left_by="user", right_by="user", right_values=["ots"],
+                  how="left")
 
     # (h) bool true vs string 'True' never match; NULL by-keys follow
-    # SQL semantics (windowed is LEFT: NULL payload, never a match)
+    # SQL semantics (LEFT: NULL payload, never a match)
     left = spark.createDataFrame([(1, True, 100)],
                                  "id long, user boolean, ts long")
     right = spark.createDataFrame([("True", 90)], "user string, ots long")
-    out = asof_join_windowed(left, right, left_on="ts", right_on="ots",
-                             left_by="user", right_by="user",
-                             right_values=["ots"]).collect()
-    assert [(r["id"], r["ots"]) for r in out] == [(1, None)]
+    assert run(left, right) == {1: None}
     left = spark.createDataFrame(
         [(1, 10, 100), (2, None, 100)], "id long, user long, ts long")
     right = spark.createDataFrame(
@@ -874,72 +862,49 @@ def test_asof_windowed_dtype_normalization_edges(spark):
 
 
 def test_asof_join_row_unity_ties_and_null_on_keys(spark):
-    """The r10 review triple, pinned on BOTH as-of routes:
+    """Row unity, ties and NULL on-keys, pinned for both ``how`` modes:
 
     (1) ROW UNITY — a latest-match right row carrying a genuine NULL
     payload field must be returned AS A UNIT, not mixed with the
-    previous match's value for that field (the windowed route's old
-    per-column last(ignorenulls) resurrected 'A' from the stale row —
-    reproduced before the struct fix);
+    previous match's value for that field (a per-column
+    last(ignorenulls) would resurrect 'A' from the stale row);
     (2) TIE DETERMINISM — right rows tied on the timestamp resolve by
-    the greatest right_values tuple on both routes, INDEPENDENT of
-    Arrow batch arrival order (pinned under an adversarial
-    sortWithinPartitions that flipped the cogroup's answer before the
-    tie sort), including array payloads via the tuple-key fallback;
+    the greatest right_values tuple, INDEPENDENT of input order
+    (pinned under an adversarial sortWithinPartitions), including
+    array payloads under Spark's array ordering;
     (3) NULL ON-KEYS — a NULL timestamp satisfies no inequality: null-
     on right rows match nobody, null-on left rows keep NULL payload
-    for how='left' and drop for inner (before r10 they CRASHED the
-    cogroup — pd.merge_asof rejects null merge keys)."""
-    from mapreduce_implementation_spark.operators.joins import (
-        asof_join, asof_join_windowed,
-    )
+    for how='left' and drop for inner."""
+    from mapreduce_implementation_spark.operators.joins import asof_join
 
     left = spark.createDataFrame([(1, 5, 100)], "id long, user long, ts long")
 
-    # (1) row unity
-    right = spark.createDataFrame(
-        [(5, 80, "A", 5), (5, 90, None, 7)],
-        "user long, ots long, tag string, x long")
-    for out in (
-        asof_join_windowed(left, right, left_on="ts", right_on="ots",
-                           left_by="user", right_by="user",
-                           right_values=["ots", "tag", "x"]),
-        asof_join(left, right, left_on="ts", right_on="ots",
-                  left_by="user", right_by="user",
-                  right_values=["ots", "tag", "x"], how="left"),
-    ):
-        assert [(r["ots"], r["tag"], r["x"]) for r in out.collect()] \
+    def run(right, right_values, how):
+        return asof_join(left, right, left_on="ts", right_on="ots",
+                         left_by="user", right_by="user",
+                         right_values=right_values, how=how).collect()
+
+    for how in ("inner", "left"):
+        # (1) row unity
+        right = spark.createDataFrame(
+            [(5, 80, "A", 5), (5, 90, None, 7)],
+            "user long, ots long, tag string, x long")
+        assert [(r["ots"], r["tag"], r["x"])
+                for r in run(right, ["ots", "tag", "x"], how)] \
             == [(90, None, 7)]
 
-    # (2) tie determinism under adversarial batch order
-    right = (spark.createDataFrame(
-        [(5, 90, "A"), (5, 90, "B"), (5, 90, "C")],
-        "user long, ots long, tag string")
-        .repartition(1).sortWithinPartitions(F.desc("tag")))
-    for out in (
-        asof_join_windowed(left, right, left_on="ts", right_on="ots",
-                           left_by="user", right_by="user",
-                           right_values=["ots", "tag"]),
-        asof_join(left, right, left_on="ts", right_on="ots",
-                  left_by="user", right_by="user",
-                  right_values=["ots", "tag"], how="left", num_buckets=1),
-    ):
-        assert [r["tag"] for r in out.collect()] == ["C"]
-    # array payload: pandas can't compare ndarrays vectorized — the
-    # tuple-key fallback must yield Spark's array ordering
-    right = (spark.createDataFrame(
-        [(5, 90, [1.0, 2.0]), (5, 90, [3.0, 1.0])],
-        "user long, ots long, emb array<double>")
-        .repartition(1).sortWithinPartitions(F.desc(F.col("emb")[0])))
-    for out in (
-        asof_join_windowed(left, right, left_on="ts", right_on="ots",
-                           left_by="user", right_by="user",
-                           right_values=["ots", "emb"]),
-        asof_join(left, right, left_on="ts", right_on="ots",
-                  left_by="user", right_by="user",
-                  right_values=["ots", "emb"], how="left", num_buckets=1),
-    ):
-        assert [list(r["emb"]) for r in out.collect()] == [[3.0, 1.0]]
+        # (2) tie determinism under adversarial input order
+        right = (spark.createDataFrame(
+            [(5, 90, "A"), (5, 90, "B"), (5, 90, "C")],
+            "user long, ots long, tag string")
+            .repartition(1).sortWithinPartitions(F.desc("tag")))
+        assert [r["tag"] for r in run(right, ["ots", "tag"], how)] == ["C"]
+        right = (spark.createDataFrame(
+            [(5, 90, [1.0, 2.0]), (5, 90, [3.0, 1.0])],
+            "user long, ots long, emb array<double>")
+            .repartition(1).sortWithinPartitions(F.desc(F.col("emb")[0])))
+        assert [list(r["emb"]) for r in run(right, ["ots", "emb"], how)] \
+            == [[3.0, 1.0]]
 
     # (3) NULL on-keys
     left = spark.createDataFrame(
@@ -948,18 +913,15 @@ def test_asof_join_row_unity_ties_and_null_on_keys(spark):
         [(5, 90), (5, None)], "user long, ots long")
     args = dict(left_on="ts", right_on="ots", left_by="user",
                 right_by="user", right_values=["ots"])
-    got_w = sorted((r["id"], r["ots"]) for r in
-                   asof_join_windowed(left, right, **args).collect())
     got_l = sorted((r["id"], r["ots"]) for r in
                    asof_join(left, right, how="left", **args).collect())
     got_i = sorted((r["id"], r["ots"]) for r in
                    asof_join(left, right, how="inner", **args).collect())
-    assert got_w == [(1, 90), (2, None)]
     assert got_l == [(1, 90), (2, None)]
     assert got_i == [(1, 90)]
 
 
-# --- windowed as-of == pandas-cogroup as-of ---------------------------------
+# --- as-of join == DuckDB ASOF JOIN and a Python model -----------------------
 
 @settings(max_examples=12, deadline=None)
 @given(st.lists(st.tuples(st.one_of(st.none(),                        # user
@@ -972,111 +934,126 @@ def test_asof_join_row_unity_ties_and_null_on_keys(spark):
                           st.one_of(st.none(),                        # payload
                                     st.integers(min_value=0, max_value=5))),
                 min_size=0, max_size=25),
-       st.booleans(),
-       st.sampled_from([1, 64]))
-def test_asof_windowed_matches_pandas_cogroup(spark, levts, rords,
-                                              with_tol, num_buckets):
-    """The two as-of routes implement ONE contract (r10 VERDICT item 3
-    — the r9 NULL-semantics drift between them is exactly what this
-    pins): asof_join_windowed (declarative union + keyed-window last)
-    == asof_join (pd.merge_asof cogroup, how='left') on arbitrary
-    interleavings INCLUDING NULL by-keys on both sides (match nothing;
-    left rows keep NULL payload), a NULLABLE payload column riding
-    right_values (the r10 Frankenstein class: a genuine NULL payload
-    field must not resurrect the previous match's value), TIED right
-    timestamps (the 0-40s offset range makes ties common; both routes
-    must pick the same greatest-(ots,val) row), equal left/right
+       st.booleans())
+def test_asof_join_matches_duckdb_asof(spark, levts, rords, with_tol):
+    """asof_join, inner and left, on arbitrary interleavings INCLUDING
+    NULL by-keys on both sides (match nothing; left rows keep NULL
+    payload), a NULLABLE payload column riding right_values (a genuine
+    NULL payload field must not resurrect the previous match's value),
+    TIED right timestamps (the 0-40s offset range makes ties common;
+    the greatest (ots, val) row wins, NULLS FIRST), equal left/right
     timestamps (backward-inclusive), duplicate rows, users with no
-    right rows, tolerance ON (10-second budget) and OFF, and both
-    num_buckets 1 (everything co-batched) and 64.  A third leg checks
-    the timestamp surface against DuckDB's NATIVE ASOF LEFT JOIN — a
-    fully independent engine — so the contract is pinned externally,
-    not just internally consistent."""
-    from mapreduce_implementation_spark.operators.joins import (
-        asof_join, asof_join_windowed,
-    )
+    right rows, and a 10-second tolerance ON and OFF.  Two independent
+    references: DuckDB's native ASOF JOIN / ASOF LEFT JOIN on the
+    timestamp surface, and a pure-Python model of the whole contract
+    (payload and tie rule included)."""
+    from datetime import timedelta
+
+    import duckdb
+    import pandas as pd
+
+    from mapreduce_implementation_spark.operators.joins import asof_join
 
     base = "2024-01-01 00:00:00"
     left = spark.createDataFrame(
         [(i, u, s) for i, (u, s) in enumerate(levts)],
         "id long, user long, off long",
     ).select("id", "user", F.expr(f"timestamp'{base}' + make_interval(0,0,0,0,0,0,off)").alias("ts"))
+    rr = rords or [(99, 0, None)]
     right = spark.createDataFrame(
-        [(u, s, v) for (u, s, v) in rords] or [(99, 0, None)],
+        [(u, s, v) for (u, s, v) in rr],
         "user long, off long, val long",
     ).select("user", "val", F.expr(f"timestamp'{base}' + make_interval(0,0,0,0,0,0,off)").alias("ots"))
 
-    win = asof_join_windowed(
-        left, right, left_on="ts", right_on="ots",
-        left_by="user", right_by="user", right_values=["ots", "val"],
-        tolerance_expr="INTERVAL 10 SECONDS" if with_tol else None)
-    pdc = asof_join(
-        left, right, left_on="ts", right_on="ots",
-        left_by="user", right_by="user", right_values=["ots", "val"],
-        tolerance="10s" if with_tol else None, how="left",
-        num_buckets=num_buckets)
-    a = sorted((r["id"], str(r["ots"]), r["val"]) for r in win.collect())
-    b = sorted((r["id"], str(r["ots"]), r["val"]) for r in pdc.collect())
-    assert a == b
+    # Python model: per left row, the greatest (ots, val) right row of
+    # the same non-NULL user at or before ts (NULL val sorts first)
+    def model(how):
+        out = []
+        for i, (u, t) in enumerate(levts):
+            cands = [(o, v) for ru, o, v in rr
+                     if u is not None and ru == u and o <= t]
+            m = max(cands, key=lambda c: (c[0], c[1] is not None, c[1] or 0),
+                    default=None)
+            if m is not None and with_tol and t - m[0] > 10:
+                m = None
+            if m is not None:
+                out.append((i, m[0], m[1]))
+            elif how == "left":
+                out.append((i, None, None))
+        return sorted(out, key=repr)
 
-    # third, fully independent implementation: DuckDB's native ASOF
-    # LEFT JOIN over the same frames (timestamp surface only — tied
-    # timestamps carry engine-chosen payloads, and generated on-keys
-    # are never NULL, where DuckDB's NULLS-LAST ordering would diverge
-    # from this repo's SQL-predicate NULL rule by design)
-    import duckdb
-    import pandas as pd
-
-    base_ts = pd.Timestamp("2024-01-01 00:00:00")
+    base_ts = pd.Timestamp(base)
     lpdf = pd.DataFrame({
         "id": range(len(levts)),
         "user": pd.array([u for u, _ in levts], dtype="Int64"),
         "ts": [base_ts + pd.Timedelta(seconds=s) for _, s in levts]})
-    rr = rords or [(99, 0, None)]
     rpdf = pd.DataFrame({
         "user": pd.array([u for u, _, _ in rr], dtype="Int64"),
         "ots": [base_ts + pd.Timedelta(seconds=s) for _, s, _ in rr]})
-    sel = ("CASE WHEN r.ots IS NOT NULL AND l.ts - r.ots <= "
-           "INTERVAL 10 SECOND THEN r.ots END" if with_tol else "r.ots")
     con = duckdb.connect()
-    duck = sorted(
-        (int(i), str(pd.Timestamp(o)) if o is not None else "None")
-        for i, o in con.execute(
-            f"SELECT l.id, {sel} AS ots FROM lpdf l ASOF LEFT JOIN rpdf r "
-            "ON l.user = r.user AND r.ots <= l.ts").fetchall())
-    con.close()
-    assert sorted((r["id"], str(r["ots"])) for r in win.collect()) == duck
+    try:
+        for how, duck_join in (("inner", "ASOF JOIN"),
+                               ("left", "ASOF LEFT JOIN")):
+            got = asof_join(
+                left, right, left_on="ts", right_on="ots",
+                left_by="user", right_by="user", right_values=["ots", "val"],
+                tolerance=timedelta(seconds=10) if with_tol else None,
+                how=how).collect()
+            secs = [(r["id"],
+                     None if r["ots"] is None
+                     else int((pd.Timestamp(r["ots"]) - base_ts).total_seconds()),
+                     r["val"]) for r in got]
+            assert sorted(secs, key=repr) == model(how), how
+
+            # DuckDB: timestamp surface only — tied timestamps carry
+            # engine-chosen payloads, and generated on-keys are never
+            # NULL, where DuckDB's NULLS-LAST ordering would diverge from
+            # this repo's SQL-predicate NULL rule by design.  Tolerance
+            # is applied to DuckDB's unconditional match, equivalent
+            # because any other candidate is older still.
+            ok = "l.ts - r.ots <= INTERVAL 10 SECOND"
+            if how == "inner":
+                sel, where = "r.ots", (f"WHERE {ok}" if with_tol else "")
+            else:
+                sel = (f"CASE WHEN r.ots IS NOT NULL AND {ok} THEN r.ots END"
+                       if with_tol else "r.ots")
+                where = ""
+            duck = sorted(
+                (int(i), str(pd.Timestamp(o)) if o is not None else "None")
+                for i, o in con.execute(
+                    f"SELECT l.id, {sel} AS ots FROM lpdf l {duck_join} "
+                    f"rpdf r ON l.user = r.user AND r.ots <= l.ts {where}"
+                ).fetchall())
+            assert sorted((r["id"], str(r["ots"])) for r in got) == duck, how
+    finally:
+        con.close()
 
 
 def test_asof_windowed_null_left_rows_bypass_window(spark):
-    """r10 VERDICT item 2: a left corpus that is 90% NULL-keyed must
-    NOT funnel those rows into one window partition (every NULL by-key
-    hashes to the same partition — a single hot task at scale).  The
-    r11 fix routes null-keyed left rows AROUND the shuffle+window via
-    the cogroup route's filter-and-pad idiom, so the skew guarantee is
+    """A left corpus that is 90% NULL-keyed must NOT funnel those rows
+    into one window partition (every NULL by-key hashes to the same
+    partition — a single hot task at scale).  Null-keyed left rows are
+    routed AROUND the shuffle+window, so the skew guarantee is
     structural: the optimized plan shows the null rows filtered out
-    BELOW the window leg (they can never reach the exchange) and
-    re-attached by a second, exchange-free Union leg.  Semantics are
-    unchanged: null-keyed rows keep NULL payload, non-null rows match
-    as before."""
-    from mapreduce_implementation_spark.operators.joins import (
-        asof_join_windowed,
-    )
+    BELOW the window leg (they can never reach the exchange) and, for
+    how='left', re-attached by a second, exchange-free Union leg with
+    NULL payload; how='inner' has no such leg at all."""
+    from mapreduce_implementation_spark.operators.joins import asof_join
 
     rows = [(i, 5 if i % 10 == 0 else None, 100 + i) for i in range(1000)]
     left = spark.createDataFrame(rows, "id long, user long, ts long")
     right = spark.createDataFrame([(5, 90, 7)],
                                   "user long, ots long, val long")
-    out = asof_join_windowed(left, right, left_on="ts", right_on="ots",
-                             left_by="user", right_by="user",
-                             right_values=["ots", "val"])
+    args = dict(left_on="ts", right_on="ots", left_by="user",
+                right_by="user", right_values=["ots", "val"])
+    out = asof_join(left, right, how="left", **args)
     got = {(r["id"], r["val"]) for r in out.collect()}
     assert len(got) == 1000
     assert all(v == (7 if i % 10 == 0 else None) for i, v in got)
 
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     # two Unions: the operator's internal left/right tag union feeding
-    # the Window, plus the NEW outer pad union (pre-fix plans had one)
+    # the Window, plus the outer pad union
     assert plan.count("Union") == 2, plan
     # the window leg's left input filters null keys out BEFORE any
     # exchange; the pad leg keeps exactly the complement
@@ -1085,21 +1062,22 @@ def test_asof_windowed_null_left_rows_bypass_window(spark):
     # still exactly one Window
     assert plan.count("Window") == 1, plan
 
+    inner = asof_join(left, right, how="inner", **args)
+    assert {(r["id"], r["val"]) for r in inner.collect()} \
+        == {(i, 7) for i in range(0, 1000, 10)}
+    plan = inner._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Union") == 1, plan
+    assert plan.count("Window") == 1, plan
+
 
 def test_asof_nan_payload_tie_order_matches(spark):
-    """r10 ADVICE: right rows TIED on the timestamp with a float
-    payload containing NaN must resolve the same on both routes.  The
-    cogroup route's pandas sort treats NaN as NA (sorts smallest);
-    Spark's raw struct ordering sorts NaN GREATER than any value, so
-    pre-fix the windowed route picked the NaN row among ties while the
-    cogroup route picked the non-NaN row.  r11 normalizes the windowed
-    ORDER key with nanvl (NaN -> NULL, smallest) — both routes now
-    pick the greatest-by-(payload-with-NaN-as-NA) row.  (NULL-vs-NaN
-    ties remain out of contract — Arrow conflates them in float
-    columns — so the fixture uses a NaN/non-NaN pair, not NULL.)"""
-    from mapreduce_implementation_spark.operators.joins import (
-        asof_join, asof_join_windowed,
-    )
+    """Right rows TIED on the timestamp with a float payload containing
+    NaN follow the tie rule with NaN ranked as NULL (smallest): the
+    non-NaN row is the greatest tuple and wins.  Spark's raw struct
+    ordering sorts NaN GREATER than any value, so without the nanvl on
+    the window's order key the NaN row would win.  The returned
+    payload keeps its own value."""
+    from mapreduce_implementation_spark.operators.joins import asof_join
 
     left = spark.createDataFrame([(1, 5, 100)], "id long, user long, ts long")
     right = spark.createDataFrame(
@@ -1107,45 +1085,30 @@ def test_asof_nan_payload_tie_order_matches(spark):
         "user long, ots long, price double, rid string")
     args = dict(left_on="ts", right_on="ots", left_by="user",
                 right_by="user", right_values=["ots", "price", "rid"])
-    got_w = asof_join_windowed(left, right, **args).collect()
-    got_c = asof_join(left, right, how="left", **args).collect()
-    # pandas sort key (ots, price, rid) with NaN-as-NA-first: num_row
-    # is the greatest tuple -> backward picks it; windowed must agree
-    assert [r["rid"] for r in got_w] == ["num_row"]
-    assert [r["rid"] for r in got_c] == ["num_row"]
-    assert got_w[0]["price"] == 2.0 and got_c[0]["price"] == 2.0
+    for how in ("inner", "left"):
+        got = asof_join(left, right, how=how, **args).collect()
+        assert [(r["rid"], r["price"]) for r in got] == [("num_row", 2.0)]
 
 
 def test_two_phase_window_operators_accept_colliding_out_names(spark):
-    """r10 ADVICE: global_ntile / global_running_sum /
-    grouped_running_sum / grouped_ntile derived their temp prefix from
-    df.columns only — an ``out`` like '_gt_bkt' collided with the
-    internal bucket column, so withColumn(out, ...) REPLACED it and
-    the trailing drop() deleted the caller's output.  The fresh-name
-    set now folds ``out`` in (the exact_quantiles guard, generalized
-    via _fresh_name(extra=)); each call below picks the exact out-name
+    """r10 ADVICE: grouped_running_sum / grouped_ntile derived their
+    temp prefix from df.columns only — an ``out`` like '_gn_bkt'
+    collided with the internal bucket column, so withColumn(out, ...)
+    REPLACED it and the trailing drop() deleted the caller's output.
+    The fresh-name set now folds ``out`` in (via
+    _fresh_name(extra=)); each call below picks the exact out-name
     that used to collide and asserts the output survives with correct
     values."""
     from mapreduce_implementation_spark.operators.windows import (
-        global_ntile, global_running_sum, grouped_ntile,
-        grouped_running_sum,
+        grouped_ntile, grouped_running_sum,
     )
 
     df = spark.createDataFrame(
         [("a", i, i % 3) for i in range(12)], "g string, k long, v long")
-
-    out = global_ntile(df, ["k"], 4, out="_gt_bkt")
-    assert "_gt_bkt" in out.columns
-    assert sorted((r["k"], r["_gt_bkt"]) for r in out.collect()) == [
-        (i, i // 3 + 1) for i in range(12)]
-
-    out = global_running_sum(df, "v", ["k"], out="_gs_bkt")
-    assert "_gs_bkt" in out.columns
     exp, acc = [], 0
     for i in range(12):
         acc += i % 3
         exp.append((i, acc))
-    assert sorted((r["k"], r["_gs_bkt"]) for r in out.collect()) == exp
 
     out = grouped_running_sum(df, "v", ["g"], ["k"], out="_gr_bkt")
     assert "_gr_bkt" in out.columns
@@ -1236,14 +1199,14 @@ def test_join_and_skew_operators_do_not_clobber_caller_temp_names(spark):
     assert all(r["_bloom"] == "keepb" for r in kept)
 
     # windows family: '_rn' / '_bkt' / '_offset' caller columns survive
-    # top_k_per_group and the two-phase global operators with exact
+    # top_k_per_group and the two-phase operators with exact
     # results (the two-phase math is checked elsewhere; this pins
     # pass-through)
     from mapreduce_implementation_spark.operators.caching import (
         release_persisted,
     )
     from mapreduce_implementation_spark.operators.windows import (
-        global_ntile, global_running_sum, top_k_per_group,
+        grouped_ntile, grouped_running_sum, top_k_per_group,
     )
 
     wdf = spark.createDataFrame(
@@ -1253,12 +1216,12 @@ def test_join_and_skew_operators_do_not_clobber_caller_temp_names(spark):
         top = top_k_per_group(wdf, ["g"], [F.desc("v")], 1).collect()
         assert {(r["g"], r["_rn"], r["_bkt"]) for r in top} \
             == {(1, "b", 6), (2, "c", 7)}
-        cum = global_running_sum(wdf, "v", ["v"], out="cum",
-                                 partitions=3).collect()
+        with shuffle_partitions(spark, 3):
+            cum = grouped_running_sum(wdf, "v", [], ["v"],
+                                      out="cum").collect()
+            tiles = grouped_ntile(wdf, [], ["v"], 3, out="tile").collect()
         assert {(r["v"], r["cum"], r["_offset"]) for r in cum} \
             == {(10, 10, 100), (20, 30, 200), (30, 60, 300)}
-        tiles = global_ntile(wdf, ["v"], 3, out="tile",
-                             partitions=3).collect()
         assert {(r["v"], r["tile"], r["_rn"]) for r in tiles} \
             == {(10, 1, "a"), (20, 2, "b"), (30, 3, "c")}
     finally:
@@ -1394,14 +1357,15 @@ def test_bloom_prefilter_rejects_incompatible_key_types(spark):
        st.integers(min_value=1, max_value=10))
 def test_systematic_pps_matches_python_model(spark, weights, k):
     """The integer systematic-PPS selection rule (w_cum DIV step crosses)
-    computed distributed (global_running_sum two-phase) equals the
+    computed distributed (grouped_running_sum two-phase, no group
+    columns) equals the
     sequential Python model; zero-weight rows are never selected and
     every selected index is distinct."""
     from mapreduce_implementation_spark.operators.caching import (
         release_persisted,
     )
     from mapreduce_implementation_spark.operators.windows import (
-        global_running_sum,
+        grouped_running_sum,
     )
 
     total = sum(weights)
@@ -1416,9 +1380,10 @@ def test_systematic_pps_matches_python_model(spark, weights, k):
             want.add(i)
     df = spark.createDataFrame(list(enumerate(weights)), "i bigint, w bigint")
     try:
-        c = global_running_sum(df, "w", ["i"], out="wc", partitions=4)
-        got = {r["i"] for r in c.where(
-            F.expr(f"wc DIV {step} > (wc - w) DIV {step}")).collect()}
+        with shuffle_partitions(spark, 4):
+            c = grouped_running_sum(df, "w", [], ["i"], out="wc")
+            got = {r["i"] for r in c.where(
+                F.expr(f"wc DIV {step} > (wc - w) DIV {step}")).collect()}
         assert got == want
         assert all(weights[i] > 0 for i in got)
     finally:
@@ -1453,9 +1418,10 @@ def test_global_order_stats_matches_builtin_windows(spark, ks):
                 F.percent_rank().over(w).alias("p"),
                 F.cume_dist().over(w).alias("c")).collect()}
     try:
-        got = {r["i"]: (r["rnk"], r["drnk"], round(r["pct_rank"], 9),
-                        round(r["cume_dist"], 9))
-               for r in global_order_stats(df, ["k"], partitions=4).collect()}
+        with shuffle_partitions(spark, 4):
+            got = {r["i"]: (r["rnk"], r["drnk"], round(r["pct_rank"], 9),
+                            round(r["cume_dist"], 9))
+                   for r in global_order_stats(df, ["k"]).collect()}
         assert got == want
     finally:
         release_persisted()

@@ -138,7 +138,6 @@ _REPRESENTATIVES = [
     "dedup_bloom_frontier_rolling",  # per-window bitmaps over zero days
     "split_leakage_audit",           # leakage over zero pairs/docs
     "pipeline_shard_assignment",     # 16 shards of nothing
-    "text_bpe_train_merges_batched", # batched trainer over empty vocab
     "sketch_hll_rolling_window",     # sketch unions over zero days
     "dedup_chunks_content_defined",  # CDC chunking of zero docs
     # round-14 families
@@ -421,3 +420,37 @@ def test_text_operators_start_no_job_while_building(spark):
             assert not started, (name, sorted(started))
     finally:
         release_persisted()
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_read_int_lines_rejects_non_integer_tokens(spark, tmp_path, ansi):
+    """The sort job's integer source answers one way under either
+    ``spark.sql.ansi.enabled``: base-10 64-bit integers parse (signs,
+    leading zeros and a CRLF's trailing CR included), and any other
+    token fails the job with an error naming it — never a silent drop
+    (non-ANSI cast) or a bare CAST_INVALID_INPUT (ANSI cast)."""
+    from pyspark.errors import PySparkException
+
+    from mapreduce_implementation_spark.sources.tables import read_int_lines
+
+    good = tmp_path / "good"
+    good.mkdir()
+    (good / "part.txt").write_text(
+        "5 -2 +3\r\n 07  9223372036854775807\n\n-9223372036854775808\n")
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, ansi)
+    try:
+        got = read_int_lines(spark, str(good)).collect()
+        assert sorted(r["n"] for r in got) \
+            == [-9223372036854775808, -2, 3, 5, 7, 9223372036854775807]
+        for i, bad in enumerate(["abc", "12abc", "1e3", "1.5",
+                                 "99999999999999999999"]):
+            d = tmp_path / f"bad{i}"
+            d.mkdir()
+            (d / "part.txt").write_text(f"1 2\n3 {bad} 4\n")
+            with pytest.raises(PySparkException,
+                               match=f"not a base-10 64-bit integer: '{bad}'"):
+                read_int_lines(spark, str(d)).collect()
+    finally:
+        spark.conf.set(key, prev)

@@ -1446,7 +1446,7 @@ def test_events_top_paths_matches_python(spark):
 
 
 def test_bpe_training_matches_python_trainer(spark):
-    """text_bpe_train_merges' 6-round declarative induction vs the
+    """text_bpe_train_merges' 6-round induction vs the
     textbook Sennrich trainer in pure Python (word-frequency dict,
     sequential argmax with (count desc, pair asc) tie order) over the
     raw parquet text — the oracle twin runs the SAME unrolled SQL, so
