@@ -1,3 +1,3 @@
-from .textfn import normalize_line, normalize_token, tokens_array
+from .textfn import normalize_line, tokens, tokens_array
 
-__all__ = ["normalize_line", "normalize_token", "tokens_array"]
+__all__ = ["normalize_line", "tokens", "tokens_array"]

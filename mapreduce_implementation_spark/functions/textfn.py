@@ -8,6 +8,12 @@ Contract from the reference mapper (``do_map``, mapreduce.c:115-132):
   (``Don't`` -> ``dont``, ``well-known`` -> ``wellknown``);
 * drop tokens that end up empty (``1865`` -> dropped).
 
+This module is the contract's only home: ``normalize_line`` is the
+line-level normalization, ``tokens`` the per-line token array and
+``tokens_array`` the raw split that keeps empties (for callers that
+need token positions).  The row-per-token form is
+``operators.text.tokenize``.
+
 Everything is a Catalyst expression so it stays inside whole-stage
 codegen — mandatory for the 100 TB hot path (a per-row Python UDF here
 would dominate the job).
@@ -28,16 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["normalize_token", "normalize_line", "tokens_array"]
-
-
-def normalize_token(tok: Column) -> Column:
-    """``[A-Za-z]``-keep + lowercase of one raw token (mapreduce.c:118-124).
-
-    Only for already-split token columns; in explode pipelines prefer
-    ``tokens_array`` on the raw line (see module performance note).
-    """
-    return F.lower(F.regexp_replace(tok, "[^A-Za-z]", ""))
+__all__ = ["normalize_line", "tokens_array", "tokens"]
 
 
 def normalize_line(line: Column) -> Column:
@@ -53,3 +50,9 @@ def tokens_array(line: Column) -> Column:
     """Array of normalized tokens for one line; may contain empty strings
     (filter ``!= ''`` after exploding, matching mapreduce.c:126)."""
     return F.split(normalize_line(line), " ")
+
+
+def tokens(line: Column) -> Column:
+    """The line's tokens with empty ones dropped (mapreduce.c:126), as an
+    array: the reference contract in one in-row expression."""
+    return F.filter(tokens_array(line), lambda t: t != "")

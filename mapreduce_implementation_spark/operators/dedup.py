@@ -27,16 +27,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.textfn import tokens_array
+from ..functions.textfn import normalize_line, tokens
 from ..sql import sql_ident
 from .caching import tracked_persist
+from .text import tokenize
 
 __all__ = [
     "exact_dedup_representatives", "char_shingles", "word_ngrams",
     "ngram_jaccard_pairs_prefix", "tfidf_cosine_pairs",
     "minhash_signatures", "lsh_candidate_pairs", "minhash_dedup_pairs",
-    "simhash", "simhash_near_dup_pairs", "ngram_jaccard_pairs",
-    "ngram_containment_pairs",
+    "simhash", "simhash_near_dup_pairs", "overlap_pairs",
+    "ngram_jaccard_pairs", "ngram_containment_pairs",
     "embedding_near_dup_pairs", "embedding_near_dup_pairs_lsh",
     "sign_lsh_params",
     "cluster_representatives", "near_dup_filter_against",
@@ -71,7 +72,7 @@ def char_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 9,
     exchange).  Jaccard/size consumers need set semantics — keep the
     default there.
     """
-    norm = F.lower(F.regexp_replace(F.col(text_col), "[^A-Za-z ]", ""))
+    norm = normalize_line(F.col(text_col))
     out = (
         df.select(F.col(id_col), norm.alias("_t"))
         .filter(F.length("_t") >= k)
@@ -89,27 +90,18 @@ def word_ngrams(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFr
     """(id, gram_idx, ngram) — word n-grams built per-row from the
     normalized, empty-filtered token array: slide an n-window via
     transform + slice, then posexplode.  ZERO shuffle — gram generation
-    is a pure map inside whole-stage codegen.  (The previous
-    lead()-window formulation shuffled the entire token stream on the id
-    before emitting a single gram — a full-corpus Exchange that dominates
-    at 100 TB.  The n-gram *strings* are identical: leads over the
-    filtered stream == sliding window over the filtered array.)
+    is a pure map inside whole-stage codegen; a lead()-window over the
+    token stream would shuffle the whole stream on the id first.  The
+    n-gram strings equal the leads over the filtered stream.
 
     ``gram_idx`` (0-based) is the gram's index in the EMPTY-FILTERED
-    token stream.  Renamed from the pre-r3 ``pos``, whose documented
-    contract was the position in the pre-filter stream — the rename makes
-    the semantic change visible to oracle authors instead of silently
-    shifting values under the old name.  Regex normalization stays
-    upstream of the explode (textfn note)."""
+    token stream, not the position in the raw split.  Regex
+    normalization stays upstream of the explode (textfn note)."""
     # Materialize the normalized+filtered token array ONCE per row in its
     # own projection: the expression embeds the regex normalization, and
     # referencing it repeatedly inline (size x2, slice per gram) would
     # re-run that regex per use.
-    toks = df.select(
-        F.col(id_col),
-        F.filter(tokens_array(F.col(text_col)),
-                 lambda t: t != F.lit("")).alias("_toks"),
-    )
+    toks = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
     arr = F.col("_toks")
     starts = F.when(
         F.size(arr) >= n, F.sequence(F.lit(1), F.size(arr) - (n - 1))
@@ -256,22 +248,17 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFr
     """(id, simhash) — 64-bit SimHash over the token stream: per bit, the
     sign of sum(+1/-1) across token hashes."""
     sql_ident(id_col)
-    toks = (
-        df.select(id_col, F.explode(tokens_array(F.col(text_col))).alias("tok"))
-        .filter(F.col("tok") != "")
-        .withColumn("_h", F.xxhash64("tok"))
-    )
+    toks = tokenize(df, text_col, keep=[id_col]).withColumn("_h", F.xxhash64("word"))
     # Both 64-term expression trees are emitted as ONE parsed SQL string
-    # each (r14 opt, the minhash_signatures discipline): the Column-
-    # object forms cost ~600 py4j round-trips of plan-build per
-    # construction; the parsed trees — and every signature bit — are
-    # identical.
+    # each (the minhash_signatures discipline): the Column-object forms
+    # cost ~600 py4j round-trips of plan-build per construction; the
+    # parsed trees — and every signature bit — are identical.
     sums = "array(" + ", ".join(
         f"sum(CASE WHEN ((shiftright(_h, {i}) & 1) = 1) THEN 1 ELSE -1 END)"
         for i in range(bits)) + ")"
     summed = toks.groupBy(id_col).agg(F.expr(sums).alias("_sarr"))
     # the sign/packing chain reads the sum array directly — no 64-column
-    # intermediate schema anywhere (the r14 codegen-width discipline)
+    # intermediate schema anywhere (wide schemas stall codegen)
     sh = " | ".join(
         f"shiftleft(CASE WHEN _sarr[{i}] > 0 THEN CAST(1 AS BIGINT) "
         f"ELSE CAST(0 AS BIGINT) END, {i})"
@@ -307,32 +294,47 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
     )
 
 
+def overlap_pairs(postings: DataFrame, id_col: str, key_col: str,
+                  weight: Column) -> DataFrame:
+    """(a, b, dot, sa, sb) — the EXACT inverted-index overlap self-join
+    behind every set and count-vector similarity join here: ``postings``
+    holds one (id, key) row per posting with weight ``weight``.  ``dot``
+    = Σ wₐ·w_b over the keys a and b share (a < b; pairs sharing no key
+    are absent), ``sa``/``sb`` = Σ w² per id.  Sets pass ``F.lit(1)``,
+    which makes ``dot`` = |A∩B| and ``s`` = |A|.
+
+    One postings equi-join on the key with a partial-aggregated dot,
+    then the per-id sums joined back: candidates and verification in
+    one dataflow (ClusterJoin).  ``postings`` is read by the sums and
+    both join sides; callers persist it when it costs a corpus scan.
+    """
+    p = postings.select(F.col(id_col).alias("_id"), F.col(key_col).alias("_k"),
+                        weight.alias("_w"))
+    sums = p.groupBy("_id").agg(F.sum(F.col("_w") * F.col("_w")).alias("_s"))
+    a = p.select(F.col("_id").alias("a"), "_k", F.col("_w").alias("_wa"))
+    b = p.select(F.col("_id").alias("b"), "_k", F.col("_w").alias("_wb"))
+    dots = (a.join(b, "_k").filter(F.col("a") < F.col("b"))
+            .groupBy("a", "b").agg(F.sum(F.col("_wa") * F.col("_wb")).alias("dot")))
+    sa = sums.select(F.col("_id").alias("a"), F.col("_s").alias("sa"))
+    sb = sums.select(F.col("_id").alias("b"), F.col("_s").alias("sb"))
+    return dots.join(sa, "a").join(sb, "b").select("a", "b", "dot", "sa", "sb")
+
+
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
                         n: int = 3, min_jaccard: float = 0.5) -> DataFrame:
     """(a, b, jaccard) — EXACT n-gram Jaccard similarity join: pairs from
-    shared n-grams (inverted-index join), |A∩B| by count, |A∪B| by
+    shared n-grams (``overlap_pairs``), |A∩B| by count, |A∪B| by
     inclusion-exclusion.  SQL-expressible -> full DuckDB oracle."""
     grams = tracked_persist(word_ngrams(df, id_col, text_col, n=n)
                             .select(id_col, "ngram").distinct())
-    sizes = grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a = grams.select(F.col(id_col).alias("a"), "ngram")
-    b = grams.select(F.col(id_col).alias("b"), "ngram")
-    inter = (
-        a.join(b, "ngram").filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b").agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("sz_b"))
-    jac = F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
+    ov = overlap_pairs(grams, id_col, "ngram", F.lit(1))
+    jac = F.col("dot") / (F.col("sa") + F.col("sb") - F.col("dot"))
     # Threshold on the RAW score (the oracle's WHERE also uses the raw
     # value); rounding is presentation-only — filtering on the rounded
     # column would keep scores within 5e-7 below the cut that the oracle
     # drops.
-    return (
-        inter.join(sa, "a").join(sb, "b")
-        .filter(jac >= min_jaccard)
-        .select("a", "b", F.round(jac, 6).alias("jaccard"))
-    )
+    return (ov.filter(jac >= min_jaccard)
+            .select("a", "b", F.round(jac, 6).alias("jaccard")))
 
 
 def ngram_containment_pairs(df: DataFrame, id_col: str, text_col: str,
@@ -344,35 +346,23 @@ def ngram_containment_pairs(df: DataFrame, id_col: str, text_col: str,
     but containment ~1 — the "article embedded in aggregator page"
     shape every crawl corpus carries.
 
-    Same inverted-index plan as ``ngram_jaccard_pairs`` (distinct grams,
-    postings equi-join, count intersection, join back the two sizes) —
-    one extra projected column, zero extra shuffles.  At 100 TB the
-    prefix-filter analogue still exists (size-sensitive containment
-    prefixes, |A| - ceil(t*|A|) + 1 under a global gram order) and the
-    stop-gram frequency cap applies unchanged; the exact form here IS
-    the verify step of that path.
+    Same ``overlap_pairs`` plan as ``ngram_jaccard_pairs`` — one extra
+    projected column, zero extra shuffles.  At 100 TB the prefix-filter
+    analogue still exists (size-sensitive containment prefixes,
+    |A| - ceil(t*|A|) + 1 under a global gram order) and the stop-gram
+    frequency cap applies unchanged; the exact form here IS the verify
+    step of that path.
     """
     grams = tracked_persist(word_ngrams(df, id_col, text_col, n=n)
                             .select(id_col, "ngram").distinct())
-    sizes = grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a = grams.select(F.col(id_col).alias("a"), "ngram")
-    b = grams.select(F.col(id_col).alias("b"), "ngram")
-    inter = (
-        a.join(b, "ngram").filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b").agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("sz_b"))
-    cont = F.col("inter") / F.least(F.col("sz_a"), F.col("sz_b"))
-    jac = F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
+    ov = overlap_pairs(grams, id_col, "ngram", F.lit(1))
+    cont = F.col("dot") / F.least(F.col("sa"), F.col("sb"))
+    jac = F.col("dot") / (F.col("sa") + F.col("sb") - F.col("dot"))
     # threshold on the RAW score; rounding is presentation-only (same
     # discipline as ngram_jaccard_pairs)
-    return (
-        inter.join(sa, "a").join(sb, "b")
-        .filter(cont >= min_containment)
-        .select("a", "b", F.round(cont, 6).alias("containment"),
-                F.round(jac, 6).alias("jaccard"))
-    )
+    return (ov.filter(cont >= min_containment)
+            .select("a", "b", F.round(cont, 6).alias("containment"),
+                    F.round(jac, 6).alias("jaccard")))
 
 
 def embedding_near_dup_pairs(df: DataFrame, id_col: str, vec_col: str,
@@ -380,8 +370,9 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str, vec_col: str,
     """(a, b, cos) — embedding near-duplicates above a cosine threshold.
 
     Brute-force all-pairs baseline (O(n^2) dot products, JVM-side HOFs).
-    The 100 TB path replaces the crossJoin with LSH bucket candidates
-    (similarity.random_hyperplane_buckets) — same verify step.
+    The 100 TB path, ``embedding_near_dup_pairs_lsh``, replaces the
+    crossJoin with sign-LSH bucket candidates
+    (similarity.hyperplane_bucket_keys) — same verify step.
 
     Norms are computed ONCE per vector before the join (2 array folds
     per row), not per pair — the naive cosine-per-pair evaluates 3 folds
@@ -618,18 +609,15 @@ def tfidf_cosine_pairs(df: DataFrame, id_col: str, text_col: str,
     """
     from pyspark.sql import Window
 
-    toks = (
-        df.select(id_col, F.explode(tokens_array(F.col(text_col))).alias("tok"))
-        .filter(F.col("tok") != "")
-    )
-    tf = toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("tf"))
+    toks = tokenize(df, text_col, keep=[id_col])
+    tf = toks.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("tf"))
     nd = tf.select(id_col).distinct().agg(F.count(F.lit(1)).alias("n"))
-    dfq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    dfq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
     w = (
-        tf.join(F.broadcast(dfq), "tok")
+        tf.join(F.broadcast(dfq), "word")
         .crossJoin(F.broadcast(nd))
         .filter(F.col("df") < F.col("n"))
-        .select(id_col, "tok",
+        .select(id_col, "word",
                 (F.col("tf") * F.log(F.col("n") * F.lit(1.0) / F.col("df")))
                 .alias("w"))
     )
@@ -638,36 +626,36 @@ def tfidf_cosine_pairs(df: DataFrame, id_col: str, text_col: str,
     # cost -- runs once per consumer (the minhash-signature class).
     w = tracked_persist(w)
     nrm = w.groupBy(id_col).agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nn"))
-    vocab = w.select("tok").distinct().limit(_PREFIX_VOCAB_THRESHOLD + 1)
+    vocab = w.select("word").distinct().limit(_PREFIX_VOCAB_THRESHOLD + 1)
     if vocab.count() > _PREFIX_VOCAB_THRESHOLD:
         t_prune = max(min_cosine - 1e-9, 0.0)
-        win = (Window.partitionBy(id_col).orderBy(F.asc("w"), F.asc("tok"))
+        win = (Window.partitionBy(id_col).orderBy(F.asc("w"), F.asc("word"))
                .rowsBetween(Window.unboundedPreceding, 0))
         indexed = (
             w.join(nrm, id_col)
             .withColumn("_cum", F.sum(F.col("w") * F.col("w")).over(win))
             .filter(F.col("_cum")
                     >= F.lit(t_prune ** 2) * F.col("nn") * F.col("nn"))
-            .select(id_col, "tok")
+            .select(id_col, "word")
         )
-        ia = indexed.select(F.col(id_col).alias("a"), "tok")
-        fb = w.select(F.col(id_col).alias("b"), "tok")
-        cand = (ia.join(fb, "tok")
+        ia = indexed.select(F.col(id_col).alias("a"), "word")
+        fb = w.select(F.col(id_col).alias("b"), "word")
+        cand = (ia.join(fb, "word")
                 .filter(F.col("a") < F.col("b"))
                 .select("a", "b")
                 .distinct())
         # exact verify: full dot over every shared term per candidate
-        wa = w.select(F.col(id_col).alias("a"), "tok", F.col("w").alias("wa"))
-        wb = w.select(F.col(id_col).alias("b"), "tok", F.col("w").alias("wb"))
+        wa = w.select(F.col(id_col).alias("a"), "word", F.col("w").alias("wa"))
+        wb = w.select(F.col(id_col).alias("b"), "word", F.col("w").alias("wb"))
         dots = (
-            cand.join(wa, "a").join(wb, ["b", "tok"])
+            cand.join(wa, "a").join(wb, ["b", "word"])
             .groupBy("a", "b").agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
         )
     else:
-        a = w.select(F.col(id_col).alias("a"), "tok", F.col("w").alias("wa"))
-        b = w.select(F.col(id_col).alias("b"), "tok", F.col("w").alias("wb"))
+        a = w.select(F.col(id_col).alias("a"), "word", F.col("w").alias("wa"))
+        b = w.select(F.col(id_col).alias("b"), "word", F.col("w").alias("wb"))
         dots = (
-            a.join(b, "tok").filter(F.col("a") < F.col("b"))
+            a.join(b, "word").filter(F.col("a") < F.col("b"))
             .groupBy("a", "b").agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
         )
     na = nrm.select(F.col(id_col).alias("a"), F.col("nn").alias("na"))
@@ -774,7 +762,7 @@ def span_chunks(df: DataFrame, id_col: str, text_col: str,
     :func:`span_dedup_rebuild`, exposed so the plan test pins the
     SHIPPED code path (in-row array slicing — no Window, no Exchange)."""
     w = int(span_tokens)
-    arr = F.filter(tokens_array(F.col(text_col)), lambda t: t != "")
+    arr = tokens(F.col(text_col))
     n = F.size(arr)
     idxs = F.when(n > 0, F.sequence(F.lit(0), F.ceil(n / w).cast("int") - 1)
                   ).otherwise(F.array().cast("array<int>"))
@@ -888,16 +876,15 @@ def duplicate_substring_spans(df: DataFrame, id_col: str, text_col: str,
     strings collide in the same 64-bit bucket); the default keys on the
     string itself so results are exactly reproducible by the oracle.
 
-    PRECONDITION (r14 ADVICE): ``id_col`` must be unique per input row.
-    The hit recovery is a LEFT SEMI join (no de-dup of probe rows), so
-    with duplicate ids the duplicated (id, pos) windows flow into the
-    span merge and inflate span extents; the pre-r14 inner-join +
-    ``.distinct()`` formulation collapsed them instead.  Every caller
-    passes a primary-key id (doc_id), matching the operator's contract.
+    PRECONDITION: ``id_col`` must be unique per input row.  The hit
+    recovery is a LEFT SEMI join (no de-dup of probe rows), so with
+    duplicate ids the duplicated (id, pos) windows flow into the span
+    merge and inflate span extents.  Every caller passes a primary-key
+    id (doc_id), matching the operator's contract.
     """
     from pyspark.sql import Window
 
-    norm = F.lower(F.regexp_replace(F.col(text_col), "[^A-Za-z ]", ""))
+    norm = normalize_line(F.col(text_col))
     base = (df.select(F.col(id_col), norm.alias("_t"))
             .where(F.length("_t") >= width))
     wins = (
@@ -912,8 +899,7 @@ def duplicate_substring_spans(df: DataFrame, id_col: str, text_col: str,
     key = F.xxhash64("w").alias("k") if hash_key else F.col("w").alias("k")
     # persisted: the window stream feeds BOTH the dup-key aggregate and
     # the hit semi-join — without the persist the scan + explode +
-    # substring pass (the corpus-sized leg) ran twice per query (r14
-    # opt; the char_shingles-persist convention)
+    # substring pass (the corpus-sized leg) runs twice per query
     wins = tracked_persist(wins.select(id_col, "pos", key))
     dup = (wins.groupBy("k")
            .agg(F.count_distinct(F.col(id_col)).alias("_nd"))
@@ -921,9 +907,8 @@ def duplicate_substring_spans(df: DataFrame, id_col: str, text_col: str,
            .select("k"))
     # LEFT SEMI, no .distinct(): (id, pos) is unique in ``wins`` by
     # construction (one row per exploded stride position) and a semi
-    # join never duplicates probe rows, so the old distinct was a
-    # full extra exchange of the hit stream re-proving uniqueness
-    # (r14 opt; row set unchanged)
+    # join never duplicates probe rows, so a distinct would be a full
+    # extra exchange of the hit stream re-proving uniqueness
     hits = wins.join(dup, "k", "left_semi").select(id_col, "pos")
     w_doc = Window.partitionBy(id_col).orderBy("pos")
     brk = F.when(F.col("pos") - F.lag("pos").over(w_doc) <= width,
@@ -958,8 +943,7 @@ def content_defined_chunks(df: DataFrame, id_col: str, text_col: str,
     extra = list(extra_cols or [])
     pos = (df.select(
         id_col, *extra,
-        F.posexplode(F.filter(tokens_array(F.col(text_col)),
-                              lambda t: t != "")).alias("_i0", "_tok"))
+        F.posexplode(tokens(F.col(text_col))).alias("_i0", "_tok"))
         .select(id_col, *extra, "_tok", (F.col("_i0") + 1).alias("_i")))
     w = Window.partitionBy(id_col).orderBy("_i")
     win_hash = F.conv(F.substring(F.md5(F.concat_ws(

@@ -2,24 +2,24 @@
 
 * ``cosine_topk`` — brute-force exact top-k: one scan, JVM-side dot
   products, TakeOrderedAndProject.  The correctness baseline.
-* ``random_hyperplane_buckets`` + ``ann_topk_lsh`` — the scale path:
-  sign-LSH (random hyperplanes -> b-bit bucket), search only the query's
-  bucket ring (Hamming radius <= 1).  Recall < 1 by construction; at
-  100 TB the bucket join prunes the candidate set by ~2^b/(1+b).
-  Hyperplanes are seeded (numpy RandomState) -> deterministic plans.
+* ``hyperplane_bucket_keys`` + ``ann_topk_lsh`` — the scale path:
+  multi-table sign-LSH (random hyperplanes -> one b-bit bucket per
+  table), search only the vectors sharing a bucket with the query in
+  some table, then re-rank exactly.  Recall < 1 by construction; each
+  table prunes the candidate set by ~2^b.  Hyperplanes are seeded
+  (numpy RandomState) -> deterministic keys.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectorfn import cosine
 
-__all__ = ["cosine_topk", "random_hyperplane_buckets",
-           "hyperplane_bucket_keys", "ann_topk_lsh",
+__all__ = ["cosine_topk", "hyperplane_bucket_keys", "ann_topk_lsh",
            "quantize_int8", "quantized_cosine_topk"]
 
 
@@ -53,25 +53,20 @@ def cosine_topk(df: DataFrame, id_col: str, vec_col: str,
     return out.orderBy(F.desc("cos"), F.asc(id_col)).limit(k)
 
 
-def _hyperplanes(dim: int, bits: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.RandomState(seed)
-    return rng.standard_normal((bits, dim))
+def _planes(dim: int, bits: int, tables: int, seed: int) -> np.ndarray:
+    """(tables*bits, dim) hyperplanes; table t is seeded ``seed + t``."""
+    return np.vstack([np.random.RandomState(seed + t).standard_normal((bits, dim))
+                      for t in range(tables)])
 
 
-def random_hyperplane_buckets(df: DataFrame, vec_col: str,
-                              dim: int, bits: int = 8, seed: int = 42,
-                              out: str = "bucket") -> DataFrame:
-    """Append a sign-LSH bucket id: bit j = sign(v . h_j)."""
-    planes = _hyperplanes(dim, bits, seed)
-    bucket: Column = F.lit(0).cast("long")
-    for j in range(bits):
-        h = F.array(*[F.lit(float(x)) for x in planes[j]])
-        dot_j = F.aggregate(
-            F.zip_with(F.col(vec_col), h, lambda x, y: x.cast("double") * y),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-        bucket = bucket.bitwiseOR(F.shiftleft(F.when(dot_j > 0, 1).otherwise(0).cast("long"), j))
-    return df.withColumn(out, bucket)
+def _sign_keys(mat: np.ndarray, planes: np.ndarray, bits: int,
+               tables: int) -> np.ndarray:
+    """(n, tables) bucket keys of the (n, dim) rows of ``mat``: bit j of
+    table t's bucket is sign(v . h_{t,j}) > 0, key t = (t << bits) | bucket."""
+    signs = (mat @ planes.T) > 0  # (n, tables*bits)
+    weights = np.int64(1) << np.arange(bits, dtype=np.int64)
+    buckets = (signs.reshape(len(mat), tables, bits) * weights).sum(axis=2)
+    return buckets + (np.arange(tables, dtype=np.int64) << bits)
 
 
 def hyperplane_bucket_keys(df: DataFrame, vec_col: str, dim: int,
@@ -81,26 +76,21 @@ def hyperplane_bucket_keys(df: DataFrame, vec_col: str, dim: int,
     ``out`` = array of ``tables`` longs, key t = (t << bits) | bucket_t.
 
     A scalar pandas_udf runs the (batch x dim) @ (dim x tables*bits)
-    matmul in numpy — one Arrow transfer each way per batch.  The
-    column-expression alternative (``random_hyperplane_buckets`` per
-    table) generates O(tables*bits*dim) literal-array code that stalls
-    whole-stage codegen for seconds per plan: measured 7.6 s -> <1 s on
-    the 64-hyperplane embedding-dedup query.  Per-row work is identical
-    and embarrassingly parallel, so this scales as a pure map stage.
+    matmul in numpy — one Arrow transfer each way per batch.  A
+    column-expression form (one folded dot per hyperplane) generates
+    O(tables*bits*dim) literal-array code that stalls whole-stage
+    codegen for seconds per plan: measured 7.6 s -> <1 s on the
+    64-hyperplane embedding-dedup query.  Per-row work is identical and
+    embarrassingly parallel, so this scales as a pure map stage.
     """
-    planes = np.vstack([_hyperplanes(dim, bits, seed + t)
-                        for t in range(tables)])  # (tables*bits, dim)
-    weights = (np.int64(1) << np.arange(bits, dtype=np.int64))
-    table_base = np.arange(tables, dtype=np.int64) << bits
+    planes = _planes(dim, bits, tables, seed)
 
     @F.pandas_udf("array<long>")
     def _keys(vs: pd.Series) -> pd.Series:
         if len(vs) == 0:  # np.stack([]) raises; empty Arrow batches happen
             return pd.Series([], dtype=object)
         mat = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        signs = (mat @ planes.T) > 0  # (n, tables*bits)
-        buckets = (signs.reshape(len(mat), tables, bits) * weights).sum(axis=2)
-        return pd.Series(list(buckets + table_base))
+        return pd.Series(list(_sign_keys(mat, planes, bits, tables)))
 
     return df.withColumn(out, _keys(F.col(vec_col)))
 
@@ -112,7 +102,8 @@ def ann_topk_lsh(df: DataFrame, id_col: str, vec_col: str,
     """Approximate top-k: multi-table sign-LSH candidates + exact re-rank.
 
     Candidates = vectors sharing the query's bucket in >=1 of ``tables``
-    independent hash tables.  For neighbors at angle theta, per-bit
+    independent hash tables: rows whose ``hyperplane_bucket_keys``
+    overlap the query's keys.  For neighbors at angle theta, per-bit
     agreement p = 1 - theta/pi, per-table collision p^bits, overall
     recall 1-(1-p^bits)^tables: the (bits, tables) trade-off tunes recall
     vs candidate-set size.  Defaults (4, 16) target weakly-correlated
@@ -120,32 +111,12 @@ def ann_topk_lsh(df: DataFrame, id_col: str, vec_col: str,
     embeddings (cos >= 0.9, p >= 0.9) raise bits to 12-16 to cut
     candidates to ~tables/2^bits of the corpus.
     """
-    qv = np.asarray(query_vec, dtype=np.float64)
-    table_keys: list[int] = []
-    per_table_key_exprs: list[Column] = []
-    for t in range(tables):
-        planes = _hyperplanes(dim, bits, seed + t)
-        qb = 0
-        bucket: Column = F.lit(0).cast("long")
-        for j in range(bits):
-            if float(planes[j] @ qv) > 0:
-                qb |= 1 << j
-            h = F.array(*[F.lit(float(x)) for x in planes[j]])
-            dot_j = F.aggregate(
-                F.zip_with(F.col(vec_col), h, lambda x, y: x.cast("double") * y),
-                F.lit(0.0), lambda acc, x: acc + x,
-            )
-            bucket = bucket.bitwiseOR(
-                F.shiftleft(F.when(dot_j > 0, 1).otherwise(0).cast("long"), j))
-        table_keys.append((t << bits) | qb)
-        per_table_key_exprs.append(bucket.bitwiseOR(F.lit(t << bits).cast("long")))
-
-    cand = (
-        df.select(F.col(id_col), F.col(vec_col),
-                  F.explode(F.array(*per_table_key_exprs)).alias("_tb"))
-        .filter(F.col("_tb").isin(table_keys))
-        .dropDuplicates([id_col])
-    )
+    qv = np.asarray([query_vec], dtype=np.float64)
+    qkeys = _sign_keys(qv, _planes(dim, bits, tables, seed), bits, tables)[0]
+    keyed = hyperplane_bucket_keys(df.select(F.col(id_col), F.col(vec_col)), vec_col,
+                                   dim, bits=bits, tables=tables, seed=seed)
+    qarr = F.array(*[F.lit(int(x)) for x in qkeys]).cast("array<long>")
+    cand = keyed.filter(F.arrays_overlap("_bks", qarr))
     if exclude_id is not None:
         cand = cand.filter(F.col(id_col) != exclude_id)
     q = F.array(*[F.lit(float(x)) for x in query_vec])

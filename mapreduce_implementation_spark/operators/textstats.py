@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.textfn import tokens_array
+from ..functions.textfn import tokens
+from .text import tokenize
 
 __all__ = [
     "EN_STOPWORDS", "token_stats", "quality_score", "quality_score_parts",
@@ -21,13 +22,6 @@ __all__ = [
 
 # tiny deterministic stopword profile (shared with the DuckDB oracle)
 EN_STOPWORDS = ("the", "a", "of", "to", "and", "in", "is", "it")
-
-
-def _tok_df(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return (
-        df.select(id_col, F.explode(tokens_array(F.col(text_col))).alias("tok"))
-        .filter(F.col("tok") != "")
-    )
 
 
 def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -41,9 +35,9 @@ def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         bpe_pieces.alias("n_bpe_pieces"),
         F.length(text_col).alias("n_chars_actual"),
     )
-    toks = _tok_df(df, id_col, text_col).groupBy(id_col).agg(
+    toks = tokenize(df, text_col, keep=[id_col]).groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_alpha_tokens"),
-        F.countDistinct("tok").alias("n_distinct_tokens"),
+        F.countDistinct("word").alias("n_distinct_tokens"),
     )
     return per_doc.join(toks, id_col, "left").select(
         id_col, "n_ws_tokens", "n_bpe_pieces", "n_chars_actual",
@@ -64,12 +58,11 @@ def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     Single-scan, ZERO-shuffle: all token statistics come from array
     higher-order functions over the per-row token array (size / filter /
     aggregate), so the whole operator is one narrow projection inside
-    whole-stage codegen.  (The pre-r3 formulation exploded the token
-    stream, aggregated it, and joined back — two corpus scans and a
-    shuffle for per-row arithmetic; bench showed the double scan at
-    sf0.1.)  mean_wlen = exact int64 length sum / count, identical to
-    the grouped avg and to DuckDB's avg(length(tok))."""
-    toks = F.filter(tokens_array(F.col(text_col)), lambda t: t != F.lit(""))
+    whole-stage codegen; exploding the token stream and joining the
+    aggregate back would cost a second corpus scan and a shuffle for
+    per-row arithmetic.  mean_wlen = exact int64 length sum / count,
+    identical to the grouped avg and to DuckDB's avg(length(tok))."""
+    toks = tokens(F.col(text_col))
     with_toks = df.select(F.col(id_col), F.col(text_col), toks.alias("_toks"))
     n_tok, stop_ratio, mean_wlen, alpha_ratio, score = quality_score_parts(
         F.col("_toks"), F.col(text_col))
@@ -114,7 +107,7 @@ def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     (one shared vocabulary), so this demonstrates the *mechanism*: a
     deterministic per-doc score against per-language stopword profiles,
     argmax wins, 'und' (undetermined) below threshold."""
-    toks = _tok_df(df, id_col, text_col)
+    toks = tokenize(df, text_col, keep=[id_col])
     profiles = {
         "en": EN_STOPWORDS,
         "de": ("der", "die", "das", "und", "ist", "nicht", "ein"),
@@ -122,7 +115,7 @@ def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         "es": ("el", "la", "los", "y", "es", "un", "una"),
     }
     aggs = [
-        (F.sum(F.col("tok").isin(*words).cast("int")) /
+        (F.sum(F.col("word").isin(*words).cast("int")) /
          F.greatest(F.count(F.lit(1)), F.lit(1))).alias(f"r_{lang}")
         for lang, words in profiles.items()
     ]
@@ -145,7 +138,7 @@ def fingerprint(df: DataFrame, id_col: str, text_col: str,
     under whitespace/punctuation noise — the classic content-defined
     dedup key) plus raw-text md5.  ``keep`` carries extra columns
     through (e.g. source, for per-source dup reporting)."""
-    norm_joined = F.concat_ws(" ", F.filter(tokens_array(F.col(text_col)), lambda t: t != ""))
+    norm_joined = F.concat_ws(" ", tokens(F.col(text_col)))
     return df.select(
         id_col,
         *(keep or []),
@@ -161,32 +154,31 @@ def tf_idf_top_terms(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> D
 
     from .caching import tracked_persist
 
-    toks = _tok_df(df, id_col, text_col)
+    toks = tokenize(df, text_col, keep=[id_col])
     # term_freq feeds FOUR consumers (doc_len, doc_freq, the tfidf join,
     # and the in-plan n_docs branch); without a persist each consumer
-    # re-runs the token-stream aggregation — the corpus-scale cost — and
-    # r02's bench showed exactly that (4 parquet scans, 0 ReusedExchange,
-    # 1.86x regression).  The (doc, term, n) frame is vocabulary-sized,
-    # far smaller than the token stream, so caching is the right trade.
+    # re-runs the token-stream aggregation, the corpus-scale cost.  The
+    # (doc, term, n) frame is vocabulary-sized, far smaller than the
+    # token stream, so caching is the right trade.
     term_freq = tracked_persist(
-        toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("n")))
+        toks.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("n")))
     doc_len = term_freq.groupBy(id_col).agg(F.sum("n").alias("len"))
-    doc_freq = term_freq.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    doc_freq = term_freq.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
     # N (corpus doc count) stays IN the plan — a 1-row aggregate broadcast-
     # cross-joined in, like the oracle's `nd` CTE — so building the query
     # runs no job and the token stream is never scanned just for a scalar.
     n_docs = doc_len.agg(F.count(F.lit(1)).cast("double").alias("_nd"))
     tfidf = (
-        term_freq.join(doc_len, id_col).join(doc_freq, "tok")
+        term_freq.join(doc_len, id_col).join(doc_freq, "word")
         .crossJoin(F.broadcast(n_docs))
         .withColumn("tfidf", F.round(
             (F.col("n") / F.col("len")) * F.log(F.col("_nd") / F.col("df")), 6))
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("tok"))
+    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("word"))
     return (
         tfidf.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
-        .select(id_col, F.col("tok").alias("term"), "tfidf", F.col("_rn").alias("term_rank"))
+        .select(id_col, F.col("word").alias("term"), "tfidf", F.col("_rn").alias("term_rank"))
     )
 
 
@@ -204,19 +196,19 @@ def bm25_topk(df: DataFrame, id_col: str, text_col: str, terms: tuple[str, ...],
     """
     from pyspark.sql import Window
 
-    toks = _tok_df(df, id_col, text_col)
+    toks = tokenize(df, text_col, keep=[id_col])
     dl = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(F.avg("dl").alias("avgdl"),
                    F.count(F.lit(1)).cast("double").alias("n_docs"))
-    tf = (toks.where(F.col("tok").isin(list(terms)))
-          .groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("tf")))
-    dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    tf = (toks.where(F.col("word").isin(list(terms)))
+          .groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("tf")))
+    dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
     idf = F.log(F.lit(1) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
     contrib = idf * (F.col("tf") * (k1 + 1)) / (
         F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
     doc_score = (
         tf.join(dl, id_col)
-        .join(F.broadcast(dfreq), "tok")
+        .join(F.broadcast(dfreq), "word")
         .crossJoin(F.broadcast(stats))
         .groupBy(id_col)
         .agg(F.round(F.sum(contrib), 6).alias("bm25"))
@@ -227,28 +219,17 @@ def bm25_topk(df: DataFrame, id_col: str, text_col: str, terms: tuple[str, ...],
                        F.row_number().over(w).cast("int").alias("rank"))
 
 
-def quality_prob(text_col: str = "text"):
+def quality_prob(text_col: str = "text") -> Column:
     """Logistic keep/drop probability as a single in-row Column (the
     fastText-style linear classifier of CCNet/RefinedWeb pipelines, with
-    fixed public weights): one scan, zero shuffles — all features are
-    array HOFs over the per-row token stream.  Consumed by the
+    fixed public weights) over the features ``quality_score_parts``
+    returns: one scan, zero shuffles.  Consumed by the
     text_quality_classifier / pipeline_curation_stats queries and the
     streaming curate_stream twin; the DuckDB twin of the feature
     expressions lives next to those queries' oracles.
     """
-    from ..functions.textfn import tokens_array
-
-    toks = F.filter(tokens_array(F.col(text_col)), lambda t: t != "")
-    n_tok = F.size(toks)
-    # long accumulator: int32 wraps on >2^31-char documents (same
-    # discipline as quality_score)
-    sum_wlen = F.aggregate(toks, F.lit(0).cast("long"),
-                           lambda acc, t: acc + F.length(t))
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*EN_STOPWORDS)))
-    alpha_ratio = (F.length(F.regexp_replace(text_col, "[^A-Za-z]", ""))
-                   * F.lit(1.0) / F.greatest(F.length(text_col), F.lit(1)))
-    z = (F.lit(-1.5)
-         + F.lit(4.0) * (n_stop * F.lit(1.0) / F.greatest(n_tok, F.lit(1)))
-         + F.lit(2.0) * alpha_ratio
-         + F.lit(0.1) * (sum_wlen * F.lit(1.0) / F.greatest(n_tok, F.lit(1))))
+    text = F.col(text_col)
+    _, stop_ratio, mean_wlen, alpha_ratio, _ = quality_score_parts(tokens(text), text)
+    z = (F.lit(-1.5) + F.lit(4.0) * stop_ratio + F.lit(2.0) * alpha_ratio
+         + F.lit(0.1) * mean_wlen)
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))

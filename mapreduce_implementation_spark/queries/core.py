@@ -12,10 +12,12 @@ from pyspark.sql import functions as F
 from ..operators.sort import distributed_sort
 from ..operators.text import tokenize, word_count
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import derived_copy, load_table
 
-# DuckDB twin of functions.textfn.normalize_token ('g' = replace-all,
-# which Spark's regexp_replace does by default).
+# DuckDB twin of the reference's per-token normalization ('g' =
+# replace-all, which Spark's regexp_replace does by default); the Spark
+# side normalizes the whole line first (functions.textfn), which gives
+# the same tokens.
 _NORM = "lower(regexp_replace({tok}, '[^A-Za-z]', '', 'g'))"
 
 
@@ -114,23 +116,6 @@ def q_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _export_cache_path(root: str, sf_dir: str, table: str) -> str:
-    """Cache dir for a one-time format export, keyed on the SOURCE
-    parquet's (mtime, size) so regenerated fixtures can never serve a
-    stale export (a bare basename key survives fixture regeneration and
-    silently diverges from the oracle's parquet read)."""
-    import os
-
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(src)
-        key = f"{int(st.st_mtime)}_{st.st_size}"
-    except OSError:
-        key = "nosrc"
-    return os.path.join(
-        root, f"{os.path.basename(sf_dir.rstrip('/'))}_{table}_{key}")
-
-
 @register(
     "source_jsonl_events",
     oracle="""
@@ -149,13 +134,9 @@ def _export_cache_path(root: str, sf_dir: str, table: str) -> str:
         "JSONL round-trip itself is what's under test.",
 )
 def q_source_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     e = load_table(spark, sf_dir, "events").select("event_type", "value")
-    path = _export_cache_path("/tmp/mapreduce_spark_jsonl_cache",
-                              sf_dir, "events")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        e.write.mode("overwrite").json(path)
+    path = derived_copy(sf_dir, "events", "jsonl",
+                        lambda p: e.write.mode("overwrite").json(p))
     j = spark.read.schema("event_type string, value double").json(path)
     return (
         j.groupBy("event_type")
@@ -181,14 +162,11 @@ def q_source_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
         "as an ingest format to convert, never a query-time format.",
 )
 def q_source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus", "o_totalprice")
-    path = _export_cache_path("/tmp/mapreduce_spark_csv_cache",
-                              sf_dir, "orders")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        o.write.mode("overwrite").option("header", "true").csv(path)
+    path = derived_copy(
+        sf_dir, "orders", "csv",
+        lambda p: o.write.mode("overwrite").option("header", "true").csv(p))
     c = spark.read.schema("o_orderstatus string, o_totalprice double") \
         .option("header", "true").csv(path)
     return (
@@ -214,14 +192,10 @@ def q_source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Oracle runs on the parquet table: the round-trip is the test.",
 )
 def q_source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     c = load_table(spark, sf_dir, "customer").select(
         "c_mktsegment", "c_acctbal")
-    path = _export_cache_path("/tmp/mapreduce_spark_orc_cache",
-                              sf_dir, "customer")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        c.write.mode("overwrite").orc(path)
+    path = derived_copy(sf_dir, "customer", "orc",
+                        lambda p: c.write.mode("overwrite").orc(p))
     r = spark.read.orc(path)
     return (
         r.groupBy("c_mktsegment")
@@ -256,24 +230,21 @@ def q_source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "history when a field is added.  The query proves both the "
         "union (row counts per type) and the null-fill (value count = "
         "new-partition rows only).  Oracle simulates the same split on "
-        "the source parquet; the export is cached keyed on the source "
-        "file's (mtime, size) like the other round-trip queries.",
+        "the source parquet; both partitions are write-once derived "
+        "copies like the other round-trip queries' exports.",
 )
 def q_source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     e = load_table(spark, sf_dir, "events")
-    root = _export_cache_path("/tmp/mapreduce_spark_schemaevo_cache",
-                              sf_dir, "events")
-    old_p, new_p = os.path.join(root, "old"), os.path.join(root, "new")
-    if not (os.path.exists(os.path.join(old_p, "_SUCCESS"))
-            and os.path.exists(os.path.join(new_p, "_SUCCESS"))):
-        (e.where(F.col("event_id") % 2 == 0)
-         .select("event_id", "user_id", "event_type")
-         .write.mode("overwrite").parquet(old_p))
-        (e.where(F.col("event_id") % 2 == 1)
-         .select("event_id", "user_id", "event_type", "value")
-         .write.mode("overwrite").parquet(new_p))
+    old_p = derived_copy(
+        sf_dir, "events", "schema_old",
+        lambda p: (e.where(F.col("event_id") % 2 == 0)
+                   .select("event_id", "user_id", "event_type")
+                   .write.mode("overwrite").parquet(p)))
+    new_p = derived_copy(
+        sf_dir, "events", "schema_new",
+        lambda p: (e.where(F.col("event_id") % 2 == 1)
+                   .select("event_id", "user_id", "event_type", "value")
+                   .write.mode("overwrite").parquet(p)))
     merged = (spark.read.option("mergeSchema", "true")
               .parquet(old_p, new_p))
     return (merged.groupBy("event_type")

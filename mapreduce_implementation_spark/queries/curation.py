@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.textfn import normalize_line, tokens
+from ..operators.textstats import quality_prob
 from ..registry import register
 from ..sources.tables import load_table
 
@@ -213,7 +215,7 @@ def q_agg_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     norm = F.trim(F.regexp_replace(
-        F.lower(F.regexp_replace(F.col("text"), "[^A-Za-z ]", "")),
+        normalize_line(F.col("text")),
         " +", " "))
     return (
         d.select("doc_id", "source", F.md5(norm).alias("_h"))
@@ -266,12 +268,11 @@ from .textanalysis import _DUCK_QUALITY_Z  # noqa: E402  (shared CTE twin)
 )
 def q_corpus_quality_deciles_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.windows import grouped_ntile
-    from .textanalysis import quality_prob_column
 
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id", "source",
-        F.round(quality_prob_column(), 6).alias("p"))
+        F.round(quality_prob("text"), 6).alias("p"))
     tiled = grouped_ntile(scored, ["source"], [("p", "desc"), "doc_id"],
                           n_tiles=10, out="decile")
     return (
@@ -344,11 +345,10 @@ def q_corpus_quality_deciles_by_source(spark: SparkSession, sf_dir: str) -> Data
         "source, ntok) — never the text — and one 20-group aggregate.",
 )
 def q_pipeline_budget_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.textfn import tokens_array
     from ..operators.caching import tracked_persist
 
     docs = load_table(spark, sf_dir, "documents")
-    ntok = F.size(F.filter(tokens_array(F.col("text")), lambda t: t != ""))
+    ntok = F.size(tokens(F.col("text")))
     perdoc = tracked_persist(
         docs.select("doc_id", "source", ntok.alias("ntok")))
     tok = perdoc.groupBy("source").agg(F.sum("ntok").alias("tokens"))
@@ -509,7 +509,7 @@ def q_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     ws = (F.length("text")
           - F.length(F.regexp_replace(F.col("text"), " ", "")) + 1)
-    fp = F.md5(F.lower(F.regexp_replace(F.col("text"), "[^A-Za-z ]", "")))
+    fp = F.md5(normalize_line(F.col("text")))
     base = d.select("doc_id", "source", "lang", ws.alias("ws_toks"),
                     "n_chars", fp.alias("fp"))
 
@@ -575,7 +575,7 @@ def q_pipeline_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     ws = (F.length("text")
           - F.length(F.regexp_replace(F.col("text"), " ", "")) + 1)
-    fp = F.md5(F.lower(F.regexp_replace(F.col("text"), "[^A-Za-z ]", "")))
+    fp = F.md5(normalize_line(F.col("text")))
     base = d.select("doc_id", "lang", "n_chars", ws.alias("ws_toks"),
                     fp.alias("fp"))
     s1 = base.where(F.col("lang") == "en")
@@ -968,7 +968,7 @@ def q_pii_scrub_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Per-source quality priors with empirical-Bayes shrinkage "
         "(the domain-prior table a 100 TB curation run keys its "
         "sampling weights on): each source's mean keep-probability "
-        "(quality_prob_column — the text_quality_classifier logistic) "
+        "(textstats.quality_prob — the text_quality_classifier logistic) "
         "shrunk toward the corpus mean with pseudo-count C=25, "
         "shrunk = (sum_p + C*g)/(n + C) — a source with 3 documents "
         "sits near the global prior, a source with 10^7 documents "
@@ -980,19 +980,17 @@ def q_pii_scrub_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "engines).",
 )
 def q_curation_source_prior(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .textanalysis import quality_prob_column
-
     from ..operators.caching import tracked_persist
 
     c_prior = 25.0
     docs = load_table(spark, sf_dir, "documents")
-    per_doc = docs.select("source", quality_prob_column().alias("_p"))
+    per_doc = docs.select("source", quality_prob("text").alias("_p"))
     # persisted |sources|-row frame: the global mean derives from the
     # per-source sums (sum of partial sums == the direct sum up to
     # float association, same class as the engines' own partial aggs),
     # so the corpus — whose in-row logistic IS the dominant cost
     # (SCALE.md: 14 s at sf1, scan-bound) — is scanned exactly ONCE
-    # instead of once per aggregate branch (r12 review)
+    # instead of once per aggregate branch
     src = tracked_persist(per_doc.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("_p").alias("_sum_p"),

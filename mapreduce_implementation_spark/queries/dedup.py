@@ -15,11 +15,12 @@ from pyspark.sql import functions as F
 from ..operators.dedup import (
     embedding_near_dup_pairs, embedding_near_dup_pairs_lsh,
     exact_dedup_representatives, minhash_dedup_pairs, ngram_jaccard_pairs,
-    simhash_near_dup_pairs,
+    overlap_pairs, simhash_near_dup_pairs,
 )
 from ..operators.graph import connected_components
+from ..operators.text import tokenize
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import derived_copy, load_table
 
 # DuckDB twin of the Spark tokenizer+trigram pipeline (positions assigned
 # before the empty-token filter, exactly like posexplode-then-filter).
@@ -121,17 +122,9 @@ def _char9_jaccard_pairs(docs: DataFrame,
     from ..operators.dedup import char_shingles
 
     sh = tracked_persist(char_shingles(docs, "doc_id", "text", k=9))
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col("doc_id").alias("a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("b"), "shingle")
-    inter = (a.join(b, "shingle").filter(F.col("a") < F.col("b"))
-             .groupBy("a", "b").agg(F.count(F.lit(1)).alias("c")))
-    sa = sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("b"), F.col("n").alias("nb"))
-    jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
-    return (inter.join(sa, "a").join(sb, "b")
-            .filter(jac >= min_jaccard)
-            .select("a", "b", jac.alias("_j")))
+    ov = overlap_pairs(sh, "doc_id", "shingle", F.lit(1))
+    jac = F.col("dot") / (F.col("sa") + F.col("sb") - F.col("dot"))
+    return ov.filter(jac >= min_jaccard).select("a", "b", jac.alias("_j"))
 
 
 # DuckDB twin of _md5_audit_subset over documents (the k/sub CTE pair
@@ -173,28 +166,13 @@ def _token_cosine_pairs(docs: DataFrame, min_cosine: float) -> DataFrame:
     threshold): the ONE Spark pipeline behind both the SimHash estimate
     query's truth leg and the graduated dedup_simhash audit leg (DuckDB
     twin: :func:`_duck_token_cosine`)."""
-    from ..functions.textfn import tokens_array
-
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.filter(tokens_array(F.col("text")),
-                           lambda t: t != "")).alias("tok"))
-    cnt = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
-    a = cnt.select(F.col("doc_id").alias("a"), "tok", F.col("c").alias("ca"))
-    b = cnt.select(F.col("doc_id").alias("b"), "tok", F.col("c").alias("cb"))
-    dots = (a.join(b, "tok").filter(F.col("a") < F.col("b"))
-            .groupBy("a", "b")
-            .agg(F.sum(F.col("ca") * F.col("cb")).alias("dot")))
-    norms = cnt.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("c") * F.col("c"))).alias("nn"))
-    na = norms.select(F.col("doc_id").alias("a"), F.col("nn").alias("na"))
-    nb = norms.select(F.col("doc_id").alias("b"), F.col("nn").alias("nb"))
+    cnt = (tokenize(docs, "text", keep=["doc_id"])
+           .groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("c")))
+    ov = overlap_pairs(cnt, "doc_id", "word", F.col("c"))
     # try_divide for ANSI parity with the other cosine sites; norms are
     # structurally > 0 here (every doc in cnt has >= 1 token)
-    cos = F.try_divide(F.col("dot"), F.col("na") * F.col("nb"))
-    return (dots.join(na, "a").join(nb, "b")
-            .filter(cos > min_cosine)
-            .select("a", "b", cos.alias("_cos")))
+    cos = F.try_divide(F.col("dot"), F.sqrt("sa") * F.sqrt("sb"))
+    return ov.filter(cos > min_cosine).select("a", "b", cos.alias("_cos"))
 
 
 def _duck_token_cosine(src: str) -> str:
@@ -710,22 +688,18 @@ def q_dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "differs.",
 )
 def q_dedup_incremental_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from ..operators.dedup import near_dup_filter_against, word_ngrams
 
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    # One-time gram-table build per (sf, n): in production this is the
-    # corpus-snapshot job; here it materializes lazily into a scratch dir.
-    path = os.path.join(
-        "/tmp/mapreduce_spark_gram_cache",
-        f"{os.path.basename(sf_dir.rstrip('/'))}_corpus_trigrams")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (word_ngrams(corpus, "doc_id", "text", n=3)
-         .select("doc_id", "ngram").distinct()
-         .write.mode("overwrite").parquet(path))
+    # One-time gram-table build: in production this is the
+    # corpus-snapshot job; here it materializes lazily as a derived copy.
+    path = derived_copy(
+        sf_dir, "documents", "corpus_trigrams",
+        lambda p: (word_ngrams(corpus, "doc_id", "text", n=3)
+                   .select("doc_id", "ngram").distinct()
+                   .write.mode("overwrite").parquet(p)))
     grams = spark.read.parquet(path)
     return near_dup_filter_against(
         batch, None, "doc_id", "text", n=3, min_jaccard=0.5,

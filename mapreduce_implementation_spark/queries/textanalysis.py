@@ -7,13 +7,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.textfn import normalize_line, tokens
+from ..operators.text import tokenize
 from ..operators.textstats import (
-    fingerprint, lang_id, quality_score, tf_idf_top_terms, token_stats,
+    fingerprint, lang_id, quality_prob, quality_score, tf_idf_top_terms,
+    token_stats,
 )
 from ..registry import register
 from ..sources.tables import load_table
 
-# DuckDB twin of the normalized token stream (textfn.tokens_array + filter)
+# DuckDB twin of the normalized token stream (textfn.tokens)
 _DUCK_TOKS = """
 WITH toks AS (
   SELECT doc_id, tok FROM (
@@ -285,31 +288,29 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         "PMI = ln(P(a,b)/(P(a)P(b))) with document-event probabilities.",
 )
 def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.textstats import _tok_df
-
     docs = load_table(spark, sf_dir, "documents")
     # dt feeds the vocab filter, both join sides and the N scalar --
     # persist so the tokenize+distinct shuffle runs once, not four times.
     from ..operators.caching import tracked_persist
-    dt = tracked_persist(_tok_df(docs, "doc_id", "text").distinct())
+    dt = tracked_persist(tokenize(docs, "text", keep=["doc_id"]).distinct())
     nd = dt.agg(F.count_distinct("doc_id").alias("n"))
     # Thresholds stay IN the plan (0.2*N / 0.3*N via the broadcast 1-row
     # frame) — hard-coding their sf0.01 values (100/150) would silently
     # diverge from the oracle at any other scale factor.
-    df_ = (dt.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
+    df_ = (dt.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
            .crossJoin(F.broadcast(nd))
            .where(F.col("c") >= 0.2 * F.col("n"))
-           .select("tok", "c"))
-    a = dt.join(F.broadcast(df_.select("tok")), "tok").select(
-        "doc_id", F.col("tok").alias("w1"))
-    b = dt.join(F.broadcast(df_.select("tok")), "tok").select(
-        "doc_id", F.col("tok").alias("w2"))
+           .select("word", "c"))
+    a = dt.join(F.broadcast(df_.select("word")), "word").select(
+        "doc_id", F.col("word").alias("w1"))
+    b = dt.join(F.broadcast(df_.select("word")), "word").select(
+        "doc_id", F.col("word").alias("w2"))
     co = (a.join(b, "doc_id").where(F.col("w1") < F.col("w2"))
           .groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_ab"))
           .crossJoin(F.broadcast(nd))
           .where(F.col("c_ab") >= 0.3 * F.col("n")))
-    fa = df_.select(F.col("tok").alias("w1"), F.col("c").alias("ca"))
-    fb = df_.select(F.col("tok").alias("w2"), F.col("c").alias("cb"))
+    fa = df_.select(F.col("word").alias("w1"), F.col("c").alias("ca"))
+    fb = df_.select(F.col("word").alias("w2"), F.col("c").alias("cb"))
     return (
         co.join(F.broadcast(fa), "w1").join(F.broadcast(fb), "w2")
         .select("w1", "w2", "c_ab",
@@ -489,20 +490,14 @@ def q_text_top_terms_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    from ..functions.textfn import tokens_array
-
-    toks = (
-        docs.select("lang", "doc_id",
-                    F.explode(tokens_array(F.col("text"))).alias("tok"))
-        .filter(F.col("tok") != "")
-    )
-    dfreq = (toks.select("lang", "doc_id", "tok").distinct()
-             .groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("n_docs")))
-    w = Window.partitionBy("lang").orderBy(F.desc("n_docs"), F.asc("tok"))
+    toks = tokenize(docs, "text", keep=["lang", "doc_id"])
+    dfreq = (toks.select("lang", "doc_id", "word").distinct()
+             .groupBy("lang", "word").agg(F.count(F.lit(1)).alias("n_docs")))
+    w = Window.partitionBy("lang").orderBy(F.desc("n_docs"), F.asc("word"))
     return (
         dfreq.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= 5)
-        .select("lang", F.col("tok").alias("term"), "n_docs",
+        .select("lang", F.col("word").alias("term"), "n_docs",
                 F.col("rnk").cast("int").alias("rnk"))
     )
 
@@ -530,11 +525,9 @@ def q_text_top_terms_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vocabulary-sized rollup; partial-aggregable throughout.",
 )
 def q_text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.textstats import _tok_df
-
     docs = load_table(spark, sf_dir, "documents")
-    tf = (_tok_df(docs, "doc_id", "text")
-          .groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("n")))
+    tf = (tokenize(docs, "text", keep=["doc_id"])
+          .groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("n")))
     dl = tf.groupBy("doc_id").agg(F.sum("n").alias("len"),
                                   F.count(F.lit(1)).alias("n_distinct"))
     p = F.col("n") * F.lit(1.0) / F.col("len")
@@ -596,14 +589,6 @@ _DUCK_QUALITY_Z = f"""
 """
 
 
-def quality_prob_column():
-    """Delegates to operators.textstats.quality_prob (kept as the
-    queries-layer name so existing imports keep working)."""
-    from ..operators.textstats import quality_prob
-
-    return quality_prob("text")
-
-
 @register(
     "text_quality_classifier",
     oracle=f"""
@@ -643,7 +628,7 @@ def quality_prob_column():
 )
 def q_text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    p = quality_prob_column()
+    p = quality_prob("text")
     return docs.select("doc_id",
                        F.round(p, 6).alias("p_quality"),
                        (p >= 0.7).alias("keep"))
@@ -730,13 +715,10 @@ def q_text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ..functions.textfn import tokens_array
-
     docs = load_table(spark, sf_dir, "documents")
-    p = quality_prob_column()
+    p = quality_prob("text")
     kept = docs.withColumn("_p", p).filter(F.col("_p") >= 0.7)
-    norm = F.concat_ws(" ", F.filter(tokens_array(F.col("text")),
-                                     lambda t: t != ""))
+    norm = F.concat_ws(" ", tokens(F.col("text")))
     fp = kept.withColumn("_fp", F.md5(norm.cast("binary")))
     occ = F.row_number().over(Window.partitionBy("_fp").orderBy("doc_id"))
     dedup = fp.withColumn("_occ", occ).filter(F.col("_occ") == 1)
@@ -788,10 +770,8 @@ def q_pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "reads from each source.",
 )
 def q_source_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.textfn import tokens_array
-
     docs = load_table(spark, sf_dir, "documents")
-    ntok = F.size(F.filter(tokens_array(F.col("text")), lambda t: t != ""))
+    ntok = F.size(tokens(F.col("text")))
     tok = docs.groupBy("source").agg(F.sum(ntok).alias("tokens"))
     tgt = tok.withColumn(
         "raw_w", F.lit(1.0) / (F.lit(1) + F.substring("source", 4, 10)
@@ -849,20 +829,19 @@ def q_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     from ..operators.sketch import countmin_build, countmin_estimate
-    from ..operators.textstats import _tok_df
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tok_df(docs, "doc_id", "text")
-    sketch = countmin_build(toks, "tok", depth=4, width=1024)
+    toks = tokenize(docs, "text")
+    sketch = countmin_build(toks, "word", depth=4, width=1024)
     stops_w = ("the", "a", "of", "to", "and", "in", "is", "it")
     stops = spark.createDataFrame([(w,) for w in stops_w], "tok string")
     est = countmin_estimate(sketch, stops, "tok", depth=4, width=1024)
-    exact = (toks.filter(F.col("tok").isin(*stops_w))
-             .groupBy("tok").agg(F.count(F.lit(1)).alias("_nx")))
+    exact = (toks.filter(F.col("word").isin(*stops_w))
+             .groupBy("word").agg(F.count(F.lit(1)).alias("_nx")))
     n_total = toks.agg(F.count(F.lit(1)).alias("_N"))
     eps = F.lit(math.e / 1024.0)
     return (
-        est.join(exact, est.key == exact.tok, "left")
+        est.join(exact, est.key == exact.word, "left")
         .crossJoin(F.broadcast(n_total))
         .select(
             "key",
@@ -916,11 +895,10 @@ def q_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         "packer buys back.  Token counting is in-row HOF work.",
 )
 def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.textfn import tokens_array
     from ..operators.windows import grouped_running_sum
 
     docs = load_table(spark, sf_dir, "documents")
-    ntok = F.size(F.filter(tokens_array(F.col("text")), lambda t: t != ""))
+    ntok = F.size(tokens(F.col("text")))
     tok = docs.select("doc_id", ntok.cast("long").alias("n_tok"))
     cum = grouped_running_sum(tok, "n_tok", [], ["doc_id"], out="cum")
     # integer `div`, not double division + cast: exact past 2^53 tokens,
@@ -985,11 +963,9 @@ def q_inference_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dedup/upsert on.",
 )
 def q_text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.textfn import tokens_array
-
     size, stride = 64, 48
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(tokens_array(F.col("text")), lambda t: t != "")
+    toks = tokens(F.col("text"))
     starts = F.when(
         F.size("toks") > 0,
         F.sequence(F.lit(0), F.size("toks") - 1, F.lit(stride)),
@@ -1035,19 +1011,17 @@ def q_text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "matches the oracle exactly).",
 )
 def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.textfn import tokens_array
     from ..operators.windows import grouped_running_sum
 
     docs = load_table(spark, sf_dir, "documents")
     wc = (
-        docs.select(F.explode(tokens_array(F.col("text"))).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("tok")
+        tokenize(docs, "text")
+        .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("_one", F.lit(1))
     )
     ranked = grouped_running_sum(
-        wc, "_one", [], [("cnt", "desc"), "tok"], out="rnk")
+        wc, "_one", [], [("cnt", "desc"), "word"], out="rnk")
     return ranked.agg(
         F.round(-F.expr("regr_slope(ln(cnt), ln(rnk))"), 4).alias("zipf_alpha"),
         F.round(F.expr("regr_r2(ln(cnt), ln(rnk))"), 4).alias("fit_r2"),
@@ -1146,12 +1120,10 @@ def q_split_train_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ..functions.textfn import tokens_array
-
     docs = load_table(spark, sf_dir, "documents")
-    kept = (docs.withColumn("_p", quality_prob_column())
+    kept = (docs.withColumn("_p", quality_prob("text"))
             .filter(F.col("_p") >= 0.7))
-    toks = F.filter(tokens_array(F.col("text")), lambda t: t != "")
+    toks = tokens(F.col("text"))
     fp = kept.withColumn("_fp", F.md5(F.concat_ws(" ", toks).cast("binary")))
     occ = F.row_number().over(Window.partitionBy("_fp").orderBy("doc_id"))
     surv = fp.withColumn("_occ", occ).filter(F.col("_occ") == 1)
@@ -1562,15 +1534,13 @@ def q_text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         "|sources|^2/2 rows, a broadcast.",
 )
 def q_text_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.textstats import _tok_df
-
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tok_df(docs, "doc_id", "text")
+    toks = tokenize(docs, "text", keep=["doc_id"])
     st = toks.join(docs.select("doc_id", "source"), "doc_id")
-    cnt = st.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
+    cnt = st.groupBy("source", "word").agg(F.count(F.lit(1)).alias("c"))
     tot = cnt.groupBy("source").agg(F.sum("c").alias("t"))
     probs = (cnt.join(tot, "source")
-             .select("source", "tok",
+             .select("source", "word",
                      (F.col("c") / (F.lit(1.0) * F.col("t"))).alias("p")))
     srcs = probs.select("source").distinct()
     pairs = (srcs.alias("a").crossJoin(srcs.alias("b"))
@@ -1580,7 +1550,7 @@ def q_text_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = (probs.join(F.broadcast(pairs),
                     (F.col("source") == F.col("s1"))
                     | (F.col("source") == F.col("s2")))
-         .groupBy("s1", "s2", "tok")
+         .groupBy("s1", "s2", "word")
          .agg(F.sum(F.when(F.col("source") == F.col("s1"),
                            F.col("p")).otherwise(0.0)).alias("p1"),
               F.sum(F.when(F.col("source") == F.col("s2"),
@@ -1709,16 +1679,16 @@ def _bpe_encode(col, merges=None):
     (default _BPE_MERGES) — the PRODUCTION expression, shared with the
     reference-equivalence tests (tests/test_graph_text.py: fixed-table
     cases + a random-merge-table fuzz) so the intent pin can never
-    detach from what the query actually runs (r11 review).
+    detach from what the query actually runs.
 
-    Scale caveat (documented r11 VERDICT): one chained ``F.replace``
+    Scale caveat: one chained ``F.replace``
     per merge is O(|merges|) PLAN DEPTH — exact and fully codegen'd at
     a fixture-sized table (12 merges), but not viable at a real 50k-
     merge vocab (analysis time / codegen limits grow with every merge).
     For vocabulary-scale tokenization use ``bpe_encode_batched``
     (mapInPandas, broadcast merge table, parity-pinned against this
     form) — see the crossover rule in its docstring."""
-    norm = F.lower(F.regexp_replace(col, "[^A-Za-z ]", ""))
+    norm = normalize_line(col)
     enc = F.regexp_replace(norm, "(.)", " $1 ")
     for a, b in (merges if merges is not None else _BPE_MERGES):
         enc = F.replace(enc, F.lit(f" {a}  {b} "), F.lit(f" {a}{b} "))
@@ -1882,7 +1852,7 @@ def _bpe_budget_oracle() -> str:
 )
 def q_text_token_budget_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.lower(F.regexp_replace(F.col("text"), "[^A-Za-z ]", ""))
+    norm = normalize_line(F.col("text"))
     enc = _bpe_encode(F.col("text"))
     perdoc = docs.select(
         "source",

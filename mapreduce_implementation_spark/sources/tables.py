@@ -11,6 +11,7 @@ pruning / filter pushdown (check via plans.inspect).
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,25 +64,40 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
-def partitioned_events_path(spark: SparkSession, sf_dir: str,
-                            base: str | None = None) -> str:
+def derived_copy(sf_dir: str, table: str, purpose: str,
+                 write: Callable[[str], None]) -> str:
+    """Path of a write-once copy derived from fixture ``table``; calls
+    ``write(path)`` to build it unless the path already holds a
+    ``_SUCCESS`` marker (reuse across queries and sessions).
+
+    The key is the sf dir name, the table, ``purpose`` and the source's
+    ``st_mtime_ns`` and size, so a regenerated fixture gets a new copy
+    instead of silently serving the old rows.  Copies live under
+    ``$SPARK_GRAFT_DERIVED`` (default ``/tmp/spark_graft_derived``).
+    """
+    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+    root = os.environ.get("SPARK_GRAFT_DERIVED", "/tmp/spark_graft_derived")
+    sf_name = os.path.basename(sf_dir.rstrip("/")) or "sf"
+    path = os.path.join(root, sf_name, f"{table}.{purpose}.{st.st_mtime_ns}_{st.st_size}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        write(path)
+    return path
+
+
+def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once) a date-partitioned copy of ``events`` —
     ``.../event_date=YYYY-MM-DD/*.parquet`` — and return its path.
 
     This is the 100 TB table layout discipline: facts land partitioned by
     ingestion date so date predicates prune whole directories at plan
-    time (PartitionFilters) instead of scanning the full table.  The copy
-    is keyed by sf dir and written write-once (idempotent across queries
-    in a session and across sessions).
+    time (PartitionFilters) instead of scanning the full table.
     """
-    base = base or os.environ.get("SPARK_GRAFT_DERIVED", "/tmp/spark_graft_derived")
-    sf_name = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    out = os.path.join(base, sf_name, "events_by_date")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        events = load_table(spark, sf_dir, "events")
-        (events.withColumn("event_date", F.to_date("ts"))
-         .write.mode("overwrite").partitionBy("event_date").parquet(out))
-    return out
+    def write(path: str) -> None:
+        (load_table(spark, sf_dir, "events")
+         .withColumn("event_date", F.to_date("ts"))
+         .write.mode("overwrite").partitionBy("event_date").parquet(path))
+
+    return derived_copy(sf_dir, "events", "by_date", write)
 
 
 def read_text_dir(spark: SparkSession, path: str) -> DataFrame:

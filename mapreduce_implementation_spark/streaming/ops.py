@@ -21,11 +21,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..functions.textfn import tokens_array
+from ..functions.textfn import tokens
+from ..operators.text import tokenize
 
 __all__ = [
     "streaming_word_count", "windowed_event_agg", "sessionize_stream",
-    "running_user_totals_stateful", "running_user_totals_tws",
+    "running_user_totals_stateful",
     "dedup_stream", "click_attribution_join",
     "curate_stream", "cdc_upsert_sink", "frontier_stream",
 ]
@@ -35,8 +36,7 @@ def streaming_word_count(lines: DataFrame, col: str = "value") -> DataFrame:
     """Job A over an unbounded stream: same tokenizer expressions, running
     counts (update/complete mode)."""
     return (
-        lines.select(F.explode(tokens_array(F.col(col))).alias("word"))
-        .filter(F.col("word") != "")
+        tokenize(lines, col)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -181,65 +181,13 @@ def curate_stream(docs: DataFrame, min_quality: float = 0.7) -> DataFrame:
     from ..operators.textstats import quality_prob
 
     p = quality_prob("text")
-    norm = F.concat_ws(" ", F.filter(tokens_array(F.col("text")),
-                                     lambda t: t != ""))
+    norm = F.concat_ws(" ", tokens(F.col("text")))
     return (
         docs.withColumn("_p", p).filter(F.col("_p") >= min_quality)
         .withColumn("_fp", F.md5(norm.cast("binary")))
         .dropDuplicates(["_fp"])
         .select("doc_id", "lang", "source",
                 F.round("_p", 6).alias("p_quality"))
-    )
-
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """transformWithStateInPandas (the Spark 4 arbitrary-state API —
-    successor of applyInPandasWithState): per-user running (count, sum)
-    emitted every micro-batch, same semantics as
-    ``running_user_totals_stateful``.
-
-    Differences that matter at scale: state lives in a named
-    ``ValueState`` managed by the RocksDB state store (required by this
-    operator — set ``spark.sql.streaming.stateStore.providerClass`` to
-    the RocksDB provider), which spills to disk and changelogs to the
-    checkpoint instead of living on the JVM heap like the HDFS-backed
-    provider — the difference between O(active keys) memory and
-    O(active keys) *disk* with bounded memory at 10^9 keys.  Timers and
-    TTL exist on the same handle for session-style evictions.
-
-    Container note: the operator's Python driver worker requires
-    google.protobuf (the state-server wire protocol); this container
-    lacks it, so the end-to-end test probes and skips — the plumbing
-    here is the real production form, verified up to worker init.
-    """
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class Proc(StatefulProcessor):
-        def init(self, handle):
-            self._state = handle.getValueState("totals", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                                "total_value": [round(total, 2)]})
-
-        def close(self):
-            pass
-
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=Proc(),
-            outputStructType=_OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
     )
 
 

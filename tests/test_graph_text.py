@@ -201,22 +201,22 @@ def test_countmin_overestimate_bounds(spark):
     from mapreduce_implementation_spark.operators.sketch import (
         countmin_build, countmin_estimate,
     )
-    from mapreduce_implementation_spark.operators.textstats import _tok_df
+    from mapreduce_implementation_spark.operators.text import tokenize
     from mapreduce_implementation_spark.sources.tables import load_table
     from tests.conftest import SF_DIR_01
 
     docs = load_table(spark, SF_DIR_01, "documents")
-    toks = _tok_df(docs, "doc_id", "text").cache()
+    toks = tokenize(docs, "text", keep=["doc_id"]).cache()
     n_stream = toks.count()
-    sketch = countmin_build(toks, "tok", depth=4, width=1024)
+    sketch = countmin_build(toks, "word", depth=4, width=1024)
     probe_words = ["the", "a", "of", "to", "and", "in", "is", "it",
                    "spark", "zzz_absent_key"]
     probes = spark.createDataFrame([(w,) for w in probe_words], "tok string")
     est = {r["key"]: r["est"]
            for r in countmin_estimate(sketch, probes, "tok",
                                       depth=4, width=1024).collect()}
-    exact = {r["tok"]: r["n"] for r in
-             toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n")).collect()}
+    exact = {r["word"]: r["n"] for r in
+             toks.groupBy("word").agg(F.count(F.lit(1)).alias("n")).collect()}
     slack = math.e / 1024 * n_stream
     for w in probe_words:
         t = exact.get(w, 0)
@@ -253,8 +253,8 @@ def test_sequence_packing_invariants(spark):
     0, token totals are conserved, and no sequence overflows 2048 by
     more than one straddling document (each doc lands in the bin of its
     starting offset)."""
+    from mapreduce_implementation_spark.operators.text import tokenize
     from mapreduce_implementation_spark.registry import all_specs
-    from mapreduce_implementation_spark.operators.textstats import _tok_df
     from mapreduce_implementation_spark.sources.tables import load_table
     from tests.conftest import SF_DIR_01
 
@@ -262,7 +262,7 @@ def test_sequence_packing_invariants(spark):
     rows = {r["seq_id"]: r for r in out.collect()}
     assert sorted(rows) == list(range(len(rows))), "seq_ids must be contiguous"
     docs = load_table(spark, SF_DIR_01, "documents")
-    total = _tok_df(docs, "doc_id", "text").count()
+    total = tokenize(docs, "text").count()
     assert sum(r["n_tokens"] for r in rows.values()) == total
     max_doc = (docs.select(
         F.size(F.split(F.lower(F.regexp_replace("text", "[^A-Za-z ]", "")), " "))

@@ -14,6 +14,7 @@ import string
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from mapreduce_implementation_spark.functions.textfn import tokens
 from mapreduce_implementation_spark.operators.sort import distributed_sort
 from mapreduce_implementation_spark.operators.text import tokenize
 from tests.conftest import shuffle_partitions
@@ -30,20 +31,27 @@ def reference_tokenize(line: str) -> list[str]:
     return out
 
 
-# printable ASCII minus newline (the reference reads line-at-a-time)
-_ascii_line = st.text(
-    alphabet=string.ascii_letters + string.digits + string.punctuation + " \t",
+# printable ASCII minus newline (the reference reads line-at-a-time),
+# plus input the fixtures never had: non-ASCII letters whose case
+# mappings land on ASCII (U+0130 I WITH DOT, U+212A KELVIN SIGN, U+017F
+# LONG S) or widen (sharp s), NBSP, CR and tab.  The reference's C
+# isalpha keeps ASCII letters only, so all of them must vanish.
+_line = st.text(
+    alphabet=(string.ascii_letters + string.digits + string.punctuation
+              + " \t\r\u00a0\u00e9\u0130\u00df\u212a\u017f"),
     min_size=0, max_size=120,
 )
 
 
 @settings(max_examples=30, deadline=None)
-@given(st.lists(_ascii_line, min_size=1, max_size=8))
+@given(st.lists(_line, min_size=1, max_size=8))
 def test_tokenizer_matches_reference_python(spark, lines):
-    df = spark.createDataFrame([(l,) for l in lines], ["value"])
+    df = spark.createDataFrame([(i, l) for i, l in enumerate(lines)], ["i", "value"])
     got = [r["word"] for r in tokenize(df).collect()]
     want = [w for l in lines for w in reference_tokenize(l)]
     assert sorted(got) == sorted(want)
+    arrays = {r["i"]: r["t"] for r in df.select("i", tokens(F.col("value")).alias("t")).collect()}
+    assert [arrays[i] for i in range(len(lines))] == [reference_tokenize(l) for l in lines]
 
 
 @settings(max_examples=10, deadline=None)

@@ -210,3 +210,34 @@ def test_jsonl_corrupt_records_quarantined_not_fatal(spark, tmp_path):
     finally:
         df.unpersist()
         os.remove(p)
+
+
+def test_derived_copy_follows_a_rewritten_source(spark, tmp_path, monkeypatch):
+    """A regenerated fixture table must not be served from the copy
+    derived from its previous version: the derived-copy key includes the
+    source's mtime and size, not only the sf directory name."""
+    import datetime
+    import inspect
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreduce_implementation_spark.sources.tables import partitioned_events_path
+
+    assert "base" not in inspect.signature(partitioned_events_path).parameters
+    monkeypatch.setenv("SPARK_GRAFT_DERIVED", str(tmp_path / "derived"))
+    sf = tmp_path / "sf_tiny"
+    sf.mkdir()
+
+    def events(ids):
+        day = datetime.datetime(2024, 1, 8, tzinfo=datetime.timezone.utc)
+        pq.write_table(pa.table({
+            "event_id": pa.array(ids, pa.int64()),
+            "ts": pa.array([day + datetime.timedelta(days=i) for i in ids],
+                           pa.timestamp("us", tz="UTC")),
+        }), str(sf / "events.parquet"))
+        path = partitioned_events_path(spark, str(sf))
+        return sorted(r["event_id"] for r in spark.read.parquet(path).collect())
+
+    assert events([0, 1, 2]) == [0, 1, 2]
+    assert events([3, 4, 5, 6, 7]) == [3, 4, 5, 6, 7]

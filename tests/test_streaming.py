@@ -248,54 +248,6 @@ def test_checkpoint_resume_exactly_once(spark):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_tws_running_totals_matches_stateful_twin(spark, events_dir):
-    """transformWithStateInPandas (Spark 4 arbitrary-state API) computes
-    the same per-user running totals as the applyInPandasWithState twin
-    and the batch aggregate.  Requires the RocksDB state store — set for
-    this query only and restored after.
-
-    Environment gate: the operator's Python driver worker speaks a
-    protobuf protocol to the JVM state server; without google.protobuf
-    installed the worker crashes at init (verified in this container),
-    so the test skips rather than silently passing — same honesty
-    discipline as the PIL-gated image decode."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas worker needs protobuf (not in container)")
-    from mapreduce_implementation_spark.streaming.ops import (
-        running_user_totals_tws,
-    )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try:
-        schema = load_table(spark, SF_DIR_001, "events").schema
-        stream = spark.readStream.schema(schema).parquet(events_dir)
-        _run_stream(running_user_totals_tws(stream), "tws_out", "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    got = {r["user_id"]: (r["n_events"], r["total_value"])
-           for r in spark.sql(
-               "SELECT user_id, max_by(n_events, n_events) AS n_events,"
-               " max_by(total_value, n_events) AS total_value"
-               " FROM tws_out GROUP BY user_id").collect()}
-    e = load_table(spark, SF_DIR_001, "events")
-    want = {r["user_id"]: (r["n"], r["t"]) for r in
-            e.groupBy("user_id").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.round(F.sum("value"), 2).alias("t")).collect()}
-    assert set(got) == set(want)
-    for u in want:
-        assert got[u][0] == want[u][0]
-        assert abs(got[u][1] - want[u][1]) < 0.05
-
-
 def test_cdc_upsert_sink_applies_batches_in_order(spark, tmp_path):
     """foreachBatch MERGE sink: two micro-batches (maxFilesPerTrigger=1)
     applied sequentially to a parquet snapshot — batch 2 updates a row
