@@ -1,9 +1,30 @@
-"""Distributed connected components over a pair/edge DataFrame.
+"""Graph operators over edge-list DataFrames: connected components,
+PageRank (global and personalized), HITS, k-core, label propagation,
+BFS / weighted shortest paths and triangle counts.
 
-The LLM-dedup pipeline's clustering step: near-dup *pairs* (MinHash / LSH /
-Jaccard joins, operators/dedup.py) become dedup *clusters* by computing the
-connected components of the pair graph and keeping min(doc_id) per component
-as the canonical representative.
+One body per operator.  Each operator is a declarative round loop over
+a persisted, hash-partitioned edge table: per round one join of the
+O(nodes) state vector onto the edges, one keyed aggregate and one keyed
+merge, with ``localCheckpoint`` truncating the lineage between rounds.
+This is the partitioned-edge-table join shape SPARQL-on-Spark runs graph
+patterns as; it holds at any edge count and runs no job to choose a
+physical plan while a frame is being built.  Spark picks each join's
+strategy itself (``spark.sql.autoBroadcastJoinThreshold`` at plan time,
+AQE's runtime conversion after).
+
+The one exception is ``connected_components``, which still resolves a
+canonical edge list of at most ``_DENSE_EDGE_LIMIT`` rows in one
+vectorized Arrow task, chosen by the capped count in ``_dense_probe``.
+It sits on the near-dup clustering path (``dedup.cluster_representatives``)
+where the star-contraction loop alone measured about 22% slower per
+pass; it goes single-path together with the removal of that caller's
+eager jobs.
+
+Connected components is the LLM-dedup pipeline's clustering step:
+near-dup *pairs* (MinHash / LSH / Jaccard joins, operators/dedup.py)
+become dedup *clusters* by computing the connected components of the
+pair graph and keeping min(doc_id) per component as the canonical
+representative.
 
 Algorithm: the alternating **large-star / small-star** method of Kiveris et
 al., "Connected Components in MapReduce and Beyond" (SoCC'14) — the standard
@@ -36,15 +57,12 @@ __all__ = ["connected_components", "pagerank", "label_propagation",
 # silently returning a half-contracted clustering would be wrong.
 _MAX_ROUNDS = 25
 
-# Every physical-mode choice below is made from the input, never by the
-# caller.  An edge list of at most this many rows (integral keys) runs
-# as one vectorized Arrow task (see _dense_probe); a graph of at most
-# _BROADCAST_NODE_LIMIT nodes broadcasts its O(nodes) score vector.
+# connected_components resolves a canonical edge list of at most this
+# many rows (integral keys) in one vectorized Arrow task (see _dense_probe).
 _DENSE_EDGE_LIMIT = 2_000_000
-_BROADCAST_NODE_LIMIT = 1_000_000
 
-# hits' declarative chain renormalizes and truncates lineage every this
-# many full rounds (the magnitude bound is in its docstring).
+# hits renormalizes and truncates lineage every this many full rounds
+# (the magnitude bound is in its docstring).
 _HITS_NORM_EVERY = 2
 
 
@@ -207,131 +225,26 @@ def connected_components(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
 _INTEGRAL = ("tinyint", "smallint", "int", "bigint")
 
 
-def _dense_probe(e: DataFrame, key_cols: tuple[str, str],
-                 weight_col: str | None = None) -> bool:
-    """The ONE auto-gate for every dense Arrow fast path in this module
-    (pagerank/hits/label_propagation/bfs/sssp/kcore share it so a
-    contract fix lands everywhere at once): BOTH vertex key columns
-    must be integral (the int64 relabeling contract), ``weight_col`` —
-    when given — must be integral too (sssp's exact min-plus truncates
-    fractional weights, so float-weight callers stay declarative), and
-    the edge list must fit one Arrow batch (a ``_DENSE_EDGE_LIMIT``-capped
-    count — never scans more than limit+1 rows of the persisted frame)."""
+def _dense_probe(e: DataFrame, key_cols: tuple[str, str]) -> bool:
+    """connected_components' gate for its dense Arrow fast path: BOTH
+    vertex key columns must be integral (the int64 relabeling contract)
+    and the edge list must fit one Arrow batch (a ``_DENSE_EDGE_LIMIT``-
+    capped count — never scans more than limit+1 rows of the persisted
+    frame)."""
     dtypes = {f.name: f.dataType.simpleString() for f in e.schema.fields}
     if any(dtypes[c] not in _INTEGRAL for c in key_cols):
         return False
-    if weight_col is not None and dtypes[weight_col] not in _INTEGRAL:
-        return False
     return e.limit(_DENSE_EDGE_LIMIT + 1).count() <= _DENSE_EDGE_LIMIT
-
-
-def _broadcast_hint(n1: DataFrame):
-    """F.broadcast for a node set of at most ``_BROADCAST_NODE_LIMIT``
-    rows (LIMIT-capped count), identity past it: pagerank's and hits'
-    score vector then joins by key as a shuffled hash join."""
-    small = (n1.limit(_BROADCAST_NODE_LIMIT + 1).count()
-             <= _BROADCAST_NODE_LIMIT)
-    return F.broadcast if small else (lambda df: df)
 
 
 def _relabel(vs, arr):
     """Indices of ``arr``'s values in the SORTED unique vertex array —
     vectorized np.searchsorted, not a Python dict: at the 2M-row batch
     cap a dict .map() costs millions of interpreter-level lookups
-    inside the task these fast paths exist to shrink."""
+    inside the task this fast path exists to shrink."""
     import numpy as np
 
     return np.searchsorted(vs, arr)
-
-
-def _pagerank_dense(e: DataFrame, n1: DataFrame, cnt: DataFrame,
-                    iters: int, damping: float,
-                    rs: DataFrame | None = None) -> DataFrame:
-    """pagerank()'s dimension-sized fast path (the hits()/_hits_dense
-    precedent): the whole damped power iteration as ONE vectorized Arrow
-    task over the aggregated edge list — bincount scatter-add matvecs,
-    O(edges) time, O(nodes) memory, executor-side (never the driver).
-    The global node count rides in as a broadcast column so teleport
-    mass and the uniform start are exact; isolated nodes (no edges at
-    all) join back with their closed-form stationary rank (1-d)/n.
-
-    ``rs`` (r8) personalizes the walk the same way the declarative
-    chain does: the per-node reset mass rides INTO the Arrow batch as
-    two extra edge columns (the src's and dst's reset value — exactly
-    how ``_n`` rides in for the uniform case), so the O(nodes) reset
-    state never needs its own transport; isolated nodes join back with
-    their closed form (1-d)*s_v.  A source whose out-weights sum to 0
-    is masked out of the contribution scatter — the declarative chain's
-    ``w/_ow`` divide-by-zero yields NULL which F.sum skips, and the
-    mask reproduces that exactly instead of letting 0/0 = NaN poison
-    every rank (ADVICE r7)."""
-    import pandas as pd
-
-    personalized = rs is not None
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        # sorted rows => deterministic float accumulation order
-        pdf = pdf.sort_values(["src", "dst"], kind="mergesort")
-        vs = np.unique(np.concatenate(
-            [pdf["src"].to_numpy(), pdf["dst"].to_numpy()]))
-        si = _relabel(vs, pdf["src"].to_numpy())
-        di = _relabel(vs, pdf["dst"].to_numpy())
-        w = pdf["w"].to_numpy(dtype="float64")
-        m = len(vs)
-        ow = np.bincount(si, weights=w, minlength=m)
-        # zero-out-weight sources contribute nothing (declarative
-        # parity: w/_ow is NULL on _ow == 0 and F.sum skips NULLs)
-        nz = ow[si] != 0.0
-        siz, diz, wz, owz = si[nz], di[nz], w[nz], ow[si][nz]
-        if personalized:
-            s = np.zeros(m)
-            s[si] = pdf["_s_src"].to_numpy(dtype="float64")
-            s[di] = pdf["_s_dst"].to_numpy(dtype="float64")
-            r = s.copy()
-            tele = (1.0 - damping) * s
-        else:
-            n_total = float(pdf["_n"].iloc[0])
-            r = np.full(m, 1.0 / n_total)
-            tele = (1.0 - damping) / n_total
-        for _ in range(iters):
-            contrib = np.bincount(diz, weights=r[siz] * wz / owz,
-                                  minlength=m)
-            r = tele + damping * contrib
-        return pd.DataFrame({"v": vs.astype("int64"), "r": r})
-
-    if personalized:
-        s_src = rs.select(F.col("v").alias("src"),
-                          F.col("_rs").alias("_s_src"))
-        s_dst = rs.select(F.col("v").alias("dst"),
-                          F.col("_rs").alias("_s_dst"))
-        scored = (
-            e.join(F.broadcast(s_src), "src", "left")
-            .join(F.broadcast(s_dst), "dst", "left")
-            .select("src", "dst", "w",
-                    F.coalesce("_s_src", F.lit(0.0)).alias("_s_src"),
-                    F.coalesce("_s_dst", F.lit(0.0)).alias("_s_dst"))
-            .groupBy(F.lit(1).alias("_g"))
-            .applyInPandas(solve, "v bigint, r double"))
-        # rs is node-complete by construction (pagerank() builds it as
-        # n1 LEFT JOIN reset with a 0.0 coalesce), so the densify joins
-        # the isolated-node closed form straight off rs — re-joining n1
-        # would be a third tiny-frame join per query for nothing (r8
-        # VERDICT item 4: seed-build overhead).
-        return (rs.join(scored, "v", "left")
-                .select("v", F.coalesce(
-                    F.col("r"),
-                    (F.lit(1.0) - F.lit(damping))
-                    * F.col("_rs")).alias("r")))
-    scored = (e.crossJoin(F.broadcast(cnt))
-              .groupBy(F.lit(1).alias("_g"))
-              .applyInPandas(solve, "v bigint, r double"))
-    return (n1.crossJoin(F.broadcast(cnt))
-            .join(scored, "v", "left")
-            .select("v", F.coalesce(
-                F.col("r"),
-                (F.lit(1.0) - F.lit(damping)) / F.col("_n")).alias("r")))
 
 
 def pagerank(edges: DataFrame, nodes: DataFrame, iters: int = 5,
@@ -352,43 +265,22 @@ def pagerank(edges: DataFrame, nodes: DataFrame, iters: int = 5,
     expensive edge build runs once, not once per iteration.
     Dangling-node mass is dropped (the standard simplification); node
     count enters the plan as a broadcast 1-row aggregate, never a Python
-    scalar.
-
-    Rank-vector strategy: the vector is O(nodes).  For dimension-sized
-    graphs (the 25-node trade graph) it broadcasts — zero shuffle per
-    iteration.  At web-scale node counts a broadcast exceeds executor
-    memory, so past ``_BROADCAST_NODE_LIMIT`` nodes (a LIMIT-capped
-    count, :func:`_broadcast_hint`) the vector joins by ``src`` as a
-    plain shuffled hash join instead (same result, one extra exchange
-    per iteration — the Pregel-style layout).  Both modes are
-    oracle-identical —
-    tests/test_graph_text.py::test_pagerank_shuffle_mode_matches_broadcast.
-
-    Dense fast path (the hits() precedent, r7): when the AGGREGATED edge
-    list passes :func:`_dense_probe` (≤ ``_DENSE_EDGE_LIMIT`` rows,
-    integral keys), the whole iteration runs instead as ONE vectorized
-    ``applyInPandas`` task — see :func:`_pagerank_dense`.  Personalized
-    walks qualify too (r8): the reset distribution is O(nodes) state,
-    but only the edge-touched slice of it matters inside the batch, and
-    that slice rides in as two per-edge columns; isolated nodes keep
-    their closed-form (1-d)*s_v at the densify.  All three physical modes
-    agree to 1e-9 (test_pagerank_shuffle_mode_matches_broadcast;
-    reset parity in test_personalized_pagerank_dense_matches).
+    scalar.  The O(nodes) rank vector joins by ``src`` without a hint:
+    Spark broadcasts it when it is small and shuffles it (the
+    Pregel-style layout) when it is not, and no job runs to decide.
 
     Reference parity: none — mapreduce.c has no graph surface; this is
     north-star iterative-analytics surface (the PageRank-in-MapReduce
     formulation of Page et al. / the classic Hadoop example, re-expressed
     declaratively).
     """
-    # iters=0 would expose a dense/declarative discrepancy in the
-    # pre-iteration state (raw reset mass vs the closed-form densify) —
-    # a zero-round "PageRank" has no meaning anyway, so reject it at
-    # the contract instead of letting the physical mode pick an answer
+    # a zero-round "PageRank" has no meaning (the start vector is not a
+    # stationary estimate), so reject it at the contract
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    # NULL-weight/endpoint edges are dropped up front: the declarative
-    # chain's F.sum/joins skip them anyway (dropping is equivalence-
-    # preserving), and the dense numpy path must never see NaN
+    # NULL-weight/endpoint edges are dropped up front: the chain's
+    # F.sum/joins skip them anyway, so dropping is equivalence-preserving
+    # and keeps them out of the persisted edge table
     e = tracked_persist(
         edges.select("src", "dst", F.col("w").cast("double").alias("w"))
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull()
@@ -401,14 +293,7 @@ def pagerank(edges: DataFrame, nodes: DataFrame, iters: int = 5,
             n1.join(reset.select("v", F.col("s").cast("double").alias("_rs")),
                     "v", "left")
             .select("v", F.coalesce("_rs", F.lit(0.0)).alias("_rs")))
-    # dimension-sized dense fast path (see _pagerank_dense / hits()).
-    # Personalized walks qualify too (r8): the O(nodes) reset state
-    # rides into the Arrow batch as two per-edge columns, so the probe
-    # is the same edge-list-fits-one-batch test either way.
-    if _dense_probe(e, ("src", "dst")):
-        return _pagerank_dense(e, n1, cnt, iters, damping, rs=rs)
     outw = tracked_persist(e.groupBy("src").agg(F.sum("w").alias("_ow")))
-    hint = _broadcast_hint(n1)
     if reset is None:
         ranks = n1.crossJoin(F.broadcast(cnt)).select(
             "v", (F.lit(1.0) / F.col("_n")).alias("r"))
@@ -417,15 +302,14 @@ def pagerank(edges: DataFrame, nodes: DataFrame, iters: int = 5,
     for _i in range(iters):
         contrib = (
             e.join(outw, "src")
-            .join(hint(ranks), F.col("src") == F.col("v"))
+            .join(ranks, F.col("src") == F.col("v"))
             .groupBy("dst")
             # try_divide: a source whose weights sum to exactly 0 (w=0.0
             # edges pass the isNotNull filter) contributes nothing —
             # NULL is skipped by F.sum.  A bare `/` would THROW
             # DIVIDE_BY_ZERO under ANSI mode (Spark 4 default) and
             # silently NULL under non-ANSI; try_divide pins the
-            # contribute-nothing semantics in both configs, matching
-            # the dense path's zero-out-weight mask (ADVICE r7).
+            # contribute-nothing semantics in both configs.
             .agg(F.sum(F.try_divide(F.col("r") * F.col("w"),
                                     F.col("_ow"))).alias("_s"))
         )
@@ -453,40 +337,6 @@ def pagerank(edges: DataFrame, nodes: DataFrame, iters: int = 5,
     return ranks
 
 
-def _kcore_dense(e: DataFrame, k: int, rounds: int) -> DataFrame:
-    """kcore()'s dimension-sized fast path (the graph-family precedent):
-    all peeling rounds in ONE vectorized Arrow task over the canonical
-    edge list — per round one pair of bincounts for the symmetric
-    degree and a boolean mask restricting edges to surviving endpoints.
-    Pure integer math, so exactly the declarative semantics including
-    mid-cascade nodes (the output keeps every node with a surviving
-    edge, even below k, exactly like the final groupBy)."""
-    import pandas as pd
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        vs = np.unique(np.concatenate(
-            [pdf["u"].to_numpy(), pdf["v"].to_numpy()]))
-        ui = _relabel(vs, pdf["u"].to_numpy())
-        vi = _relabel(vs, pdf["v"].to_numpy())
-        m = len(vs)
-        alive = np.ones(len(ui), dtype=bool)
-        for _ in range(rounds):
-            deg = (np.bincount(ui[alive], minlength=m)
-                   + np.bincount(vi[alive], minlength=m))
-            keep = deg >= k
-            alive &= keep[ui] & keep[vi]
-        deg = (np.bincount(ui[alive], minlength=m)
-               + np.bincount(vi[alive], minlength=m))
-        sel = deg > 0
-        return pd.DataFrame({"node": vs[sel].astype("int64"),
-                             "core_deg": deg[sel].astype("int64")})
-
-    return (e.groupBy(F.lit(1).alias("_g"))
-            .applyInPandas(solve, "node bigint, core_deg bigint"))
-
-
 def kcore(edges: DataFrame, a_col: str, b_col: str, k: int,
           rounds: int) -> DataFrame:
     """k-core decomposition by synchronous iterative peeling: repeatedly
@@ -509,20 +359,13 @@ def kcore(edges: DataFrame, a_col: str, b_col: str, k: int,
     sides agree even mid-cascade); production at unknown diameter swaps
     the fixed count for connected_components' signature-convergence
     loop.  Lineage truncates per round (see pagerank; last round stays
-    lazy).  Canonical edge lists that pass :func:`_dense_probe` peel in
-    one vectorized task — :func:`_kcore_dense`.
+    lazy).
     """
     e = tracked_persist(
         edges.select(F.least(F.col(a_col), F.col(b_col)).alias("u"),
                      F.greatest(F.col(a_col), F.col(b_col)).alias("v"))
         .filter(F.col("u") < F.col("v"))
         .distinct())
-    if _dense_probe(e, ("u", "v")):
-        # int64 Arrow output cast back to the input key type: both
-        # physical modes must return identical schemas (ADVICE r7)
-        kt = e.schema["u"].dataType
-        return (_kcore_dense(e, k, rounds)
-                .select(F.col("node").cast(kt).alias("node"), "core_deg"))
     for _i in range(rounds):
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         keep = (sym.groupBy("u").agg(F.count(F.lit(1)).alias("_d"))
@@ -571,58 +414,6 @@ def triangle_count(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
     return per_node
 
 
-def _label_propagation_dense(e: DataFrame, n1: DataFrame,
-                             iters: int) -> DataFrame:
-    """label_propagation()'s dimension-sized fast path (the
-    hits()/pagerank() precedent): all rounds in ONE vectorized Arrow
-    task.  Per round the (dst, label) weight sums come from one
-    np.unique over combined int64 keys + bincount (O(E log E), no dense
-    matrix), and the argmax-with-min-label-tie is a lexsort picking the
-    first row per dst — node ids relabeled through the SORTED unique
-    vertex array, so smallest-index == smallest-label and the tie order
-    matches the declarative window exactly.  Nodes receiving no mass
-    revert to their own id each round, mirroring the declarative
-    coalesce."""
-    import pandas as pd
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        # sorted rows => deterministic float accumulation order
-        pdf = pdf.sort_values(["src", "dst"], kind="mergesort")
-        vs = np.unique(np.concatenate(
-            [pdf["src"].to_numpy(), pdf["dst"].to_numpy()]))
-        si = _relabel(vs, pdf["src"].to_numpy())
-        di = _relabel(vs, pdf["dst"].to_numpy())
-        w = pdf["w"].to_numpy(dtype="float64")
-        m = len(vs)
-        lab = np.arange(m)
-        for _ in range(iters):
-            key = di.astype(np.int64) * m + lab[si]
-            uk, inv = np.unique(key, return_inverse=True)
-            s = np.bincount(inv, weights=w)
-            dsts = uk // m
-            labs = uk % m
-            order = np.lexsort((labs, -s, dsts))
-            du = dsts[order]
-            first = np.ones(len(du), dtype=bool)
-            first[1:] = du[1:] != du[:-1]
-            nxt = np.arange(m)
-            nxt[du[first]] = labs[order][first]
-            lab = nxt
-        return pd.DataFrame({"v": vs.astype("int64"),
-                             "label": vs[lab].astype("int64")})
-
-    scored = (e.groupBy(F.lit(1).alias("_g"))
-              .applyInPandas(solve, "v bigint, label bigint"))
-    # int64 Arrow output cast back to the node key type: both physical
-    # modes must return identical schemas (ADVICE r7)
-    kt = n1.schema["v"].dataType
-    return (n1.join(scored, "v", "left")
-            .select("v", F.coalesce(F.col("label").cast(kt),
-                                    F.col("v")).alias("label")))
-
-
 def label_propagation(edges: DataFrame, nodes: DataFrame,
                       iters: int = 5) -> DataFrame:
     """Synchronous weighted label propagation (community detection,
@@ -641,41 +432,19 @@ def label_propagation(edges: DataFrame, nodes: DataFrame,
     construction.  Synchronous update + min-label tie-break makes the
     fixed iteration count exactly reproducible (and therefore
     oracle-able), unlike the asynchronous/random-order formulation.
-
-    Dense fast path (the hits()/pagerank() precedent, r7): when the
-    aggregated edge list passes :func:`_dense_probe` (≤
-    ``_DENSE_EDGE_LIMIT`` rows, integral keys) AND the caller's weight
-    column is integral (the tie-break contract, see the probe comment
-    below), all rounds run as ONE vectorized ``applyInPandas`` task —
-    see :func:`_label_propagation_dense`; past the limit (or with float
-    weights) the declarative chain below runs unchanged.  Both modes
-    parity-tested (test_label_propagation_modes_match).  Like the other
-    graph operators, edge endpoints are expected to be a subset of
+    Ties are only engine-independent when the per-(dst, label) sums are
+    exact, so oracle-checked callers pass integral weights.  Like the
+    other graph operators, edge endpoints are expected to be a subset of
     ``nodes``.
     """
     from pyspark.sql.window import Window
 
-    from .caching import tracked_persist
-
-    # NULL-weight/endpoint edges dropped up front (see pagerank: the
-    # declarative chain skips them anyway; dense numpy must not see NaN)
+    # NULL-weight/endpoint edges dropped up front (see pagerank)
     e = tracked_persist(
         edges.select("src", "dst", F.col("w").cast("double").alias("w"))
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull()
                & F.col("w").isNotNull()))
     n1 = nodes.select(F.col("v")).distinct()
-    # The auto-probe additionally requires an INTEGRAL caller weight
-    # column (checked on ``edges`` BEFORE the double cast above): the
-    # argmax/min-label tie-break only provably matches the declarative
-    # window when per-(dst,label) sums are bit-identical, and float
-    # sums that tie mathematically can differ by 1 ulp between numpy's
-    # sorted accumulation and Spark's partition-order aggregation
-    # (ADVICE r7).  Integer weights make every sum exact in both
-    # engines, so ties break identically; float-weight callers stay on
-    # one deterministic mode (declarative).
-    w_integral = edges.schema["w"].dataType.simpleString() in _INTEGRAL
-    if w_integral and _dense_probe(e, ("src", "dst")):
-        return _label_propagation_dense(e, n1, iters)
     labels = n1.select("v", F.col("v").alias("label"))
     w_pick = Window.partitionBy("dst").orderBy(F.desc("_s"), F.asc("label"))
     for _i in range(iters):
@@ -700,51 +469,6 @@ def label_propagation(edges: DataFrame, nodes: DataFrame,
     return labels
 
 
-def _bellman_ford_dense(e: DataFrame, n1: DataFrame, source, rounds: int,
-                        weighted: bool, out_type: str) -> DataFrame:
-    """Shared dimension-sized fast path for :func:`bfs_distances` /
-    :func:`sssp_weighted` (the hits()/pagerank()/LPA precedent): all
-    synchronous relaxation rounds in ONE vectorized Arrow task.  Each
-    round is a masked ``np.minimum.at`` scatter over the previous
-    round's vector — int64 min-plus, exact, no float ever touches a
-    distance.  Unreached nodes stay NULL through a pandas nullable
-    Int64 column; a source outside the edge vertex set is pinned to 0
-    at the densify."""
-    import pandas as pd
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        vs = np.unique(np.concatenate(
-            [pdf["src"].to_numpy(), pdf["dst"].to_numpy()]))
-        si = _relabel(vs, pdf["src"].to_numpy())
-        di = _relabel(vs, pdf["dst"].to_numpy())
-        w = (pdf["w"].to_numpy(dtype="int64") if weighted
-             else np.ones(len(si), dtype="int64"))
-        m = len(vs)
-        inf = np.iinfo(np.int64).max // 2  # +w can never overflow
-        dist = np.full(m, inf, dtype="int64")
-        src_i = int(np.searchsorted(vs, source))
-        if src_i < m and vs[src_i] == source:
-            dist[src_i] = 0
-        for _ in range(rounds):
-            mask = dist[si] < inf
-            nxt = dist.copy()
-            np.minimum.at(nxt, di[mask], dist[si][mask] + w[mask])
-            dist = nxt
-        return pd.DataFrame({
-            "v": vs.astype("int64"),
-            "d": pd.array([None if x >= inf else int(x) for x in dist],
-                          dtype="Int64"),
-        })
-
-    scored = (e.groupBy(F.lit(1).alias("_g"))
-              .applyInPandas(solve, "v bigint, d bigint"))
-    return (n1.join(scored, "v", "left")
-            .select("v", F.when(F.col("v") == source, F.lit(0))
-                    .otherwise(F.col("d")).cast(out_type).alias("dist")))
-
-
 def bfs_distances(edges: DataFrame, nodes: DataFrame, source,
                   max_hops: int = 5) -> DataFrame:
     """Single-source shortest HOP distances (multi-round distributed
@@ -754,28 +478,20 @@ def bfs_distances(edges: DataFrame, nodes: DataFrame, source,
     Each round relaxes every edge once — one equi-join of the current
     distance vector onto the edge list, one (dst) min-aggregate, one
     key-joined merge with the previous vector: the Pregel superstep
-    expressed declaratively.  The distance vector is O(nodes) and joins
-    by key (no broadcast requirement — same web-scale posture as the
-    shuffled-rank PageRank mode); rounds run a fixed count with
+    expressed declaratively.  NULL means "not reached yet" throughout:
+    the merge is ``least(d, _nd)``, which skips NULLs, so no infinity
+    sentinel exists to collide with a real distance.  The distance
+    vector is O(nodes) and joins by key (no broadcast requirement —
+    same web-scale posture as pagerank); rounds run a fixed count with
     ``localCheckpoint`` lineage truncation per round (the CC idiom) —
     deterministic, so still oracle-able.  At true web diameter, swap
     the fixed count for the convergence test ``connected_components``
-    uses.  Edge lists that pass :func:`_dense_probe` run all rounds in
-    one vectorized task — :func:`_bellman_ford_dense`.
+    uses.
     """
-    # infinity sentinel derived from max_hops (a reachable distance is
-    # <= max_hops, so max_hops + 1 can never collide with a real value);
-    # a magic constant here silently mis-NULLed distances >= it
-    inf = max_hops + 1
     e = tracked_persist(
         edges.select("src", "dst")
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull()))
     n1 = nodes.select(F.col("v")).distinct()
-    # dimension-sized dense fast path (see _bellman_ford_dense): exact
-    # int64 min-plus in one Arrow task when the edge list fits a batch
-    if _dense_probe(e, ("src", "dst")):
-        return _bellman_ford_dense(e, n1, source, max_hops,
-                                   weighted=False, out_type="int")
     dist = n1.select(
         "v", F.when(F.col("v") == source, 0).cast("int").alias("d"))
     for _i in range(max_hops):
@@ -786,11 +502,7 @@ def bfs_distances(edges: DataFrame, nodes: DataFrame, source,
         )
         dist = (
             dist.join(relaxed, dist.v == relaxed.dst, "left")
-            .select(dist.v,
-                    F.least(F.coalesce(F.col("d"), F.lit(inf)),
-                            F.coalesce(F.col("_nd"), F.lit(inf))).alias("_m"))
-            .select("v", F.when(F.col("_m") < inf,
-                                F.col("_m")).cast("int").alias("d"))
+            .select(dist.v, F.least("d", "_nd").cast("int").alias("d"))
         )
         # lineage truncation per round (see pagerank; last round stays
         # lazy for plan inspection): the nested join-per-hop plan costs
@@ -803,7 +515,7 @@ def bfs_distances(edges: DataFrame, nodes: DataFrame, source,
 
 
 def sssp_weighted(edges: DataFrame, nodes: DataFrame, source,
-                  rounds: int, max_edge_w: int) -> DataFrame:
+                  rounds: int) -> DataFrame:
     """Single-source shortest WEIGHTED path distances (Bellman-Ford):
     ``(v, dist)`` with NULL dist for nodes not reached within
     ``rounds`` relaxation rounds.  Generalizes :func:`bfs_distances`
@@ -811,10 +523,9 @@ def sssp_weighted(edges: DataFrame, nodes: DataFrame, source,
     every edge once with ``min(dist[src] + w)`` instead of
     ``min(dist) + 1``.
 
-    ``max_edge_w`` must upper-bound every edge weight; the infinity
-    sentinel is derived as ``rounds * max_edge_w + 1`` (no reachable
-    distance can collide — the magic-constant lesson from the BFS
-    sentinel).  Integer weights keep the min-plus algebra exact in any
+    As in :func:`bfs_distances`, NULL means "not reached yet" and the
+    merge is a NULL-skipping ``least``, so no infinity sentinel is
+    needed.  Integer weights keep the min-plus algebra exact in any
     engine; callers with float costs should scale to integers first.
 
     Scale shape: the distance vector is O(nodes) and joins by key (no
@@ -823,26 +534,13 @@ def sssp_weighted(edges: DataFrame, nodes: DataFrame, source,
     declaratively, a fixed round count with ``localCheckpoint``
     lineage truncation per round (deterministic, so still oracle-able).
     At true web scale swap the fixed count for the convergence test
-    ``connected_components`` uses.  Edge lists that pass
-    :func:`_dense_probe` with an integral weight column run all rounds
-    in one vectorized task — :func:`_bellman_ford_dense`.
+    ``connected_components`` uses.
     """
-    if max_edge_w < 1:
-        raise ValueError("max_edge_w must be >= 1")
-    inf = rounds * max_edge_w + 1
     e = tracked_persist(
         edges.select("src", "dst", "w")
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull()
                & F.col("w").isNotNull()))
     n1 = nodes.select(F.col("v")).distinct()
-    # dimension-sized dense fast path (see _bellman_ford_dense): exact
-    # int64 min-plus in one Arrow task when the edge list fits a batch;
-    # the probe also requires an INTEGRAL weight column — the contract
-    # says integer weights, and gating (rather than truncating) keeps
-    # float-weight callers on the declarative chain with unchanged math
-    if _dense_probe(e, ("src", "dst"), weight_col="w"):
-        return _bellman_ford_dense(e, n1, source, rounds,
-                                   weighted=True, out_type="long")
     dist = n1.select(
         "v", F.when(F.col("v") == source, 0).cast("long").alias("d"))
     for _i in range(rounds):
@@ -853,11 +551,7 @@ def sssp_weighted(edges: DataFrame, nodes: DataFrame, source,
         )
         dist = (
             dist.join(relaxed, dist.v == relaxed.dst, "left")
-            .select(dist.v,
-                    F.least(F.coalesce(F.col("d"), F.lit(inf)),
-                            F.coalesce(F.col("_nd"), F.lit(inf))).alias("_m"))
-            .select("v", F.when(F.col("_m") < inf,
-                                F.col("_m")).cast("long").alias("d"))
+            .select(dist.v, F.least("d", "_nd").cast("long").alias("d"))
         )
         # lineage truncation per round (see bfs_distances; last round
         # stays lazy): flattens the nested Bellman-Ford plan from
@@ -865,44 +559,6 @@ def sssp_weighted(edges: DataFrame, nodes: DataFrame, source,
         if _i < rounds - 1:
             dist = dist.localCheckpoint(eager=True)
     return dist.withColumnRenamed("d", "dist")
-
-
-def _hits_dense(e: DataFrame, n1: DataFrame, iters: int) -> DataFrame:
-    """hits()'s dimension-sized fast path: the whole power iteration as
-    ONE vectorized Arrow task over the aggregated edge list (executor-
-    side numpy, never the driver).  Each half-step is a ``bincount``
-    scatter-add matvec — O(edges) time, O(nodes) memory, no dense n×n
-    matrix — with the same per-half-step L2 normalization (zero norm →
-    divide by 1) as the declarative chain.  Isolated nodes join back as
-    0.0 in the final densify, identical to the declarative mode."""
-    import pandas as pd
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        # sorted rows => deterministic float accumulation order
-        pdf = pdf.sort_values(["src", "dst"], kind="mergesort")
-        vs = np.unique(np.concatenate(
-            [pdf["src"].to_numpy(), pdf["dst"].to_numpy()]))
-        si = _relabel(vs, pdf["src"].to_numpy())
-        di = _relabel(vs, pdf["dst"].to_numpy())
-        w = pdf["w"].to_numpy(dtype="float64")
-        n = len(vs)
-        h = np.ones(n)
-        a = h
-        for _ in range(iters):
-            a = np.bincount(di, weights=w * h[si], minlength=n)
-            a = a / (np.sqrt((a * a).sum()) or 1.0)
-            h = np.bincount(si, weights=w * a[di], minlength=n)
-            h = h / (np.sqrt((h * h).sum()) or 1.0)
-        return pd.DataFrame(
-            {"v": vs.astype("int64"), "hub": h, "authority": a})
-
-    scored = (e.groupBy(F.lit(1).alias("_g"))
-              .applyInPandas(solve, "v bigint, hub double, authority double"))
-    return (n1.join(scored, "v", "left")
-            .select("v", F.coalesce("hub", F.lit(0.0)).alias("hub"),
-                    F.coalesce("authority", F.lit(0.0)).alias("authority")))
 
 
 def hits(edges: DataFrame, nodes: DataFrame, iters: int = 2) -> DataFrame:
@@ -913,9 +569,7 @@ def hits(edges: DataFrame, nodes: DataFrame, iters: int = 2) -> DataFrame:
     the O(nodes) score vector onto the edges + one partial-aggregable
     sum keyed on the opposite endpoint; the L2 normalizer enters the
     plan as a broadcast 1-row aggregate, never a Python scalar.  The
-    score vector broadcasts for dimension-sized graphs and falls back to
-    a shuffled hash join past ``_BROADCAST_NODE_LIMIT`` nodes — the
-    same :func:`_broadcast_hint` gate pagerank uses.
+    score vector joins without a hint, as pagerank's rank vector does.
 
     Returns (v, hub, authority) after ``iters`` full authority-then-hub
     rounds from the all-ones hub start (deterministic, RNG-free, so an
@@ -946,40 +600,22 @@ def hits(edges: DataFrame, nodes: DataFrame, iters: int = 2) -> DataFrame:
     half-step where all mass dies) divides by 1 instead, yielding
     all-zero scores rather than NULLs — mirroring power_iteration_top's
     nrm == 0 branch.
-
-    **Dense fast path** (the embedding_pca_power / IVF-centroid
-    precedent): the iteration state is O(active nodes + edges) — after
-    the data-sized edge aggregation, a graph whose AGGREGATED edge list
-    passes :func:`_dense_probe` (≤ ``_DENSE_EDGE_LIMIT`` rows, integral
-    keys) iterates fastest as ONE vectorized
-    numpy task (``applyInPandas`` over a single group: per-half-step
-    ``bincount`` matvecs, O(edges) time, O(nodes) memory, rows sorted by
-    (src, dst) first so float accumulation order is deterministic).
-    Nothing touches the driver; the 25-node trade graph drops from ~8
-    tiny exchange-separated stages to one.  Past the limit the
-    declarative chain above runs unchanged (web-scale edge lists never
-    collapse into one task).  Both modes are oracle-identical —
-    tests/test_graph_text.py::test_hits_matches_numpy_iteration.
     """
-    # iters=0 would diverge between modes (raw all-ones vs normalized
-    # 1/sqrt(n)) — reject at the contract, same as pagerank
+    # zero rounds would return the normalized all-ones start, which is
+    # not a HITS score — reject at the contract, same as pagerank
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    # NULL-weight/endpoint edges dropped up front (see pagerank: the
-    # declarative chain skips them anyway; dense numpy must not see NaN)
+    # NULL-weight/endpoint edges dropped up front (see pagerank)
     e = tracked_persist(
         edges.select("src", "dst", F.col("w").cast("double").alias("w"))
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull()
                & F.col("w").isNotNull()))
     n1 = nodes.select("v").distinct()
-    if _dense_probe(e, ("src", "dst")):
-        return _hits_dense(e, n1, iters)
-    hint = _broadcast_hint(n1)
 
     def propagate(vec: DataFrame, in_key: str, out_key: str) -> DataFrame:
         """One unnormalized half-step: mass flows along edges from
         ``in_key`` onto ``out_key`` (sparse — absent node = score 0)."""
-        return (e.join(hint(vec), F.col(in_key) == F.col("v"))
+        return (e.join(vec, F.col(in_key) == F.col("v"))
                 .groupBy(out_key)
                 .agg(F.sum(F.col("w") * F.col("x")).alias("x"))
                 .withColumnRenamed(out_key, "v"))

@@ -215,11 +215,9 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
         .groupBy(F.col("c_nationkey").alias("a"),
                  F.col("s_nationkey").alias("b"))
-        # weights stay BIGINT counts: label_propagation's dense-path
-        # auto-probe requires an integral caller weight column (the
-        # exact-tie-break contract) and casts to double internally, so
-        # passing the raw count keeps the vectorized mode eligible with
-        # unchanged math
+        # weights stay BIGINT counts: every per-(dst, label) sum is then
+        # an exact integer even after label_propagation's internal double
+        # cast, so argmax ties break identically here and in the oracle
         .agg(F.count(F.lit(1)).alias("w"))
     )
     # symmetrize in ONE pass over raw (explode, not a self-union whose
@@ -322,7 +320,8 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- weighted SSSP (Bellman-Ford) over the full trade graph -----------------
 # cost(a, b) = greatest(1, 1000000 div lineitem_count): heavy trade lanes
 # are cheap to route through, rare lanes expensive — all-integer min-plus
-# algebra, exact in any engine.  Edge count caps the weight at 1_000_000.
+# algebra, exact in any engine.  Edge count caps the weight at 1_000_000,
+# which the oracle's unrolled CTEs derive their infinity sentinel from.
 _SSSP_ROUNDS = 6
 _SSSP_MAX_W = 1_000_000
 
@@ -378,9 +377,10 @@ def _sssp_oracle() -> str:
         "integer routing costs greatest(1, 1000000 div lane_count) — "
         "heavy trade lanes cheap, rare lanes expensive, so the optimum "
         "routinely takes MORE hops than BFS would (the property that "
-        "distinguishes weighted relaxation from hop counting; the "
-        "operators/graph.sssp_weighted docstring records the derived "
-        "infinity sentinel rule).  Each round is one edge equi-join + "
+        "distinguishes weighted relaxation from hop counting).  NULL "
+        "means unreached: the merge is a NULL-skipping least(), so the "
+        "operator needs no infinity sentinel (the oracle keeps its own "
+        "derived one).  Each round is one edge equi-join + "
         "dst min-aggregate over dist+w + keyed merge; the distance "
         "vector joins by key, never broadcast-bound.  All-integer "
         "min-plus algebra: the oracle unrolls the identical relaxation "
@@ -407,8 +407,7 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       F.col("a").alias("dst"), "w"))
     edges = both.groupBy("src", "dst").agg(F.min("w").cast("long").alias("w"))
     nodes = n.select(F.col("n_nationkey").alias("v"))
-    d = sssp_weighted(edges, nodes, source=0, rounds=_SSSP_ROUNDS,
-                      max_edge_w=_SSSP_MAX_W)
+    d = sssp_weighted(edges, nodes, source=0, rounds=_SSSP_ROUNDS)
     return d.select(F.col("v").cast("int").alias("nationkey"),
                     F.col("dist").cast("long").alias("dist"))
 
@@ -536,14 +535,11 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "authoritative suppliers; authority = nations whose suppliers "
         "serve hub buyers — the asymmetric dual PageRank collapses.  "
         "Edge build = 3 fact joins + one aggregation, persisted once.  "
-        "The 25x25 aggregated edge list is dimension-sized, so hits() "
-        "takes its dense Arrow fast path: the whole iteration is ONE "
-        "vectorized applyInPandas task (bincount matvecs); past 2M edge "
-        "rows the declarative chain (per half-step: one broadcast of "
-        "the O(nodes) vector + one partial-aggregable sum on the "
-        "opposite endpoint, normalization deferred by linearity) runs "
-        "instead — both modes parity-tested.  Oracle unrolls the "
-        "identical rounds as chained CTEs.",
+        "Per half-step: one join of the O(nodes) score vector onto the "
+        "edges + one partial-aggregable sum on the opposite endpoint, "
+        "normalization deferred by linearity — the same chain at any "
+        "edge count.  Oracle unrolls the identical rounds as chained "
+        "CTEs.",
 )
 def q_graph_hits_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")

@@ -20,12 +20,13 @@ REFERENCE = "/root/reference"
 
 @contextlib.contextmanager
 def graph_path(dense: bool):
-    """Pin the graph operators' physical path for the enclosed calls.
+    """Pin ``connected_components``' physical path for the enclosed
+    calls (the one graph operator with two bodies).
 
     The dense Arrow path runs for any edge list of at most
     ``_DENSE_EDGE_LIMIT`` rows, which covers every test graph; a limit
     of -1 sends every edge list, the empty one included, down the
-    declarative chain.  ``mock.patch.object`` rather than the
+    star-contraction loop.  ``mock.patch.object`` rather than the
     function-scoped ``monkeypatch``, so Hypothesis tests can use it."""
     from mapreduce_implementation_spark.operators import graph
 

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from mapreduce_implementation_spark.operators.relational import merge_upsert
 from mapreduce_implementation_spark.plans.inspect import plan_string
 from mapreduce_implementation_spark.registry import all_specs
-from tests.conftest import SF_DIR_001, SF_DIR_01, graph_path, shuffle_partitions
+from tests.conftest import SF_DIR_001, SF_DIR_01, shuffle_partitions
 
 SPECS = all_specs()
 
@@ -287,16 +287,14 @@ def test_bfs_distances_path_graph(spark):
     edges = spark.createDataFrame(
         und + [(b, a) for a, b in und], "src long, dst long")
     nodes = spark.createDataFrame([(v,) for v in [1, 2, 3, 4, 9]], "v long")
-    for dense in (True, False):
-        with graph_path(dense):
-            got = {r["v"]: r["dist"]
-                   for r in bfs_distances(edges, nodes, source=1,
-                                          max_hops=5).collect()}
-            trunc = {r["v"]: r["dist"]
-                     for r in bfs_distances(edges, nodes, source=1,
-                                            max_hops=2).collect()}
-        assert got == {1: 0, 2: 1, 3: 2, 4: 3, 9: None}, dense
-        assert trunc == {1: 0, 2: 1, 3: 2, 4: None, 9: None}, dense
+    got = {r["v"]: r["dist"]
+           for r in bfs_distances(edges, nodes, source=1,
+                                  max_hops=5).collect()}
+    trunc = {r["v"]: r["dist"]
+             for r in bfs_distances(edges, nodes, source=1,
+                                    max_hops=2).collect()}
+    assert got == {1: 0, 2: 1, 3: 2, 4: 3, 9: None}
+    assert trunc == {1: 0, 2: 1, 3: 2, 4: None, 9: None}
 
 
 def test_corpus_build_quality_filter_below_shuffle(spark):

@@ -4,11 +4,8 @@ path, so a planner/operator bug can't cancel itself out)."""
 
 from __future__ import annotations
 
-from unittest import mock
-
 from pyspark.sql import functions as F
 
-from mapreduce_implementation_spark.operators import graph
 from mapreduce_implementation_spark.operators.graph import pagerank
 from mapreduce_implementation_spark.operators.textstats import bm25_topk
 from tests.conftest import graph_path
@@ -40,25 +37,29 @@ def test_pagerank_matches_python_reference(spark):
         assert abs(got[v] - want[v]) < 1e-9, (v, got[v], want[v])
 
 
-def test_pagerank_shuffle_mode_matches_broadcast(spark):
-    """All three physical modes — broadcast-vector, the web-scale
-    shuffled-join fallback, and the dimension-sized dense Arrow task —
-    must produce identical ranks: same math, different physical plans.
-    A node limit of 0 sends the rank vector through the shuffled join."""
+def test_pagerank_shuffled_rank_join_matches_python(spark):
+    """The rank vector joins onto the edges without a hint, so past
+    Spark's broadcast threshold it takes the web-scale shuffled layout.
+    With the threshold off, that layout must give the pure-Python
+    reference's ranks too."""
     edges = [(1, 2, 3.0), (2, 1, 1.0), (2, 3, 1.0), (3, 1, 2.0), (1, 3, 1.0)]
     nodes = [1, 2, 3]
     e = spark.createDataFrame(edges, "src int, dst int, w double")
     nd = spark.createDataFrame([(v,) for v in nodes], "v int")
     want = _py_pagerank(edges, nodes, iters=5)
-    for dense, node_limit in ((False, graph._BROADCAST_NODE_LIMIT),
-                              (False, 0),
-                              (True, graph._BROADCAST_NODE_LIMIT)):
-        with graph_path(dense), mock.patch.object(
-                graph, "_BROADCAST_NODE_LIMIT", node_limit):
-            got = {r.v: r.r for r in pagerank(e, nd, iters=5).collect()}
-        assert set(got) == set(want)
-        for v in nodes:
-            assert abs(got[v] - want[v]) < 1e-9, (dense, node_limit, v)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        ranks = pagerank(e, nd, iters=5)
+        plan = ranks._jdf.queryExecution().executedPlan().toString()
+        got = {r.v: r.r for r in ranks.collect()}
+    finally:
+        spark.conf.set(key, prev)
+    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
+    assert set(got) == set(want)
+    for v in nodes:
+        assert abs(got[v] - want[v]) < 1e-9, v
 
 
 def test_pagerank_mass_conserved_no_dangling(spark):
@@ -281,26 +282,50 @@ def test_sssp_weighted_prefers_cheap_multihop_path(spark):
         [(0, 1, 10), (0, 2, 1), (2, 1, 1), (1, 3, 2)],
         "src long, dst long, w long")
     nodes = spark.createDataFrame([(0,), (1,), (2,), (3,), (9,)], "v long")
-    for dense in (True, False):
-        with graph_path(dense):
-            d = {r["v"]: r["dist"]
-                 for r in sssp_weighted(edges, nodes, source=0, rounds=4,
-                                        max_edge_w=10).collect()}
-        assert d == {0: 0, 1: 2, 2: 1, 3: 4, 9: None}, dense
+    d = {r["v"]: r["dist"]
+         for r in sssp_weighted(edges, nodes, source=0, rounds=4).collect()}
+    assert d == {0: 0, 1: 2, 2: 1, 3: 4, 9: None}
 
-    import pytest
 
-    with pytest.raises(ValueError):
-        sssp_weighted(edges, nodes, source=0, rounds=4, max_edge_w=0)
+def test_sssp_weighted_needs_no_weight_bound(spark):
+    """NULL is "unreached" and the merge is a NULL-skipping least(), so
+    distances are exact whatever the edge weights: a 5-weight edge
+    followed by a 1-weight edge reaches both nodes."""
+    from mapreduce_implementation_spark.operators.graph import sssp_weighted
+
+    edges = spark.createDataFrame([(0, 1, 5), (1, 2, 1)],
+                                  "src long, dst long, w long")
+    nodes = spark.createDataFrame([(0,), (1,), (2,)], "v long")
+    d = {r["v"]: r["dist"]
+         for r in sssp_weighted(edges, nodes, source=0, rounds=3).collect()}
+    assert d == {0: 0, 1: 5, 2: 6}
+
+
+def _np_hits(edges, n_nodes, iters):
+    """numpy HITS over nodes ``0..n_nodes-1``: ``iters`` authority-then-
+    hub rounds from the all-ones hub start, each half-step L2-normalized
+    (a zero norm divides by 1).  Returns ``(hub, authority)`` arrays."""
+    import numpy as np
+
+    W = np.zeros((n_nodes, n_nodes))
+    for s, d, w in edges:
+        W[s, d] = w
+    h = np.ones(n_nodes)
+    a = h
+    for _ in range(iters):
+        a = W.T @ h
+        a = a / (np.sqrt((a * a).sum()) or 1.0)
+        h = W @ a
+        h = h / (np.sqrt((h * h).sum()) or 1.0)
+    return h, a
 
 
 def test_hits_matches_numpy_iteration(spark):
     """hits() must reproduce an independent numpy implementation of the
     same 2 authority-then-hub L2-normalized rounds on a small weighted
-    digraph, in BOTH physical modes (declarative lazy chain and the
-    single-Arrow-task dense path), and both score vectors must be
-    unit-norm.  The declarative mode defers normalization across rounds
-    (scale invariance), so agreement to 1e-9 also pins that algebra."""
+    digraph, and both score vectors must be unit-norm.  The operator
+    defers normalization across rounds (scale invariance), so agreement
+    to 1e-9 also pins that algebra."""
     import numpy as np
 
     from mapreduce_implementation_spark.operators.graph import hits
@@ -313,30 +338,19 @@ def test_hits_matches_numpy_iteration(spark):
     nv = 6  # node 5 is isolated
     df = spark.createDataFrame(edges, "src bigint, dst bigint, w double")
     nodes = spark.createDataFrame([(i,) for i in range(nv)], "v bigint")
-
-    W = np.zeros((nv, nv))
-    for s, d, w in edges:
-        W[s, d] = w
-    h = np.ones(nv)
-    for _ in range(2):
-        a = W.T @ h
-        a = a / np.sqrt((a * a).sum())
-        h = W @ a
-        h = h / np.sqrt((h * h).sum())
+    h, a = _np_hits(edges, nv, iters=2)
     assert abs(np.linalg.norm(h) - 1) < 1e-9
 
-    for dense in (True, False):
-        try:
-            with graph_path(dense):
-                got = {r["v"]: (r["hub"], r["authority"])
-                       for r in hits(df, nodes, iters=2).collect()}
-        finally:
-            release_persisted()
-        for v in range(nv):
-            assert abs(got[v][0] - h[v]) < 1e-9, ("hub", v, dense)
-            assert abs(got[v][1] - a[v]) < 1e-9, ("authority", v, dense)
-        # isolated node present, scored zero
-        assert got[5] == (0.0, 0.0), dense
+    try:
+        got = {r["v"]: (r["hub"], r["authority"])
+               for r in hits(df, nodes, iters=2).collect()}
+    finally:
+        release_persisted()
+    for v in range(nv):
+        assert abs(got[v][0] - h[v]) < 1e-9, ("hub", v)
+        assert abs(got[v][1] - a[v]) < 1e-9, ("authority", v)
+    # isolated node present, scored zero
+    assert got[5] == (0.0, 0.0)
 
 
 def test_personalized_pagerank_uniform_reset_equals_global(spark):
@@ -366,12 +380,12 @@ def test_personalized_pagerank_uniform_reset_equals_global(spark):
         assert abs(plain[v] - seeded[v]) < 1e-12, v
 
 
-def test_graph_dense_paths_match_declarative_random(spark):
-    """Randomized dense-vs-declarative parity for pagerank() and hits()
-    on seeded random digraphs (self-loops, isolated nodes, parallel-free
-    multi-weight edges, a node with out-edges only): the two physical
-    modes must agree to 1e-9 on every score, and pagerank must also
-    match the pure-Python reference."""
+def test_pagerank_hits_match_references_random(spark):
+    """pagerank() (global and personalized) and hits() on seeded random
+    digraphs (self-loops, isolated nodes, parallel-free multi-weight
+    edges, a node with out-edges only) must match the pure-Python
+    PageRank / personalized PageRank models and the numpy HITS
+    reference to 1e-9 on every score."""
     import random
 
     from mapreduce_implementation_spark.operators.graph import hits
@@ -391,37 +405,26 @@ def test_graph_dense_paths_match_declarative_random(spark):
         e = spark.createDataFrame(edges, "src int, dst int, w double")
         nd = spark.createDataFrame([(v,) for v in nodes], "v int")
         # a random sparse reset distribution for the personalized case
-        # (r8: the dense path covers seeded walks too)
         seeds = sorted({rng.choice(nodes) for _ in range(3)})
         reset = {v: 1.0 / len(seeds) for v in seeds}
         rst = spark.createDataFrame(list(reset.items()), "v int, s double")
+        pr_want = _py_pagerank(edges, nodes, iters=4)
+        ppr_want = _py_ppr(edges, nodes, reset, iters=4)
+        hub_want, auth_want = _np_hits(edges, len(nodes), iters=2)
         try:
-            pr_want = _py_pagerank(edges, nodes, iters=4)
-            ppr_want = _py_ppr(edges, nodes, reset, iters=4)
-            pr = {}
-            ppr = {}
-            ht = {}
-            for dense in (True, False):
-                with graph_path(dense):
-                    pr[dense] = {r.v: r.r for r in pagerank(
-                        e, nd, iters=4).collect()}
-                    ppr[dense] = {r.v: r.r for r in pagerank(
-                        e, nd, iters=4, reset=rst).collect()}
-                    ht[dense] = {r.v: (r.hub, r.authority) for r in hits(
-                        e, nd, iters=2).collect()}
+            pr = {r.v: r.r for r in pagerank(e, nd, iters=4).collect()}
+            ppr = {r.v: r.r for r in pagerank(
+                e, nd, iters=4, reset=rst).collect()}
+            ht = {r.v: (r.hub, r.authority) for r in hits(
+                e, nd, iters=2).collect()}
         finally:
             release_persisted()
-        assert set(pr[True]) == set(pr[False]) == set(nodes), trial
-        assert set(ppr[True]) == set(ppr[False]) == set(nodes), trial
-        assert set(ht[True]) == set(ht[False]) == set(nodes), trial
+        assert set(pr) == set(ppr) == set(ht) == set(nodes), trial
         for v in nodes:
-            assert abs(pr[True][v] - pr[False][v]) < 1e-9, (trial, v)
-            assert abs(pr[True][v] - pr_want[v]) < 1e-9, (trial, v)
-            assert abs(ppr[True][v] - ppr[False][v]) < 1e-9, (trial, v)
-            assert abs(ppr[True][v] - ppr_want[v]) < 1e-9, (trial, v)
-            for j in (0, 1):
-                assert abs(ht[True][v][j] - ht[False][v][j]) < 1e-9, \
-                    (trial, v, j)
+            assert abs(pr[v] - pr_want[v]) < 1e-9, (trial, v)
+            assert abs(ppr[v] - ppr_want[v]) < 1e-9, (trial, v)
+            assert abs(ht[v][0] - hub_want[v]) < 1e-9, (trial, v, "hub")
+            assert abs(ht[v][1] - auth_want[v]) < 1e-9, (trial, v, "auth")
 
 
 def _py_lpa(edges, nodes, iters):
@@ -443,11 +446,10 @@ def _py_lpa(edges, nodes, iters):
 
 
 def test_label_propagation_modes_match(spark):
-    """Dense Arrow task vs declarative window chain vs the pure-Python
-    model on seeded random weighted digraphs: identical labels, every
-    node, every trial (integer weights make sums exact in any
-    accumulation order, so argmax ties are engine-independent; they are
-    also what lets the dense path run at all)."""
+    """label_propagation vs the pure-Python model on seeded random
+    weighted digraphs: identical labels, every node, every trial
+    (integer weights make sums exact in any accumulation order, so
+    argmax ties are engine-independent)."""
     import random
 
     from mapreduce_implementation_spark.operators.graph import (
@@ -470,22 +472,18 @@ def test_label_propagation_modes_match(spark):
         nd = spark.createDataFrame([(v,) for v in nodes], "v int")
         want = _py_lpa(edges, nodes, iters=4)
         try:
-            for dense in (True, False):
-                with graph_path(dense):
-                    got = {r.v: r.label for r in label_propagation(
-                        e, nd, iters=4).collect()}
-                assert got == want, (trial, dense, got, want)
+            got = {r.v: r.label for r in label_propagation(
+                e, nd, iters=4).collect()}
         finally:
             release_persisted()
+        assert got == want, (trial, got, want)
 
 
 def test_graph_operators_ignore_null_weight_edges(spark):
-    """A NULL-weight (or NULL-endpoint) edge row must be ignored
-    IDENTICALLY by both physical modes — the declarative chains skip
-    NULLs inside F.sum/F.min, and the operators now drop such rows
-    before the mode split so the dense numpy path never sees NaN.
-    Also: float edge weights keep sssp_weighted on the declarative
-    chain."""
+    """A NULL-weight (or NULL-endpoint) edge row must be ignored: the
+    operators drop such rows up front, which is what F.sum/F.min would
+    do with them anyway.  Also: sssp_weighted relaxes float edge
+    weights without truncating them first."""
     from mapreduce_implementation_spark.operators.graph import (
         hits, sssp_weighted,
     )
@@ -502,34 +500,28 @@ def test_graph_operators_ignore_null_weight_edges(spark):
     nd = spark.createDataFrame([(v,) for v in nodes], "v int")
     want = _py_pagerank(clean, nodes, iters=4)
     try:
-        for dense in (True, False):
-            with graph_path(dense):
-                got = {r.v: r.r for r in pagerank(
-                    e, nd, iters=4).collect()}
-                hv = {r.v: (r.hub, r.authority) for r in hits(
-                    e, nd, iters=2).collect()}
-                hc = {r.v: (r.hub, r.authority) for r in hits(
-                    ec, nd, iters=2).collect()}
-            for v in nodes:
-                assert abs(got[v] - want[v]) < 1e-9, (dense, v)
-            assert hv == hc, dense
+        got = {r.v: r.r for r in pagerank(e, nd, iters=4).collect()}
+        hv = {r.v: (r.hub, r.authority) for r in hits(
+            e, nd, iters=2).collect()}
+        hc = {r.v: (r.hub, r.authority) for r in hits(
+            ec, nd, iters=2).collect()}
+        for v in nodes:
+            assert abs(got[v] - want[v]) < 1e-9, v
+        assert hv == hc
 
         ew = spark.createDataFrame([(1, 2, 1.5), (2, 3, 1.0)],
                                    "src int, dst int, w double")
-        # float weights -> declarative (must not truncate)
         d = {r["v"]: r["dist"]
-             for r in sssp_weighted(ew, nd, source=1, rounds=3,
-                                    max_edge_w=2).collect()}
+             for r in sssp_weighted(ew, nd, source=1, rounds=3).collect()}
         assert d[2] == 1.5 or d[2] == 1  # long cast floors the output
     finally:
         release_persisted()
 
 
 def test_string_vertex_keys_fall_back_to_declarative(spark):
-    """Non-integral vertex ids must auto-route around the dense Arrow
-    paths (whose output schema relabels through int64) and still return
-    correct results through the declarative chains — the _dense_probe
-    key-type gate, exercised end to end for pagerank and hits."""
+    """String vertex ids work end to end: pagerank matches the
+    pure-Python reference on the int-relabeled graph, and hits gives
+    the same scores as on the int-keyed copy of the graph."""
     from mapreduce_implementation_spark.operators.graph import hits
     from mapreduce_implementation_spark.operators.caching import (
         release_persisted,
@@ -552,7 +544,7 @@ def test_string_vertex_keys_fall_back_to_declarative(spark):
         ht = {r.v: (r.hub, r.authority)
               for r in hits(e, nd, iters=2).collect()}
         assert set(ht) == set(nodes)
-        # same graph through the int-keyed dense path must agree
+        # same graph with int keys must agree
         ei = spark.createDataFrame(int_edges, "src int, dst int, w double")
         ni = spark.createDataFrame([(v,) for v in (0, 1, 2)], "v int")
         hti = {r.v: (r.hub, r.authority)
@@ -584,12 +576,9 @@ def _py_ppr(edges, nodes, reset, iters=4, d=0.85):
 
 
 def test_personalized_pagerank_dense_matches(spark):
-    """Reset-distribution parity across the physical modes (r8: the
-    dense Arrow task now covers personalized walks — the reset mass
-    rides into the batch as per-edge columns): dense vs declarative vs
-    the pure-Python model, on a graph with an isolated seed node (its
-    closed-form rank is (1-d)*s_v), an isolated non-seed node (rank
-    exactly 0), and a seed concentrated on one vertex."""
+    """Personalized pagerank vs the pure-Python model, on a graph with
+    an isolated seed node (its rank is (1-d)*s_v), an isolated non-seed
+    node (rank exactly 0), and a seed concentrated on one vertex."""
     from mapreduce_implementation_spark.operators.caching import (
         release_persisted,
     )
@@ -603,28 +592,24 @@ def test_personalized_pagerank_dense_matches(spark):
     rst = spark.createDataFrame(list(reset.items()), "v bigint, s double")
     want = _py_ppr(edges, nodes, reset, iters=4)
     try:
-        got = {}
-        for dense in (True, False):
-            with graph_path(dense):
-                got[dense] = {r["v"]: r["r"] for r in pagerank(
-                    e, nd, iters=4, reset=rst).collect()}
-            assert set(got[dense]) == set(nodes), dense
-            for v in nodes:
-                assert abs(got[dense][v] - want[v]) < 1e-9, (dense, v)
-        assert got[True].keys() == got[False].keys()
-        # isolated seed: closed form (1-d)*s_v; isolated non-seed: 0
-        assert abs(got[True][4] - 0.15 * 0.5) < 1e-12
-        assert got[True][5] == 0.0
+        got = {r["v"]: r["r"] for r in pagerank(
+            e, nd, iters=4, reset=rst).collect()}
     finally:
         release_persisted()
+    assert set(got) == set(nodes)
+    for v in nodes:
+        assert abs(got[v] - want[v]) < 1e-9, v
+    # isolated seed: closed form (1-d)*s_v; isolated non-seed: 0
+    assert abs(got[4] - 0.15 * 0.5) < 1e-12
+    assert got[5] == 0.0
 
 
 def test_pagerank_zero_out_weight_source_modes_match(spark):
     """A source whose edge weights sum to exactly 0 (w=0.0 rows pass
-    the isNotNull filter) must contribute nothing in BOTH physical
-    modes: the declarative w/_ow divide-by-zero yields NULL (skipped by
-    F.sum), and the dense path masks those edges out of the bincount
-    (ADVICE r7 — unguarded it was 0/0=NaN poisoning every rank)."""
+    the isNotNull filter) must contribute nothing: w/_ow is a
+    try_divide, NULL on a zero divisor, and F.sum skips it — never a
+    NaN poisoning every rank, nor a DIVIDE_BY_ZERO under ANSI.  The
+    reference is the Python model that masks zero-out-weight sources."""
     from mapreduce_implementation_spark.operators.caching import (
         release_persisted,
     )
@@ -632,29 +617,25 @@ def test_pagerank_zero_out_weight_source_modes_match(spark):
     edges = [(0, 1, 2.0), (1, 2, 1.0), (2, 0, 3.0),
              (3, 1, 0.0), (3, 2, 0.0)]  # node 3: all-zero out-weight
     nodes = [0, 1, 2, 3]
-    nonzero = [(s, t, w) for s, t, w in edges if w != 0.0]
     e = spark.createDataFrame(edges, "src int, dst int, w double")
     nd = spark.createDataFrame([(v,) for v in nodes], "v int")
-    want = _py_ppr(nonzero, nodes, {v: 0.25 for v in nodes}, iters=4)
+    # uniform reset == global pagerank; _py_ppr masks outw == 0 sources
+    want = _py_ppr(edges, nodes, {v: 0.25 for v in nodes}, iters=4)
     try:
-        for dense in (True, False):
-            with graph_path(dense):
-                got = {r["v"]: r["r"] for r in pagerank(
-                    e, nd, iters=4).collect()}
-            for v in nodes:
-                assert got[v] == got[v], (dense, v)  # no NaN
-                assert abs(got[v] - want[v]) < 1e-9, (dense, v)
+        got = {r["v"]: r["r"] for r in pagerank(e, nd, iters=4).collect()}
     finally:
         release_persisted()
+    for v in nodes:
+        assert got[v] == got[v], v  # no NaN
+        assert abs(got[v] - want[v]) < 1e-9, v
 
 
 def test_dense_paths_preserve_input_key_dtypes(spark):
-    """The dense Arrow fast paths relabel through int64 internally but
-    must cast their outputs back to the caller's key dtype (ADVICE r7):
-    the same call's output schema cannot flip with the physical mode.
-    Exercised for connected_components (cluster_id), kcore (node) and
-    label_propagation (label) with INT vertex keys, values compared
-    across modes too."""
+    """Outputs keep the caller's INT vertex key dtype.  For
+    connected_components, whose dense Arrow path relabels through int64
+    internally, the schema and values must not flip with the physical
+    mode; kcore (node) and label_propagation (label) have one body and
+    are checked against hand / pure-Python results."""
     from mapreduce_implementation_spark.operators.caching import (
         release_persisted,
     )
@@ -674,29 +655,29 @@ def test_dense_paths_preserve_input_key_dtypes(spark):
         for dense in (True, False):
             with graph_path(dense):
                 cc = connected_components(pairs, "a", "b")
-                kc = kcore(ek, "a", "b", k=2, rounds=3)
-                lp = label_propagation(el, nd, iters=3)
             assert dict(cc.dtypes) == {"node": "int",
                                        "cluster_id": "int"}, dense
-            assert dict(kc.dtypes) == {"node": "int",
-                                       "core_deg": "bigint"}, dense
-            assert dict(lp.dtypes) == {"v": "int", "label": "int"}, dense
-            out[dense] = (
-                {r["node"]: r["cluster_id"] for r in cc.collect()},
-                {r["node"]: r["core_deg"] for r in kc.collect()},
-                {r["v"]: r["label"] for r in lp.collect()},
-            )
+            out[dense] = {r["node"]: r["cluster_id"] for r in cc.collect()}
         assert out[True] == out[False]
+        kc = kcore(ek, "a", "b", k=2, rounds=3)
+        lp = label_propagation(el, nd, iters=3)
+        assert dict(kc.dtypes) == {"node": "int", "core_deg": "bigint"}
+        assert dict(lp.dtypes) == {"v": "int", "label": "int"}
+        # the triangle 1-2-3 is the 2-core; node 4 (degree 1) peels
+        assert ({r["node"]: r["core_deg"] for r in kc.collect()}
+                == {1: 2, 2: 2, 3: 2})
+        assert ({r["v"]: r["label"] for r in lp.collect()}
+                == _py_lpa([(1, 2, 2), (2, 3, 1), (3, 1, 1)], [1, 2, 3, 4],
+                           iters=3))
     finally:
         release_persisted()
 
 
 def test_lpa_float_weights_auto_route_declarative(spark):
-    """Float caller weights keep label_propagation's AUTO probe on the
-    declarative chain (the exact-tie-break contract, ADVICE r7): the
-    dense plan's FlatMapGroupsInPandas node must be absent with float
-    w, present with integral w, and both must agree on this fixture
-    (integer-valued floats, so sums are exact either way)."""
+    """Float and integral caller weights run the same declarative chain
+    (no Python node in either plan) and agree with the pure-Python
+    model on this fixture (integer-valued floats, so sums are exact
+    either way)."""
     from mapreduce_implementation_spark.operators.caching import (
         release_persisted,
     )
@@ -712,12 +693,11 @@ def test_lpa_float_weights_auto_route_declarative(spark):
     try:
         lf = label_propagation(ef, nd, iters=3)
         li = label_propagation(ei, nd, iters=3)
-        plan_f = lf._jdf.queryExecution().executedPlan().toString()
-        plan_i = li._jdf.queryExecution().executedPlan().toString()
-        assert "FlatMapGroupsInPandas" not in plan_f
-        assert "FlatMapGroupsInPandas" in plan_i
-        assert ({r["v"]: r["label"] for r in lf.collect()}
-                == {r["v"]: r["label"] for r in li.collect()})
+        for lab in (lf, li):
+            plan = lab._jdf.queryExecution().executedPlan().toString()
+            assert "Python" not in plan, plan
+            assert ({r["v"]: r["label"] for r in lab.collect()}
+                    == _py_lpa(rows, [1, 2, 3], iters=3))
     finally:
         release_persisted()
 
@@ -1057,7 +1037,8 @@ def test_bpe_train_fast_mode_quality(spark):
 # (the BPE-lesson idiom: each operator's oracle twin unrolls the SAME
 # formulation in SQL, so a mis-formulated algorithm could hash-match;
 # these recompute the graph statistic with textbook pure-Python
-# implementations on seeded random graphs, both physical modes.)
+# implementations on seeded random graphs — connected_components in both
+# of its physical modes.)
 
 
 def _random_graph(rng, n_nodes, n_edges):
@@ -1146,14 +1127,12 @@ def test_kcore_matches_python_peeling(spark):
         want = dict(deg)
 
         df = spark.createDataFrame(edges, "a long, b long")
-        for dense in (True, False):
-            try:
-                with graph_path(dense):
-                    got = {r["node"]: r["core_deg"] for r in
-                           kcore(df, "a", "b", k=k, rounds=30).collect()}
-            finally:
-                release_persisted()
-            assert got == want, (trial, dense, k, got, want)
+        try:
+            got = {r["node"]: r["core_deg"] for r in
+                   kcore(df, "a", "b", k=k, rounds=30).collect()}
+        finally:
+            release_persisted()
+        assert got == want, (trial, k, got, want)
 
 
 def test_triangle_count_matches_bruteforce(spark):
@@ -1229,22 +1208,18 @@ def test_bfs_and_sssp_match_python_shortest_paths(spark):
                            | {0})
         e = spark.createDataFrame(dir_edges, "src long, dst long, w long")
         nodes = spark.createDataFrame([(x,) for x in all_nodes], "v long")
-        for dense in (True, False):
-            try:
-                with graph_path(dense):
-                    got_b = {r["v"]: r["dist"] for r in bfs_distances(
-                        e, nodes, 0, max_hops=6).collect()}
-                    got_s = {r["v"]: r["dist"] for r in sssp_weighted(
-                        e, nodes, 0, rounds=n, max_edge_w=9).collect()}
-            finally:
-                release_persisted()
-            want_b = {x: hops.get(x) for x in all_nodes}
-            want_s = {x: dist.get(x) for x in all_nodes}
-            assert got_b == want_b, (trial, dense,
-                                     {x: (got_b[x], want_b[x])
-                                      for x in all_nodes
-                                      if got_b[x] != want_b[x]})
-            assert got_s == want_s, (trial, dense,
-                                     {x: (got_s[x], want_s[x])
-                                      for x in all_nodes
-                                      if got_s[x] != want_s[x]})
+        try:
+            got_b = {r["v"]: r["dist"] for r in bfs_distances(
+                e, nodes, 0, max_hops=6).collect()}
+            got_s = {r["v"]: r["dist"] for r in sssp_weighted(
+                e, nodes, 0, rounds=n).collect()}
+        finally:
+            release_persisted()
+        want_b = {x: hops.get(x) for x in all_nodes}
+        want_s = {x: dist.get(x) for x in all_nodes}
+        assert got_b == want_b, (trial, {x: (got_b[x], want_b[x])
+                                         for x in all_nodes
+                                         if got_b[x] != want_b[x]})
+        assert got_s == want_s, (trial, {x: (got_s[x], want_s[x])
+                                         for x in all_nodes
+                                         if got_s[x] != want_s[x]})

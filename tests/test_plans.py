@@ -16,7 +16,7 @@ from mapreduce_implementation_spark.plans.inspect import (
 )
 from mapreduce_implementation_spark.registry import all_specs
 from mapreduce_implementation_spark.sources.tables import load_table
-from tests.conftest import SF_DIR_01, graph_path
+from tests.conftest import SF_DIR_01
 
 SPECS = all_specs()
 
@@ -300,9 +300,8 @@ def test_top_terms_per_lang_window_group_limit(spark):
 
 def test_pagerank_edges_built_once(spark):
     """The fact-scale edge build is persisted (InMemoryTableScan appears
-    in the lineage) so the iteration never rescans lineitem; the
-    dimension-sized side (node count / rank vector, whichever mode the
-    probe picked) enters the plan as a broadcast."""
+    in the lineage) so the iteration never rescans lineitem; the 1-row
+    node count enters the plan as a broadcast."""
     df = SPECS["graph_pagerank_trade"].fn(spark, SF_DIR_01)
     plan = plan_string(df)
     assert "InMemoryTableScan" in plan, plan
@@ -672,18 +671,18 @@ def test_asof_tolerance_windowed_single_shuffle_no_python(spark):
 
 
 def test_kcore_peels_with_semi_joins_no_python(spark):
-    """The fixture query auto-picks the dense Arrow path (one grouped
-    Python stage, no cartesian); the declarative past-the-limit mode
-    restricts the edge list with LeftSemi hash joins — never a
-    cartesian/BNLJ — and nothing Python-side (earlier rounds are
-    lineage-truncated, so its visible plan is the last round + final
+    """kcore restricts the edge list with LeftSemi hash joins — never a
+    cartesian/BNLJ — and nothing Python-side, both in the fixture query
+    and on a raw lineitem edge list (earlier rounds are
+    lineage-truncated, so the visible plan is the last round + final
     degree aggregate)."""
     from mapreduce_implementation_spark.operators.graph import kcore
     from mapreduce_implementation_spark.sources.tables import load_table
 
     df = SPECS["graph_kcore"].fn(spark, SF_DIR_01)
     plan = plan_string(df)
-    assert "FlatMapGroupsInPandas" in plan, plan
+    assert "LeftSemi" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
     # (the query's edge build contains the documented 1-row broadcast
     # crossJoin for the heavy-lane threshold, which prints as a BNLJ
     # inside the cached lineage — a true cartesian is still banned)
@@ -692,14 +691,31 @@ def test_kcore_peels_with_semi_joins_no_python(spark):
     li = load_table(spark, SF_DIR_01, "lineitem").limit(500)
     edges = li.select(F.col("l_suppkey").alias("a"),
                       F.col("l_partkey").alias("b"))
-    with graph_path(dense=False):
-        decl = kcore(edges, "a", "b", k=2, rounds=2)
+    decl = kcore(edges, "a", "b", k=2, rounds=2)
     plan = plan_string(decl)
     assert "LeftSemi" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "Python" not in plan, plan
 
+
+
+def test_graph_queries_plan_no_python_node(spark):
+    """Every graph operator runs as JVM-side joins and aggregates: no
+    graph_* query plans a grouped-pandas or any other Python node."""
+    from mapreduce_implementation_spark.operators.caching import (
+        release_persisted,
+    )
+
+    names = sorted(n for n in SPECS if n.startswith("graph_"))
+    assert len(names) >= 8, names
+    try:
+        for name in names:
+            plan = plan_string(SPECS[name].fn(spark, SF_DIR_01))
+            assert "FlatMapGroupsInPandas" not in plan, (name, plan)
+            assert not _PYTHON_NODE.search(plan), (name, plan)
+    finally:
+        release_persisted()
 
 def test_substring_spans_plan_linear(spark):
     """The ExactSubstr span pipeline must stay linear: no nested-loop or

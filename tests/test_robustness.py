@@ -422,6 +422,48 @@ def test_text_operators_start_no_job_while_building(spark):
         release_persisted()
 
 
+def test_graph_operators_start_no_job_while_building(spark):
+    """Building a one-round graph operator over a frame past a
+    sort-merge join must start no Spark job: no operator counts its
+    input to pick a physical plan.  (One round, because every round
+    but the last is materialized by ``localCheckpoint``.)"""
+    from mapreduce_implementation_spark.operators import graph
+    from mapreduce_implementation_spark.operators.caching import (
+        release_persisted,
+    )
+
+    rows = [(i, (i * 7 + 1) % 12, i % 3 + 1) for i in range(24)]
+    edges = spark.createDataFrame(rows, "src long, dst long, w long")
+    meta = spark.createDataFrame([(i, i % 2) for i in range(12)],
+                                 "src long, part int")
+    nodes = spark.createDataFrame([(i,) for i in range(12)], "v long")
+    reset = spark.createDataFrame([(0, 0.5), (1, 0.5)], "v long, s double")
+    ops = {
+        "pagerank": lambda e: graph.pagerank(e, nodes, iters=1),
+        "pagerank_reset": lambda e: graph.pagerank(e, nodes, iters=1,
+                                                   reset=reset),
+        "hits": lambda e: graph.hits(e, nodes, iters=1),
+        "label_propagation": lambda e: graph.label_propagation(
+            e, nodes, iters=1),
+        "bfs_distances": lambda e: graph.bfs_distances(
+            e, nodes, source=0, max_hops=1),
+        "sssp_weighted": lambda e: graph.sssp_weighted(
+            e, nodes, source=0, rounds=1),
+        "kcore": lambda e: graph.kcore(e, "src", "dst", k=2, rounds=1),
+    }
+    tracker = spark.sparkContext.statusTracker()
+    try:
+        for name, op in ops.items():
+            joined = (edges.join(meta.hint("merge"), "src")
+                      .select("src", "dst", "w"))
+            before = set(tracker.getJobIdsForGroup(None))
+            op(joined)
+            started = set(tracker.getJobIdsForGroup(None)) - before
+            assert not started, (name, sorted(started))
+    finally:
+        release_persisted()
+
+
 @pytest.mark.parametrize("ansi", ["true", "false"])
 def test_read_int_lines_rejects_non_integer_tokens(spark, tmp_path, ansi):
     """The sort job's integer source answers one way under either
