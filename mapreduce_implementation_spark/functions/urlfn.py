@@ -12,7 +12,7 @@ pragmatic crawl-dedup canon, NOT full RFC 3986 resolution:
 * userinfo (``user:pass@``) is DROPPED from the authority — it is
   client state, not document identity, and keeping it both splits
   host-level dedup groups and leaks credentials into the canonical key
-  (r10 ADVICE: pre-fix, 'https://User@WWW.Example.com/x' grouped under
+  (kept, 'https://User@WWW.Example.com/x' would group under
   'user@www.example.com' with the www. not stripped);
 * a leading ``www.`` label is stripped (host aliasing convention);
 * default ports are dropped (``https:443`` / ``http:80``), any other

@@ -34,7 +34,7 @@ from .text import tokenize
 
 __all__ = [
     "exact_dedup_representatives", "char_shingles", "word_ngrams",
-    "ngram_jaccard_pairs_prefix", "tfidf_cosine_pairs",
+    "tfidf_cosine_pairs",
     "minhash_signatures", "lsh_candidate_pairs", "minhash_dedup_pairs",
     "simhash", "simhash_near_dup_pairs", "overlap_pairs",
     "ngram_jaccard_pairs", "ngram_containment_pairs",
@@ -43,10 +43,6 @@ __all__ = [
     "cluster_representatives", "near_dup_filter_against",
     "span_chunks", "span_dedup_rebuild",
 ]
-
-# tfidf_cosine_pairs switches from the naive shared-term join to prefix
-# filtering once the corpus has more distinct terms than this.
-_PREFIX_VOCAB_THRESHOLD = 4096
 
 
 def exact_dedup_representatives(df: DataFrame, key_cols: list[str],
@@ -347,11 +343,7 @@ def ngram_containment_pairs(df: DataFrame, id_col: str, text_col: str,
     shape every crawl corpus carries.
 
     Same ``overlap_pairs`` plan as ``ngram_jaccard_pairs`` — one extra
-    projected column, zero extra shuffles.  At 100 TB the prefix-filter
-    analogue still exists (size-sensitive containment prefixes,
-    |A| - ceil(t*|A|) + 1 under a global gram order) and the stop-gram
-    frequency cap applies unchanged; the exact form here IS the verify
-    step of that path.
+    projected column, zero extra shuffles.
     """
     grams = tracked_persist(word_ngrams(df, id_col, text_col, n=n)
                             .select(id_col, "ngram").distinct())
@@ -451,123 +443,6 @@ def embedding_near_dup_pairs_lsh(df: DataFrame, id_col: str, vec_col: str,
     )
 
 
-def ngram_jaccard_pairs_prefix(df: DataFrame, id_col: str, text_col: str,
-                               n: int = 3, min_jaccard: float = 0.5) -> DataFrame:
-    """(a, b, jaccard) — EXACT n-gram Jaccard join with PREFIX FILTERING
-    (the PPJoin family of set-similarity joins, Xiao et al. WWW'08,
-    public literature): identical output to ``ngram_jaccard_pairs`` —
-    the pruning is lossless — but the inverted-index join runs only on
-    each document's PREFIX instead of every gram.
-
-    Why it's lossless: order every doc's gram set globally (by document
-    frequency asc, then gram — rarest first).  Two sets A, B with
-    J(A,B) >= t must share >= ceil(t/(1+t) * (|A|+|B|)) grams; if A and
-    B share NO gram in their first |A| - ceil(t*|A|) + 1 elements under
-    a common total order, the overlap bound is violated.  So joining on
-    prefixes alone still produces every qualifying pair.
-
-    Why it scales: index size drops from sum(|doc|) to
-    sum(|doc|*(1-t)+1) postings, and — because prefixes keep each doc's
-    RAREST grams — the stop-gram buckets that dominate the classic
-    inverted index's skew (every doc shares ``the quick brown``-style
-    grams) fall out of the join entirely.
-
-    Shuffle-width discipline (the sf0.1->sf1 scaling bench caught the
-    original formulation at 18x-over-linear): the posting join and the
-    candidate-pair dedup move ONLY (id, sz, prefix_gram) rows — never
-    the gram arrays.  Carrying each doc's full gram array through the
-    exploded posting frame multiplies the array payload by the prefix
-    length and shuffles it through the join AND the dedup; at 10x the
-    corpus that is tens of GB of redundant array traffic.  Instead the
-    deduped narrow (a, b) pairs re-join the per-doc gram arrays (one
-    array copy per doc per side) for the exact ``array_intersect``
-    verification — the standard records-pair verify step.
-    """
-    grams = (word_ngrams(df, id_col, text_col, n=n)
-             .select(id_col, "ngram").distinct())
-    dfreq = grams.groupBy("ngram").agg(F.count(F.lit(1)).alias("_df"))
-    # MEASURED AND REJECTED (r15, VERDICT r14 item 5): mapping grams to
-    # vocabulary-rank LONGS (exact, bijective, order-preserving — so the
-    # prefix slice, candidates, and every Jaccard are identical) before
-    # building these arrays.  Two formulations A/B'd interleaved at
-    # sf0.1, min-of-warm on the full pipeline: string arrays 2.1-3.2 s
-    # vs rank longs 4.5-4.9 s (via global_order_stats) / 4.0 s (via a
-    # lean direct two-phase rank with no groupBy or join-back).  The
-    # rank derivation costs a boundary-sample collect job, a persist
-    # materialization, a vocab window shuffle, and a join of the gram
-    # stream against the rank map — 4-5 extra scheduled stages that
-    # dwarf what the narrower verify payload returns here, because the
-    # r14 PPJoin length+positional filters already cut the surviving
-    # candidate set (and with it the array traffic) to where payload
-    # width is no longer the bottleneck.
-    ordered = (
-        grams.join(dfreq, "ngram")
-        .groupBy(id_col)
-        .agg(F.array_sort(F.collect_list(F.struct("_df", "ngram"))).alias("_ord"))
-        .select(
-            F.col(id_col),
-            F.transform("_ord", lambda s: s["ngram"]).alias("_grams"),
-            F.size("_ord").alias("_sz"),
-        )
-    )
-    # doc gram arrays, materialized once: the prefix explode below and
-    # the two verify-side rejoins all read this cache
-    ordered = tracked_persist(ordered)
-    # prefix length |g| - ceil(t*|g|) + 1  (ceil via -floor(-x))
-    plen = F.col("_sz") - (-F.floor(-F.lit(float(min_jaccard)) * F.col("_sz"))).cast("int") + 1
-    # posexplode keeps each prefix gram's 1-based position in the doc's
-    # globally-ordered gram array — the input to PPJoin's positional
-    # filter below (slice starts at 1, so position = pos_in_slice + 1).
-    pref = ordered.select(
-        id_col, "_sz",
-        F.posexplode(F.slice("_grams", 1, plen)).alias("_i0", "_pg"),
-    ).select(id_col, "_sz", "_pg", (F.col("_i0") + 1).alias("_p"))
-    a = pref.select(F.col(id_col).alias("a"), F.col("_sz").alias("sz_a"),
-                    "_pg", F.col("_p").alias("_pa"))
-    b = pref.select(F.col(id_col).alias("b"), F.col("_sz").alias("sz_b"),
-                    "_pg", F.col("_p").alias("_pb"))
-    t = float(min_jaccard)
-    # LENGTH filter (Arasu/Bayardo; lossless): J(A,B) >= t forces
-    # min(|A|,|B|) >= t * max(|A|,|B|) because the intersection can
-    # never exceed the smaller set.  Applied INSIDE the posting join so
-    # pruned pairs never reach the candidate aggregate.  The 1e-9 slack
-    # keeps the float comparison conservative (keep, never drop, on an
-    # exact-boundary tie).
-    len_ok = (F.least("sz_a", "sz_b")
-              >= F.lit(t) * F.greatest("sz_a", "sz_b") - F.lit(1e-9))
-    # POSITIONAL filter (Xiao et al. WWW'08 PPJoin, lossless): both
-    # arrays share ONE global gram order, so positions are monotone in
-    # it, and the common prefix gram minimizing _pa is the same gram
-    # minimizing _pb — the pair's FIRST common gram g*.  Every common
-    # gram is g* or ordered after it in BOTH sets, hence
-    # overlap <= 1 + min(|A| - pa*, |B| - pb*); J >= t needs
-    # overlap * (1 + t) >= t * (|A| + |B|), so pairs whose positional
-    # upper bound can't reach that are dropped before the verify join
-    # ever carries their gram arrays.
-    alpha_ok = ((F.lit(1) + F.least(F.col("sz_a") - F.col("_mpa"),
-                                    F.col("sz_b") - F.col("_mpb")))
-                * F.lit(1.0 + t)
-                >= F.lit(t) * (F.col("sz_a") + F.col("sz_b"))
-                - F.lit(1e-9))
-    cand = (
-        a.join(b, "_pg")
-        .filter((F.col("a") < F.col("b")) & len_ok)
-        .groupBy("a", "b", "sz_a", "sz_b")
-        .agg(F.min("_pa").alias("_mpa"), F.min("_pb").alias("_mpb"))
-        .filter(alpha_ok)
-        .select("a", "b", "sz_a", "sz_b")
-    )
-    ga = ordered.select(F.col(id_col).alias("a"), F.col("_grams").alias("_ga"))
-    gb = ordered.select(F.col(id_col).alias("b"), F.col("_grams").alias("_gb"))
-    verified = cand.join(ga, "a").join(gb, "b")
-    inter = F.size(F.array_intersect("_ga", "_gb"))
-    jac = inter / (F.col("sz_a") + F.col("sz_b") - inter)
-    return (
-        verified.filter(jac >= min_jaccard)
-        .select("a", "b", F.round(jac, 6).alias("jaccard"))
-    )
-
-
 def tfidf_cosine_pairs(df: DataFrame, id_col: str, text_col: str,
                        min_cosine: float = 0.9) -> DataFrame:
     """(a, b, cos) — EXACT sparse TF-IDF cosine similarity join (the IR
@@ -577,38 +452,22 @@ def tfidf_cosine_pairs(df: DataFrame, id_col: str, text_col: str,
     norms.  Terms with df == N (idf 0, weight 0) are dropped before
     anything — they contribute nothing to dot or norm.
 
-    Two EXACT physical strategies, same results (Hypothesis-pinned
-    against a pure-Python model, both modes):
+    The join is ``overlap_pairs`` over the (doc, term, weight) postings:
+    one postings self-join on the term with a partial-aggregated dot,
+    and the per-doc squared norms joined back.  Building the frame runs
+    no job.
 
-    * **prefix-filtered** (Bayardo, Ma & Srikant, WWW'07 "Scaling up
-      all pairs similarity search"): for cosine >= t, if ALL of a
-      pair's shared terms S fall in one doc's low-weight prefix U with
-      ||x|U|| < t*||x||, then cos <= ||x|S||/||x|| < t — the pair
-      provably can't qualify.  Each doc indexes only the terms outside
-      its maximal such prefix (per-doc (w, tok) order, inclusive w^2
-      cumsum >= t'^2*||x||^2, t' = t - 1e-9 float margin); candidates
-      come from ONE asymmetric join of the pruned index against the
-      full postings (a qualifying pair always shares a term its
-      lower-id side indexes), then the full dot is recomputed exactly
-      per candidate.  This is the 100 TB shape for REAL text: Zipfian
-      vocabularies concentrate weight in rare terms, so candidate
-      volume tracks rare-term postings while stop terms stay
-      unindexed.
-    * **naive all-shared-terms join**: one postings self-join on the
-      term + partial-aggregated dot.  On a DEGENERATE dense vocabulary
-      it beats prefix filtering: the fixture corpus has 31 terms all
-      with df ~ 0.75N, so every term is a stop term, pruning removes
-      almost nothing, and the candidate+verify detour measured 3x
-      slower than the straight join (35 s vs 12 s at sf0.1).
-
-    The operator probes the distinct-term count (a LIMIT-capped
-    aggregate over the cached weight frame) and picks prefix filtering
-    once the vocabulary exceeds ``_PREFIX_VOCAB_THRESHOLD`` — below
-    that, every term is effectively common and the naive join's single
-    shuffle wins.
+    Trade-off, measured on a 4-core box (one session, 8 shuffle
+    partitions, build + collect, median of 3 warm runs, two sessions
+    each) against a Bayardo-style prefix-filtered candidate/verify
+    join (Bayardo, Ma & Srikant, WWW'07), identical rows: 2.1-2.2 s vs
+    2.3-3.0 s on the sf0.01 fixture; at sf0.1 both took 70-90 s, within
+    their run-to-run spread.  The fixture's 31-term vocabulary makes
+    every term a stop term, so the prefix filter prunes almost nothing
+    there.  On a Zipfian vocabulary this join's cost grows with the
+    squared postings of the most common terms, where the prefix filter
+    would index only each doc's rare terms.
     """
-    from pyspark.sql import Window
-
     toks = tokenize(df, text_col, keep=[id_col])
     tf = toks.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("tf"))
     nd = tf.select(id_col).distinct().agg(F.count(F.lit(1)).alias("n"))
@@ -621,52 +480,17 @@ def tfidf_cosine_pairs(df: DataFrame, id_col: str, text_col: str,
                 (F.col("tf") * F.log(F.col("n") * F.lit(1.0) / F.col("df")))
                 .alias("w"))
     )
-    # w feeds several consumers (norms, candidate build, verify sides):
-    # without a persist the token-stream aggregation -- the corpus-scale
-    # cost -- runs once per consumer (the minhash-signature class).
+    # w feeds the norms and both join sides: without a persist the
+    # token-stream aggregation -- the corpus-scale cost -- runs once
+    # per consumer (the minhash-signature class).
     w = tracked_persist(w)
-    nrm = w.groupBy(id_col).agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nn"))
-    vocab = w.select("word").distinct().limit(_PREFIX_VOCAB_THRESHOLD + 1)
-    if vocab.count() > _PREFIX_VOCAB_THRESHOLD:
-        t_prune = max(min_cosine - 1e-9, 0.0)
-        win = (Window.partitionBy(id_col).orderBy(F.asc("w"), F.asc("word"))
-               .rowsBetween(Window.unboundedPreceding, 0))
-        indexed = (
-            w.join(nrm, id_col)
-            .withColumn("_cum", F.sum(F.col("w") * F.col("w")).over(win))
-            .filter(F.col("_cum")
-                    >= F.lit(t_prune ** 2) * F.col("nn") * F.col("nn"))
-            .select(id_col, "word")
-        )
-        ia = indexed.select(F.col(id_col).alias("a"), "word")
-        fb = w.select(F.col(id_col).alias("b"), "word")
-        cand = (ia.join(fb, "word")
-                .filter(F.col("a") < F.col("b"))
-                .select("a", "b")
-                .distinct())
-        # exact verify: full dot over every shared term per candidate
-        wa = w.select(F.col(id_col).alias("a"), "word", F.col("w").alias("wa"))
-        wb = w.select(F.col(id_col).alias("b"), "word", F.col("w").alias("wb"))
-        dots = (
-            cand.join(wa, "a").join(wb, ["b", "word"])
-            .groupBy("a", "b").agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
-        )
-    else:
-        a = w.select(F.col(id_col).alias("a"), "word", F.col("w").alias("wa"))
-        b = w.select(F.col(id_col).alias("b"), "word", F.col("w").alias("wb"))
-        dots = (
-            a.join(b, "word").filter(F.col("a") < F.col("b"))
-            .groupBy("a", "b").agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
-        )
-    na = nrm.select(F.col(id_col).alias("a"), F.col("nn").alias("na"))
-    nb = nrm.select(F.col(id_col).alias("b"), F.col("nn").alias("nb"))
+    ov = overlap_pairs(w, id_col, "word", F.col("w"))
     # try_divide: a doc whose every term weight is 0 (tf-idf with
     # df == n) has a zero norm — NULL cosine fails the threshold
     # instead of throwing under ANSI mode
-    cos = F.try_divide(F.col("dot"), F.col("na") * F.col("nb"))
+    cos = F.try_divide(F.col("dot"), F.sqrt("sa") * F.sqrt("sb"))
     return (
-        dots.join(na, "a").join(nb, "b")
-        .filter(cos >= min_cosine)  # raw-score threshold (oracle parity)
+        ov.filter(cos >= min_cosine)  # raw-score threshold (oracle parity)
         .select("a", "b", F.round(cos, 6).alias("cos"))
     )
 
@@ -820,7 +644,7 @@ def sign_lsh_params(n_vectors: int, min_cosine: float,
                     target_recall: float = 0.9,
                     max_tables: int = 64) -> tuple[int, int]:
     """(bits, tables) for sign-LSH at a given corpus size and threshold —
-    the SCALE.md parameter policy as code, so callers scale the index
+    a parameter policy as code, so callers scale the index
     instead of inheriting fixture-tuned constants.
 
     ``bits`` grows with log2(n / target_bucket): expected bucket

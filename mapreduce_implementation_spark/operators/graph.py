@@ -191,8 +191,8 @@ def connected_components(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
     edges = _canon(pv).localCheckpoint(eager=True)
     if _dense_probe(edges, ("u", "v")):
         # cast the int64 Arrow output back to the input key type so the
-        # output schema is identical to the declarative mode's (ADVICE
-        # r7: the physical mode must never leak into the schema)
+        # output schema is identical to the declarative mode's (the
+        # physical mode must never leak into the schema)
         kt = edges.schema["v"].dataType
         membership = _cc_dense_membership(edges)
         return (nodes.join(membership, "node", "left")

@@ -483,7 +483,7 @@ def bloom_anti_join(incoming: DataFrame, history: DataFrame, key_col: str,
         # xxhash64 hashes raw bits, so an un-normalized probe would
         # take the 'definitely unseen' path for a history 0.0 vs
         # incoming -0.0 (a false NEGATIVE, breaking the exactness
-        # guarantee — r12 ADVICE).  nanvl canonicalizes every NaN bit
+        # guarantee).  nanvl canonicalizes every NaN bit
         # pattern; + 0.0 maps -0.0 to 0.0 and leaves everything else
         # (including the canonical NaN) bit-stable.
         def _norm(c: Column) -> Column:
@@ -537,7 +537,7 @@ def bloom_anti_join_rolling(ledger: DataFrame, key_col: str,
                             num_hashes: int = 4,
                             broadcast_recheck: bool = True) -> DataFrame:
     """Rolling-history frontier dedup — the incremental-crawl twin of
-    ``bloom_anti_join`` (r12 VERDICT item 5): ``ledger`` holds one row
+    ``bloom_anti_join``: ``ledger`` holds one row
     per (window, key) sighting (``window_col`` an integer epoch — day
     index, week index); a row survives iff its key does NOT appear in
     any of the ``lookback`` windows strictly before its own, i.e.
@@ -572,7 +572,7 @@ def bloom_anti_join_rolling(ledger: DataFrame, key_col: str,
     ledger-sized, so ``broadcast_recheck=False`` falls back to a
     shuffled windowed anti-join of survivors against the keyed ledger
     — same escape hatch as ``bloom_anti_join`` (the planner can't know
-    the duplication rate; the caller does — r13 ADVICE).  NULL keys
+    the duplication rate; the caller does).  NULL keys
     are kept, and so are NULL-window rows (both
     anti-join semantics: NULL matches nothing, so no trailing history
     can contain them — identical to what the exact windowed anti-join

@@ -796,8 +796,8 @@ _PII_CARD_RE = r"\b(?:[0-9]{4}[ -]){3}[0-9]{4}\b"
         "zero shuffle: at 100 TB the scrub rides the scan.  PII lines "
         "are synthesized deterministically from doc_id residues on "
         "BOTH sides (card check digits fall where the residues land, "
-        "~1/10 valid, so both Luhn branches carry real mass).  r14 "
-        "(VERDICT r13 item 3): the Spark side is a MERGED ladder — ONE "
+        "~1/10 valid, so both Luhn branches carry real mass).  "
+        "The Spark side is a MERGED ladder — ONE "
         "combined-alternation regexp_extract_all pass over the full "
         "text (alternatives in the staged precedence order, so at any "
         "position the earlier class claims the match exactly as the "
@@ -956,7 +956,7 @@ def q_pii_scrub_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- g derives from the SAME per-source partial sums as the Spark
     -- plan (sum of per-source sums / sum of counts), not the direct
     -- per-doc sum: matching accumulation structure keeps the
-    -- round(...,6) columns off 5e-7 float boundaries (r12 ADVICE)
+    -- round(...,6) columns off 5e-7 float boundaries
     g AS (SELECT sum(sum_p) / sum(n_docs) AS g_avg FROM src)
     SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
            round(sum_p / n_docs, 6) AS raw_avg_q,
@@ -988,8 +988,8 @@ def q_curation_source_prior(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted |sources|-row frame: the global mean derives from the
     # per-source sums (sum of partial sums == the direct sum up to
     # float association, same class as the engines' own partial aggs),
-    # so the corpus — whose in-row logistic IS the dominant cost
-    # (SCALE.md: 14 s at sf1, scan-bound) — is scanned exactly ONCE
+    # so the corpus — whose in-row logistic IS the dominant cost (the
+    # query is scan-bound) — is scanned exactly ONCE
     # instead of once per aggregate branch
     src = tracked_persist(per_doc.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1064,11 +1064,11 @@ GROUP BY s.source ORDER BY s.source
         "documents are hash-split 90/10 (first-4-md5-hex-digits mod 10, "
         "identical integer arithmetic in both engines — deterministic, "
         "reproducible, no RNG), then every trigram-Jaccard>=0.5 near-dup "
-        "pair (ngram_jaccard_pairs_prefix, the lossless PPJoin prefix "
-        "path — never all-pairs) that CROSSES the split marks its test "
+        "pair (ngram_jaccard_pairs, the exact inverted-index join — "
+        "never all-pairs) that CROSSES the split marks its test "
         "side as leaked.  Per source: test-doc count, leaked test docs, "
         "leak permille (floor'd int ratio — exact IEEE both engines).  "
-        "Scale shape: the pair join is the audited prefix-filtered "
+        "Scale shape: the pair join is dedup_ngram_jaccard's "
         "inverted-index join; split flags attach via two keyed joins of "
         "the (small) near-dup pair set against the split map, and the "
         "rollup is one |sources| partial-agg shuffle.  A leaky test doc "
@@ -1078,28 +1078,25 @@ GROUP BY s.source ORDER BY s.source
 )
 def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.caching import tracked_persist
-    from ..operators.dedup import ngram_jaccard_pairs_prefix
+    from ..operators.dedup import ngram_jaccard_pairs
 
     docs = load_table(spark, sf_dir, "documents")
     is_test = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")),
                                   1, 4), 16, 10).cast("long") % 10 == 0)
     split = tracked_persist(
         docs.select("doc_id", "source", is_test.alias("is_test")))
-    pairs = ngram_jaccard_pairs_prefix(
+    pairs = ngram_jaccard_pairs(
         docs, "doc_id", "text", n=3, min_jaccard=0.5).select("a", "b")
     flagged = (pairs
                .join(split.select(F.col("doc_id").alias("a"),
                                   F.col("is_test").alias("_ta")), "a")
                .join(split.select(F.col("doc_id").alias("b"),
                                   F.col("is_test").alias("_tb")), "b"))
-    # ONE pass over the flagged pairs (r14 opt): the previous
-    # two-branch unionByName re-executed the entire prefix-join pair
-    # pipeline once PER leak direction (the physical plan carried two
-    # full copies of the PPJoin candidate+verify subtree under the
-    # Union).  The two branch predicates are disjoint on the same rows,
-    # so a single filter + conditional projection emits the identical
-    # row multiset: a pair with _ta & ~_tb contributes its test side a,
-    # one with _tb & ~_ta contributes b — exactly the old branches.
+    # ONE pass over the flagged pairs: a union of one branch per leak
+    # direction would plan the whole pair join twice.  The two
+    # direction predicates are disjoint, so one filter + conditional
+    # projection emits each leaked test side once: a pair with
+    # _ta & ~_tb contributes a, one with _tb & ~_ta contributes b.
     leaky = (flagged
              .where((F.col("_ta") & ~F.col("_tb"))
                     | (F.col("_tb") & ~F.col("_ta")))

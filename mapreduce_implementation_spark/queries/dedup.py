@@ -66,7 +66,7 @@ def _coverage_flag(universe: DataFrame, found: DataFrame, keys: list[str],
     the in-query recall/drop-recall bound of the bounded hash oracles.
 
     Counted via LEFT SEMI join so the bound is duplicate-insensitive by
-    construction (r8 ADVICE: a left join would inflate ``_n``/``_h``
+    construction (a left join would inflate ``_n``/``_h``
     for universe rows matched by duplicate candidate rows, and
     correctness must not depend on every caller remembering its own
     ``.distinct()``).  Join shape: semi-join ``found`` against the
@@ -281,7 +281,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub = _md5_audit_subset(docs, n, id_col="doc_id")
     # exact leg: set-semantics char-9 shingle Jaccard within the audit
     # subset (~500 docs) — the shared estimate-twin pipeline.
-    # MEASURED AND REJECTED (r15, VERDICT r14 item 4): persisting ONE
+    # MEASURED AND REJECTED: persisting ONE
     # full-corpus raw shingle stream and deriving both this leg (subset
     # filter + distinct) and the candidate leg's signatures from it.
     # Interleaved min-of-warm A/B at sf0.1, identical output verified at
@@ -468,7 +468,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(bits tracks log2(n/bucket), tables hits the Charikar recall "
         "target) — NOT fixture constants: the sf1 scaling bench showed "
         "fixed (bits=4, tables=16) superlinear while the auto rule stays "
-        "~linear (VERDICT r04 item 3).  Graduated to a bounded hash "
+        "~linear.  Graduated to a bounded hash "
         "oracle: output = the exact pairs within a deterministic "
         "md5-hash vector subset + in-query recall_ok = LSH found >= 80% "
         "of those pairs (measured 0.92 at every SF).  The audit subset "
@@ -496,38 +496,6 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (-1,-1) sentinel: the flag reaches the driver hash even at a
     # scale where the audit subset holds no qualifying pair (r8)
     return _with_flag_sentinel(exact_sub, rc, "cos")
-
-
-@register(
-    "dedup_ngram_jaccard_prefix",
-    oracle=_DUCK_TRIGRAMS + """,
-    sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY doc_id),
-    inter AS (
-      SELECT g1.doc_id AS a, g2.doc_id AS b, count(*) AS i
-      FROM grams g1 JOIN grams g2 USING (tri)
-      WHERE g1.doc_id < g2.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT a, b, round(i * 1.0 / (sa.sz + sb.sz - i), 6) AS jaccard
-    FROM inter
-    JOIN sizes sa ON inter.a = sa.doc_id
-    JOIN sizes sb ON inter.b = sb.doc_id
-    WHERE i * 1.0 / (sa.sz + sb.sz - i) >= 0.5
-    """,
-    doc="EXACT trigram Jaccard join via PREFIX FILTERING (PPJoin-style, "
-        "lossless pruning): index only each doc's |g|-ceil(t|g|)+1 "
-        "globally-rarest grams — the stop-gram buckets that skew the "
-        "classic inverted index fall out of the join — then verify "
-        "candidates exactly with array_intersect over the full gram "
-        "arrays.  Same oracle as dedup_ngram_jaccard because the output "
-        "is provably identical; the scale win is the candidate count "
-        "(pinned by tests/test_dedup_similarity.py).",
-)
-def q_dedup_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import ngram_jaccard_pairs_prefix
-
-    docs = load_table(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs_prefix(docs, "doc_id", "text", n=3, min_jaccard=0.5)
 
 
 @register(
@@ -990,8 +958,7 @@ def q_dedup_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregate off the zero-shuffle per-row gram window; the gram "
         "self-join is an inverted-index equi-join whose per-gram width "
         "is bounded by the SOURCE count squared (a constant), never the "
-        "corpus size — at 100 TB the corpus-frequency cap used by the "
-        "PPJoin path applies verbatim to universal stop-grams.  All "
+        "corpus size.  All "
         "source pairs are emitted (zeros included) via a broadcast "
         "cross of the tiny per-source size frame.",
 )
@@ -1061,8 +1028,7 @@ def q_corpus_overlap_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(the union is dominated by the long doc, so J stays low while "
         "containment ~1 — the aggregator-page shape in every crawl).  "
         "Identical inverted-index plan to dedup_ngram_jaccard with one "
-        "extra projected column; the containment-sensitive prefix "
-        "filter and the stop-gram cap are the same 100 TB escalations.",
+        "extra projected column.",
 )
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import ngram_containment_pairs
@@ -1239,7 +1205,7 @@ def q_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deterministic URL is derived from (doc_id, source, lang) — with every
 # mess class the canonicalizer must handle injected by doc_id residues:
 # uppercase scheme/host, userinfo (user:pw@ — dropped from host AND
-# canonical form, r10 ADVICE), a www. label, explicit DEFAULT ports,
+# canonical form), a www. label, explicit DEFAULT ports,
 # tracking params (utm_* / gclid), a legitimate param that must
 # SURVIVE, and fragments.  Docs sharing (source, lang, parity, doc_id%40, %6, %5!=0,
 # %3-class) collapse to one canonical URL — real host-level dup mass.
@@ -1581,7 +1547,7 @@ GROUP BY l.d ORDER BY l.d
 @register(
     "dedup_bloom_frontier_rolling",
     oracle=_BLOOM_FRONTIER_ROLLING_ORACLE,
-    doc="Rolling-history frontier dedup (r12 VERDICT item 5 — the "
+    doc="Rolling-history frontier dedup (the "
         "incremental-crawl shape the static dedup_bloom_frontier "
         "can't express): per ingest day, how many keys are NEW "
         "relative to the trailing 7 days, not all history.  The "
@@ -1747,7 +1713,7 @@ def q_dedup_chunks_content_defined(spark: SparkSession,
     FROM chunks c JOIN nd ON c.ch = nd.ch
     GROUP BY c.source ORDER BY c.source
     """,
-    doc="CDC chunk-level duplicate MASS (r13 VERDICT item 5 — the "
+    doc="CDC chunk-level duplicate MASS (the "
         "composition the corpus pipeline actually runs): "
         "content_defined_chunks -> chunk-hash grouping -> per-source "
         "cross-document duplicate-mass stats, the content-defined "

@@ -639,8 +639,8 @@ def q_graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame
     nodes = n.select(F.col("n_nationkey").alias("v"))
     # one nation-x-region pass tags every node with its seed flag, so
     # the reset distribution needs one broadcast join + one 1-row agg
-    # instead of a seeds frame joined back onto nodes (r8 VERDICT item
-    # 4: the seed build was the measured gap vs global pagerank)
+    # instead of a seeds frame joined back onto nodes (the seed build
+    # was the measured gap vs global pagerank)
     tagged = (n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
               .select(F.col("n_nationkey").alias("v"),
                       (F.col("r_name") == "ASIA")

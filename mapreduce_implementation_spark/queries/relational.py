@@ -613,7 +613,7 @@ def q_sketch_hll_rolling_window(spark: SparkSession,
     # daily's own day set.  A calendar day with zero events but
     # activity in its trailing 6 days has no daily row, yet the
     # oracle emits it; keying the sketch merge on daily days silently
-    # dropped such gap days (r13 ADVICE).  Every fan-out day d+o has
+    # dropped such gap days.  Every fan-out day d+o has
     # d itself inside its trailing window, so the range join below is
     # total over this set and inner-join semantics are safe.
     ddays = daily.select("day")

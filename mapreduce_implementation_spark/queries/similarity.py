@@ -65,8 +65,8 @@ _EXACT_TOPK_SQL = """
 
 def _recall_audited_topk(emb: DataFrame, ann: DataFrame,
                          query_vec: list[float], min_hits: int) -> DataFrame:
-    """Bounded-oracle graduation for ANN top-k (VERDICT r04 item 4, the
-    minhash/simhash pattern): output the EXACT top-10 (fully
+    """Bounded-oracle graduation for ANN top-k (the minhash/simhash
+    pattern): output the EXACT top-10 (fully
     SQL-expressible -> hash-oracled) plus an in-query ``recall_ok``
     boolean — |ann-top-10 ∩ exact-top-10| >= min_hits on the fixed
     seeds.  The ANN leg is deterministic (seeded hyperplanes / seeded
@@ -117,7 +117,7 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.caching import tracked_persist
     from ..operators.ivf import ivf_topk, kmeans_fit
 
-    # tracked (VERDICT r14 item 9): a bare .cache() here outlived
+    # tracked: a bare .cache() here would outlive
     # release_persisted() — a session-lifetime leak in repeat callers.
     emb = tracked_persist(load_table(spark, sf_dir, "embeddings"))
     qv = _query_vec(spark, sf_dir)
@@ -704,7 +704,7 @@ def q_embedding_outlier_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
          .groupBy("vec_id")
          .agg(F.sum(F.pow(z, F.lit(2))).alias("d2")))
     # 2-decimal output computed from an EXACT decimal(28,6) intermediate
-    # (r9 ADVICE: round(round(d2,6),2) re-rounds a double approximating
+    # (round(round(d2,6),2) would re-round a double approximating
     # the 6-decimal value, which can fall below an exact .xx5 tie that
     # the oracle's DECIMAL path rounds up); the order-by key is the same
     # decimal cast the oracle sorts on.

@@ -1648,23 +1648,20 @@ def q_stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Fixed tiny BPE merge table for text_token_budget_bpe — ordered like a
 # trained merges.txt (earlier = higher priority; ('th','e')/('an','d')
-# build on the ('t','h')/('a','n') outputs).  Encoding representation
-# (r11 review fix): every symbol is WRAPPED in spaces (" t  h  e ", two
+# build on the ('t','h')/('a','n') outputs).  Shared by both engines so
+# the encoder is hash-oracled.  The DuckDB oracle encodes with SQL
+# string functions: every symbol is WRAPPED in spaces (" t  h  e ", two
 # spaces between adjacent symbols), and merge (a, b) is ONE literal
 # leftmost-nonoverlapping replace of " a  b " with " ab ".  The wrap
 # makes the replace exactly full BPE application of that merge: the
 # pattern's leading " a " can only match a COMPLETE symbol a (a space
 # precedes and follows it), and " b " a complete symbol b — so a merge
 # can never span a symbol boundary; and since the replacement " ab "
-# is a single symbol, it can't recreate its own pattern.  (The first
-# cut separated symbols with ONE space, where " e r" matched symbol e
-# followed by the PREFIX of symbol "re" — "there" wrongly collapsed to
-# one token; the wrapped form is pinned by ~210 fixed-table cases PLUS
-# a seeded fuzz over RANDOM merge tables vs an independent reference
-# encoder, both in tests/test_graph_text.py.)
+# is a single symbol, it can't recreate its own pattern.  (With ONE
+# space between symbols, " e r" would match symbol e followed by the
+# PREFIX of symbol "re", and "there" would collapse to one token.)
 # Word separators become 5+ spaces after the wrap, unreachable by any
-# 2-space pattern.  Shared by both engines so the encoder is
-# hash-oracled.
+# 2-space pattern.
 _BPE_MERGES = [
     ("t", "h"), ("i", "n"), ("a", "n"), ("r", "e"),
     ("o", "n"), ("e", "r"), ("a", "t"), ("e", "n"),
@@ -1672,27 +1669,6 @@ _BPE_MERGES = [
 ]
 
 _TOKEN_BUDGET = 50_000  # per-source token budget (tokens, not chars)
-
-
-def _bpe_encode(col, merges=None):
-    """Space-wrapped BPE encoding of a text column under ``merges``
-    (default _BPE_MERGES) — the PRODUCTION expression, shared with the
-    reference-equivalence tests (tests/test_graph_text.py: fixed-table
-    cases + a random-merge-table fuzz) so the intent pin can never
-    detach from what the query actually runs.
-
-    Scale caveat: one chained ``F.replace``
-    per merge is O(|merges|) PLAN DEPTH — exact and fully codegen'd at
-    a fixture-sized table (12 merges), but not viable at a real 50k-
-    merge vocab (analysis time / codegen limits grow with every merge).
-    For vocabulary-scale tokenization use ``bpe_encode_batched``
-    (mapInPandas, broadcast merge table, parity-pinned against this
-    form) — see the crossover rule in its docstring."""
-    norm = normalize_line(col)
-    enc = F.regexp_replace(norm, "(.)", " $1 ")
-    for a, b in (merges if merges is not None else _BPE_MERGES):
-        enc = F.replace(enc, F.lit(f" {a}  {b} "), F.lit(f" {a}{b} "))
-    return enc
 
 
 def _bpe_apply_merge(syms: list, a: str, b: str) -> list:
@@ -1715,9 +1691,8 @@ def _bpe_apply_merge(syms: list, a: str, b: str) -> list:
 
 def _bpe_encode_word(word: str, merges) -> list[str]:
     """Sequential full application of each merge in table order to one
-    word — the same semantics as ``_bpe_encode``'s chained replaces,
-    expressed imperatively.  Shared by the batched executor path and
-    the test reference so the two can never drift."""
+    word — the same semantics as the oracle's chained SQL replaces,
+    expressed imperatively.  ``bpe_encode_batched``'s per-word step."""
     syms = list(word)
     for a, b in merges:
         syms = _bpe_apply_merge(syms, a, b)
@@ -1726,31 +1701,26 @@ def _bpe_encode_word(word: str, merges) -> list[str]:
 
 def bpe_encode_batched(df: DataFrame, text_col: str, merges=None,
                        out: str = "bpe_tokens") -> DataFrame:
-    """Vocabulary-scale BPE encoder: ``mapInPandas`` over Arrow batches
-    with the merge table captured once in the task closure (a list of
-    string pairs — a few MB even at 50k merges, broadcast with the task
-    binary) and a per-partition unique-word memo (Zipf makes the cache
-    hit rate high, so each distinct word is encoded once per
-    partition).
+    """BPE encoder: ``mapInPandas`` over Arrow batches with the merge
+    table captured once in the task closure (a list of string pairs — a
+    few MB even at 50k merges, broadcast with the task binary) and a
+    per-partition unique-word memo (Zipf makes the cache hit rate high,
+    so each distinct word is encoded once per partition).
 
-    Crossover rule vs ``_bpe_encode`` (the pure-expression form),
-    MEASURED on this box (SCALE.md r12): the expression is one chained
-    ``F.replace`` PER MERGE — O(|merges|) expression-tree depth — and
-    the driver's recursive column-node conversion throws a hard
-    ``StackOverflowError`` at ~300 merges (250 analyzes fine in ~0.4 s;
-    300 fails before a single task runs).  Use the expression form for
-    fixture-sized tables (≤~100 merges to leave headroom — it stays
-    whole-stage-codegen and is the DuckDB-oracle-able twin); use THIS
-    path for real vocabularies (1k–50k merges, where the expression
-    form cannot even be PLANNED), with per-row cost
-    O(word_len · |merges|) amortized by the unique-word memo and plan
-    depth O(1) — at 1,000 merges this path runs in under a second on
-    the same input that kills the expression at plan time.
-    Parity-pinned against ``_bpe_encode`` and an independent reference
-    on random merge tables in tests/test_graph_text.py.
+    Plan depth is O(1) at any table size, and per-row cost is
+    O(word_len · |merges|) amortized by the memo.  One chained
+    ``F.replace`` per merge — the oracle's SQL form — would instead grow
+    the expression tree with every merge; the driver's recursive
+    column-node conversion throws ``StackOverflowError`` at about 300
+    merges, where real vocabularies have 1k–50k.  Pinned against an
+    independent reference on fixed and random merge tables, up to 1,000
+    merges, in tests/test_graph_text.py.
 
-    Output: the input schema plus ``out`` as ``array<string>`` BPE
-    tokens of the normalized (lowercased, alpha+space only) text.
+    The text is normalized on the JVM side by
+    ``functions.textfn.normalize_line``, the tokenizer contract's one
+    home, and the pandas side splits it on spaces.  Output: the input
+    schema plus ``out`` as ``array<string>`` BPE tokens; NULL text gives
+    NULL tokens.
     """
     from typing import Iterator
 
@@ -1768,21 +1738,19 @@ def bpe_encode_batched(df: DataFrame, text_col: str, merges=None,
     # object — mutating it corrupts the input frame's own schema
     schema = StructType(list(df.schema.fields)
                         + [StructField(out, ArrayType(StringType()))])
-    import re as _re
+    norm = "_bpe_norm"
+    while norm in df.columns:
+        norm = "_" + norm
 
     def encode_batches(batches: Iterator[pd.DataFrame]
                        ) -> Iterator[pd.DataFrame]:
         memo: dict[str, list[str]] = {}
 
-        def enc_doc(text):
-            if text is None or (isinstance(text, float) and pd.isna(text)):
-                return None  # NULL in -> NULL out, like the expression form
-            # strip-then-lower, matching _bpe_encode's expression order
-            # (lower('İ') is 'i'+U+0307 — lowering FIRST would leak an
-            # ASCII 'i' the expression path never sees)
-            norm = _re.sub("[^A-Za-z ]", "", str(text)).lower()
+        def enc_doc(line):
+            if not isinstance(line, str):
+                return None  # NULL in, NULL out
             toks: list[str] = []
-            for w in norm.split():
+            for w in line.split():
                 hit = memo.get(w)
                 if hit is None:
                     hit = memo[w] = _bpe_encode_word(w, table)
@@ -1790,11 +1758,11 @@ def bpe_encode_batched(df: DataFrame, text_col: str, merges=None,
             return toks
 
         for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out] = pdf[text_col].map(enc_doc)
+            pdf[out] = pdf.pop(norm).map(enc_doc)
             yield pdf
 
-    return df.mapInPandas(encode_batches, schema=schema)
+    return (df.withColumn(norm, normalize_line(F.col(text_col)))
+            .mapInPandas(encode_batches, schema=schema))
 
 
 def _bpe_budget_oracle() -> str:
@@ -1828,7 +1796,7 @@ def _bpe_budget_oracle() -> str:
 @register(
     "text_token_budget_bpe",
     oracle=_bpe_budget_oracle(),
-    doc="Tokenizer-aware token budgeting (r10 VERDICT item 6): per-doc "
+    doc="Tokenizer-aware token budgeting: per-doc "
         "token counts under a REAL subword scheme — each doc is "
         "BPE-encoded against a fixed 12-entry merge table (the encoder "
         "side of text_bpe_first_merges' trainer; Sennrich et al. 2016) "
@@ -1837,29 +1805,24 @@ def _bpe_budget_oracle() -> str:
         "pretraining mix is budgeted by (char- and doc-count budgets "
         "misprice sources with different token densities; the ws_tokens "
         "column shows the whitespace-token count the naive budget would "
-        "use).  The encoder is PURE line-level expressions: normalize, "
-        "wrap every char in spaces (one regexp at line level — NOT "
-        "inside a HOF/post-explode lambda, the documented JIT-stall "
-        "shape), then one literal ' a  b '->' ab ' replace() per merge "
-        "in priority order (the space-wrap anchors both symbols whole, "
-        "so the replace is EXACTLY full BPE application of that merge "
-        "— fuzz-pinned vs a reference encoder), then count symbol "
-        "runs.  No explode, no UDF, no Python: "
-        "per-doc encoding rides the scan and the only shuffle is the "
-        "|sources|-row budget aggregate.  Fractions are floor()ed "
-        "permille/doc-counts (exact IEEE division both engines — the "
-        "r8 round() tie residual never applies).",
+        "use).  The encoder is bpe_encode_batched, the one BPE encoder: "
+        "normalize_line on the JVM side, then one mapInPandas pass that "
+        "applies the merges word by word with a per-partition memo, so "
+        "the plan stays the same size at any merge-table size.  The "
+        "oracle's chained SQL replace() per merge is the independent "
+        "reference.  No explode: per-doc encoding rides the scan and "
+        "the only shuffle is the |sources|-row budget aggregate.  "
+        "Fractions are floor()ed permille/doc-counts (exact IEEE "
+        "division in both engines, so no round() tie can differ).",
 )
 def q_text_token_budget_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents").select("source", "text")
     norm = normalize_line(F.col("text"))
-    enc = _bpe_encode(F.col("text"))
-    perdoc = docs.select(
+    perdoc = bpe_encode_batched(docs, "text").select(
         "source",
         F.size(F.regexp_extract_all(norm, F.lit("[A-Za-z]+"), F.lit(0)))
          .alias("ws"),
-        F.size(F.regexp_extract_all(enc, F.lit("[^ ]+"), F.lit(0)))
-         .alias("bpe"),
+        F.size("bpe_tokens").alias("bpe"),
     )
     budget = F.lit(float(_TOKEN_BUDGET))
     frac = F.least(F.lit(1.0), budget / F.greatest(F.sum("bpe"), F.lit(1)))
@@ -1922,7 +1885,7 @@ def bpe_train_merges(docs: DataFrame, text_col: str, n_merges: int,
     collecting at most a few candidate rows.  Stops early (fewer rows)
     if the vocabulary runs out of pairs before ``n_merges`` rounds.
 
-    ``batch_merges=m`` (r13 VERDICT item 4 — the multi-merge lever for
+    ``batch_merges=m`` (the multi-merge lever for
     real vocab sizes, where 50k one-merge rounds ≈ 14 h of driver-loop
     LATENCY): each scan selects up to m merges instead of one — the
     maximal pairwise SYMBOL-DISJOINT **prefix** of the (count desc,
@@ -1943,14 +1906,14 @@ def bpe_train_merges(docs: DataFrame, text_col: str, n_merges: int,
     an exact-count TIE against a newly created pair whose
     concatenated symbol sorts differently (the batch-boundary
     tie-order caveat); test_bpe_train_multi_merge_parity pins
-    m∈{4,16} == m=1 for 40 rounds on the fixture corpus, and the
-    50k-word throughput ladder is measured in SCALE.md r14.
+    m∈{4,16} == m=1 for 40 rounds on the fixture corpus.
 
     ``strict=False`` is the PRODUCTION-BUILD mode: overlapping
     candidates are skipped (greedy disjoint top-m) instead of
     truncating the batch, and the tie-guard is off — batches run at
     full m, so a 50k-merge vocabulary trains in ~n_merges/m rounds
-    (SCALE.md r14 has the measured ladder).  The merge TABLE may then
+    (on a 50k-word corpus, 400 merges, 32 cores: 0.83 s a merge at
+    m=1, 0.09 s at m=16 or 100).  The merge TABLE may then
     differ from the m=1 table near batch boundaries (order
     of equal-frequency chains, e.g. co+lu vs lu+m while building
     'column'); each batch is still pairwise symbol-disjoint, every

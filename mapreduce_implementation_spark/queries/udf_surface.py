@@ -126,10 +126,9 @@ def q_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "so the UDAF transport itself is under test.  The input is capped "
         "to the deterministic o_custkey % 10 = 7 slice (~1/10 of groups, "
         "pushed-down scan filter on BOTH sides): the GROUPED_AGG cost "
-        "floor is per-group Python-call overhead (~0.3 ms/group, pinned "
-        "in SCALE.md), and paying ~30k groups every bench round just to "
-        "re-measure a documented floor bought no signal (r8 VERDICT item "
-        "3) — ~3k groups pins the same Arrow transport at <5% of suite "
+        "floor is per-group Python-call overhead (~0.3 ms/group), and "
+        "paying ~30k groups on every run just to re-measure that floor "
+        "buys no signal — ~3k groups pins the same Arrow transport at <5% of suite "
         "time.  NOTE: the PRODUCTION form of this aggregation is the "
         "built-in F.sqrt(F.avg(x*x)) (pure codegen, ~10x faster); use "
         "GROUPED_AGG only for logic no built-in composition can express.",

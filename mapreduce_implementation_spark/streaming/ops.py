@@ -320,7 +320,7 @@ def frontier_stream(urls: DataFrame, history: DataFrame,
     nothing), but the trailing in-stream dedup treats NULL as a key
     like any other — multiple NULL-key rows inside one watermark
     horizon collapse to a single emission, the same at-most-once
-    contract every key gets (r12 ADVICE: documented, not routed
+    contract every key gets (documented, not routed
     around — a crawl frontier must not emit an unbounded stream of
     keyless rows).  The stateful in-stream dedup runs
     ONCE, after the union — branching fresh/survivors below it would

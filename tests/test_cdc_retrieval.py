@@ -43,7 +43,7 @@ def test_merge_upsert_no_seq_duplicate_keys_fails_loudly(spark):
     """Without seq_col, 'latest wins' is undefined for a batch holding
     two changes to one key — the in-plan assert_true guard must FAIL the
     job with the actionable message, never emit duplicate-key rows in
-    nondeterministic order (ADVICE r4)."""
+    nondeterministic order."""
     import pytest
 
     snap = spark.createDataFrame([(1, 1.0)], "k long, v double")
@@ -54,7 +54,7 @@ def test_merge_upsert_no_seq_duplicate_keys_fails_loudly(spark):
 
 
 def test_cdc_sink_recovers_missing_snapshot_from_retired(spark, tmp_path):
-    """Crash-window recovery (ADVICE r4): if a crash between the retire
+    """Crash-window recovery: if a crash between the retire
     and promote renames leaves no live snapshot, the next batch restores
     the newest .retired-* generation before merging, so the replayed
     batch has its base and exactly-once holds."""
@@ -83,7 +83,7 @@ def test_cdc_sink_recovers_missing_snapshot_from_retired(spark, tmp_path):
 
 
 def test_cdc_sink_replay_over_stale_retired_dir(spark, tmp_path):
-    """Crash window the r5 ADVICE found: promote succeeded but the
+    """Crash window: promote succeeded but the
     retired-dir cleanup didn't run.  On checkpoint replay of that batch,
     os.rename(snap, '.retired-{id}') targets an existing non-empty dir
     (ENOTEMPTY forever, stream dead).  apply_batch must clear the
@@ -121,8 +121,8 @@ def test_cdc_sink_replay_over_stale_retired_dir(spark, tmp_path):
 
 def test_cdc_sink_accepts_file_uri(spark, tmp_path):
     """'file:' URIs are explicitly permitted by the eager guard, so the
-    os.rename/exists machinery must see a plain path (ADVICE r5: the
-    allowed form crashed on every path op)."""
+    os.rename/exists machinery must see a plain path (otherwise the
+    allowed form crashes on every path op)."""
     from mapreduce_implementation_spark.streaming.ops import cdc_upsert_sink
 
     snap_dir = str(tmp_path / "snap")
@@ -349,7 +349,7 @@ def test_grouped_running_sum_matches_keyed_window(spark):
 
 
 def test_hll_rolling_window_emits_gap_days(spark, tmp_path):
-    """r13 ADVICE (medium): a calendar day with zero events but
+    """A calendar day with zero events but
     activity in its trailing 6 days has no per-day sketch row, yet
     the oracle (and the exact leg) emit it via the 0..6 fan-out.
     Keying the sketch merge on the sketch-day set silently dropped

@@ -95,7 +95,7 @@ def test_ivf_recall_vs_exact(spark):
 def test_embedding_lsh_recall_and_precision(spark):
     """The bucketed embedding near-dup (sign-LSH candidates + exact-cosine
     verify) at the AUTO-CHOSEN (bits, tables) — sign_lsh_params, the rule
-    the sf1 bench validated as ~linear (VERDICT r04 item 3) — must recall
+    measured ~linear from sf0.1 to sf1 — must recall
     >=85% of the brute-force pairs at the same threshold (seeded
     hyperplanes -> deterministic; measured 0.919-0.922 across SFs), and
     the verify step makes false positives impossible.  The registered
@@ -190,8 +190,8 @@ def test_lsh_bucket_cap_bounds_degenerate_corpus(spark):
 
 
 def test_lsh_bucket_cap_bounds_skewed_near_dup_cluster(spark):
-    """The 100 TB failure mode the bucket cap exists for (VERDICT r7
-    item 6): a NEAR-duplicate cluster ~100x the median cluster size —
+    """The 100 TB failure mode the bucket cap exists for: a
+    NEAR-duplicate cluster ~100x the median cluster size —
     not byte-identical, so signatures vary slightly and the mega-bucket
     forms from genuine signature agreement, the realistic boilerplate/
     crawl-dup shape.  Pins:
@@ -334,64 +334,49 @@ def test_connected_components_vs_union_find(spark):
         assert got == {**expect, 77: 77}, dense
 
 
-def test_prefix_jaccard_identical_and_prunes(spark):
-    """Prefix filtering is LOSSLESS (identical pairs+scores to the full
-    inverted-index join) and actually prunes: the prefix index holds
-    strictly fewer postings than the full index."""
+def _py_trigram_jaccard(rows, t):
+    """Pure-Python exact trigram Jaccard over the reference tokenizer
+    (ASCII-space split, [A-Za-z] kept, lowercased, empties dropped):
+    {(a, b): J} for a < b with J >= t, rounded like the operator."""
+    import re
+
+    grams = {}
+    for i, text in rows:
+        toks = [w for w in (re.sub("[^A-Za-z]", "", t).lower()
+                            for t in text.split(" ")) if w]
+        grams[i] = {" ".join(toks[k:k + 3]) for k in range(len(toks) - 2)}
+    out = {}
+    for a in grams:
+        for b in grams:
+            inter = len(grams[a] & grams[b])
+            if a < b and inter:
+                j = inter / (len(grams[a]) + len(grams[b]) - inter)
+                if j >= t:
+                    out[(a, b)] = round(j, 6)
+    return out
+
+
+def test_ngram_jaccard_matches_python_and_keeps_boundary(spark):
+    """``ngram_jaccard_pairs`` against a pure-Python trigram Jaccard on
+    the same rows: a pair at EXACTLY J = t (the raw-score threshold
+    must keep it), near-miss chaff whose docs share one gram (J well
+    under t), and punctuation/case that the tokenizer strips."""
     from mapreduce_implementation_spark.operators.dedup import (
-        ngram_jaccard_pairs, ngram_jaccard_pairs_prefix, word_ngrams,
+        ngram_jaccard_pairs,
     )
 
-    docs = load_table(spark, SF_DIR_01, "documents")
-    full = {(r.a, r.b): r.jaccard for r in
-            ngram_jaccard_pairs(docs, "doc_id", "text", n=3, min_jaccard=0.5).collect()}
-    pref = {(r.a, r.b): r.jaccard for r in
-            ngram_jaccard_pairs_prefix(docs, "doc_id", "text", n=3,
-                                       min_jaccard=0.5).collect()}
-    assert full == pref
-
-    grams = word_ngrams(docs, "doc_id", "text", n=3).select("doc_id", "ngram").distinct()
-    n_full_postings = grams.count()
-    sz = grams.groupBy("doc_id").count()
-    # t=0.5 prefix keeps |g| - ceil(0.5|g|) + 1 ≈ |g|/2 + 1 postings/doc
-    n_prefix_postings = sz.select(
-        F.sum(F.col("count") - F.ceil(0.5 * F.col("count")) + 1)).collect()[0][0]
-    assert n_prefix_postings < 0.6 * n_full_postings, (
-        n_prefix_postings, n_full_postings)
-
-
-def test_prefix_jaccard_filters_keep_boundary_and_stay_lossless(spark):
-    """r14 opt: the prefix join gained PPJoin's length + positional
-    filters.  Two adversarial pins: (1) a pair at EXACTLY J = t (the
-    float-slack boundary both filters must keep: equal sizes for the
-    length filter, first common gram LAST in both prefixes so the
-    positional bound lands exactly on the required overlap) survives
-    with the right score; (2) on a corpus full of late-shared-gram
-    near-miss pairs the prefix path stays identical to the full
-    inverted-index join — the filters only ever drop pairs the verify
-    step would have rejected."""
-    from mapreduce_implementation_spark.operators.dedup import (
-        ngram_jaccard_pairs, ngram_jaccard_pairs_prefix,
-    )
-
-    # J(A,B) = 2 / (3 + 3 - 2) = 0.5 exactly; the shared grams sort
-    # LAST in the global (df, gram) order, so the positional upper
-    # bound equals the required overlap with zero slack.
-    rows = [(1, "a b c d e"), (2, "a b c d f")]
-    # near-miss chaff: each pair of chaff docs shares exactly one gram
-    # placed late in the prefix (J well under 0.5) — the class the
-    # positional filter prunes before the verify join.
+    # J(A,B) = 2 / (3 + 3 - 2) = 0.5 exactly
+    rows = [(1, "a b c d e"), (2, "A, b c d f")]
     rows += [(10 + i, f"x{i} y{i} z{i} q w r{i} s{i} t{i}")
              for i in range(6)]
+    rows += [(20, "the quick brown fox jumps"),
+             (21, "The quick brown fox jumps!"), (22, "quick brown fox")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    pref = {(r.a, r.b): r.jaccard for r in
-            ngram_jaccard_pairs_prefix(docs, "doc_id", "text", n=3,
-                                       min_jaccard=0.5).collect()}
-    full = {(r.a, r.b): r.jaccard for r in
-            ngram_jaccard_pairs(docs, "doc_id", "text", n=3,
-                                min_jaccard=0.5).collect()}
-    assert pref == full
-    assert pref[(1, 2)] == 0.5
+    got = {(r.a, r.b): r.jaccard for r in
+           ngram_jaccard_pairs(docs, "doc_id", "text", n=3,
+                               min_jaccard=0.5).collect()}
+    assert got == _py_trigram_jaccard(rows, 0.5)
+    assert got[(1, 2)] == 0.5
 
 
 def test_cluster_representatives_semantics(spark):
@@ -753,18 +738,13 @@ def test_substring_spans_match_model_random(spark):
         assert got == want, (w, s, sorted(got), sorted(want))
 
 
-def test_tfidf_cosine_prefix_filter_lossless(spark):
-    """Both physical modes of the exact TF-IDF cosine join (naive
-    all-shared-terms and Bayardo prefix-filtered) must produce the
-    identical pair set and scores as a pure-Python model, on a corpus
-    with rare discriminative terms (where the prefix filter actually
-    prunes) and shared stop-ish words, including near-identical pairs
-    straddling the 0.9 threshold.  The vocabulary threshold is patched
-    to 0 (prefix filtering) and far above the corpus (naive join)."""
+def test_tfidf_cosine_matches_python_model(spark):
+    """The exact TF-IDF cosine join must produce the identical pair set
+    and scores as a pure-Python model, on a corpus with rare
+    discriminative terms and shared stop-ish words, including
+    near-identical pairs straddling the 0.9 threshold."""
     import math
-    from unittest import mock
 
-    from mapreduce_implementation_spark.operators import dedup
     from mapreduce_implementation_spark.operators.dedup import (
         tfidf_cosine_pairs,
     )
@@ -780,6 +760,8 @@ def test_tfidf_cosine_prefix_filter_lossless(spark):
         (5, "completely different zebra quagga okapi text here"),
         (6, "the the the quick quick words words words words"),
         (7, "unrelated singleton gibberish tokens nothing shared"),
+        # doc 1 plus one common word: a near pair with unequal norms
+        (8, "the quick brown fox jumps over the lazy dog here"),
     ]
 
     # pure-Python model of the documented semantics
@@ -806,20 +788,17 @@ def test_tfidf_cosine_prefix_filter_lossless(spark):
                     want.add((i, j, round(dot / (nn[i] * nn[j]), 6)))
 
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for mode, threshold in (("prefix", 0), ("naive", 10**9)):
-        try:
-            with mock.patch.object(dedup, "_PREFIX_VOCAB_THRESHOLD",
-                                   threshold):
-                got = {(r["a"], r["b"], r["cos"])
-                       for r in tfidf_cosine_pairs(
-                           df, "doc_id", "text", min_cosine=0.9).collect()}
-        finally:
-            release_persisted()
-        assert {(a, b) for a, b, _ in got} == {(a, b) for a, b, _ in want}, mode
-        for (a, b, c) in got:
-            cw = next(cw for (x, y, cw) in want if (x, y) == (a, b))
-            assert abs(c - cw) < 1e-6, (mode, a, b, c, cw)
-    assert (1, 2) in {(a, b) for a, b, _ in want}  # fixture sanity
+    try:
+        got = {(r["a"], r["b"], r["cos"])
+               for r in tfidf_cosine_pairs(
+                   df, "doc_id", "text", min_cosine=0.9).collect()}
+    finally:
+        release_persisted()
+    assert {(a, b) for a, b, _ in got} == {(a, b) for a, b, _ in want}
+    for (a, b, c) in got:
+        cw = next(cw for (x, y, cw) in want if (x, y) == (a, b))
+        assert abs(c - cw) < 1e-6, (a, b, c, cw)
+    assert {(1, 2), (1, 8)} <= {(a, b) for a, b, _ in want}  # fixture sanity
 
 
 def test_zero_norm_vectors_never_throw_under_ansi(spark):
@@ -916,7 +895,7 @@ def test_content_defined_chunks_survive_insertion(spark):
 
 
 def test_cdc_finds_shifted_duplicate_fixed_stride_misses(spark):
-    """r13 VERDICT item 5 done-bar: at PAIR level, a front-shifted
+    """At PAIR level, a front-shifted
     duplicate is detected by CDC chunk sharing (>=2 shared chunk
     hashes — the dedup_chunk_signature survival rule applied to
     content-defined chunks, the dedup_cdc_duplicate_mass composition)

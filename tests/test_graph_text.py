@@ -702,64 +702,6 @@ def test_lpa_float_weights_auto_route_declarative(spark):
         release_persisted()
 
 
-def test_bpe_replace_encoder_matches_reference(spark):
-    """text_token_budget_bpe's expression encoder vs an independent
-    Python BPE reference (leftmost-greedy full application of each
-    merge in table order, the standard encode loop), on 200 seeded
-    random words plus the r11-review counterexamples ('there' collapsed
-    to ONE token under the first, single-space-separated cut: ' e r'
-    matched symbol e followed by the PREFIX of symbol 're').  The
-    space-WRAPPED representation (' a  b ' -> ' ab ') anchors both
-    symbols whole, making one literal replace per merge exactly full
-    BPE application — this test pins that equivalence on the real Spark
-    expression, one action for all cases."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from mapreduce_implementation_spark.queries.textanalysis import (
-        _BPE_MERGES,
-    )
-
-    def bpe_ref(word):
-        syms = list(word)
-        for a, b in _BPE_MERGES:
-            i, out = 0, []
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return syms
-
-    rng = random.Random(4211)
-    words = ["there", "then", "other", "the", "and", "rere", "thther",
-             "eses", "interesting", "and then there were none"]
-    words += ["".join(rng.choice("theranois") for _ in range(rng.randint(1, 14)))
-              for _ in range(200)]
-
-    from mapreduce_implementation_spark.queries.textanalysis import (
-        _bpe_encode,
-    )
-
-    df = spark.createDataFrame([(i, w) for i, w in enumerate(words)],
-                               "i long, text string")
-    # the PRODUCTION encoder expression — not a local copy, so an edit
-    # to the query's encoder is judged by this reference test too
-    enc = _bpe_encode(F.col("text"))
-    got = {r["i"]: (r["n"], r["toks"]) for r in df.select(
-        "i",
-        F.size(F.regexp_extract_all(enc, F.lit("[^ ]+"), F.lit(0))).alias("n"),
-        F.regexp_extract_all(enc, F.lit("[^ ]+"), F.lit(0)).alias("toks"),
-    ).collect()}
-    for i, w in enumerate(words):
-        ref = [t for part in w.split() for t in bpe_ref(part)]
-        assert got[i] == (len(ref), ref), (w, got[i], ref)
-
-
 def _random_wellformed_merges(rng, n_merges, alphabet="theranois"):
     """A random BPE-style merge table built the way training builds one:
     each merge pairs two symbols already in the pool (chars + earlier
@@ -795,63 +737,93 @@ def _bpe_ref_seq(word, merges):
     return syms
 
 
-def test_bpe_replace_encoder_random_merge_tables(spark):
-    """The ADVICE-r11 fuzz, committed: the space-wrapped chained-replace
-    encoder vs the independent reference over RANDOM well-formed merge
-    tables (not just the fixed _BPE_MERGES fixture), so the wrap-form
-    equivalence is pinned as a property of the representation, not of
-    one lucky table.  8 seeded tables x 150 words = 1,200 cases, one
-    Spark action per table."""
+def _bpe_ref_text(text, merges):
+    """Reference encoding of one document: the tokenizer contract in
+    plain Python (keep [A-Za-z] and spaces, lowercase, split on
+    spaces), then ``_bpe_ref_seq`` per word; NULL text gives NULL."""
+    import re
+
+    if text is None:
+        return None
+    norm = re.sub("[^A-Za-z ]", "", text).lower()
+    return [t for part in norm.split() for t in _bpe_ref_seq(part, merges)]
+
+
+def test_bpe_encoder_matches_reference(spark):
+    """``bpe_encode_batched`` on the query's fixed merge table vs the
+    independent reference, on 200 seeded random words plus the words
+    whose merges interact ('there': symbol e followed by symbol 're'
+    must not merge as 'er')."""
     import random
 
     from mapreduce_implementation_spark.queries.textanalysis import (
-        _bpe_encode,
+        _BPE_MERGES, bpe_encode_batched,
+    )
+
+    rng = random.Random(4211)
+    texts = ["there", "then", "other", "the", "and", "rere", "thther",
+             "eses", "interesting", "and then there were none"]
+    texts += ["".join(rng.choice("theranois") for _ in range(rng.randint(1, 14)))
+              for _ in range(200)]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "i long, text string")
+    got = {r["i"]: r["toks"] for r in
+           bpe_encode_batched(df, "text", out="toks").collect()}
+    for i, t in enumerate(texts):
+        assert got[i] == _bpe_ref_text(t, _BPE_MERGES), (t, got[i])
+
+
+def test_bpe_encoder_edge_texts_match_reference(spark):
+    """``bpe_encode_batched`` vs the independent reference on the texts
+    the tokenizer must normalise: None, empty, punctuation-bearing,
+    whitespace-padded and non-ASCII ('İ' lowercases to 'i' + U+0307, so
+    the tokenizer must strip before it lowercases), on the fixed merge
+    table and on a random well-formed one."""
+    import random
+
+    from mapreduce_implementation_spark.queries.textanalysis import (
+        _BPE_MERGES, bpe_encode_batched,
+    )
+
+    rng = random.Random(907)
+    texts = ["There, THEN: other!", "", None, "İstanbul naïve reëntry",
+             "x" * 40, "  spaced   out  ", "tab\tand\nnewline"]
+    texts += ["".join(rng.choice("theranois .,!")
+                      for _ in range(rng.randint(0, 30))) for _ in range(80)]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "i long, text string")
+    for merges in (_BPE_MERGES, _random_wellformed_merges(rng, 15)):
+        got = {r["i"]: r["toks"] for r in
+               bpe_encode_batched(df, "text", merges=merges,
+                                  out="toks").collect()}
+        for i, t in enumerate(texts):
+            assert got[i] == _bpe_ref_text(t, merges), (merges, t, got[i])
+
+
+def test_bpe_encoder_random_merge_tables(spark):
+    """``bpe_encode_batched`` vs the independent reference over RANDOM
+    well-formed merge tables (not just the fixed _BPE_MERGES fixture),
+    so the encoder is pinned as a property of BPE, not of one lucky
+    table.  8 seeded tables x 150 texts, one Spark action per table."""
+    import random
+
+    from mapreduce_implementation_spark.queries.textanalysis import (
+        bpe_encode_batched,
     )
 
     rng = random.Random(1211)
     for table_i in range(8):
         merges = _random_wellformed_merges(rng, rng.randint(4, 20))
-        words = ["".join(rng.choice("theranois")
-                         for _ in range(rng.randint(1, 12)))
+        texts = ["".join(rng.choice("theranois .,!")
+                         for _ in range(rng.randint(0, 16)))
                  for _ in range(148)] + ["there", "and then there were none"]
         df = spark.createDataFrame(
-            [(i, w) for i, w in enumerate(words)], "i long, text string")
-        enc = _bpe_encode(F.col("text"), merges=merges)
-        got = {r["i"]: r["toks"] for r in df.select(
-            "i", F.regexp_extract_all(
-                enc, F.lit("[^ ]+"), F.lit(0)).alias("toks")).collect()}
-        for i, w in enumerate(words):
-            ref = [t for part in w.split() for t in _bpe_ref_seq(part, merges)]
-            assert got[i] == ref, (table_i, merges, w, got[i], ref)
-
-
-def test_bpe_batched_parity_with_expression(spark):
-    """bpe_encode_batched (the vocab-scale mapInPandas path) must agree
-    token-for-token with the oracle-able expression form on the fixture
-    table AND on random well-formed tables, including None/empty/
-    punctuation-bearing text — the crossover contract in its docstring."""
-    import random
-
-    from mapreduce_implementation_spark.queries.textanalysis import (
-        _BPE_MERGES, _bpe_encode, bpe_encode_batched,
-    )
-
-    rng = random.Random(907)
-    texts = ["There, THEN: other!", "", None, "İstanbul naïve reëntry",
-             "and then there were none", "x" * 40]
-    texts += ["".join(rng.choice("theranois .,!")
-                      for _ in range(rng.randint(0, 30))) for _ in range(80)]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "i long, text string")
-    for merges in (_BPE_MERGES, _random_wellformed_merges(rng, 15)):
-        expr_toks = F.regexp_extract_all(
-            _bpe_encode(F.col("text"), merges=merges),
-            F.lit("[^ ]+"), F.lit(0))
-        want = {r["i"]: r["toks"]
-                for r in df.select("i", expr_toks.alias("toks")).collect()}
-        got_df = bpe_encode_batched(df, "text", merges=merges, out="toks")
-        got = {r["i"]: r["toks"] for r in got_df.collect()}
-        assert got == want
+            [(i, t) for i, t in enumerate(texts)], "i long, text string")
+        got = {r["i"]: r["toks"] for r in
+               bpe_encode_batched(df, "text", merges=merges,
+                                  out="toks").collect()}
+        for i, t in enumerate(texts):
+            assert got[i] == _bpe_ref_text(t, merges), (table_i, merges, t)
 
 
 def test_bpe_batched_rejects_output_name_collision(spark):
@@ -870,12 +842,10 @@ def test_bpe_batched_rejects_output_name_collision(spark):
 
 
 def test_bpe_batched_at_vocab_scale_matches_reference(spark):
-    """The vocab-scale path at a REAL merge-table size: 1,000 random
-    well-formed merges (where the expression form cannot even be
-    planned — it StackOverflows at ~300, SCALE.md r12), batched encoder
-    vs the independent sequential reference on 120 seeded words.  This
-    is the regime bpe_encode_batched exists for; the small-table parity
-    tests alone never drive it past the expression form's ceiling."""
+    """The encoder at a REAL merge-table size: 1,000 random well-formed
+    merges (a chained-replace expression of this size overflows the
+    driver's stack at about 300 merges before a task runs) vs the
+    independent sequential reference on 120 seeded words."""
     import random
 
     from mapreduce_implementation_spark.queries.textanalysis import (
@@ -901,8 +871,7 @@ def test_bpe_train_batched_matches_reference_past_ceiling(spark):
     """The trainer vs an INDEPENDENT pure-Python Sennrich trainer
     (dict-of-word-counts formulation, shared nothing with the Spark
     path) for 40 rounds — enough rounds that a tie-break or
-    apply-order slip compounds visibly; the 1k-round regime is
-    measured in SCALE.md r13 with this same operator."""
+    apply-order slip compounds visibly."""
     import random
     from collections import Counter
 
@@ -955,7 +924,7 @@ def test_bpe_train_batched_matches_reference_past_ceiling(spark):
 
 
 def test_bpe_train_multi_merge_parity(spark):
-    """Multi-merge batching (r13 VERDICT item 4): batch_merges=m
+    """Multi-merge batching: batch_merges=m
     selects the maximal symbol-disjoint PREFIX of the sorted pair
     candidates, tie-guarded against created-pair count collisions
     (the two refinements that make the batch provably equal to the

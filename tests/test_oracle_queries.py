@@ -1,5 +1,5 @@
 """Cross-check EVERY registry query against its DuckDB oracle at sf0.01 —
-the same gate the driver applies (CORRECTNESS_r{N}.json)."""
+the same gate ``__spark_entry__``'s contract describes."""
 
 from __future__ import annotations
 

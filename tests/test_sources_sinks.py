@@ -98,7 +98,7 @@ def test_text_sink_and_dir_source(spark, tmpdir):
 
 def test_single_file_parity_sink(spark, tmpdir):
     """single_file=True exists only for golden-output parity at toy scale
-    (SCALE.md documents it as a 100 TB anti-pattern)."""
+    (one writer task: a 100 TB anti-pattern)."""
     src = load_table(spark, SF_DIR_001, "region").select("r_name")
     out = os.path.join(tmpdir, "single")
     write_csv(src, out, single_file=True)
@@ -169,7 +169,7 @@ def test_python_datasource_partition_contract(spark):
 def test_python_datasource_empty_and_bad_options(spark):
     """n=0 must plan an empty scan (one empty slice), not raise
     `range step must not be zero`; partitions<1 is a caller error with
-    a clear message (ADVICE r4)."""
+    a clear message."""
     import pytest
 
     from mapreduce_implementation_spark.sources.python_datasource import (

@@ -1,6 +1,6 @@
 """Independent reference-model checks for the statistics family.
 
-The r11 BPE review lesson (SCALE.md r11): for algorithm-bearing queries
+The lesson of a BPE encoder bug: for algorithm-bearing queries
 the DuckDB oracle twin validates AGREEMENT, not INTENT — when both
 engines run the same (possibly wrong) formulation, hash parity proves
 nothing about the statistic.  Every test here recomputes the claimed
@@ -895,7 +895,7 @@ def test_cumulative_users_matches_python(spark):
 
 
 # --- r12: the text-retrieval statistics the r11 program skipped ---
-# (VERDICT r11 item 3: BM25, TF-IDF weights, LLR pair scores, and the
+# (BM25, TF-IDF weights, LLR pair scores, and the
 # MinHash Jaccard ESTIMATE — all shared-formulation oracle twins until
 # now, exactly the shape the BPE lesson warns about.)
 
@@ -1493,7 +1493,7 @@ def test_bpe_training_matches_python_trainer(spark):
 
 
 # --- r13: recall@k as a NUMBER for the lossy ANN scale paths ----------------
-# (r12 VERDICT item 6: the in-query recall_ok booleans pin a threshold
+# (the in-query recall_ok booleans pin a threshold
 # at ONE seed; these recompute recall against brute force across three
 # seeds so a parameter regression shows up as a number dropping, not a
 # boolean staying coincidentally true.  All inputs and seeds are fixed,
