@@ -18,4 +18,13 @@ Layout:
     streaming   — Structured Streaming variants (word count, windowed aggs)
 """
 
+import sys as _sys
+
+from pyspark import cloudpickle as _cloudpickle
+
 __version__ = "0.1.0"
+
+# Closures shipped to Python workers (pandas UDFs, mapInPandas) carry the
+# package functions they call by value, so a worker needs only pyspark on
+# its path, not this package.
+_cloudpickle.register_pickle_by_value(_sys.modules[__name__])

@@ -12,14 +12,6 @@ physical plan while a frame is being built.  Spark picks each join's
 strategy itself (``spark.sql.autoBroadcastJoinThreshold`` at plan time,
 AQE's runtime conversion after).
 
-The one exception is ``connected_components``, which still resolves a
-canonical edge list of at most ``_DENSE_EDGE_LIMIT`` rows in one
-vectorized Arrow task, chosen by the capped count in ``_dense_probe``.
-It sits on the near-dup clustering path (``dedup.cluster_representatives``)
-where the star-contraction loop alone measured about 22% slower per
-pass; it goes single-path together with the removal of that caller's
-eager jobs.
-
 Connected components is the LLM-dedup pipeline's clustering step:
 near-dup *pairs* (MinHash / LSH / Jaccard joins, operators/dedup.py)
 become dedup *clusters* by computing the connected components of the
@@ -56,10 +48,6 @@ __all__ = ["connected_components", "pagerank", "label_propagation",
 # (2^25 nodes of *diameter* after contraction).  Hitting the cap raises —
 # silently returning a half-contracted clustering would be wrong.
 _MAX_ROUNDS = 25
-
-# connected_components resolves a canonical edge list of at most this
-# many rows (integral keys) in one vectorized Arrow task (see _dense_probe).
-_DENSE_EDGE_LIMIT = 2_000_000
 
 # hits renormalizes and truncates lineage every this many full rounds
 # (the magnitude bound is in its docstring).
@@ -123,82 +111,39 @@ def _signature(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _cc_dense_membership(e: DataFrame) -> DataFrame:
-    """connected_components' dimension-sized fast path (the graph-family
-    precedent): min-label propagation with pointer jumping in ONE
-    vectorized Arrow task over the canonical edge list.  Labels only
-    ever decrease and are bounded below by the component minimum, so
-    the unique fixed point is cluster_id = min node id — exactly the
-    star-contraction result — reached in O(log n) vectorized rounds
-    (`np.minimum.at` edge relax + p = p[p] jumps).  Returns membership
-    for edge-touched nodes only; the caller joins isolated/self-loop
-    nodes back, same as the declarative mode."""
-    import pandas as pd
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        vs = np.unique(np.concatenate(
-            [pdf["u"].to_numpy(), pdf["v"].to_numpy()]))
-        ui = _relabel(vs, pdf["u"].to_numpy())
-        vi = _relabel(vs, pdf["v"].to_numpy())
-        p = np.arange(len(vs))
-        while True:
-            old = p.copy()
-            np.minimum.at(p, ui, p[vi])
-            np.minimum.at(p, vi, p[ui])
-            while True:
-                pp = p[p]
-                if np.array_equal(pp, p):
-                    break
-                p = pp
-            if np.array_equal(p, old):
-                break
-        return pd.DataFrame({"node": vs.astype("int64"),
-                             "cluster_id": vs[p].astype("int64")})
-
-    return (e.groupBy(F.lit(1).alias("_g"))
-            .applyInPandas(solve, "node bigint, cluster_id bigint"))
-
-
 def connected_components(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
     """Cluster assignment for every node appearing in ``pairs``.
 
     Returns ``(node, cluster_id)`` with ``cluster_id`` = the minimum node id
-    of the component (deterministic canonical representative).  Runs
-    large-star/small-star rounds until the edge list is a fixed point (a
-    star forest rooted at each component's minimum).  Canonical edge
-    lists that pass :func:`_dense_probe` resolve in one vectorized task
-    — :func:`_cc_dense_membership`; the convergence-looped star
-    contraction (with its per-round signature collects) remains the
-    past-the-limit mode.
+    of the component (deterministic canonical representative), in the
+    input key type.  Runs large-star/small-star rounds until the edge
+    list is a fixed point (a star forest rooted at each component's
+    minimum); the per-round signature collect is the convergence test,
+    and a graph that has not converged after ``_MAX_ROUNDS`` rounds
+    raises.
+
+    The 2-column pair projection is the one materialization of the
+    input: ``nodes`` and the canonical edges both read it, and the
+    upstream pair pipeline (usually a similarity join) runs once.  It
+    is checkpointed rather than persisted because a checkpoint also
+    cuts the plan: every round's DataFrame calls would otherwise
+    re-analyze the whole upstream plan under the persisted node: a
+    persisted projection measured ``pass_s`` 10.7-11.4 s against
+    6.4-7.2 s for the checkpoint on ``curation_dedup`` (2 pairs).
+
+    Trade-off: small edge lists used to resolve in one Arrow task.  At
+    sf0.01 (4 cores, ``shuffle_partitions=8``, warm medians, identical
+    rows) the loop takes ``dedup_clusters`` from 2.8 s to 3.9 s and
+    ``dedup_cluster_representatives`` from 2.3 s to 3.6 s.
     """
-    # persist the 2-column pair projection FIRST: the `nodes` union and
-    # the canonical edge build are separate consumers, and without this
-    # the upstream pair pipeline (often an expensive similarity join)
-    # re-runs for each branch — measured 2-4 s per extra traversal on
-    # dedup_clusters' trigram-Jaccard join at sf0.1
-    pv = tracked_persist(
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")))
+    pv = (pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+          .localCheckpoint(eager=True))
     nodes = (
         pv.select(F.col("u").alias("node"))
         .union(pv.select(F.col("v").alias("node")))
         .distinct()
     )
-    # checkpoint the canonical edges BEFORE the probe so the distinct
-    # runs once, not once for the limit-capped count and again for
-    # whichever mode runs
-    edges = _canon(pv).localCheckpoint(eager=True)
-    if _dense_probe(edges, ("u", "v")):
-        # cast the int64 Arrow output back to the input key type so the
-        # output schema is identical to the declarative mode's (the
-        # physical mode must never leak into the schema)
-        kt = edges.schema["v"].dataType
-        membership = _cc_dense_membership(edges)
-        return (nodes.join(membership, "node", "left")
-                .select("node",
-                        F.coalesce(F.col("cluster_id").cast(kt),
-                                   F.col("node")).alias("cluster_id")))
+    edges = _canon(pv)
     sig = _signature(edges)
     for _ in range(_MAX_ROUNDS):
         stepped = _small_star(_large_star(edges))
@@ -220,31 +165,6 @@ def connected_components(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
         nodes.join(membership, "node", "left")
         .select("node", F.coalesce("cluster_id", "node").alias("cluster_id"))
     )
-
-
-_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
-
-
-def _dense_probe(e: DataFrame, key_cols: tuple[str, str]) -> bool:
-    """connected_components' gate for its dense Arrow fast path: BOTH
-    vertex key columns must be integral (the int64 relabeling contract)
-    and the edge list must fit one Arrow batch (a ``_DENSE_EDGE_LIMIT``-
-    capped count — never scans more than limit+1 rows of the persisted
-    frame)."""
-    dtypes = {f.name: f.dataType.simpleString() for f in e.schema.fields}
-    if any(dtypes[c] not in _INTEGRAL for c in key_cols):
-        return False
-    return e.limit(_DENSE_EDGE_LIMIT + 1).count() <= _DENSE_EDGE_LIMIT
-
-
-def _relabel(vs, arr):
-    """Indices of ``arr``'s values in the SORTED unique vertex array —
-    vectorized np.searchsorted, not a Python dict: at the 2M-row batch
-    cap a dict .map() costs millions of interpreter-level lookups
-    inside the task this fast path exists to shrink."""
-    import numpy as np
-
-    return np.searchsorted(vs, arr)
 
 
 def pagerank(edges: DataFrame, nodes: DataFrame, iters: int = 5,

@@ -3,7 +3,6 @@ from __future__ import annotations
 import contextlib
 import os
 import sys
-from unittest import mock
 
 import pytest
 
@@ -16,23 +15,6 @@ from mapreduce_implementation_spark.session import get_spark  # noqa: E402
 SF_DIR_001 = "/root/testdata/sf0.001"
 SF_DIR_01 = "/root/testdata/sf0.01"
 REFERENCE = "/root/reference"
-
-
-@contextlib.contextmanager
-def graph_path(dense: bool):
-    """Pin ``connected_components``' physical path for the enclosed
-    calls (the one graph operator with two bodies).
-
-    The dense Arrow path runs for any edge list of at most
-    ``_DENSE_EDGE_LIMIT`` rows, which covers every test graph; a limit
-    of -1 sends every edge list, the empty one included, down the
-    star-contraction loop.  ``mock.patch.object`` rather than the
-    function-scoped ``monkeypatch``, so Hypothesis tests can use it."""
-    from mapreduce_implementation_spark.operators import graph
-
-    limit = graph._DENSE_EDGE_LIMIT if dense else -1
-    with mock.patch.object(graph, "_DENSE_EDGE_LIMIT", limit):
-        yield
 
 
 @contextlib.contextmanager

@@ -4,6 +4,7 @@ ground-truth pairs that exact methods find."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_implementation_spark.operators.dedup import (
@@ -12,7 +13,7 @@ from mapreduce_implementation_spark.operators.dedup import (
 from mapreduce_implementation_spark.operators.similarity import ann_topk_lsh, cosine_topk
 from mapreduce_implementation_spark.registry import all_specs
 from mapreduce_implementation_spark.sources.tables import load_table
-from tests.conftest import SF_DIR_01, graph_path
+from tests.conftest import SF_DIR_01
 
 
 def test_minhash_lsh_recalls_true_near_dups(spark):
@@ -292,20 +293,8 @@ def test_simhash_pairs_are_high_jaccard(spark):
     assert jac & sim, "SimHash pairs should include some exact-Jaccard near-dups"
 
 
-def test_connected_components_vs_union_find(spark):
-    """Large-star/small-star CC must match a pure-Python union-find on an
-    adversarial edge list: a long chain (worst case for naive min-label
-    flooding), a star, a cycle, two singleton-ish pairs, and shuffled ids."""
-    from mapreduce_implementation_spark.operators.graph import connected_components
-
-    edges = (
-        [(i + 1, i) for i in range(40, 60)]            # chain 40..60
-        + [(100, v) for v in (101, 102, 103, 104)]     # star rooted high
-        + [(7, 8), (8, 9), (9, 7)]                     # cycle
-        + [(1, 2), (3, 4)]                             # two pairs
-        + [(200, 45)]                                  # bridge into the chain
-    )
-
+def _union_find_min(edges):
+    """{node: min node of its component} by pure-Python union-find."""
     parent: dict = {}
 
     def find(x):
@@ -317,21 +306,92 @@ def test_connected_components_vs_union_find(spark):
 
     for a, b in edges:
         parent[find(a)] = find(b)
-    expect = {n: min(m for m in parent if find(m) == find(n)) for n in parent}
+    lo: dict = {}
+    for n in parent:
+        r = find(n)
+        lo[r] = min(lo.get(r, n), n)
+    return {n: lo[find(n)] for n in parent}
 
-    df = spark.createDataFrame(edges, "a: long, b: long")
-    for dense in (True, False):
-        with graph_path(dense):
-            got = {r["node"]: r["cluster_id"]
-                   for r in connected_components(df, "a", "b").collect()}
-        assert got == expect, dense
+
+def _shuffled_path(n, seed):
+    """Edges of a path over ``n`` nodes whose ids are a seeded
+    permutation: the component minimum sits mid-path, so star
+    contraction needs several rounds."""
+    import random
+
+    ids = list(range(1000, 1000 + n))
+    random.Random(seed).shuffle(ids)
+    return [(ids[i], ids[i + 1]) for i in range(n - 1)]
+
+
+def _cc(spark, edges, schema):
+    from mapreduce_implementation_spark.operators.graph import connected_components
+
+    df = spark.createDataFrame(edges, schema)
+    return {r["node"]: r["cluster_id"]
+            for r in connected_components(df, "a", "b").collect()}
+
+
+def test_connected_components_vs_union_find(spark):
+    """Large-star/small-star CC must match a pure-Python union-find on an
+    adversarial edge list: a long chain (worst case for naive min-label
+    flooding), a star, a cycle, two singleton-ish pairs, and shuffled ids."""
+    edges = (
+        [(i + 1, i) for i in range(40, 60)]            # chain 40..60
+        + [(100, v) for v in (101, 102, 103, 104)]     # star rooted high
+        + [(7, 8), (8, 9), (9, 7)]                     # cycle
+        + [(1, 2), (3, 4)]                             # two pairs
+        + [(200, 45)]                                  # bridge into the chain
+    )
+    expect = _union_find_min(edges)
+    assert _cc(spark, edges, "a: long, b: long") == expect
     # self-loop-only node: appears in `nodes`, never in canonical edges
-    df2 = spark.createDataFrame(edges + [(77, 77)], "a: long, b: long")
-    for dense in (True, False):
-        with graph_path(dense):
-            got = {r["node"]: r["cluster_id"]
-                   for r in connected_components(df2, "a", "b").collect()}
-        assert got == {**expect, 77: 77}, dense
+    assert (_cc(spark, edges + [(77, 77)], "a: long, b: long")
+            == {**expect, 77: 77})
+
+
+def test_connected_components_string_keys(spark):
+    """Vertex keys need not be integers: cluster_id is the component's
+    minimum string, in the input key type."""
+    from mapreduce_implementation_spark.operators.graph import connected_components
+
+    edges = [("m", "c"), ("c", "x"), ("q", "p"), ("p", "b"), ("k", "k"),
+             ("doc10", "doc9"), ("doc9", "doc100")]
+    df = spark.createDataFrame(edges, "a string, b string")
+    cc = connected_components(df, "a", "b")
+    assert dict(cc.dtypes) == {"node": "string", "cluster_id": "string"}
+    got = {r["node"]: r["cluster_id"] for r in cc.collect()}
+    assert got == _union_find_min(edges)
+
+
+def test_connected_components_multi_round_path(spark):
+    """A 64-node path with shuffled ids takes more than one round to
+    contract; the fixed point still matches union-find."""
+    edges = _shuffled_path(64, seed=11)
+    want = _union_find_min(edges)
+    assert set(want.values()) == {1000}
+    assert _cc(spark, edges, "a long, b long") == want
+
+
+def test_connected_components_raises_past_max_rounds(spark, monkeypatch):
+    """A graph that is not a fixed point after ``_MAX_ROUNDS`` rounds
+    raises instead of returning a half-contracted clustering."""
+    from mapreduce_implementation_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        _cc(spark, _shuffled_path(64, seed=11), "a long, b long")
+
+
+def test_connected_components_empty_pairs(spark):
+    """An empty pair frame gives an empty clustering with the input key
+    type, not an error."""
+    from mapreduce_implementation_spark.operators.graph import connected_components
+
+    df = spark.createDataFrame([], "a long, b long")
+    cc = connected_components(df, "a", "b")
+    assert dict(cc.dtypes) == {"node": "bigint", "cluster_id": "bigint"}
+    assert cc.collect() == []
 
 
 def _py_trigram_jaccard(rows, t):

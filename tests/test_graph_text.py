@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from mapreduce_implementation_spark.operators.graph import pagerank
 from mapreduce_implementation_spark.operators.textstats import bm25_topk
-from tests.conftest import graph_path
 
 
 def _py_pagerank(edges, nodes, iters=5, d=0.85):
@@ -630,12 +629,10 @@ def test_pagerank_zero_out_weight_source_modes_match(spark):
         assert abs(got[v] - want[v]) < 1e-9, v
 
 
-def test_dense_paths_preserve_input_key_dtypes(spark):
-    """Outputs keep the caller's INT vertex key dtype.  For
-    connected_components, whose dense Arrow path relabels through int64
-    internally, the schema and values must not flip with the physical
-    mode; kcore (node) and label_propagation (label) have one body and
-    are checked against hand / pure-Python results."""
+def test_graph_outputs_preserve_input_key_dtypes(spark):
+    """Outputs keep the caller's INT vertex key dtype: connected_components
+    (node, cluster_id), kcore (node) and label_propagation (label), each
+    checked against hand / pure-Python results."""
     from mapreduce_implementation_spark.operators.caching import (
         release_persisted,
     )
@@ -651,14 +648,10 @@ def test_dense_paths_preserve_input_key_dtypes(spark):
         [(1, 2, 2), (2, 3, 1), (3, 1, 1)], "src int, dst int, w int")
     nd = spark.createDataFrame([(v,) for v in (1, 2, 3, 4)], "v int")
     try:
-        out = {}
-        for dense in (True, False):
-            with graph_path(dense):
-                cc = connected_components(pairs, "a", "b")
-            assert dict(cc.dtypes) == {"node": "int",
-                                       "cluster_id": "int"}, dense
-            out[dense] = {r["node"]: r["cluster_id"] for r in cc.collect()}
-        assert out[True] == out[False]
+        cc = connected_components(pairs, "a", "b")
+        assert dict(cc.dtypes) == {"node": "int", "cluster_id": "int"}
+        assert ({r["node"]: r["cluster_id"] for r in cc.collect()}
+                == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 7: 7})
         kc = kcore(ek, "a", "b", k=2, rounds=3)
         lp = label_propagation(el, nd, iters=3)
         assert dict(kc.dtypes) == {"node": "int", "core_deg": "bigint"}
@@ -1006,8 +999,7 @@ def test_bpe_train_fast_mode_quality(spark):
 # (the BPE-lesson idiom: each operator's oracle twin unrolls the SAME
 # formulation in SQL, so a mis-formulated algorithm could hash-match;
 # these recompute the graph statistic with textbook pure-Python
-# implementations on seeded random graphs — connected_components in both
-# of its physical modes.)
+# implementations on seeded random graphs.)
 
 
 def _random_graph(rng, n_nodes, n_edges):
@@ -1022,9 +1014,6 @@ def _random_graph(rng, n_nodes, n_edges):
 def test_connected_components_matches_union_find(spark):
     import random
 
-    from mapreduce_implementation_spark.operators.caching import (
-        release_persisted,
-    )
     from mapreduce_implementation_spark.operators.graph import (
         connected_components,
     )
@@ -1054,15 +1043,10 @@ def test_connected_components_matches_union_find(spark):
                 want[m] = lo
 
         df = spark.createDataFrame(edges, "a long, b long")
-        for dense in (True, False):
-            try:
-                with graph_path(dense):
-                    got = {r["node"]: r["cluster_id"] for r in
-                           connected_components(df, "a", "b").collect()}
-            finally:
-                release_persisted()
-            assert got == want, (trial, dense,
-                                 sorted(set(got.items()) ^ set(want.items()))[:4])
+        got = {r["node"]: r["cluster_id"] for r in
+               connected_components(df, "a", "b").collect()}
+        assert got == want, (trial,
+                             sorted(set(got.items()) ^ set(want.items()))[:4])
 
 
 def test_kcore_matches_python_peeling(spark):

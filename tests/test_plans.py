@@ -687,6 +687,31 @@ def test_graph_queries_plan_no_python_node(spark):
     finally:
         release_persisted()
 
+
+def test_connected_components_plans_no_python_node(spark):
+    """connected_components has one body, the star-contraction loop: a
+    bare call over small integer pairs and both dedup clustering
+    queries plan no grouped-pandas or other Python node."""
+    from mapreduce_implementation_spark.operators.caching import (
+        release_persisted,
+    )
+    from mapreduce_implementation_spark.operators.graph import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "a long, b long")
+    frames = {"connected_components": connected_components(pairs, "a", "b")}
+    try:
+        for name in ("dedup_clusters", "dedup_cluster_representatives"):
+            frames[name] = SPECS[name].fn(spark, SF_DIR_01)
+        for name, df in frames.items():
+            plan = plan_string(df)
+            assert "FlatMapGroupsInPandas" not in plan, (name, plan)
+            assert not _PYTHON_NODE.search(plan), (name, plan)
+    finally:
+        release_persisted()
+
+
 def test_substring_spans_plan_linear(spark):
     """The ExactSubstr span pipeline must stay linear: no nested-loop or
     cartesian join anywhere (the all-pairs trap the window-key groupBy

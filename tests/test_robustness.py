@@ -6,7 +6,10 @@ wider than the fixtures' (~100 KB vs ~300 B)."""
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -496,3 +499,48 @@ def test_read_int_lines_rejects_non_integer_tokens(spark, tmp_path, ansi):
                 read_int_lines(spark, str(d)).collect()
     finally:
         spark.conf.set(key, prev)
+
+
+_WORKER_SCRIPT = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+from mapreduce_implementation_spark.operators.similarity import (
+    hyperplane_bucket_keys)
+from mapreduce_implementation_spark.queries.textanalysis import (
+    bpe_encode_batched)
+vecs = spark.createDataFrame([(1, [1.0, 0.0]), (2, [-0.5, 1.0])],
+                             "id long, v array<double>")
+keyed = hyperplane_bucket_keys(vecs, "v", 2, bits=2, tables=2)
+docs = spark.createDataFrame([(1, "Hello, World!")], "id long, text string")
+enc = bpe_encode_batched(docs, "text", merges=[("l", "l"), ("h", "e")])
+print(json.dumps({"keys": [r._bks for r in keyed.orderBy("id").collect()],
+                  "bpe": enc.collect()[0].bpe_tokens}))
+spark.stop()
+"""
+
+
+@pytest.mark.slow
+def test_python_workers_need_no_package_on_path(tmp_path):
+    """A driver that puts the checkout on ``sys.path`` by hand and runs
+    from another directory gets correct rows from the operators that
+    ship package functions to Python workers (a pandas UDF and a
+    mapInPandas closure): the workers never import the package."""
+    import numpy as np
+
+    from mapreduce_implementation_spark.operators.similarity import (
+        _planes, _sign_keys,
+    )
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run([sys.executable, "-c", _WORKER_SCRIPT, repo],
+                       cwd=tmp_path, env=env, capture_output=True, text=True,
+                       timeout=300)
+    assert r.returncode == 0, r.stderr[-2000:]
+    got = json.loads(r.stdout.strip().splitlines()[-1])
+    mat = np.array([[1.0, 0.0], [-0.5, 1.0]])
+    assert got["keys"] == _sign_keys(mat, _planes(2, 2, 2, 42), 2, 2).tolist()
+    assert got["bpe"] == ["he", "ll", "o", "w", "o", "r", "l", "d"]
