@@ -46,8 +46,7 @@ _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 def _unfilter_scanline(ftype: int, data: bytes, prev: bytearray,
                        nch: int) -> bytearray:
     """Reverse one PNG scanline filter (types 0-4, PNG spec §6) against
-    the previous de-filtered line.  Shared by the feature decoder and
-    the pixel-grid decoder so the two can never drift."""
+    the previous de-filtered line."""
     stride = len(prev)
     line = bytearray(data)
     if ftype == 1:  # Sub
@@ -74,21 +73,16 @@ def _unfilter_scanline(ftype: int, data: bytes, prev: bytearray,
     return line
 
 
-def decode_png(payload: bytes) -> tuple[int, int, int, float]:
-    """Pure-Python PNG decode — public format (RFC 2083 / W3C PNG spec):
-    chunk walk, IHDR parse, IDAT ``zlib`` inflate, per-scanline
-    de-filter (all five filter types), luma average.
-
-    Supports the baseline non-interlaced 8-bit-depth color types
-    (gray / RGB / palette / gray+alpha / RGBA); raises ``ValueError``
-    for anything else so callers can fall back.  Returns
-    ``(width, height, channels, mean_luma)`` where luma is the Rec.601
-    weighted sum for color images and the gray sample otherwise.
-
-    This is the metadata-extraction path (thumbnails, stats, filtering
-    by dimensions) — a production bulk-pixel pipeline would swap in a
-    native decoder inside the same ``mapInPandas`` iterator.
-    """
+def _png_rows(payload: bytes, gray_only: bool = False
+              ) -> tuple[int, int, int, bytes | None, list[bytearray]]:
+    """The one PNG parser behind :func:`decode_png` and
+    :func:`decode_png_gray_rows` — public format (RFC 2083 / W3C PNG
+    spec): magic check, chunk walk, IHDR baseline checks (non-interlaced
+    8-bit depth), IDAT ``zlib`` inflate, length check and per-scanline
+    de-filter (all five filter types).  Returns ``(width, height,
+    color_type, plte, rows)`` with one de-filtered bytearray per
+    scanline; ``gray_only`` rejects every color type but 0 (gray).
+    Raises ``ValueError`` for anything else so callers can fall back."""
     import struct
     import zlib
 
@@ -106,7 +100,11 @@ def decode_png(payload: bytes) -> tuple[int, int, int, float]:
         if ctype == b"IHDR":
             width, height, bit_depth, color_type, comp, filt, interlace = (
                 struct.unpack(">IIBBBBB", data))
-            if bit_depth != 8 or comp != 0 or filt != 0 or interlace != 0:
+            baseline = (bit_depth == 8 and comp == 0 and filt == 0
+                        and interlace == 0)
+            if gray_only and not (baseline and color_type == 0):
+                raise ValueError("not a baseline grayscale PNG")
+            if not baseline:
                 raise ValueError("unsupported PNG variant")
             if color_type not in _PNG_CHANNELS:
                 raise ValueError(f"unknown color type {color_type}")
@@ -126,15 +124,35 @@ def decode_png(payload: bytes) -> tuple[int, int, int, float]:
     raw = zlib.decompress(bytes(idat))
     if len(raw) != (stride + 1) * height:
         raise ValueError("IDAT length mismatch")
-
+    rows: list[bytearray] = []
     prev = bytearray(stride)
-    luma_sum = 0.0
     for y in range(height):
         base = y * (stride + 1)
-        line = _unfilter_scanline(raw[base], raw[base + 1:base + 1 + stride],
+        prev = _unfilter_scanline(raw[base], raw[base + 1:base + 1 + stride],
                                   prev, nch)
-        prev = line
-        for x in range(0, stride, nch):
+        rows.append(prev)
+    return width, height, color_type, plte, rows
+
+
+def decode_png(payload: bytes) -> tuple[int, int, int, float]:
+    """Pure-Python PNG decode through :func:`_png_rows`, then the luma
+    average.
+
+    Supports the baseline non-interlaced 8-bit-depth color types
+    (gray / RGB / palette / gray+alpha / RGBA); raises ``ValueError``
+    for anything else so callers can fall back.  Returns
+    ``(width, height, channels, mean_luma)`` where luma is the Rec.601
+    weighted sum for color images and the gray sample otherwise.
+
+    This is the metadata-extraction path (thumbnails, stats, filtering
+    by dimensions) — a production bulk-pixel pipeline would swap in a
+    native decoder inside the same ``mapInPandas`` iterator.
+    """
+    width, height, color_type, plte, rows = _png_rows(payload)
+    nch = _PNG_CHANNELS[color_type]
+    luma_sum = 0.0
+    for line in rows:
+        for x in range(0, width * nch, nch):
             if color_type in (0, 4):
                 luma_sum += line[x]
             elif color_type == 3:
@@ -172,45 +190,11 @@ def encode_png_gray(pixels: bytes, width: int, height: int) -> bytes:
 def decode_png_gray_rows(payload: bytes) -> tuple[int, int, list[bytearray]]:
     """Pure-Python pixel-grid decode for GRAYSCALE (color type 0) PNGs:
     returns ``(width, height, rows)`` with one de-filtered bytearray per
-    scanline.  The perceptual-hash path needs actual pixels, not the
-    aggregate features ``decode_png`` returns; non-gray or non-baseline
-    payloads raise ``ValueError`` for the caller's decoder ladder."""
-    import struct
-    import zlib
-
-    if not payload or not payload.startswith(_PNG_MAGIC):
-        raise ValueError("not a PNG")
-    pos = 8
-    width = height = color_type = None
-    idat = bytearray()
-    while pos + 8 <= len(payload):
-        (length,) = struct.unpack(">I", payload[pos:pos + 4])
-        ctype = payload[pos + 4:pos + 8]
-        data = payload[pos + 8:pos + 8 + length]
-        pos += 12 + length
-        if ctype == b"IHDR":
-            width, height, bit_depth, color_type, comp, filt, interlace = (
-                struct.unpack(">IIBBBBB", data))
-            if (bit_depth != 8 or comp != 0 or filt != 0 or interlace != 0
-                    or color_type != 0):
-                raise ValueError("not a baseline grayscale PNG")
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-    if width is None or not idat:
-        raise ValueError("truncated PNG")
-    raw = zlib.decompress(bytes(idat))
-    if len(raw) != (width + 1) * height:
-        raise ValueError("IDAT length mismatch")
-    rows: list[bytearray] = []
-    prev = bytearray(width)
-    for y in range(height):
-        base = y * (width + 1)
-        line = _unfilter_scanline(raw[base], raw[base + 1:base + 1 + width],
-                                  prev, 1)
-        prev = line
-        rows.append(line)
+    scanline (:func:`_png_rows`).  The perceptual-hash path needs actual
+    pixels, not the aggregate features ``decode_png`` returns; non-gray
+    or non-baseline payloads raise ``ValueError`` for the caller's
+    decoder ladder."""
+    width, height, _, _, rows = _png_rows(payload, gray_only=True)
     return width, height, rows
 
 

@@ -8,23 +8,29 @@ window spec costs one shuffle on its partition keys; specs sharing keys
 reuse the exchange.
 
 Two-phase operators (:func:`grouped_running_sum`, :func:`grouped_ntile`,
-:func:`grouped_exact_quantiles`, :func:`global_order_stats`) derive their
-range bucket id as a PURE FUNCTION OF THE ROW VALUES — a broadcast list of
-boundary key tuples compared against each row with an ordinary
-expression — never from ``spark_partition_id()`` over a
-``repartitionByRange``.  RangePartitioner boundaries come from a
-nondeterministic sampling job and partition ids are an artifact of the
-one evaluation that produced them: under cache eviction, task retry,
-AQE re-planning, or a second action over the same lineage, a recompute
-re-samples and re-assigns ids, silently desyncing the local prefix from
-its bucket offsets.  A value-derived bucket id is identical under ANY
-recomputation, configuration, or cache state, so the persist below is a
-pure perf optimization (one materialization feeds both plan branches),
-not a correctness requirement.
+:func:`grouped_exact_quantiles`, :func:`global_order_stats`) all run on
+ONE prefix-offset core, :func:`_prefix` — the reference's Job B dataflow
+(range-partition on sampled boundaries, work per bucket, stitch the
+buckets back in order).  It gives every row its in-group row number and
+group size and, when asked, the in-group running sum of a value and that
+value's group total; each operator keeps only its own formula over those
+four columns.  The core derives its range bucket id as a PURE FUNCTION
+OF THE ROW VALUES — a broadcast list of boundary key tuples compared
+against each row with an ordinary expression — never from
+``spark_partition_id()`` over a ``repartitionByRange``.  RangePartitioner
+boundaries come from a nondeterministic sampling job and partition ids
+are an artifact of the one evaluation that produced them: under cache
+eviction, task retry, AQE re-planning, or a second action over the same
+lineage, a recompute re-samples and re-assigns ids, silently desyncing
+the local prefix from its bucket offsets.  A value-derived bucket id is
+identical under ANY recomputation, configuration, or cache state, so the
+core's persist is a pure perf optimization (one materialization feeds
+both plan branches), not a correctness requirement.
 
 The ``grouped_*`` operators take their group columns as a list; an
 empty list is the global form (``ORDER BY`` with no ``PARTITION BY``).
-The bucket count is the session's ``spark.sql.shuffle.partitions``.
+NULL group keys form one group, as in SQL's ``PARTITION BY``/``GROUP
+BY``.  The bucket count is the session's ``spark.sql.shuffle.partitions``.
 """
 
 from __future__ import annotations
@@ -35,8 +41,7 @@ from pyspark.sql import functions as F
 from .caching import tracked_persist
 from .joins import _fresh_name
 
-__all__ = ["ranked", "with_lag", "running_agg", "top_k_per_group",
-           "top_k_per_group_salted",
+__all__ = ["top_k_per_group", "top_k_per_group_salted",
            "grouped_running_sum", "grouped_ntile", "grouped_exact_quantiles",
            "global_order_stats", "shared_boundaries"]
 
@@ -55,27 +60,6 @@ def _shuffle_partitions(df: DataFrame) -> int:
 
 def _spec(partition_by: list[str], order_by: list[Column]) -> WindowSpec:
     return Window.partitionBy(*partition_by).orderBy(*order_by)
-
-
-def ranked(df: DataFrame, partition_by: list[str], order_by: list[Column],
-           kind: str = "rank", out: str = "rnk") -> DataFrame:
-    fn = {"rank": F.rank, "dense_rank": F.dense_rank, "row_number": F.row_number}[kind]
-    return df.withColumn(out, fn().over(_spec(partition_by, order_by)))
-
-
-def with_lag(df: DataFrame, col: str, partition_by: list[str],
-             order_by: list[Column], offset: int = 1, out: str | None = None) -> DataFrame:
-    out = out or f"{col}_lag{offset}"
-    return df.withColumn(out, F.lag(col, offset).over(_spec(partition_by, order_by)))
-
-
-def running_agg(df: DataFrame, agg: Column, partition_by: list[str],
-                order_by: list[Column], out: str,
-                preceding: int | None = None) -> DataFrame:
-    """Cumulative (preceding=None) or moving-frame aggregate over rows."""
-    start = Window.unboundedPreceding if preceding is None else -preceding
-    spec = _spec(partition_by, order_by).rowsBetween(start, Window.currentRow)
-    return df.withColumn(out, agg.over(spec))
 
 
 def top_k_per_group(df: DataFrame, partition_by: list[str],
@@ -136,8 +120,6 @@ def top_k_per_group_salted(df: DataFrame, partition_by: list[str],
 # from the same key, and Column objects don't expose their sort direction
 # through a public API.
 # --------------------------------------------------------------------------
-
-SortKey = "str | tuple[str, str] | tuple[str, str, str]"
 
 
 def _norm_keys(order_by) -> list[tuple[str, bool, bool]]:
@@ -211,35 +193,24 @@ def _derive_bounds(vals: list[tuple], keys: list[tuple[str, bool, bool]],
     return bounds
 
 
-def _boundaries(df: DataFrame, keys: list[tuple[str, bool, bool]],
-                n_buckets: int) -> list[tuple]:
-    """B-1 boundary key tuples — a deterministic function of the DATA.
-
-    :func:`_sample_rows` + :func:`_derive_bounds`.  Boundary placement
-    affects only bucket BALANCE; the two-phase prefix math is exact for
-    any boundary set, so an imperfect sample can never change results.
-    """
-    names = [k[0] for k in keys]
-    S = max(n_buckets * _SAMPLE_PER_BUCKET, 96)
-    rows = _sample_rows(df, names, S)
-    return _derive_bounds([tuple(r[n] for n in names) for r in rows],
-                          keys, n_buckets)
-
-
 def shared_boundaries(df: DataFrame, key_sets: list) -> list[list[tuple]]:
-    """Boundary lists for SEVERAL two-phase window calls over the same
-    frame from ONE sample pass — the chained-pipeline optimization
-    (e.g. RFM's three ntiles over one per-user aggregate: one
-    boundary-collect job instead of three scans of the base).
+    """B-1 boundary key tuples per key set — a deterministic function of
+    the DATA — for SEVERAL two-phase window calls over the same frame
+    from ONE sample pass (e.g. RFM's three ntiles over one per-user
+    aggregate: one boundary-collect job instead of three scans of the
+    base).  :func:`_prefix` samples through here with one key set when
+    its caller passes no boundaries.
 
     Sampling tags rows by ``xxhash64`` over the union of all key
-    columns, so every key set derives its boundaries from the same
-    collected rows; per-set boundaries are then the usual sort-order
-    quantile picks.  Still a pure function of row values (deterministic
-    under recomputation/retry/AQE); sharing one sample across key sets
-    changes only bucket BALANCE, never results — the two-phase math is
-    exact for any boundary set.  Pass each returned element as the
-    matching :func:`grouped_ntile` call's ``bounds=``.
+    columns (:func:`_sample_rows`), so every key set derives its
+    boundaries from the same collected rows; per-set boundaries are
+    then the usual sort-order quantile picks (:func:`_derive_bounds`).
+    Still a pure function of row values (deterministic under
+    recomputation/retry/AQE); boundary placement — including sharing
+    one sample across key sets — changes only bucket BALANCE, never
+    results: the two-phase math is exact for any boundary set.  Pass
+    each returned element as the matching :func:`grouped_ntile` call's
+    ``bounds=``.
     """
     parts = _shuffle_partitions(df)
     keyed = [_norm_keys(ks) for ks in key_sets]
@@ -335,82 +306,104 @@ def _bucket_expr(df: DataFrame, keys: list[tuple[str, bool, bool]],
     return F.expr(" + ".join(terms))
 
 
+def _prefix(base: DataFrame, group_cols: list[str], order_by,
+            bounds: list[tuple] | None, p: str,
+            value: str | None = None) -> DataFrame:
+    """The prefix-offset core of the two-phase family: ``base`` plus, per
+    row, ``{p}rn`` (its ``row_number()`` within its group in
+    ``order_by`` order) and ``{p}n`` (the group's row count) and, given
+    ``value``, ``{p}cum`` (the in-group running sum of ``value``, rows
+    frame) and ``{p}sum`` (its group total).  ``p`` is the caller's
+    :func:`_fresh_name` prefix.
+
+    A plain keyed window puts each ENTIRE group in one task — fatal when
+    one group is terabytes.  Instead: bucket on (group..., order...)
+    keys via broadcast value boundaries (``bounds``, or one
+    :func:`shared_boundaries` sample when None), so groups occupy
+    contiguous bucket runs and a huge group spans MANY buckets; the
+    local row_number/running sum run per (bucket, group) in parallel;
+    the per-(bucket, group) totals frame (at most buckets +
+    distinct-groups rows) yields each group's exclusive prefix offsets
+    and totals with windows partitioned BY GROUP over bucket ids; and
+    the offsets join back on (bucket, group) NULL-SAFELY, so a NULL
+    group key is a group like any other.  With group columns the join
+    is keyed, not broadcast (group cardinality may itself be huge —
+    Spark upgrades to broadcast when stats allow); without, the
+    offsets frame is at most one row per bucket and is broadcast.
+
+    ``base`` is persisted: the boundary-sample collect materializes it,
+    so its upstream lineage runs once and both branches read the cache;
+    the bucket expression is recomputed per branch — cheap, and
+    recompute-stable by design (module docstring).
+    """
+    base = tracked_persist(base)
+    keys = [*group_cols, *order_by]
+    if bounds is None:
+        [bounds] = shared_boundaries(base, [keys])
+    bkt, obkt, rn, cum = f"{p}bkt", f"{p}obkt", f"{p}rn", f"{p}cum"
+    gk = [f"{p}g{i}" for i in range(len(group_cols))]
+    bucketed = base.withColumn(bkt, _bucket_expr(base, _norm_keys(keys),
+                                                 bounds))
+    w_loc = (Window.partitionBy(bkt, *group_cols)
+             .orderBy(*_sort_cols(_norm_keys(order_by))))
+    local = bucketed.withColumn(rn, F.row_number().over(w_loc))
+    # (per-bucket aggregate, its name, in-group column, group-total name)
+    parts = [(F.count(F.lit(1)), f"{p}cnt", rn, f"{p}n")]
+    if value is not None:
+        local = local.withColumn(cum, F.sum(value).over(
+            w_loc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        parts.append((F.sum(value), f"{p}tot", cum, f"{p}sum"))
+    w = Window.partitionBy(*group_cols).orderBy(bkt)
+    w_off = w.rowsBetween(Window.unboundedPreceding, -1)
+    w_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    offsets = (
+        bucketed.groupBy(bkt, *group_cols)
+        .agg(*[agg.alias(a) for agg, a, _, _ in parts])
+        .select(F.col(bkt).alias(obkt),
+                *[F.col(g).alias(k) for g, k in zip(group_cols, gk)],
+                *[F.sum(a).over(w_off).alias(f"{a}off")
+                  for _, a, _, _ in parts],
+                *[F.sum(a).over(w_all).alias(t) for _, a, _, t in parts]))
+    cond = F.col(bkt) == F.col(obkt)
+    for g, k in zip(group_cols, gk):
+        cond = cond & F.col(g).eqNullSafe(F.col(k))
+    out = local.join(offsets if group_cols else F.broadcast(offsets), cond)
+    # SQL sum semantics: NULL only when the local prefix AND every
+    # earlier bucket of the group hold no value (NULL offset = nothing
+    # precedes, or only NULLs do)
+    for _, a, c, _ in parts:
+        local_c, off = F.col(c), F.col(f"{a}off")
+        out = out.withColumn(c, F.coalesce(local_c + off, local_c, off))
+    return out.drop(bkt, obkt, *gk, *[f"{a}off" for _, a, _, _ in parts])
+
+
 def grouped_running_sum(df: DataFrame, value_col: str, group_cols: list[str],
                         order_by, out: str = "cum") -> DataFrame:
     """Exact ``sum(v) OVER (PARTITION BY g ORDER BY ... ROWS UNBOUNDED
     PRECEDING)`` that stays distributed even when single groups dwarf a
-    partition; ``group_cols=[]`` is the global running sum, which never
-    funnels through a single-partition window either.
-
-    A plain keyed window puts each ENTIRE group in one task: fine for
-    many small groups, fatal when one group holds billions of rows (the
-    3-value l_returnflag case).  Instead: bucket on (group..., order...)
-    via broadcast boundaries — groups occupy contiguous bucket runs, a
-    huge group spans MANY buckets — then per-(bucket, group) local
-    cumsums run in parallel, and the per-(bucket, group) totals frame
-    (at most buckets + distinct-groups rows, because a bucket holds a
-    contiguous group range) computes each group's exclusive prefix
-    offsets with a window partitioned BY GROUP over bucket ids.
-    Offsets come back via a keyed join (not broadcast: group
-    cardinality may itself be huge — Spark upgrades to broadcast when
-    stats allow).  Bucket ids are value-derived, so every plan branch
-    sees the same assignment under any recomputation (module
-    docstring); the persist is perf-only.
+    partition (the 3-value l_returnflag case); ``group_cols=[]`` is the
+    global running sum, which never funnels through a single-partition
+    window either.  The running sum is :func:`_prefix`'s ``cum`` column.
 
     ``order_by``: sort-key list (see the sort-key notes above), a total
     order within each group.
     """
-    keys = _norm_keys([*group_cols, *order_by])
-    okeys = _norm_keys(order_by)
-    # persist the BASE frame: the boundary-sample collect materializes
-    # it, so the upstream lineage (often the expensive part) runs once
-    # and both consumer branches read the cache.  The bucket expression
-    # is recomputed per branch — cheap, and recompute-stable by design.
-    base = tracked_persist(df)
-    bounds = _boundaries(base, keys, _shuffle_partitions(df))
     p = _fresh_name("_gr_", df, extra=(out,))
-    bkt, lcum, tot, off = f"{p}bkt", f"{p}lcum", f"{p}tot", f"{p}off"
-    bucketed = base.withColumn(bkt, _bucket_expr(base, keys, bounds))
-    local = bucketed.withColumn(
-        lcum,
-        F.sum(value_col).over(
-            Window.partitionBy(bkt, *group_cols).orderBy(*_sort_cols(okeys))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    totals = bucketed.groupBy(bkt, *group_cols).agg(
-        F.sum(value_col).alias(tot))
-    w_off = (Window.partitionBy(*group_cols).orderBy(bkt)
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = totals.select(
-        bkt, *group_cols,
-        F.coalesce(F.sum(tot).over(w_off), F.lit(0)).alias(off))
-    return (
-        local.join(offsets, [bkt, *group_cols])
-        .withColumn(out, F.col(lcum) + F.col(off))
-        .drop(bkt, lcum, off)
-    )
+    return (_prefix(df, group_cols, order_by, None, p, value=value_col)
+            .withColumn(out, F.col(f"{p}cum"))
+            .drop(f"{p}rn", f"{p}n", f"{p}cum", f"{p}sum"))
 
 
 def grouped_ntile(df: DataFrame, group_cols: list[str], order_by,
                   n_tiles: int, out: str = "tile",
                   bounds: list[tuple] | None = None) -> DataFrame:
     """Exact ``ntile(k) OVER (PARTITION BY g ORDER BY ...)`` that stays
-    distributed even when single groups dwarf a partition — the ntile
-    sibling of :func:`grouped_running_sum`; ``group_cols=[]`` is the
-    global ``ntile(k) OVER (ORDER BY ...)``.
-
-    A plain keyed window puts each ENTIRE group in one task — fatal when
-    one group is terabytes (per-source quality deciles where a source is
-    half the corpus).  Instead: bucket on (group..., order...) via
-    broadcast value boundaries (groups occupy contiguous bucket runs),
-    per-(bucket, group) row_number in parallel, and a small
-    per-(bucket, group) counts frame computes each group's exclusive
-    prefix offset AND group total with windows partitioned by group over
-    bucket ids.  Group rank = local rank + offset; the standard ntile
-    split (first N mod k tiles take ceil(N/k) rows) is then a pure
-    expression of (rank, group total).  Offsets return via a keyed join
-    (group cardinality may be huge; Spark upgrades to broadcast when
-    stats allow).  Bucket ids are value-derived — identical under any
-    recomputation — so the persist is perf-only (module docstring).
+    distributed even when single groups dwarf a partition (per-source
+    quality deciles where a source is half the corpus);
+    ``group_cols=[]`` is the global ``ntile(k) OVER (ORDER BY ...)``.
+    The standard ntile split (the first N mod k tiles take ceil(N/k)
+    rows) is a pure expression of :func:`_prefix`'s (in-group rank,
+    group size).
 
     ``order_by`` must total-order rows WITHIN each group (include a
     unique tiebreaker) or ties straddling a boundary make ranks
@@ -418,41 +411,17 @@ def grouped_ntile(df: DataFrame, group_cols: list[str], order_by,
     element for the same ``group_cols + order_by`` keys; by default the
     operator samples its own.
     """
-    keys = _norm_keys([*group_cols, *order_by])
-    okeys = _norm_keys(order_by)
-    base = tracked_persist(df)
-    if bounds is None:
-        bounds = _boundaries(base, keys, _shuffle_partitions(df))
     p = _fresh_name("_gn_", df, extra=(out,))
-    bkt, lrn, off, nn, cnt = (f"{p}bkt", f"{p}lrn", f"{p}off", f"{p}n",
-                              f"{p}cnt")
-    bucketed = base.withColumn(bkt, _bucket_expr(base, keys, bounds))
-    local = ranked(bucketed, [bkt, *group_cols], _sort_cols(okeys),
-                   kind="row_number", out=lrn)
-    counts = bucketed.groupBy(bkt, *group_cols).agg(
-        F.count(F.lit(1)).alias(cnt))
-    w_off = (Window.partitionBy(*group_cols).orderBy(bkt)
-             .rowsBetween(Window.unboundedPreceding, -1))
-    w_all = (Window.partitionBy(*group_cols).orderBy(bkt)
-             .rowsBetween(Window.unboundedPreceding,
-                          Window.unboundedFollowing))
-    offsets = counts.select(
-        bkt, *group_cols,
-        F.coalesce(F.sum(cnt).over(w_off), F.lit(0)).alias(off),
-        F.sum(cnt).over(w_all).alias(nn),
-    )
-    r = F.col(lrn) + F.col(off)
+    r, nn = F.col(f"{p}rn"), F.col(f"{p}n")
     k = F.lit(n_tiles).cast("long")
-    q = F.floor(F.col(nn) / k)
-    rem = F.col(nn) % k
+    q = F.floor(nn / k)
+    rem = nn % k
     cut = rem * (q + 1)
     tile = F.when(r <= cut, F.floor((r - 1) / (q + 1)) + 1).otherwise(
         rem + F.floor((r - cut - 1) / F.greatest(q, F.lit(1))) + 1)
-    return (
-        local.join(offsets, [bkt, *group_cols])
-        .withColumn(out, tile.cast("int"))
-        .drop(bkt, lrn, off, nn)
-    )
+    return (_prefix(df, group_cols, order_by, bounds, p)
+            .withColumn(out, tile.cast("int"))
+            .drop(f"{p}rn", f"{p}n"))
 
 
 def grouped_exact_quantiles(df: DataFrame, value_col: str,
@@ -466,48 +435,22 @@ def grouped_exact_quantiles(df: DataFrame, value_col: str,
     The builtin's buffer holds every distinct value OF THE GROUP in one
     task: fine for many small groups, a silent OOM when one group is
     terabytes (per-source percentiles where a source is half the
-    corpus).  Here the group never lands in one task: bucket on
-    (group..., value) via broadcast value boundaries (groups occupy
-    contiguous bucket runs, a huge group spans MANY buckets), rank
-    per-(bucket, group) in parallel, recover each row's in-group rank
-    by adding the group's exclusive bucket-count prefix, then each
-    requested quantile picks its two neighboring order statistics with
+    corpus).  Here the group never lands in one task: :func:`_prefix`
+    ranks each row within its group by value, then each requested
+    quantile picks its two neighboring order statistics with
     conditional sums aggregated BY GROUP (partial-aggregable — the
     reduce sees #groups * #probs doubles).  Interpolation is
     ``v_lo + (v_hi - v_lo) * frac``, the same float-op order as DuckDB
     ``quantile_cont`` and Spark ``percentile()``, so all three agree to
     the ulp on equal inputs.  NULL values are excluded per
     percentile_cont; groups whose values are all NULL vanish (matching
-    SQL GROUP BY over the null-filtered input).  Offsets return via a
-    keyed join, not broadcast — group cardinality may itself be huge.
+    SQL GROUP BY over the null-filtered input).
     """
     names = out_names or [f"q{str(p).replace('.', '_')}" for p in probs]
-    keys = _norm_keys([*group_cols, value_col])
-    okeys = _norm_keys([value_col])
-    base = tracked_persist(
-        df.select(*group_cols, value_col)
-        .filter(F.col(value_col).isNotNull()))
-    bounds = _boundaries(base, keys, _shuffle_partitions(df))
+    base = (df.select(*group_cols, value_col)
+            .filter(F.col(value_col).isNotNull()))
     tp = _fresh_name("_gq_", base, extra=tuple(names))
-    bkt, rn, off, nn, cnt = (f"{tp}bkt", f"{tp}rn", f"{tp}off", f"{tp}n",
-                             f"{tp}cnt")
-    bucketed = base.withColumn(bkt, _bucket_expr(base, keys, bounds))
-    local = ranked(bucketed, [bkt, *group_cols], _sort_cols(okeys),
-                   kind="row_number", out=rn)
-    counts = bucketed.groupBy(bkt, *group_cols).agg(
-        F.count(F.lit(1)).alias(cnt))
-    w_off = (Window.partitionBy(*group_cols).orderBy(bkt)
-             .rowsBetween(Window.unboundedPreceding, -1))
-    w_all = (Window.partitionBy(*group_cols).orderBy(bkt)
-             .rowsBetween(Window.unboundedPreceding,
-                          Window.unboundedFollowing))
-    offsets = counts.select(
-        bkt, *group_cols,
-        F.coalesce(F.sum(cnt).over(w_off), F.lit(0)).alias(off),
-        F.sum(cnt).over(w_all).alias(nn),
-    )
-    joined = local.join(offsets, [bkt, *group_cols])
-    r = F.col(rn) + F.col(off)
+    r, nn = F.col(f"{tp}rn"), f"{tp}n"
     v = F.col(value_col).cast("double")
     aggs = [F.max(nn).alias(nn)]
     for i, p in enumerate(probs):
@@ -515,7 +458,8 @@ def grouped_exact_quantiles(df: DataFrame, value_col: str,
         lo = F.floor(pos) + 1
         aggs.append(F.sum(F.when(r == lo, v).otherwise(0.0)).alias(f"{tp}lo{i}"))
         aggs.append(F.sum(F.when(r == lo + 1, v).otherwise(0.0)).alias(f"{tp}hi{i}"))
-    one = joined.groupBy(*group_cols).agg(*aggs)
+    one = (_prefix(base, group_cols, [value_col], None, tp)
+           .groupBy(*group_cols).agg(*aggs))
     outs = [F.col(c) for c in group_cols]
     for i, (p, name) in enumerate(zip(probs, names)):
         pos = (F.col(nn) - 1) * F.lit(float(p))
@@ -540,9 +484,10 @@ def global_order_stats(df: DataFrame, order_by,
     functions of (key's cumulative row count, key's row count, key's
     ordinal, total rows), so phase 0 collapses the input to DISTINCT
     keys + counts (one partial-aggregating shuffle, tiny under ties),
-    the value-bucketed two-phase pass runs over the keyed frame
-    computing BOTH cumulative row count and key ordinal in one local
-    window, and per-key stats join back to the rows by key (null-safe:
+    and :func:`_prefix` runs over that keyed frame with no group
+    columns: its row number is the key ordinal, its running sum and
+    total of the per-key counts are the cumulative and total row
+    counts.  Per-key stats join back to the rows by key (null-safe:
     SQL window functions rank NULL keys too).  rank = cum - cnt + 1;
     dense_rank = key ordinal; percent_rank = (rank-1)/(n-1) (0.0 when
     n == 1 per SQL); cume_dist = cum / n.  The join back is the only
@@ -551,51 +496,20 @@ def global_order_stats(df: DataFrame, order_by,
     ``order_by``: sort-key list (module docstring).  Unlike the other
     two-phase operators no tiebreaker is needed — ties are the point.
     """
-    keys = _norm_keys(order_by)
-    names = [k[0] for k in keys]
+    names = [k[0] for k in _norm_keys(order_by)]
     tp = _fresh_name("_os_", df,
                      extra=(rank_col, dense_col, pct_col, cume_col))
-    bkt, cnt, lc, lk = f"{tp}bkt", f"{tp}cnt", f"{tp}lc", f"{tp}lk"
-    tc, tk, oc, ok, nn = (f"{tp}tc", f"{tp}tk", f"{tp}oc", f"{tp}ok",
-                          f"{tp}n")
-    keyed = tracked_persist(
-        df.groupBy(*names).agg(F.count(F.lit(1)).alias(cnt)))
-    bounds = _boundaries(keyed, keys, _shuffle_partitions(df))
-    bucketed = keyed.withColumn(bkt, _bucket_expr(keyed, keys, bounds))
-    w_loc = (Window.partitionBy(bkt).orderBy(*_sort_cols(keys))
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    local = (bucketed
-             .withColumn(lc, F.sum(cnt).over(w_loc))
-             .withColumn(lk, F.row_number().over(
-                 Window.partitionBy(bkt).orderBy(*_sort_cols(keys)))))
-    totals = bucketed.groupBy(bkt).agg(
-        F.sum(cnt).alias(tc), F.count(F.lit(1)).alias(tk))
-    w_off = (Window.orderBy(bkt)
-             .rowsBetween(Window.unboundedPreceding, -1))
-    w_all = (Window.orderBy(bkt)
-             .rowsBetween(Window.unboundedPreceding,
-                          Window.unboundedFollowing))
-    offsets = totals.select(
-        bkt,
-        F.coalesce(F.sum(tc).over(w_off), F.lit(0)).alias(oc),
-        F.coalesce(F.sum(tk).over(w_off), F.lit(0)).alias(ok),
-        F.sum(tc).over(w_all).alias(nn))
-    cum = F.col(lc) + F.col(oc)
+    rows, cum, nn = F.col(f"{tp}rows"), F.col(f"{tp}cum"), F.col(f"{tp}sum")
+    keyed = df.groupBy(*names).agg(F.count(F.lit(1)).alias(f"{tp}rows"))
     # stats keys renamed {tp}k0.., so the join back to df (whose lineage
     # stats shares) is never an ambiguous self-join reference
-    stats = (
-        local.join(F.broadcast(offsets), bkt)
-        .select(
-            *[F.col(n).alias(f"{tp}k{i}") for i, n in enumerate(names)],
-            (cum - F.col(cnt) + 1).alias(rank_col),
-            (F.col(lk) + F.col(ok)).alias(dense_col),
-            F.when(F.col(nn) > 1,
-                   (cum - F.col(cnt)).cast("double")
-                   / (F.col(nn) - 1).cast("double"))
-            .otherwise(F.lit(0.0)).alias(pct_col),
-            (cum.cast("double") / F.col(nn).cast("double"))
-            .alias(cume_col))
-    )
+    stats = _prefix(keyed, [], order_by, None, tp, value=f"{tp}rows").select(
+        *[F.col(n).alias(f"{tp}k{i}") for i, n in enumerate(names)],
+        (cum - rows + 1).alias(rank_col),
+        F.col(f"{tp}rn").alias(dense_col),
+        F.when(nn > 1, (cum - rows).cast("double") / (nn - 1).cast("double"))
+        .otherwise(F.lit(0.0)).alias(pct_col),
+        (cum.cast("double") / nn.cast("double")).alias(cume_col))
     cond = None
     for i, n in enumerate(names):
         c = F.col(n).eqNullSafe(F.col(f"{tp}k{i}"))

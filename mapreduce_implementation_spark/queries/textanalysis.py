@@ -1840,8 +1840,7 @@ def q_text_token_budget_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def bpe_train_merges(docs: DataFrame, text_col: str, n_merges: int,
-                     batch_merges: int = 1,
-                     strict: bool = True) -> DataFrame:
+                     batch_merges: int = 1) -> DataFrame:
     """Full BPE vocabulary TRAINING (Sennrich et al. 2016): per round,
     count adjacent symbol pairs cnt-weighted across the vocabulary,
     merge the (count desc, lhs, rhs) argmax pair everywhere, repeat.
@@ -1907,20 +1906,6 @@ def bpe_train_merges(docs: DataFrame, text_col: str, n_merges: int,
     concatenated symbol sorts differently (the batch-boundary
     tie-order caveat); test_bpe_train_multi_merge_parity pins
     m∈{4,16} == m=1 for 40 rounds on the fixture corpus.
-
-    ``strict=False`` is the PRODUCTION-BUILD mode: overlapping
-    candidates are skipped (greedy disjoint top-m) instead of
-    truncating the batch, and the tie-guard is off — batches run at
-    full m, so a 50k-merge vocabulary trains in ~n_merges/m rounds
-    (on a 50k-word corpus, 400 merges, 32 cores: 0.83 s a merge at
-    m=1, 0.09 s at m=16 or 100).  The merge TABLE may then
-    differ from the m=1 table near batch boundaries (order
-    of equal-frequency chains, e.g. co+lu vs lu+m while building
-    'column'); each batch is still pairwise symbol-disjoint, every
-    recorded n_pairs is still the exact corpus count at batch time,
-    and the learned pair SET stays in the m=1 table's
-    frequency band — the trade every fastBPE/YouTokenToMe-style
-    frequency-batched tokenizer build makes.
     """
     from typing import Iterator
 
@@ -2009,8 +1994,6 @@ def bpe_train_merges(docs: DataFrame, text_col: str, n_merges: int,
             if len(sel) >= k:
                 break
             if r["a"] in used or r["b"] in used:
-                if not strict:
-                    continue  # greedy disjoint top-m (production mode)
                 # PREFIX truncation, not greedy skip: the equivalence
                 # proof needs every candidate ranked above a selected
                 # pair to itself be selected — skipping an overlapping
@@ -2019,7 +2002,7 @@ def bpe_train_merges(docs: DataFrame, text_col: str, n_merges: int,
                 break
             sel.append((r["a"], r["b"], int(r["n"])))
             used.update((r["a"], r["b"]))
-        if strict and len(sel) > 1:
+        if len(sel) > 1:
             # Tie-guard (the one residual divergence class): a pair
             # CREATED by merging member i has count <= the count of an
             # overlapping original pair (x,a_i)/(b_i,y), so it can tie

@@ -3,10 +3,10 @@ cumulative and moving frames, per-group top-k."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.windows import ranked, running_agg, top_k_per_group, with_lag
+from ..operators.windows import top_k_per_group
 from ..registry import register
 from ..sources.tables import load_table
 
@@ -24,10 +24,11 @@ from ..sources.tables import load_table
 )
 def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_totalprice")
-    order = [F.desc("o_totalprice"), F.asc("o_orderkey")]
-    df = ranked(o, ["o_custkey"], order, kind="rank", out="rnk")
-    df = ranked(df, ["o_custkey"], order, kind="dense_rank", out="drnk")
-    return df.select("o_custkey", "o_orderkey", "rnk", "drnk")
+    w = (Window.partitionBy("o_custkey")
+         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey")))
+    return o.select("o_custkey", "o_orderkey",
+                    F.rank().over(w).alias("rnk"),
+                    F.dense_rank().over(w).alias("drnk"))
 
 
 @register(
@@ -62,15 +63,14 @@ def q_window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_orderdate")
-    order = [F.asc("o_orderdate"), F.asc("o_orderkey")]
-    df = with_lag(o, "o_orderdate", ["o_custkey"], order, out="_prev")
-    from pyspark.sql import Window
-    spec = Window.partitionBy("o_custkey").orderBy(*order)
-    df = df.withColumn("_next", F.lead("o_orderdate").over(spec))
-    return df.select(
+    w = (Window.partitionBy("o_custkey")
+         .orderBy(F.asc("o_orderdate"), F.asc("o_orderkey")))
+    return o.select(
         "o_custkey", "o_orderkey",
-        F.date_format("_prev", "yyyy-MM-dd").alias("prev_order_date"),
-        F.date_format("_next", "yyyy-MM-dd").alias("next_order_date"),
+        F.date_format(F.lag("o_orderdate").over(w), "yyyy-MM-dd")
+        .alias("prev_order_date"),
+        F.date_format(F.lead("o_orderdate").over(w), "yyyy-MM-dd")
+        .alias("next_order_date"),
     )
 
 
@@ -88,9 +88,12 @@ def q_window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-    df = running_agg(o, F.sum("o_totalprice"), ["o_custkey"],
-                     [F.asc("o_orderdate"), F.asc("o_orderkey")], out="_rs")
-    return df.select("o_custkey", "o_orderkey", F.round("_rs", 2).alias("running_spend"))
+    w = (Window.partitionBy("o_custkey")
+         .orderBy(F.asc("o_orderdate"), F.asc("o_orderkey"))
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    return o.select("o_custkey", "o_orderkey",
+                    F.round(F.sum("o_totalprice").over(w), 2)
+                    .alias("running_spend"))
 
 
 @register(
@@ -108,9 +111,11 @@ def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
-    df = running_agg(e, F.avg("value"), ["user_id"],
-                     [F.asc("ts"), F.asc("event_id")], out="_ma", preceding=4)
-    return df.select("user_id", "event_id", F.round("_ma", 6).alias("moving_avg5"))
+    w = (Window.partitionBy("user_id")
+         .orderBy(F.asc("ts"), F.asc("event_id"))
+         .rowsBetween(-4, Window.currentRow))
+    return e.select("user_id", "event_id",
+                    F.round(F.avg("value").over(w), 6).alias("moving_avg5"))
 
 
 @register(
@@ -155,8 +160,6 @@ def q_window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sliding aggregate.",
 )
 def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     o = load_table(spark, sf_dir, "orders")
     day = F.unix_date(F.to_date("o_orderdate"))
     w = (Window.partitionBy("o_custkey").orderBy(day.cast("long"))
@@ -184,8 +187,6 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "single Window operator pass.",
 )
 def q_window_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice")
     return o.select(
@@ -263,8 +264,6 @@ def q_window_global_rank_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doubles.",
 )
 def q_window_range_trailing_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     li = load_table(spark, sf_dir, "lineitem")
     daily = (li.groupBy(F.col("l_returnflag").alias("flag"),
                         F.expr("datediff(l_shipdate, DATE '1992-01-01')")

@@ -959,42 +959,6 @@ def test_bpe_train_multi_merge_parity(spark):
                                  else None)
 
 
-def test_bpe_train_fast_mode_quality(spark):
-    """strict=False (the production-build mode): batches run at full m
-    with greedy disjoint selection, so the merge table may reorder or
-    re-path near batch boundaries (co+lu vs lu+m while building
-    'column' — pair IDENTITIES differ even when the learned tokens
-    converge).  The defensible quality pin is the objective BPE
-    greedily optimizes: corpus COMPRESSION.  Encoding the corpus with
-    the fast-mode table must land within 5% of the sequential table's
-    total token count at the same merge budget (same length, exact
-    positive counts too)."""
-    from pyspark.sql import functions as SF
-
-    from mapreduce_implementation_spark.queries.textanalysis import (
-        bpe_encode_batched, bpe_train_merges,
-    )
-    from mapreduce_implementation_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR_001
-
-    docs = load_table(spark, SF_DIR_001, "documents").select("text")
-    seq = [tuple(r) for r in
-           bpe_train_merges(docs, "text", 40).collect()]
-    fast = [tuple(r) for r in
-            bpe_train_merges(docs, "text", 40, batch_merges=16,
-                             strict=False).collect()]
-    assert len(fast) == len(seq) == 40
-    assert all(n > 0 for _, _, _, n in fast)
-
-    def total_tokens(table):
-        enc = bpe_encode_batched(docs, "text",
-                                 merges=[(a, b) for _, a, b, _ in table])
-        return enc.agg(SF.sum(SF.size("bpe_tokens"))).collect()[0][0]
-
-    n_seq, n_fast = total_tokens(seq), total_tokens(fast)
-    assert n_fast <= n_seq * 1.05, (n_fast, n_seq)
-
-
 # --- r12: random-graph reference models for the remaining graph ops ---------
 # (the BPE-lesson idiom: each operator's oracle twin unrolls the SAME
 # formulation in SQL, so a mis-formulated algorithm could hash-match;

@@ -235,9 +235,13 @@ def test_merge_upsert_matches_dict_model(spark, changes):
 
 # --- grouped prefix sum vs the keyed-window reference, random frames ---
 
-_grow = st.tuples(st.integers(min_value=0, max_value=3),   # group
+# group keys include NULL: a NULL group is a group like any other
+# (SQL PARTITION BY / GROUP BY semantics)
+_group = st.one_of(st.none(), st.integers(min_value=0, max_value=3))
+_grow = st.tuples(_group,                                  # group
                   st.integers(min_value=0, max_value=50),  # order key
-                  st.integers(min_value=-5, max_value=9))  # value
+                  st.one_of(st.none(),                     # value
+                            st.integers(min_value=-5, max_value=9)))
 
 
 @settings(max_examples=15, deadline=None)
@@ -245,8 +249,9 @@ _grow = st.tuples(st.integers(min_value=0, max_value=3),   # group
 def test_grouped_running_sum_matches_window_model(spark, rows):
     """grouped_running_sum == sum() OVER (PARTITION BY g ORDER BY k) on
     arbitrary group/key/value frames (duplicate keys excluded — the
-    operator's contract requires a total order), across partition
-    counts that force groups to straddle range partitions."""
+    operator's contract requires a total order; NULL groups and NULL
+    values included), across partition counts that force groups to
+    straddle range partitions."""
     from pyspark.sql.window import Window
 
     from mapreduce_implementation_spark.operators.caching import (
@@ -270,15 +275,16 @@ def test_grouped_running_sum_matches_window_model(spark, rows):
 
 
 @settings(max_examples=10, deadline=None)
-@given(st.lists(st.tuples(st.integers(min_value=0, max_value=3),      # group
+@given(st.lists(st.tuples(_group,                                     # group
                           st.integers(min_value=-20, max_value=20),   # key
                           st.integers(min_value=0, max_value=10**6)), # tiebreak
                 min_size=1, max_size=60, unique_by=lambda t: t[2]),
        st.sampled_from([2, 3, 7]))
 def test_grouped_ntile_matches_keyed_window_model(spark, rows, k):
     """grouped_ntile == ntile(k) OVER (PARTITION BY g ORDER BY key, tb)
-    on arbitrary group sizes (including groups smaller than k) across a
-    bucket count that forces groups to span many range buckets."""
+    on arbitrary group sizes (including groups smaller than k and a
+    NULL group) across a bucket count that forces groups to span many
+    range buckets."""
     from pyspark.sql.window import Window
 
     from mapreduce_implementation_spark.operators.caching import (
@@ -357,7 +363,7 @@ def test_exact_quantiles_matches_percentile_builtin(spark, vals, p):
 
 
 @settings(max_examples=8, deadline=None)
-@given(st.lists(st.tuples(st.integers(min_value=0, max_value=3),
+@given(st.lists(st.tuples(_group,
                           st.floats(min_value=-1000, max_value=1000,
                                     allow_nan=False, width=32)),
                 min_size=1, max_size=60),
@@ -365,7 +371,7 @@ def test_exact_quantiles_matches_percentile_builtin(spark, vals, p):
 def test_grouped_exact_quantiles_matches_builtin(spark, rows, p):
     """grouped_exact_quantiles == percentile(v, p) GROUP BY g (both
     percentile_cont interpolation) on arbitrary grouped float data —
-    including single-row groups and the p=0/p=1 edges."""
+    including single-row groups, a NULL group and the p=0/p=1 edges."""
     from mapreduce_implementation_spark.operators.caching import (
         release_persisted,
     )
@@ -373,8 +379,9 @@ def test_grouped_exact_quantiles_matches_builtin(spark, rows, p):
         grouped_exact_quantiles,
     )
 
-    df = spark.createDataFrame([(f"g{g}", float(v)) for g, v in rows],
-                               "g string, v double")
+    df = spark.createDataFrame(
+        [(None if g is None else f"g{g}", float(v)) for g, v in rows],
+        "g string, v double")
     try:
         with shuffle_partitions(spark, 5):
             got = {r["g"]: r["q"] for r in grouped_exact_quantiles(

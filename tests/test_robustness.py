@@ -467,6 +467,49 @@ def test_graph_operators_start_no_job_while_building(spark):
         release_persisted()
 
 
+def test_window_family_starts_only_sample_jobs_while_building(spark):
+    """Building a two-phase window operator over a frame past a
+    sort-merge join starts no job but its one boundary-sample collect,
+    whose adaptive shuffle stages run as jobs of their own (4-5 on a
+    4-partition session): none at all when ``grouped_ntile`` is handed
+    ``shared_boundaries`` bounds."""
+    from mapreduce_implementation_spark.operators import windows
+    from mapreduce_implementation_spark.operators.caching import (
+        release_persisted,
+    )
+    from tests.conftest import shuffle_partitions
+
+    rows = [(i % 5, i, (i * 7) % 13) for i in range(200)]
+    base = spark.createDataFrame(rows, "g long, k long, v long")
+    meta = spark.createDataFrame([(i, i % 2) for i in range(5)],
+                                 "g long, part int")
+    tracker = spark.sparkContext.statusTracker()
+    try:
+        with shuffle_partitions(spark, 4):
+            [bounds] = windows.shared_boundaries(base, [["g", "k"]])
+            ops = {
+                "grouped_ntile_bounds": (0, lambda d: windows.grouped_ntile(
+                    d, ["g"], ["k"], 3, bounds=bounds)),
+                "grouped_ntile": (4, lambda d: windows.grouped_ntile(
+                    d, ["g"], ["k"], 3)),
+                "grouped_running_sum": (4, lambda d: (
+                    windows.grouped_running_sum(d, "v", ["g"], ["k"]))),
+                "grouped_exact_quantiles": (4, lambda d: (
+                    windows.grouped_exact_quantiles(d, "v", ["g"], [0.5]))),
+                "global_order_stats": (5, lambda d: (
+                    windows.global_order_stats(d, ["v"]))),
+            }
+            for name, (budget, op) in ops.items():
+                joined = (base.join(meta.hint("merge"), "g")
+                          .select("g", "k", "v"))
+                before = set(tracker.getJobIdsForGroup(None))
+                op(joined)
+                started = set(tracker.getJobIdsForGroup(None)) - before
+                assert len(started) <= budget, (name, sorted(started))
+    finally:
+        release_persisted()
+
+
 @pytest.mark.parametrize("ansi", ["true", "false"])
 def test_read_int_lines_rejects_non_integer_tokens(spark, tmp_path, ansi):
     """The sort job's integer source answers one way under either
