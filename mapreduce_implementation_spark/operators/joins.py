@@ -16,35 +16,29 @@ Strategy notes for 100 TB:
 * ``range_join_bucketed`` turns an inequality time-window join into an
   equi-join on (key, time_bucket) + residual filter — the standard trick
   to avoid BroadcastNestedLoopJoin on big-big range predicates.
+* The Bloom family (``bloom_prefilter``, ``bloom_anti_join``,
+  ``bloom_anti_join_rolling`` and ``streaming.ops.frontier_stream``)
+  filters candidates with a Bloom filter and then verifies exactly,
+  ClusterJoin-style.  The Bloom steps are shared: one key rule
+  (``_bloom_keys``: integral pairs hash as bigint, floating pairs as
+  double, anything else must match), one build (``_bloom_words``
+  ``bit_or``-combines 64-bit words per group, ``_bloom_map`` collapses
+  them to a ``map<word, bits>``) and one probe (``_might_contain``, a
+  row expression over that map).  Each operator keeps only its recheck.
 """
 
 from __future__ import annotations
 
+import operator
 from datetime import timedelta
+from functools import reduce
 from typing import Literal
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["join_tables", "semi_join", "anti_join", "asof_join",
-           "range_join_bucketed", "interval_overlap_join",
+__all__ = ["asof_join", "range_join_bucketed", "interval_overlap_join",
            "bloom_prefilter", "bloom_params", "bloom_anti_join"]
-
-
-def join_tables(left: DataFrame, right: DataFrame, on, how: str = "inner",
-                broadcast_right: bool = False) -> DataFrame:
-    right = F.broadcast(right) if broadcast_right else right
-    return left.join(right, on=on, how=how)
-
-
-def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    """EXISTS — right side only filters, never widens (no dup explosion)."""
-    return left.join(right, on=on, how="left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    """NOT EXISTS."""
-    return left.join(right, on=on, how="left_anti")
 
 
 def _fresh_name(base: str, *dfs: DataFrame, extra: tuple = ()) -> str:
@@ -316,6 +310,76 @@ def interval_overlap_join(
     )
 
 
+def _bloom_keys(op: str, a: DataFrame, a_col: str, b: DataFrame,
+                b_col: str) -> tuple[Column, Column]:
+    """The Bloom key rule: the two key columns as they must be hashed.
+    xxhash64 is type-sensitive, so an int key and a bigint key hash
+    differently and a probe would silently DROP matches that a plain
+    equi-join's implicit coercion keeps.  Integral pairs therefore hash
+    as BIGINT and floating pairs as DOUBLE (coercion-equivalent, and
+    xxhash64 already hashes -0.0 like 0.0 and every NaN alike, as join
+    keys compare); identical types hash as they are; any other pair is
+    refused at plan build."""
+    at, bt = dict(a.dtypes)[a_col], dict(b.dtypes)[b_col]
+    integral = {"tinyint", "smallint", "int", "bigint"}
+    floating = {"float", "double"}
+    if at in integral and bt in integral:
+        cast = "bigint"
+    elif at in floating and bt in floating:
+        cast = "double"
+    elif at == bt:
+        return F.col(a_col), F.col(b_col)
+    else:
+        raise TypeError(
+            f"{op} key types must match (or both be integral, or both be "
+            f"floating): {a_col} is {at}, {b_col} is {bt} — xxhash64 over "
+            "mismatched types silently loses matches")
+    return F.col(a_col).cast(cast), F.col(b_col).cast(cast)
+
+
+def _bloom_hashes(key: Column, m: int, k: int) -> list[Column]:
+    """The k bit positions of ``key`` in an m-bit filter — the seed
+    mixing ``xxhash64(key, j)`` every build and probe shares."""
+    return [F.pmod(F.xxhash64(key, F.lit(j)), F.lit(m)) for j in range(k)]
+
+
+def _bloom_words(keys: DataFrame, key: Column, m: int, k: int,
+                 by: tuple[str, ...] = ()) -> DataFrame:
+    """Bloom build: ``(*by, _w, _bits)`` — one row per group and set
+    64-bit word, ``bit_or``-combined map-side, so the exchange carries
+    at most ``num_bits / 64`` word partials per group, never a key."""
+    pos = F.explode(F.array(*_bloom_hashes(key, m, k)))
+    bit = F.call_function("shiftleft", F.lit(1).cast("bigint"),
+                          F.pmod("_pos", F.lit(64)).cast("int"))
+    return (keys.select(*by, pos.alias("_pos"))
+            .groupBy(*by, F.shiftright("_pos", 6).alias("_w"))
+            .agg(F.bit_or(bit).alias("_bits")))
+
+
+def _bloom_map(words: DataFrame, out: str,
+               by: tuple[str, ...] = ()) -> DataFrame:
+    """Collapse :func:`_bloom_words` rows to one ``map<word, bits>`` per
+    group in column ``out``.  NULL words (a group a left join found no
+    words for) are skipped, so such a group gets an empty map."""
+    entry = F.when(F.col("_w").isNotNull(), F.struct("_w", "_bits"))
+    return words.groupBy(*by).agg(
+        F.map_from_entries(F.collect_list(entry)).alias(out))
+
+
+def _might_contain(bitmap: Column, key: Column, m: int, k: int) -> Column:
+    """Bloom probe: TRUE iff all k bits of ``key`` are set in the
+    ``map<word, bits>`` column ``bitmap`` — a pure row expression
+    (xxhash64 + element_at + shift/mask, codegen, no UDF).  A missing
+    word or a NULL map reads as 0 bits, so the answer is never NULL."""
+    zero = F.lit(0).cast("bigint")
+    return reduce(operator.and_, [
+        F.call_function(
+            "shiftright",
+            F.coalesce(F.element_at(bitmap, F.shiftright(p, 6)), zero),
+            F.pmod(p, F.lit(64)).cast("int")).bitwiseAND(1) == 1
+        for p in _bloom_hashes(key, m, k)])
+
+
 def bloom_prefilter(fact: DataFrame, keys: DataFrame, fact_key: str,
                     dim_key: str, num_bits: int = 1 << 16,
                     num_hashes: int = 4) -> DataFrame:
@@ -336,97 +400,23 @@ def bloom_prefilter(fact: DataFrame, keys: DataFrame, fact_key: str,
     Plan shape: build = one pass over ``keys`` exploding each key to its
     ``num_hashes`` bit positions, ``bit_or`` per 64-bit word
     (<= num_bits/64 rows), collapsed to a single ``map<word, bits>``
-    row.  Probe = crossJoin(broadcast(1 row)) + a pure-expression filter
-    (xxhash64 + element_at + shift/mask, whole-stage codegen, no UDF).
+    row.  Probe = crossJoin(broadcast(1 row)) + a pure-expression filter.
     Size ``num_bits ~ -n * ln(p) / ln(2)^2`` for n keys at target FPR p
     (default 64 Kbit ~ 6k keys at 1%); the map never exceeds
-    ``num_bits / 64`` entries regardless of key count.
-
-    Key typing: xxhash64 is type-sensitive, so mixed-width key columns
-    (int fact key vs bigint dim key) would hash differently on the two
-    sides and silently DROP true matches that a plain equi-join's
-    implicit coercion would keep.  Integral pairs are therefore both
-    canonicalized to BIGINT before hashing (coercion-equivalent, no
-    false negatives); any other type combination must match exactly.
+    ``num_bits / 64`` entries regardless of key count.  Key types follow
+    the shared Bloom key rule (integral pairs as BIGINT, floating pairs
+    as DOUBLE, otherwise identical), the coercions a plain join makes.
     """
     m, k = int(num_bits), int(num_hashes)
-    integral = {"tinyint", "smallint", "int", "bigint"}
-    ftype = dict(fact.dtypes)[fact_key]
-    dtype = dict(keys.dtypes)[dim_key]
-    if ftype in integral and dtype in integral:
-        fact_col = F.col(fact_key).cast("bigint")
-        dim_col = F.col(dim_key).cast("bigint")
-    elif ftype == dtype:
-        fact_col, dim_col = F.col(fact_key), F.col(dim_key)
-    else:
-        raise TypeError(
-            f"bloom_prefilter key types must match (or both be integral): "
-            f"fact.{fact_key} is {ftype}, keys.{dim_key} is {dtype} — "
-            "xxhash64 over mismatched types silently loses matches")
-    # probe-side temp names are uniquified against the fact schema: the
-    # broadcast map and the k probe positions land ON the caller's
-    # frame, where fixed '_bloom'/'_p{j}' names would clobber (and then
-    # drop) caller columns.  Build-side names (_pos/_w/_b/_bits) live
-    # only on derived select() frames — no caller exposure.
+    fact_col, dim_col = _bloom_keys("bloom_prefilter", fact, fact_key,
+                                    keys, dim_key)
+    # the broadcast map lands ON the caller's frame, where a fixed
+    # '_bloom' name would clobber (and then drop) a caller column
     bloom_c = _fresh_name("_bloom", fact)
-    p = _fresh_name("_p", fact)  # prefix-safe for _p0.._p{k-1}
-    bloom = _bloom_bitmap(keys, dim_col, m, k, bloom_c)
-    out = _bloom_positions(fact.crossJoin(F.broadcast(bloom)),
-                           fact_col, p, m, k)
-    return (out.where(F.expr(_bloom_probe_sql(bloom_c, p, k)))
-            .drop(bloom_c, *[f"{p}{j}" for j in range(k)]))
-
-
-def _bloom_bitmap(keys: DataFrame, key_col: Column, m: int, k: int,
-                  out_name: str) -> DataFrame:
-    """One-row ``map<word_idx, bits>`` Bloom bitmap over ``key_col`` —
-    the build half shared by bloom_prefilter and bloom_anti_join (the
-    probe half is _bloom_positions + _bloom_probe_sql; the seed mixing
-    ``xxhash64(key, lit(j))`` must match on both halves)."""
-    pos = [F.pmod(F.xxhash64(key_col, F.lit(j)), F.lit(m))
-           for j in range(k)]
-    return (
-        keys.select(F.explode(F.array(*pos)).alias("_pos"))
-        .select(F.shiftright(F.col("_pos"), 6).alias("_w"),
-                F.pmod(F.col("_pos"), F.lit(64)).alias("_b"))
-        .groupBy("_w")
-        .agg(F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), CAST(_b AS INT)))")
-             .alias("_bits"))
-        .agg(F.map_from_entries(F.collect_list(F.struct("_w", "_bits")))
-             .alias(out_name))
-    )
-
-
-def _bloom_positions(df: DataFrame, key_col: Column, p: str,
-                     m: int, k: int) -> DataFrame:
-    for j in range(k):
-        df = df.withColumn(
-            f"{p}{j}", F.pmod(F.xxhash64(key_col, F.lit(j)), F.lit(m)))
-    return df
-
-
-def _bloom_probe_sql(bloom_c: str, p: str, k: int) -> str:
-    return " AND ".join(
-        f"((shiftright(coalesce(element_at(`{bloom_c}`, shiftright(`{p}{j}`, 6)),"
-        f" CAST(0 AS BIGINT)), CAST(pmod(`{p}{j}`, 64) AS INT)) & 1) = 1)"
-        for j in range(k))
-
-
-def _bloom_probe_sql_dense(bloom_c: str, p: str, k: int) -> str:
-    """Probe variant for a DENSE ``array<long>`` bitmap column (the map
-    form above is for _bloom_bitmap's sparse map) — 1-based element_at
-    with try_element_at/coalesce so an out-of-range word (only possible
-    on a mis-sized bitmap) reads as 0 bits -> might_contain FALSE, a
-    loud wrong answer in tests rather than a row that silently vanishes
-    from both filter branches via three-valued logic (r12 review).  The
-    seed mixing / word packing contract is _bloom_bitmap's; keep the
-    two probe forms next to each other so a build change can't drift
-    past one of them."""
-    return " AND ".join(
-        f"((shiftright(coalesce(try_element_at(`{bloom_c}`, "
-        f"CAST(shiftright(`{p}{j}`, 6) AS INT) + 1), CAST(0 AS BIGINT)), "
-        f"CAST(pmod(`{p}{j}`, 64) AS INT)) & 1) = 1)"
-        for j in range(k))
+    bloom = _bloom_map(_bloom_words(keys, dim_col, m, k), bloom_c)
+    return (fact.crossJoin(F.broadcast(bloom))
+            .where(_might_contain(F.col(bloom_c), fact_col, m, k))
+            .drop(bloom_c))
 
 
 def bloom_params(n_keys: int, fpr: float = 0.01) -> tuple[int, int]:
@@ -446,8 +436,8 @@ def bloom_params(n_keys: int, fpr: float = 0.01) -> tuple[int, int]:
 
 
 def bloom_anti_join(incoming: DataFrame, history: DataFrame, key_col: str,
-                    num_bits: int = 1 << 16, num_hashes: int = 4,
-                    broadcast_recheck: bool = True) -> DataFrame:
+                    num_bits: int = 1 << 16,
+                    num_hashes: int = 4) -> DataFrame:
     """Rows of ``incoming`` whose ``key_col`` does NOT appear in
     ``history`` (both frames carry the key under the same name) — the
     crawl-frontier seen-key dedup shape.  Output-identical to a plain
@@ -456,86 +446,49 @@ def bloom_anti_join(incoming: DataFrame, history: DataFrame, key_col: str,
     positives are re-checked exactly, so the filter only ever moves
     rows between paths, never changes the answer.
 
-    At crawl shape (incoming batch << history) the exact recheck never
-    shuffles the history: probe survivors are few, so the recheck runs
-    as history-scan LEFT SEMI broadcast(survivor keys) -> confirmed-seen
-    keys (bounded by the survivor count) -> survivors LEFT ANTI
-    broadcast(confirmed) — history is map-scanned once for the bitmap
-    and once for the semi probe, and nothing history-sized ever crosses
-    an exchange.  ``broadcast_recheck=False`` falls back to the plain
-    shuffle anti-join for survivor sets too large to broadcast (the
-    planner can't know; the caller does).  NULL incoming keys follow
-    anti-join semantics (NULL matches nothing => kept); NULL history
-    keys are ignored.  Size ``num_bits``/``num_hashes`` with
+    The exact recheck never shuffles the history: probe survivors are
+    broadcast.  It runs as history-scan LEFT SEMI broadcast(survivor
+    keys) -> confirmed-seen keys (bounded by the survivor count) ->
+    survivors LEFT ANTI broadcast(confirmed) — history is map-scanned
+    once for the bitmap and once for the semi probe, and nothing
+    history-sized ever crosses an exchange.  This fits the crawl shape
+    (incoming batch << history), where survivors are few.  NULL incoming
+    keys follow anti-join semantics (NULL matches nothing => kept); NULL
+    history keys are ignored.  Size ``num_bits``/``num_hashes`` with
     ``bloom_params`` from the history's distinct-key estimate."""
     from .caching import tracked_persist
 
     m, k = int(num_bits), int(num_hashes)
-    itype = dict(incoming.dtypes)[key_col]
-    htype = dict(history.dtypes)[key_col]
-    integral = {"tinyint", "smallint", "int", "bigint"}
-    floating = {"float", "double"}
-    if itype in integral and htype in integral:
-        inc_col = F.col(key_col).cast("bigint")
-        hist_col = F.col(key_col).cast("bigint")
-    elif itype in floating and htype in floating:
-        # Spark join keys normalize -0.0 = 0.0 and NaN = NaN, but
-        # xxhash64 hashes raw bits, so an un-normalized probe would
-        # take the 'definitely unseen' path for a history 0.0 vs
-        # incoming -0.0 (a false NEGATIVE, breaking the exactness
-        # guarantee).  nanvl canonicalizes every NaN bit
-        # pattern; + 0.0 maps -0.0 to 0.0 and leaves everything else
-        # (including the canonical NaN) bit-stable.
-        def _norm(c: Column) -> Column:
-            d = c.cast("double")
-            return F.nanvl(d, F.lit(float("nan"))) + F.lit(0.0)
-        inc_col = _norm(F.col(key_col))
-        hist_col = _norm(F.col(key_col))
-    elif itype == htype:
-        inc_col, hist_col = F.col(key_col), F.col(key_col)
-    else:
-        raise TypeError(
-            f"bloom_anti_join key types must match (or both be integral, "
-            f"or both be floating): "
-            f"incoming.{key_col} is {itype}, history.{key_col} is {htype} — "
-            "xxhash64 over mismatched types silently loses matches")
+    inc_key, hist_key = _bloom_keys("bloom_anti_join", incoming, key_col,
+                                    history, key_col)
     bloom_c = _fresh_name("_bloom", incoming)
-    p = _fresh_name("_p", incoming)
     # NOT persisted: the bitmap's broadcast exchange is plan-identical
     # in the fresh and survivor branches, so exchange reuse
     # (spark.sql.exchange.reuse) computes it once per action anyway —
     # an explicit persist only adds a materialization barrier (measured
     # +0.8 s per run at sf0.1 for zero saved work).
-    bloom = _bloom_bitmap(
-        history.where(F.col(key_col).isNotNull()), hist_col, m, k, bloom_c)
-    probed = _bloom_positions(incoming.crossJoin(F.broadcast(bloom)),
-                              inc_col, p, m, k)
-    might = F.expr(_bloom_probe_sql(bloom_c, p, k))
-    drop = [bloom_c, *[f"{p}{j}" for j in range(k)]]
+    bloom = _bloom_map(_bloom_words(
+        history.where(F.col(key_col).isNotNull()), hist_key, m, k), bloom_c)
+    probed = incoming.crossJoin(F.broadcast(bloom))
+    might = _might_contain(F.col(bloom_c), inc_key, m, k)
     keep_null = F.col(key_col).isNull()
-    fresh = probed.where(keep_null | ~might).drop(*drop)
-    survivors = probed.where(~keep_null & might).drop(*drop)
-    if broadcast_recheck:
-        # persisted only on this route, which consumes survivors twice
-        # (the broadcast key set + the final anti-join left); the
-        # fallback route has a single consumer, where a persist is a
-        # pure materialization barrier (r12 review)
-        survivors = tracked_persist(survivors)
-        surv_keys = survivors.select(key_col).distinct()
-        confirmed = (history.select(key_col)
-                     .join(F.broadcast(surv_keys), key_col, "left_semi")
-                     .distinct())
-        new = survivors.join(F.broadcast(confirmed), key_col, "left_anti")
-    else:
-        new = survivors.join(history.select(key_col), key_col, "left_anti")
+    fresh = probed.where(keep_null | ~might).drop(bloom_c)
+    # persisted: survivors feed both the broadcast key set and the
+    # final anti-join's left side
+    survivors = tracked_persist(probed.where(~keep_null & might)
+                                .drop(bloom_c))
+    surv_keys = survivors.select(key_col).distinct()
+    confirmed = (history.select(key_col)
+                 .join(F.broadcast(surv_keys), key_col, "left_semi")
+                 .distinct())
+    new = survivors.join(F.broadcast(confirmed), key_col, "left_anti")
     return fresh.unionByName(new)
 
 
 def bloom_anti_join_rolling(ledger: DataFrame, key_col: str,
                             window_col: str, lookback: int,
                             num_bits: int = 1 << 16,
-                            num_hashes: int = 4,
-                            broadcast_recheck: bool = True) -> DataFrame:
+                            num_hashes: int = 4) -> DataFrame:
     """Rolling-history frontier dedup — the incremental-crawl twin of
     ``bloom_anti_join``: ``ledger`` holds one row
     per (window, key) sighting (``window_col`` an integer epoch — day
@@ -567,12 +520,10 @@ def bloom_anti_join_rolling(ledger: DataFrame, key_col: str,
 
     At the 10^10-keys-per-window regime, shard each window's bitmap by
     key range exactly as ``bloom_params`` documents for the static
-    ledger.  Survivor volume is DATA-DEPENDENT (all true within-window
-    dups plus false positives): on a high-duplication ledger it is
-    ledger-sized, so ``broadcast_recheck=False`` falls back to a
-    shuffled windowed anti-join of survivors against the keyed ledger
-    — same escape hatch as ``bloom_anti_join`` (the planner can't know
-    the duplication rate; the caller does).  NULL keys
+    ledger.  Probe survivors are broadcast, and their volume is
+    DATA-DEPENDENT (all true within-window dups plus false positives):
+    on a high-duplication ledger it is ledger-sized, and that broadcast
+    is the limit at scale.  NULL keys
     are kept, and so are NULL-window rows (both
     anti-join semantics: NULL matches nothing, so no trailing history
     can contain them — identical to what the exact windowed anti-join
@@ -594,85 +545,54 @@ def bloom_anti_join_rolling(ledger: DataFrame, key_col: str,
                          & F.col(window_col).isNotNull())
     w = F.col(window_col)
     # every temp column that lands on (or joins against) the caller's
-    # frame is uniquified — the r9-review rule above: a ledger already
-    # carrying a column with the temp's name must not become ambiguous
+    # frame is uniquified: a ledger already carrying a column with the
+    # temp's name must not become ambiguous
     bm_c = _fresh_name("_bm", ledger)
-    p = _fresh_name("_p", ledger)
     tw = _fresh_name("_tw", ledger)
     sw = _fresh_name("_sw", ledger)
     sk = _fresh_name("_sk", ledger)
     hw = _fresh_name("_hw", ledger)
     hk = _fresh_name("_hk", ledger)
 
-    # per-window sparse bitmaps: ONE pass over the keyed ledger ->
-    # (window, word, bits) partials.  NULL-window rows never enter a
-    # bitmap (no range predicate could match them anyway).
-    pos = [F.pmod(F.xxhash64(F.col(key_col), F.lit(j)), F.lit(m))
-           for j in range(k)]
-    per_win = (
-        keyed.select(w.alias("_win"),
-                     F.explode(F.array(*pos)).alias("_pos"))
-        .select("_win", F.shiftright(F.col("_pos"), 6).alias("_w"),
-                F.pmod(F.col("_pos"), F.lit(64)).alias("_b"))
-        .groupBy("_win", "_w")
-        .agg(F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), CAST(_b AS INT)))")
-             .alias("_bits")))
+    # per-window word partials: ONE pass over the keyed ledger.
+    # NULL-window rows never enter a bitmap (no range predicate could
+    # match them anyway).
+    per_win = _bloom_words(keyed.withColumn(hw, w), F.col(key_col), m, k,
+                           by=(hw,))
     # trailing bitmap per target window: range self-join of the tiny
     # per-window word frame, re-aggregated by word (bit_or is
     # associative, so merging word partials == merging bitmaps).  The
     # target-window set comes from per_win itself — deriving it from
-    # the ledger would re-scan data to enumerate a dimension-sized set
-    # (r13 review).
-    targets = per_win.select(F.col("_win").alias(tw)).distinct()
-    trailing = (
+    # the ledger would re-scan data to enumerate a dimension-sized set.
+    targets = per_win.select(F.col(hw).alias(tw)).distinct()
+    trailing = _bloom_map(
         targets.join(
             F.broadcast(per_win),
-            (F.col("_win") >= F.col(tw) - F.lit(int(lookback)))
-            & (F.col("_win") <= F.col(tw) - F.lit(1)), "left")
+            (F.col(hw) >= F.col(tw) - F.lit(int(lookback)))
+            & (F.col(hw) <= F.col(tw) - F.lit(1)), "left")
         .groupBy(tw, "_w")
-        .agg(F.expr("bit_or(_bits)").alias("_bits"))
-        .groupBy(tw)
-        .agg(F.map_from_entries(
-            F.collect_list(F.when(F.col("_w").isNotNull(),
-                                  F.struct("_w", "_bits"))))
-             .alias(bm_c)))
+        .agg(F.bit_or("_bits").alias("_bits")),
+        bm_c, by=(tw,))
 
-    probed = _bloom_positions(
-        ledger.join(F.broadcast(trailing), w == F.col(tw), "left"),
-        F.col(key_col), p, m, k)
-    might = F.expr(_bloom_probe_sql(bm_c, p, k)) & F.col(tw).isNotNull()
-    drop = [tw, bm_c, *[f"{p}{j}" for j in range(k)]]
+    probed = ledger.join(F.broadcast(trailing), w == F.col(tw), "left")
+    might = _might_contain(F.col(bm_c), F.col(key_col), m, k)
     keep_null = F.col(key_col).isNull()
-    fresh = probed.where(keep_null | ~might).drop(*drop)
-    survivors = probed.where(~keep_null & might).drop(*drop)
-
-    if broadcast_recheck:
-        # persisted only on this route, which consumes survivors twice
-        # (the broadcast pair set + the final anti-join left); the
-        # shuffled fallback has a single consumer, where a persist is
-        # a pure materialization barrier (same rule as the static op)
-        survivors = tracked_persist(survivors)
-        surv_pairs = survivors.select(w.alias(sw),
-                                      F.col(key_col).alias(sk)).distinct()
-        confirmed = (
-            keyed.select(w.alias(hw), F.col(key_col).alias(hk))
-            .join(F.broadcast(surv_pairs),
-                  (F.col(hk) == F.col(sk))
-                  & (F.col(hw) >= F.col(sw) - F.lit(int(lookback)))
-                  & (F.col(hw) <= F.col(sw) - F.lit(1)))
-            .select(sw, sk).distinct())
-        new = survivors.join(
-            F.broadcast(confirmed),
-            (w == F.col(sw)) & (F.col(key_col) == F.col(sk)),
-            "left_anti")
-    else:
-        # shuffled windowed anti-join: key equality hashes both sides,
-        # the window range rides as a residual — nothing broadcasts,
-        # so a ledger-sized survivor set cannot OOM the driver
-        new = survivors.join(
-            keyed.select(w.alias(hw), F.col(key_col).alias(hk)),
-            (F.col(key_col) == F.col(hk))
-            & (F.col(hw) >= w - F.lit(int(lookback)))
-            & (F.col(hw) <= w - F.lit(1)),
-            "left_anti")
+    fresh = probed.where(keep_null | ~might).drop(tw, bm_c)
+    # persisted: survivors feed both the broadcast pair set and the
+    # final anti-join's left side
+    survivors = tracked_persist(probed.where(~keep_null & might)
+                                .drop(tw, bm_c))
+    surv_pairs = survivors.select(w.alias(sw),
+                                  F.col(key_col).alias(sk)).distinct()
+    confirmed = (
+        keyed.select(w.alias(hw), F.col(key_col).alias(hk))
+        .join(F.broadcast(surv_pairs),
+              (F.col(hk) == F.col(sk))
+              & (F.col(hw) >= F.col(sw) - F.lit(int(lookback)))
+              & (F.col(hw) <= F.col(sw) - F.lit(1)))
+        .select(sw, sk).distinct())
+    new = survivors.join(
+        F.broadcast(confirmed),
+        (w == F.col(sw)) & (F.col(key_col) == F.col(sk)),
+        "left_anti")
     return fresh.unionByName(new)

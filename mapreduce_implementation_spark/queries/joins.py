@@ -8,10 +8,7 @@ from datetime import timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.joins import (
-    anti_join, asof_join, join_tables,
-    range_join_bucketed, semi_join,
-)
+from ..operators.joins import asof_join, range_join_bucketed
 from ..registry import register
 from ..sources.tables import load_table
 
@@ -45,8 +42,8 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
-    j = join_tables(c, n, on=c.c_nationkey == n.n_nationkey, broadcast_right=True)
-    j = join_tables(j, r, on=F.col("n_regionkey") == r.r_regionkey, broadcast_right=True)
+    j = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+    j = j.join(F.broadcast(r), F.col("n_regionkey") == r.r_regionkey)
     return j.groupBy("r_name", "n_name").agg(
         F.count(F.lit(1)).alias("n_customers"),
         F.round(F.round(F.avg("c_acctbal"), 6), 2).alias("avg_acctbal"),
@@ -90,7 +87,7 @@ def q_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 450000)
-    return semi_join(c, o, on=c.c_custkey == o.o_custkey).select("c_custkey", "c_name")
+    return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
 
 
 @register(
@@ -105,7 +102,7 @@ def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 480000)
-    return anti_join(c, o, on=c.c_custkey == o.o_custkey).select("c_custkey", "c_name")
+    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
 
 
 @register(

@@ -302,17 +302,21 @@ def frontier_stream(urls: DataFrame, history: DataFrame,
     * in-stream dedup via ``dropDuplicatesWithinWatermark`` — one state
       entry per key inside the watermark horizon, evicted after;
     * Bloom probe against the ledger's bitmap, embedded as a LITERAL
-      array column: the bitmap is built once from the static ledger at
-      plan-build time and collected to the driver — O(num_bits/64)
-      longs, a sketch like the IVF centroids, NOT data-sized — so the
-      probe is a pure row-local expression with no stream-static join
-      at all.  Definitely-unseen rows (no false negatives) pass
-      straight through;
+      ``map<word, bits>``: the bitmap is built once from the static
+      ledger at plan-build time and collected to the driver — at most
+      num_bits/64 words, a sketch like the IVF centroids, NOT
+      data-sized — so the probe is a pure row-local expression with no
+      stream-static join at all.  Definitely-unseen rows (no false
+      negatives) pass straight through;
     * probe survivors (true dups + false positives) re-check exactly
       via a stream-static LEFT ANTI join against the ledger — the only
       rows that ever reach the join, so its per-batch cost scales with
       the dup+FP rate, not the stream rate.
 
+    Stream and ledger keys follow the shared Bloom key rule of
+    ``operators.joins`` (integral pairs hash as bigint, floating pairs
+    as double, any other pair must match exactly or raises
+    ``TypeError``), so an int stream key finds its bigint ledger twin.
     The ledger is fixed for the life of the query (the standard
     crawl-loop contract: rebuild the bitmap when the ledger compacts
     and restart the query from the checkpoint).  NULL keys pass the
@@ -330,32 +334,23 @@ def frontier_stream(urls: DataFrame, history: DataFrame,
     the cheap side of that trade (r12 review).
     """
     from ..operators.joins import (
-        _bloom_bitmap, _bloom_positions, _bloom_probe_sql_dense,
-        _fresh_name,
+        _bloom_keys, _bloom_map, _bloom_words, _might_contain,
     )
 
     m, k = int(num_bits), int(num_hashes)
-    if m % 64 != 0:
-        raise ValueError(
-            f"num_bits must be a multiple of 64, got {m} — a truncated "
-            "dense bitmap would send high hash positions out of range "
-            "(use bloom_params(), which rounds up)")
-    words_by_idx = {
-        int(w): int(b) for w, b in _bloom_bitmap(
-            history.where(F.col(key_col).isNotNull()),
-            F.col(key_col), m, k, "_bm"
-        ).collect()[0]["_bm"].items()}
-    dense = [words_by_idx.get(i, 0) for i in range(m // 64)]
+    key, hist_key = _bloom_keys("frontier_stream", urls, key_col,
+                                history, key_col)
+    words = _bloom_map(_bloom_words(
+        history.where(F.col(key_col).isNotNull()), hist_key, m, k),
+        "_bm").head()["_bm"]
+    bitmap = F.map_from_arrays(
+        F.lit(list(words)).cast("array<bigint>"),
+        F.lit(list(words.values())).cast("array<bigint>"))
 
-    bloom_c = _fresh_name("_bloom", urls)
-    p = _fresh_name("_p", urls)
-    probed = _bloom_positions(
-        urls.withColumn(bloom_c, F.lit(dense)), F.col(key_col), p, m, k)
-    might = F.expr(_bloom_probe_sql_dense(bloom_c, p, k))
-    drop = [bloom_c, *[f"{p}{j}" for j in range(k)]]
+    might = _might_contain(bitmap, key, m, k)
     keep_null = F.col(key_col).isNull()
-    fresh = probed.filter(keep_null | ~might).drop(*drop)
-    survivors = probed.filter(~keep_null & might).drop(*drop)
+    fresh = urls.filter(keep_null | ~might)
+    survivors = urls.filter(~keep_null & might)
     rechecked = survivors.join(
         history.select(key_col).where(F.col(key_col).isNotNull()),
         key_col, "left_anti")

@@ -1333,7 +1333,9 @@ def test_bloom_prefilter_mixed_integral_widths_keep_matches(spark):
     type-sensitive, so without BIGINT canonicalization the probe hashes
     diverge from the build hashes and TRUE matches vanish — the silent
     false-negative the transparency guarantee forbids.  Both integral
-    sides must hash identically after the cast."""
+    sides must hash identically after the cast.  A float fact key vs a
+    double dim key joins like the plain join too (both hash as
+    DOUBLE)."""
     from mapreduce_implementation_spark.operators.joins import bloom_prefilter
 
     fact = spark.createDataFrame([(k,) for k in range(200)], "k int")
@@ -1341,6 +1343,12 @@ def test_bloom_prefilter_mixed_integral_widths_keep_matches(spark):
     kept = {r["k"] for r in bloom_prefilter(fact, dim, "k", "d",
                                             num_bits=1 << 10).collect()}
     assert {5, 77, 199} <= kept
+
+    ffact = spark.createDataFrame([(k / 4,) for k in range(200)], "k float")
+    fdim = spark.createDataFrame([(1.25,), (-0.0,), (49.75,)], "d double")
+    fkept = {r["k"] for r in bloom_prefilter(ffact, fdim, "k", "d",
+                                             num_bits=1 << 10).collect()}
+    assert {1.25, 0.0, 49.75} <= fkept
 
 
 def test_bloom_prefilter_rejects_incompatible_key_types(spark):
@@ -1547,8 +1555,7 @@ def test_covariance_matrix_matches_numpy(spark):
        st.lists(st.integers(min_value=-5_000, max_value=5_000),
                 min_size=0, max_size=80))
 def test_bloom_anti_join_equals_exact_anti_join(spark, inc_keys, hist_keys):
-    """bloom_anti_join output == plain left-anti join EXACTLY, on both
-    recheck routes (broadcast semi/anti and the shuffle fallback): the
+    """bloom_anti_join output == plain left-anti join EXACTLY: the
     Bloom leg has no false negatives and false positives are re-checked,
     so the filter moves rows between paths without changing the answer.
     A deliberately TINY bitmap (256 bits) forces heavy false-positive
@@ -1562,11 +1569,9 @@ def test_bloom_anti_join_equals_exact_anti_join(spark, inc_keys, hist_keys):
     hist = spark.createDataFrame([(k,) for k in hist_keys], "k bigint")
     want = sorted(r["k"] for r in inc.join(hist, "k", "left_anti").collect())
     try:
-        for bc in (True, False):
-            got = sorted(r["k"] for r in bloom_anti_join(
-                inc, hist, "k", num_bits=256, num_hashes=3,
-                broadcast_recheck=bc).collect())
-            assert got == want, (bc, got[:5], want[:5])
+        got = sorted(r["k"] for r in bloom_anti_join(
+            inc, hist, "k", num_bits=256, num_hashes=3).collect())
+        assert got == want, (got[:5], want[:5])
     finally:
         release_persisted()
 
@@ -1607,10 +1612,7 @@ def test_bloom_rolling_equals_exact_windowed_anti_join(
     (key seen in [w-lookback, w-1] => dropped) on random sighting
     ledgers, with a deliberately TINY per-window bitmap (128 bits)
     forcing heavy false-positive traffic through the recheck leg, plus
-    NULL-key and NULL-window rows (both kept — anti-join semantics).
-    Both recheck routes: broadcast pair-set AND the shuffled windowed
-    anti-join fallback (the escape hatch for ledgers
-    whose survivor volume is ledger-sized)."""
+    NULL-key and NULL-window rows (both kept — anti-join semantics)."""
     from mapreduce_implementation_spark.operators.caching import (
         release_persisted,
     )
@@ -1629,13 +1631,12 @@ def test_bloom_rolling_equals_exact_windowed_anti_join(
             & (F.col("h.d") <= F.col("l.d") - 1),
             "left_anti").collect()), key=str)
     try:
-        for bc in (True, False):
-            got = sorted(
-                ((r["d"], r["k"]) for r in bloom_anti_join_rolling(
-                    df, "k", "d", lookback, num_bits=128, num_hashes=3,
-                    broadcast_recheck=bc).collect()), key=str)
-            assert got == want, (bc, lookback,
-                                 set(map(str, got)) ^ set(map(str, want)))
+        got = sorted(
+            ((r["d"], r["k"]) for r in bloom_anti_join_rolling(
+                df, "k", "d", lookback, num_bits=128,
+                num_hashes=3).collect()), key=str)
+        assert got == want, (lookback,
+                             set(map(str, got)) ^ set(map(str, want)))
     finally:
         release_persisted()
 
@@ -1645,9 +1646,9 @@ def test_bloom_anti_join_float_keys_normalized(spark):
     Spark join keys normalize -0.0 = 0.0 and NaN = NaN, but xxhash64
     hashes raw bits, so an un-normalized probe would emit an incoming
     -0.0 against a history 0.0 via the 'definitely unseen' Bloom path
-    (a false negative).  The operator nanvl/+0.0
-    normalizes both sides before hashing; verify on both recheck
-    routes against Spark's own left-anti as the oracle."""
+    (a false negative).  Both sides hash as DOUBLE, and xxhash64 hashes
+    -0.0 like 0.0 and every NaN alike; verify against Spark's own
+    left-anti as the oracle."""
     from mapreduce_implementation_spark.operators.caching import (
         release_persisted,
     )
@@ -1663,11 +1664,9 @@ def test_bloom_anti_join_float_keys_normalized(spark):
                   for r in inc.join(hist, "k", "left_anti").collect())
     assert want == [2, 4, 5]  # -0.0 and NaN matched; NULL kept
     try:
-        for bc in (True, False):
-            got = sorted(r["payload"] for r in bloom_anti_join(
-                inc, hist, "k", num_bits=256, num_hashes=3,
-                broadcast_recheck=bc).collect())
-            assert got == want, (bc, got)
+        got = sorted(r["payload"] for r in bloom_anti_join(
+            inc, hist, "k", num_bits=256, num_hashes=3).collect())
+        assert got == want, got
         # float32 incoming vs float64 history also normalizes
         inc32 = spark.createDataFrame(
             [(-0.0, 1), (1.5, 2)], "k float, payload int")
@@ -1689,7 +1688,7 @@ def test_bloom_frontier_fpr_sentinel(spark):
         release_persisted,
     )
     from mapreduce_implementation_spark.operators.joins import (
-        _bloom_bitmap, _bloom_positions, _bloom_probe_sql,
+        _bloom_map, _bloom_words, _might_contain,
     )
     from mapreduce_implementation_spark.queries.dedup import (
         _BLOOM_FRONTIER_K, _BLOOM_FRONTIER_M, _synth_url,
@@ -1724,12 +1723,11 @@ def test_bloom_frontier_fpr_sentinel(spark):
                 r["n_hist_keys"], len(hist_curls))
         # measured FPR: probe the truly-new keys against the bitmap
         hist = c.filter(F.col("doc_id") % 7 < 5).select("curl")
-        bloom = _bloom_bitmap(hist, F.col("curl"), m, k, "_bloom")
+        bloom = _bloom_map(_bloom_words(hist, F.col("curl"), m, k), "_bloom")
         probe = spark.createDataFrame([(u,) for u in sorted(truly_new)],
                                       "curl string")
-        probed = _bloom_positions(probe.crossJoin(F.broadcast(bloom)),
-                                  F.col("curl"), "_p", m, k)
-        fp = probed.where(F.expr(_bloom_probe_sql("_bloom", "_p", k))).count()
+        fp = probe.crossJoin(F.broadcast(bloom)).where(_might_contain(
+            F.col("_bloom"), F.col("curl"), m, k)).count()
     finally:
         release_persisted()
     assert fp / len(truly_new) <= max(3 * bound, 5 / len(truly_new)), (
@@ -1742,7 +1740,7 @@ def test_bloom_params_sizing_delivers_target_fpr(spark):
     disjoint keys — measured FPR must stay within 2x the target (the
     formula is an expectation; 2x covers binomial spread at this n)."""
     from mapreduce_implementation_spark.operators.joins import (
-        _bloom_bitmap, _bloom_positions, _bloom_probe_sql, bloom_params,
+        _bloom_map, _bloom_words, _might_contain, bloom_params,
     )
 
     n = 3000
@@ -1751,8 +1749,7 @@ def test_bloom_params_sizing_delivers_target_fpr(spark):
     hist = spark.range(0, n).selectExpr("concat('k', id) AS u")
     probe = spark.range(1_000_000, 1_004_000).selectExpr(
         "concat('k', id) AS u")
-    bloom = _bloom_bitmap(hist, F.col("u"), m, k, "_bloom")
-    probed = _bloom_positions(probe.crossJoin(F.broadcast(bloom)),
-                              F.col("u"), "_p", m, k)
-    fp = probed.where(F.expr(_bloom_probe_sql("_bloom", "_p", k))).count()
+    bloom = _bloom_map(_bloom_words(hist, F.col("u"), m, k), "_bloom")
+    fp = probe.crossJoin(F.broadcast(bloom)).where(_might_contain(
+        F.col("_bloom"), F.col("u"), m, k)).count()
     assert fp / 4000 <= 0.04, (fp, m, k)

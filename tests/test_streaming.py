@@ -336,13 +336,15 @@ def test_stream_stream_left_outer_emits_nulls_after_watermark(spark, tmp_path):
     assert (2, None) not in got  # converted click never null-extends
 
 
-def test_frontier_stream_matches_batch_anti_join(spark):
+@pytest.mark.parametrize("num_bits", [512, 1000])
+def test_frontier_stream_matches_batch_anti_join(spark, num_bits):
     """frontier_stream (bloom literal probe + stream-static anti
     recheck) must emit exactly the distinct stream URLs NOT in the
     static ledger — equal to the batch distinct+anti-join over the
-    same data — with a deliberately tiny 512-bit bitmap forcing real
+    same data — with a deliberately tiny bitmap forcing real
     false-positive traffic through the recheck join, plus one NULL
-    key (kept, anti-join semantics)."""
+    key (kept, anti-join semantics).  1000 bits is not a multiple of
+    64: the last word is partial, and the answer stays exact."""
     from mapreduce_implementation_spark.streaming.ops import frontier_stream
 
     src_dir = tempfile.mkdtemp(prefix="frontier_stream_")
@@ -362,25 +364,43 @@ def test_frontier_stream_matches_batch_anti_join(spark):
         batch.write.mode("overwrite").parquet(src_dir)
         stream = spark.readStream.schema(
             "curl string, ts timestamp").parquet(src_dir)
-        out = frontier_stream(stream, hist, num_bits=512, num_hashes=3)
-        _run_stream(out, "frontier_out", "append")
-        got = sorted((r["curl"] or "<null>") for r in
-                     spark.sql("SELECT curl FROM frontier_out").collect())
+        out = frontier_stream(stream, hist, num_bits=num_bits, num_hashes=3)
+        _run_stream(out, f"frontier_out_{num_bits}", "append")
+        got = sorted((r["curl"] or "<null>") for r in spark.sql(
+            f"SELECT curl FROM frontier_out_{num_bits}").collect())
         want = sorted([f"u{i}" for i in range(400, 700)] + ["<null>"])
         assert got == want, (len(got), len(want), got[:5])
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
 
 
-def test_frontier_stream_rejects_unaligned_num_bits(spark):
-    """A num_bits that is not a 64-multiple must fail loudly at build —
-    a truncated dense bitmap would send high hash positions out of
-    range, where three-valued logic silently drops the row from BOTH
-    filter branches (r12 review)."""
-    import pytest
-
+def test_frontier_stream_key_rule(spark):
+    """An int stream key probes a bigint ledger: both hash as BIGINT,
+    so already-seen keys are dropped exactly as the batch anti-join
+    drops them (hashing each side in its own width re-emitted every
+    seen key).  A string stream against a bigint ledger cannot be
+    canonicalized and must fail loudly at build."""
     from mapreduce_implementation_spark.streaming.ops import frontier_stream
 
-    hist = spark.range(3).selectExpr("concat('u', id) AS curl")
-    with pytest.raises(ValueError, match="multiple of 64"):
-        frontier_stream(hist, hist, num_bits=1000)
+    src_dir = tempfile.mkdtemp(prefix="frontier_keys_")
+    try:
+        hist = spark.range(10).selectExpr("id AS curl")
+        spark.sql("""
+            SELECT CAST(id AS INT) AS curl,
+                   timestamp'2026-01-01' + make_interval(0,0,0,0,0,0,id) AS ts
+            FROM range(20)
+        """).write.mode("overwrite").parquet(src_dir)
+        stream = spark.readStream.schema(
+            "curl int, ts timestamp").parquet(src_dir)
+        out = frontier_stream(stream, hist, num_bits=512, num_hashes=3)
+        _run_stream(out, "frontier_keys_out", "append")
+        got = sorted(r["curl"] for r in
+                     spark.sql("SELECT curl FROM frontier_keys_out").collect())
+        assert got == list(range(10, 20)), got
+
+        strs = spark.readStream.schema(
+            "curl string, ts timestamp").parquet(src_dir)
+        with pytest.raises(TypeError, match="types must match"):
+            frontier_stream(strs, hist)
+    finally:
+        shutil.rmtree(src_dir, ignore_errors=True)
